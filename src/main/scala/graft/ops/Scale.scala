@@ -3903,21 +3903,11 @@ object Scale {
     val ctlLoads = graft.sources.GraftBloomSidecars.loads.sum() - l0
     require(ctlLoads >= nFiles.toLong,
       s"per-file sidecars must cost one read per candidate file: $ctlLoads")
-    // the bundled probe MEASURES UNDER SLURP MODE explicitly (review
-    // round 17 second pass): the key's contract columns publish the
-    // bundle round-trip economics, which only the slurp establishes —
-    // ranged mode pays one positional read per ref by design, and
-    // letting it leak in here would make the pinned bundle_loads=1 a
-    // lie. Save/restore so a ranged-mode session keeps its setting.
-    val prevMode = graft.sources.GraftBloomSidecars.bundleFetchMode
-    graft.sources.GraftBloomSidecars.bundleFetchMode = "slurp"
     val rows = probe(dir)
-    val bundledLoads = try {
-      graft.sources.GraftBloomSidecars.dropCache()
-      val l1 = graft.sources.GraftBloomSidecars.loads.sum()
-      rows.collect()
-      graft.sources.GraftBloomSidecars.loads.sum() - l1
-    } finally graft.sources.GraftBloomSidecars.bundleFetchMode = prevMode
+    graft.sources.GraftBloomSidecars.dropCache()
+    val l1 = graft.sources.GraftBloomSidecars.loads.sum()
+    rows.collect()
+    val bundledLoads = graft.sources.GraftBloomSidecars.loads.sum() - l1
     // ADVICE r18: the published constant is bundle_loads=1 (the fixture
     // PROVED bundles==1 above), so the require must hold the measurement
     // near that constant — `< nFiles` would let a 2-3-read regression
@@ -3964,17 +3954,13 @@ object Scale {
           s"sweep commit: $vsBefore -> ${vs.size}")
       require(graft.sources.GraftManifest.headerFacts(adir, vs.max).op
         .contains("COMPACT-INDEX"), "the landed version must be the sweep's")
-      // SECOND cold probe: O(bundles) under pinned slurp, identical rows
-      val prevM = graft.sources.GraftBloomSidecars.bundleFetchMode
-      graft.sources.GraftBloomSidecars.bundleFetchMode = "slurp"
-      val d = try {
-        graft.sources.GraftBloomSidecars.dropCache()
-        val a0 = graft.sources.GraftBloomSidecars.loads.sum()
-        val secondRows = probe(adir).collect().map(r => (r.getLong(0), r.getLong(1)))
-        require(secondRows.sorted.sameElements(firstRows.sorted),
-          "the auto-bundled probe must answer identically")
-        graft.sources.GraftBloomSidecars.loads.sum() - a0
-      } finally graft.sources.GraftBloomSidecars.bundleFetchMode = prevM
+      // SECOND cold probe: O(bundles), identical rows
+      graft.sources.GraftBloomSidecars.dropCache()
+      val a0 = graft.sources.GraftBloomSidecars.loads.sum()
+      val secondRows = probe(adir).collect().map(r => (r.getLong(0), r.getLong(1)))
+      require(secondRows.sorted.sameElements(firstRows.sorted),
+        "the auto-bundled probe must answer identically")
+      val d = graft.sources.GraftBloomSidecars.loads.sum() - a0
       require(graft.sources.GraftManifest.versions(adir).size == vs.size,
         "the sweep must not re-trigger once everything is bundled")
       d

@@ -1241,9 +1241,8 @@ object GraftMaintenance {
     * The in-flight guard only blocks CONCURRENT duplicate sweeps and
     * always disarms after the attempt, so a later fresh-ingest wave
     * re-triggers; a nothing-pending verdict is memoized per head VERSION
-    * so an over-threshold probe on an already-bundled table (routine in
-    * ranged fetch mode) pays the O(files) pendingSidecars fold once per
-    * version, not once per plan. */
+    * so an over-threshold probe on an already-bundled table pays the
+    * O(files) pendingSidecars fold once per version, not once per plan. */
   val AutoCompactProbeLoads = 64
   /** Process-level switch (demo/measurement hook): the per-table
     * `compactIndex.autoProbeLoads` property is the USER surface; this

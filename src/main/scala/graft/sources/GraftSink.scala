@@ -290,7 +290,10 @@ object GraftBucket {
   * `base` is the RAW (on-disk) form only: an append DELTA manifest lists
   * just its own adds relative to version `base` — every manifest
   * [[GraftManifest.readVersion]] returns is FOLDED (base = None, metas =
-  * the complete snapshot). */
+  * the complete snapshot). The on-disk line grammar is declared once, in
+  * `GraftManifest.HeaderLines` (one line per header field) and
+  * `GraftManifest.FileLines` (one line per per-file fact); `parse`,
+  * `readHeader` and `render` are all driven from those declarations. */
 case class GraftManifest(version: Int, metas: Seq[GraftFileMeta],
     total: Long, schemaDdl: Option[String], ts: Option[Long] = None,
     base: Option[Int] = None, op: Option[String] = None,
@@ -587,7 +590,8 @@ object GraftManifest {
   }
 
   /** Manifest body grammar (all metadata lines `#`-prefixed so the data
-    * lines keep the v1 `file,rows` shape):
+    * lines keep the v1 `file,rows` shape; each line's codec is declared in
+    * [[HeaderLines]] / [[FileLines]]):
     * {{{
     * #schema=<DDL>                     table schema (union across evolutions)
     * #ts=<epochMillis>                  commit wall-clock (strictly increasing)
@@ -666,6 +670,20 @@ object GraftManifest {
     *                                    end) byte span, physical rows,
     *                                    base64 LE-double mean — `-` = no
     *                                    claim, group always planned)
+    * #bloom=<file>,<i>,<pay>           per-(file, column) value bloom filter
+    * #pbloom=<file>,<i>,<w>,<pay>      PREFIX bloom: the first w chars of
+    *                                    every value of length >= w
+    *                                    (`LIKE 'p%'` skipping)
+    * #ngbloom=<file>,<i>,<w>,<pay>     N-GRAM bloom: every w-char window
+    *                                    (`LIKE '%s%'` skipping)
+    * #ngalpha=<file>,<i>,<chars>       the column's sorted char set: a
+    *                                    probe char the file never wrote
+    *                                    proves no match, with no fetch
+    * #ndv=<file>,<i>,<b64>             HyperLogLog distinct-count sketch
+    * #centroid=<file>,<i>,<b64>        base64 LE-double mean of the non-null
+    *                                    vectors (ANN routing)
+    *                                    (<pay>: inline base64, a saturation
+    *                                    marker, or `@<sidecar>[:off:len]`)
     * <file>,<rows>                      one per listed file (PHYSICAL rows)
     * _total,<N>                         LIVE row total of the FULL snapshot
     * }}}
@@ -791,219 +809,195 @@ object GraftManifest {
       else "") +
       ix.extra.map(";" + _).mkString
 
-  def parse(version: Int, body: String, dir: Option[String] = None): GraftManifest = {
-    var ddl: Option[String] = None
-    var ts: Option[Long] = None
-    var base: Option[Int] = None
-    var op: Option[String] = None
-    var nFiles: Option[Int] = None
-    var ids: Option[Seq[Int]] = None
-    var partSpec: Option[String] = None
-    var sortSpec: Option[String] = None
-    var format: Option[String] = None
-    var idxCols: Option[GraftIdx] = None
-    val props = scala.collection.mutable.Map[String, String]()
-    val checks = Seq.newBuilder[(String, String)]
-    val txns = scala.collection.mutable.Map[String, Long]()
-    val rows = Seq.newBuilder[(String, Long)]
-    val ncols = scala.collection.mutable.Map[String, Int]()
-    val parts = scala.collection.mutable.Map[String, (String, String)]()
-    val stats = scala.collection.mutable.Map[String, Map[Int, (String, String)]]()
-      .withDefaultValue(Map.empty)
-    val boundCols = scala.collection.mutable.Map[String, Set[Int]]()
-      .withDefaultValue(Set.empty)
-    val nulls = scala.collection.mutable.Map[String, Map[Int, Long]]()
-    val dvs = scala.collection.mutable.Map[String, (String, Long)]()
-    val sums = scala.collection.mutable.Map[String, Map[Int, Long]]()
-    val blooms = scala.collection.mutable.Map[String, Map[Int, String]]()
-      .withDefaultValue(Map.empty)
-    val pbls = scala.collection.mutable.Map[String, Map[Int, (Int, String)]]()
-      .withDefaultValue(Map.empty)
-    val rgcs = scala.collection.mutable.Map[String, Map[Int, Seq[GraftRgCen]]]()
-      .withDefaultValue(Map.empty)
-    val rvss = scala.collection.mutable.Map[String, Map[Int, (String, String)]]()
-      .withDefaultValue(Map.empty)
-    val ngbs = scala.collection.mutable.Map[String, Map[Int, (Int, String)]]()
-      .withDefaultValue(Map.empty)
-    val ngas = scala.collection.mutable.Map[String, Map[Int, String]]()
-      .withDefaultValue(Map.empty)
-    val ndvs = scala.collection.mutable.Map[String, Map[Int, String]]()
-      .withDefaultValue(Map.empty)
-    val cens = scala.collection.mutable.Map[String, Map[Int, String]]()
-      .withDefaultValue(Map.empty)
-    val seqs = scala.collection.mutable.Map[String, Int]()
-    val eqDels = Seq.newBuilder[GraftEqDel]
-    var total = 0L
-    body.split("\n").filter(_.nonEmpty).foreach {
-      case s if s.startsWith("#schema=") => ddl = Some(s.stripPrefix("#schema="))
-      case s if s.startsWith("#ts=")     => ts = Some(s.stripPrefix("#ts=").toLong)
-      case s if s.startsWith("#base=")   => base = Some(s.stripPrefix("#base=").toInt)
-      case s if s.startsWith("#op=")     => op = Some(s.stripPrefix("#op="))
-      case s if s.startsWith("#files=")  => nFiles = Some(s.stripPrefix("#files=").toInt)
-      case s if s.startsWith("#ids=") =>
-        ids = Some(s.stripPrefix("#ids=").split(",").map(_.toInt).toSeq)
-      case s if s.startsWith("#partspec=") =>
-        partSpec = Some(s.stripPrefix("#partspec="))
-      case s if s.startsWith("#sortspec=") =>
-        sortSpec = Some(s.stripPrefix("#sortspec="))
-      case s if s.startsWith("#prop=") =>
-        s.stripPrefix("#prop=").split("=", 2) match {
-          case Array(k, v) => props(k) = unescStat(v)
+  /** One manifest `#tag=` line kind, declared once: `show` lists the rows
+    * [[render]] writes for a `T` — the manifest for a header line, one
+    * file's meta for a per-file line — and `read` folds a parsed row back
+    * in. Every row parses through [[split]]: exactly `arity` fields on
+    * `sep`, the last keeping any further separators; any other shape
+    * fails loudly as `malformed #tag line`. */
+  private class Line[T](val tag: String, arity: Int, sep: String,
+      show: T => IterableOnce[Seq[Any]],
+      val read: (T, Array[String], Option[String]) => T) {
+    private val prefix = s"$tag="
+    def render(x: T): Iterator[String] = show(x).iterator.map(_.mkString(prefix, sep, ""))
+    def split(payload: String): Array[String] = {
+      val fs = payload.split(sep, arity)
+      if (fs.length != arity) throw new IllegalStateException(
+        s"malformed $tag line: '$payload'")
+      fs
+    }
+  }
+
+  private def headerLine(tag: String, arity: Int, sep: String = ",")(
+      show: GraftManifest => IterableOnce[Seq[Any]])(
+      read: (GraftManifest, Array[String]) => GraftManifest) =
+    new Line[GraftManifest](tag, arity, sep, show, (m, f, _) => read(m, f))
+
+  /** A single-valued header fact, written iff `get` holds a value. */
+  private def fact(tag: String)(get: GraftManifest => Option[Any])(
+      set: (GraftManifest, String) => GraftManifest) =
+    headerLine(tag, 1)(get(_).map(Seq(_)))((m, f) => set(m, f(0)))
+
+  /** A per-file line: `<file>,` then `arity` fields. */
+  private def perFile(tag: String, arity: Int)(
+      show: GraftFileMeta => IterableOnce[Seq[Any]])(
+      read: (GraftFileMeta, Array[String], Option[String]) => GraftFileMeta) =
+    new Line[GraftFileMeta](tag, arity + 1, ",",
+      m => show(m).iterator.map(m.name +: _), (m, f, dir) => read(m, f.tail, dir))
+
+  private def byCol[V](facts: Map[Int, V]): Seq[(Int, V)] = facts.toSeq.sortBy(_._1)
+  private def counts(ns: Map[Int, Long]): String =
+    byCol(ns).map { case (i, n) => s"$i:$n" }.mkString(";")
+  private def countsOf(s: String): Map[Int, Long] =
+    s.split(";").filter(_.nonEmpty)
+      .map { p => val Array(i, n) = p.split(":", 2); i.toInt -> n.toLong }.toMap
+  private def envelope(m: GraftFileMeta, f: Array[String]): GraftFileMeta =
+    m.copy(stats = m.stats + (f(0).toInt -> (unescStat(f(1)), unescStat(f(2)))))
+
+  /** The header lines, in render order; `_total` follows them. */
+  private val HeaderLines: Seq[Line[GraftManifest]] = Seq(
+    fact("#schema")(_.schemaDdl)((m, s) => m.copy(schemaDdl = Some(s))),
+    fact("#ts")(_.ts)((m, s) => m.copy(ts = Some(s.toLong))),
+    fact("#base")(_.base)((m, s) => m.copy(base = Some(s.toInt))),
+    // a label one line cannot hold is left out
+    fact("#op")(_.op.filter(o => o.nonEmpty && !o.contains('\n')))(
+      (m, s) => m.copy(op = Some(s))),
+    fact("#files")(_.nFiles)((m, s) => m.copy(nFiles = Some(s.toInt))),
+    fact("#ids")(_.ids.map(_.mkString(",")))(
+      (m, s) => m.copy(ids = Some(s.split(",").map(_.toInt).toSeq))),
+    fact("#partspec")(_.partSpec)((m, s) => m.copy(partSpec = Some(s))),
+    fact("#sortspec")(_.sortSpec)((m, s) => m.copy(sortSpec = Some(s))),
+    fact("#format")(_.format)((m, s) => m.copy(format = Some(s))),
+    // keys are validated [A-Za-z0-9._-]+ at set time, so the first '='
+    // splits; sorted for byte-stable manifests
+    headerLine("#prop", 2, "=")(m => m.props.toSeq.sortBy(_._1)
+      .map { case (k, v) => Seq(k, escStat(v)) })(
+      (m, f) => m.copy(props = m.props + (f(0) -> unescStat(f(1))))),
+    // written even when empty: absence means a LEGACY manifest (fall back
+    // to one fold), not "no indexed columns"
+    fact("#idx")(_.idxCols.map(renderIdx))(
+      (m, s) => m.copy(idxCols = Some(parseIdx(s)))),
+    headerLine("#eqdel", 4)(_.eqDels.map(e => Seq(e.v, e.col, e.sidecar, e.n)))(
+      (m, f) => m.copy(eqDels = m.eqDels :+ GraftEqDel(f(0).toInt, f(1), f(2), f(3).toLong))),
+    headerLine("#check", 2)(_.checks.map { case (n, e) => Seq(n, e) })(
+      (m, f) => m.copy(checks = m.checks :+ (f(0) -> f(1)))),
+    headerLine("#txn", 2, ":")(m => m.txns.toSeq.sortBy(_._1).map { case (w, e) => Seq(w, e) })(
+      (m, f) => m.copy(txns = m.txns + (f(0) -> f(1).toLong))))
+
+  /** The per-file lines, in the order each file's facts render; the
+    * `<file>,<rows>` lines close the body. */
+  private val FileLines: Seq[Line[GraftFileMeta]] = Seq(
+    perFile("#meta", 3)(m => Seq(m.ncols +:
+      m.partition.map { case (c, v) => Seq(c, v) }.getOrElse(Seq("", ""))))(
+      (m, f, _) => m.copy(ncols = f(0).toInt,
+        partition = if (f(1).nonEmpty) Some((f(1), f(2))) else m.partition)),
+    perFile("#seq", 1)(m => Option.when(m.seq > 0)(Seq(m.seq)))(
+      (m, f, _) => m.copy(seq = f(0).toInt)),
+    // exact and bound envelopes interleave by column index: this line
+    // writes both kinds, a bound one as #bstats (declared next to parse)
+    new Line[GraftFileMeta]("#stats", 4, ",", _ => Nil, (m, f, _) => envelope(m, f.tail)) {
+      override def render(m: GraftFileMeta): Iterator[String] =
+        byCol(m.stats).iterator.map { case (i, (lo, hi)) =>
+          val kind = if (m.bounds(i)) "#bstats" else "#stats"
+          s"$kind=${m.name},$i,${escStat(lo)},${escStat(hi)}" }
+    },
+    perFile("#bstats", 3)(_ => Nil)(
+      (m, f, _) => envelope(m, f).copy(bounds = m.bounds + f(0).toInt)),
+    // zero-count columns are left out, so an empty list = no nulls
+    perFile("#nulls", 1)(_.nulls.map(ns => Seq(counts(ns.filter(_._2 > 0)))))(
+      (m, f, _) => m.copy(nulls = Some(countsOf(f(0))))),
+    perFile("#dv", 2)(_.dv.map { case (sc, n) => Seq(sc, n) })(
+      (m, f, _) => m.copy(dv = Some((f(0), f(1).toLong)))),
+    // zero sums stay listed (zero is a KNOWN sum); only unknown columns
+    // are absent — the opposite filter from #nulls
+    perFile("#sums", 1)(_.sums.filter(_.nonEmpty).map(ss => Seq(counts(ss))))(
+      (m, f, _) => m.copy(sums = Some(countsOf(f(0))))),
+    // filter payloads: a sidecar ref persists as its BARE name
+    // (relocation-safe) and re-qualifies against the manifest's directory
+    perFile("#bloom", 2)(m => byCol(m.blooms).map { case (i, p) =>
+      Seq(i, GraftBloomSidecars.renderPayload(p)) })((m, f, dir) => m.copy(blooms =
+        m.blooms + (f(0).toInt -> GraftBloomSidecars.absolutize(f(1), dir)))),
+    perFile("#pbloom", 3)(m => byCol(m.pblooms).map { case (i, (w, p)) =>
+      Seq(i, w, GraftBloomSidecars.renderPayload(p)) })((m, f, dir) => m.copy(pblooms =
+        m.pblooms + (f(0).toInt -> (f(1).toInt, GraftBloomSidecars.absolutize(f(2), dir))))),
+    perFile("#ngbloom", 3)(m => byCol(m.ngblooms).map { case (i, (w, p)) =>
+      Seq(i, w, GraftBloomSidecars.renderPayload(p)) })((m, f, dir) => m.copy(ngblooms =
+        m.ngblooms + (f(0).toInt -> (f(1).toInt, GraftBloomSidecars.absolutize(f(2), dir))))),
+    perFile("#ngalpha", 2)(m => byCol(m.ngalphas).map { case (i, a) => Seq(i, escStat(a)) })(
+      (m, f, _) => m.copy(ngalphas = m.ngalphas + (f(0).toInt -> unescStat(f(1))))),
+    perFile("#ndv", 2)(m => byCol(m.ndvs).map { case (i, b64) => Seq(i, b64) })(
+      (m, f, _) => m.copy(ndvs = m.ndvs + (f(0).toInt -> f(1)))),
+    perFile("#centroid", 2)(m => byCol(m.centroids).map { case (i, b64) => Seq(i, b64) })(
+      (m, f, _) => m.copy(centroids = m.centroids + (f(0).toInt -> f(1)))),
+    perFile("#rgcen", 2)(m => byCol(m.rgcens).map { case (i, gs) =>
+      Seq(i, gs.map(g => s"${g.start}:${g.end}:${g.rows}:${g.b64}").mkString(";")) })(
+      (m, f, _) => m.copy(rgcens = m.rgcens + (f(0).toInt ->
+        f(1).split(";", -1).toSeq.map(_.split(":", 4) match {
+          case Array(st, en, n, b64) => GraftRgCen(st.toLong, en.toLong, n.toLong, b64)
           case bad => throw new IllegalStateException(
-            s"malformed #prop line: '${bad.mkString("=")}'")
+            s"malformed #rgcen group: '${bad.mkString(":")}'")
+        })))),
+    perFile("#rvstats", 3)(m => byCol(m.rvstats).map { case (i, (lo, hi)) =>
+      Seq(i, escStat(lo), escStat(hi)) })(
+      (m, f, _) => m.copy(rvstats = m.rvstats + (f(0).toInt -> (unescStat(f(1)), unescStat(f(2)))))))
+
+  private val HeaderByTag = HeaderLines.map(l => l.tag -> l).toMap
+  private val FileByTag = FileLines.map(l => l.tag -> l).toMap
+
+  /** The one decoder behind [[parse]] and [[readHeader]], position-
+    * agnostic. `headerOnly` stops at `_total` and yields None when a
+    * `<file>,<rows>` line comes first — a pre-round-8 manifest carries
+    * `_total` last — so the caller falls back to the full read. Unknown
+    * `#` lines (a newer writer's facts) are skipped. */
+  private def decode(version: Int, lines: Iterator[String], dir: Option[String],
+      headerOnly: Boolean): Option[GraftManifest] = {
+    var m = GraftManifest(version, Nil, 0L, None, checks = Vector.empty, eqDels = Vector.empty)
+    val facts = scala.collection.mutable.Map[String, GraftFileMeta]().withDefault(f =>
+      GraftFileMeta(f, 0L, -1, Map.empty, None, committed = true)) // -1: no #meta
+    val rows = Vector.newBuilder[(String, Long)]
+    var total: Option[Long] = None
+    while (!(headerOnly && total.isDefined) && lines.hasNext) {
+      val s = lines.next()
+      if (s.startsWith("#")) {
+        val eq = s.indexOf('=')
+        if (eq > 0) {
+          val (tag, payload) = (s.substring(0, eq), s.substring(eq + 1))
+          HeaderByTag.get(tag) match {
+            case Some(l) => m = l.read(m, l.split(payload), dir)
+            case None => if (!headerOnly) FileByTag.get(tag).foreach { l =>
+              val f = l.split(payload)
+              facts(f(0)) = l.read(facts(f(0)), f, dir)
+            }
+          }
         }
-      case s if s.startsWith("#format=") =>
-        format = Some(s.stripPrefix("#format="))
-      case s if s.startsWith("#idx=") =>
-        idxCols = Some(parseIdx(s.stripPrefix("#idx=")))
-      case s if s.startsWith("#seq=") =>
-        s.stripPrefix("#seq=").split(",", 2) match {
-          case Array(f, v) => seqs(f) = v.toInt
-          case bad => throw new IllegalStateException(
-            s"malformed #seq line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#eqdel=") =>
-        s.stripPrefix("#eqdel=").split(",", 4) match {
-          case Array(v, c, sc, n) => eqDels += GraftEqDel(v.toInt, c, sc, n.toLong)
-          case bad => throw new IllegalStateException(
-            s"malformed #eqdel line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#check=") =>
-        s.stripPrefix("#check=").split(",", 2) match {
-          case Array(n, e) => checks += (n -> e)
-          case bad => throw new IllegalStateException(
-            s"malformed #check line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#txn=") =>
-        s.stripPrefix("#txn=").split(":", 2) match {
-          case Array(w, e) => txns(w) = e.toLong
-          case bad => throw new IllegalStateException(
-            s"malformed #txn line: '${bad.mkString(":")}'")
-        }
-      case s if s.startsWith("#meta=") =>
-        s.stripPrefix("#meta=").split(",", 4) match {
-          case Array(f, n, pc, pv) =>
-            ncols(f) = n.toInt
-            if (pc.nonEmpty) parts(f) = (pc, pv)
-          case bad => throw new IllegalStateException(
-            s"malformed #meta line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#stats=") =>
-        s.stripPrefix("#stats=").split(",", 4) match {
-          case Array(f, i, mn, mx) =>
-            stats(f) = stats(f) + (i.toInt -> (unescStat(mn), unescStat(mx)))
-          case bad => throw new IllegalStateException(
-            s"malformed #stats line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#bstats=") =>
-        s.stripPrefix("#bstats=").split(",", 4) match {
-          case Array(f, i, lo, hi) =>
-            stats(f) = stats(f) + (i.toInt -> (unescStat(lo), unescStat(hi)))
-            boundCols(f) = boundCols(f) + i.toInt
-          case bad => throw new IllegalStateException(
-            s"malformed #bstats line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#nulls=") =>
-        s.stripPrefix("#nulls=").split(",", 2) match {
-          case Array(f, pairs) => nulls(f) = pairs.split(";").filter(_.nonEmpty)
-            .map { p => val Array(i, n) = p.split(":", 2); i.toInt -> n.toLong }.toMap
-          case bad => throw new IllegalStateException(
-            s"malformed #nulls line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#dv=") =>
-        s.stripPrefix("#dv=").split(",", 3) match {
-          case Array(f, sc, n) => dvs(f) = (sc, n.toLong)
-          case bad => throw new IllegalStateException(
-            s"malformed #dv line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#sums=") =>
-        s.stripPrefix("#sums=").split(",", 2) match {
-          case Array(f, pairs) => sums(f) = pairs.split(";").filter(_.nonEmpty)
-            .map { p => val Array(i, v) = p.split(":", 2); i.toInt -> v.toLong }.toMap
-          case bad => throw new IllegalStateException(
-            s"malformed #sums line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#bloom=") =>
-        s.stripPrefix("#bloom=").split(",", 3) match {
-          case Array(f, i, b64) => blooms(f) = blooms(f) +
-            (i.toInt -> GraftBloomSidecars.absolutize(b64, dir))
-          case bad => throw new IllegalStateException(
-            s"malformed #bloom line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#ngbloom=") =>
-        s.stripPrefix("#ngbloom=").split(",", 4) match {
-          case Array(f, i, w, pay) =>
-            ngbs(f) = ngbs(f) +
-              (i.toInt -> (w.toInt, GraftBloomSidecars.absolutize(pay, dir)))
-          case bad => throw new IllegalStateException(
-            s"malformed #ngbloom line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#pbloom=") =>
-        s.stripPrefix("#pbloom=").split(",", 4) match {
-          case Array(f, i, w, pay) =>
-            pbls(f) = pbls(f) +
-              (i.toInt -> (w.toInt, GraftBloomSidecars.absolutize(pay, dir)))
-          case bad => throw new IllegalStateException(
-            s"malformed #pbloom line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#ndv=") =>
-        s.stripPrefix("#ndv=").split(",", 3) match {
-          case Array(f, i, b64) => ndvs(f) = ndvs(f) + (i.toInt -> b64)
-          case bad => throw new IllegalStateException(
-            s"malformed #ndv line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#centroid=") =>
-        s.stripPrefix("#centroid=").split(",", 3) match {
-          case Array(f, i, b64) => cens(f) = cens(f) + (i.toInt -> b64)
-          case bad => throw new IllegalStateException(
-            s"malformed #centroid line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#ngalpha=") =>
-        s.stripPrefix("#ngalpha=").split(",", 3) match {
-          case Array(f, i, chars) => ngas(f) = ngas(f) + (i.toInt -> unescStat(chars))
-          case bad => throw new IllegalStateException(
-            s"malformed #ngalpha line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#rvstats=") =>
-        s.stripPrefix("#rvstats=").split(",", 4) match {
-          case Array(f, i, lo, hi) =>
-            rvss(f) = rvss(f) + (i.toInt -> (unescStat(lo), unescStat(hi)))
-          case bad => throw new IllegalStateException(
-            s"malformed #rvstats line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#rgcen=") =>
-        s.stripPrefix("#rgcen=").split(",", 3) match {
-          case Array(f, i, body) =>
-            val gs = body.split(";", -1).toSeq.map(_.split(":", 4) match {
-              case Array(st, en, n, b64) =>
-                GraftRgCen(st.toLong, en.toLong, n.toLong, b64)
-              case bad => throw new IllegalStateException(
-                s"malformed #rgcen group: '${bad.mkString(":")}'")
-            })
-            rgcs(f) = rgcs(f) + (i.toInt -> gs)
-          case bad => throw new IllegalStateException(
-            s"malformed #rgcen line: '${bad.mkString(",")}'")
-        }
-      case s if s.startsWith("#") => () // forward-compat: ignore unknown metadata
-      case line => line.split(",", 2) match {
-        case Array("_total", n) => total = n.toLong
-        case Array(f, n)        => rows += (f -> n.toLong)
+      } else if (s.nonEmpty) s.split(",", 2) match {
+        case Array("_total", n) => total = Some(n.toLong)
+        case Array(f, n) => if (headerOnly) return None else rows += (f -> n.toLong)
         case bad => throw new IllegalStateException(
           s"malformed manifest line: '${bad.mkString(",")}'")
       }
     }
-    val width = ddl.map(StructType.fromDDL(_).length).getOrElse(0)
-    val metas = rows.result().map { case (f, n) =>
-      GraftFileMeta(f, n, ncols.getOrElse(f, width), stats(f), parts.get(f),
-        nulls.get(f), dvs.get(f), sums.get(f), blooms(f), ndvs(f),
-        seqs.getOrElse(f, 0), committed = true, bounds = boundCols(f),
-        centroids = cens(f), pblooms = pbls(f), rgcens = rgcs(f),
-        rvstats = rvss(f), ngblooms = ngbs(f), ngalphas = ngas(f))
-    }
-    GraftManifest(version, metas, total, ddl, ts, base, op, txns.toMap, nFiles,
-      ids, checks.result(), partSpec, sortSpec, format, eqDels.result(),
-      idxCols, props.toMap)
+    if (headerOnly && total.isEmpty) return None
+    lazy val width = m.schemaDdl.map(StructType.fromDDL(_).length).getOrElse(0)
+    Some(m.copy(total = total.getOrElse(0L), metas = rows.result().map { case (f, n) =>
+      val meta = facts(f)
+      meta.copy(rows = n, ncols = if (meta.ncols < 0) width else meta.ncols)
+    }))
   }
+
+  def parse(version: Int, body: String, dir: Option[String] = None): GraftManifest =
+    decode(version, body.split("\n").iterator, dir, headerOnly = false).get
+
+  /** One manifest body, the exact inverse of [[parse]]: header lines,
+    * `_total`, every file's facts, then the `<file>,<rows>` lines. A delta
+    * is a manifest with `base` set and only its own adds in `metas`;
+    * `total` is always the FULL snapshot's — the fold integrity check
+    * depends on it, and it rides in the header so a delta commit learns
+    * the prior total from [[readHeader]]. */
+  private[graft] def render(m: GraftManifest): String =
+    (HeaderLines.iterator.flatMap(_.render(m)) ++ Iterator(s"_total,${m.total}") ++
+      m.metas.iterator.flatMap(f => FileLines.iterator.flatMap(_.render(f))) ++
+      m.metas.iterator.map(f => s"${f.name},${f.rows}")).mkString("\n")
 
   /** The RAW on-disk manifest for one version (a delta stays a delta). */
   private[sources] def readRaw(path: String, v: Int): GraftManifest = {
@@ -1022,8 +1016,6 @@ object GraftManifest {
     * row sum disagrees fails loudly rather than serving a torn chain. */
   private def fold(path: String, v: Int): GraftManifest = {
     GraftReadStats.manifestFolds.increment()
-    if (sys.env.contains("GRAFT_DEBUG_FOLDS"))
-      new Exception(s"FOLD $path v$v").printStackTrace()
     val m = readRaw(path, v)
     m.base match {
       case None => m.copy(nFiles = Some(m.metas.size)) // folded = exact
@@ -1050,19 +1042,11 @@ object GraftManifest {
         if (sum != m.total) throw new IllegalStateException(
           s"graft-sink: folding v$v at $path yields $sum rows, manifest committed ${m.total}")
         // txns accumulate down the chain, the later (larger-epoch) entry
-        // winning per writer — streaming epochs only move forward; ids
-        // and checks ride the TOP manifest (every commit re-emits them)
-        GraftManifest(v, metas, m.total, m.schemaDdl, m.ts, op = m.op,
-          txns = baseM.txns ++ m.txns, nFiles = Some(metas.size),
-          ids = m.ids, checks = m.checks, partSpec = m.partSpec,
-          sortSpec = m.sortSpec, format = m.format,
-          // eqdel entries ride the TOP manifest (every commit re-emits the
-          // accumulated, pruned set — same rule as ids/checks)
-          eqDels = m.eqDels,
-          // #idx rides the TOP manifest too (each delta re-emits the union)
-          idxCols = m.idxCols,
-          // #prop rides the TOP manifest (every commit re-emits the set)
-          props = m.props)
+        // winning per writer — streaming epochs only move forward; every
+        // other header fact (ids, checks, eqdels, #idx, props, ...) rides
+        // the TOP manifest, which re-emits it on every commit
+        m.copy(metas = metas, base = None, txns = baseM.txns ++ m.txns,
+          nFiles = Some(metas.size))
     }
   }
 
@@ -1121,106 +1105,6 @@ object GraftManifest {
     * chains never contain removals — folding is pure concatenation. */
   val CheckpointEvery = 10
 
-  /** One manifest body (full when `base` is None, delta otherwise).
-    * `totalRows` is always the FULL snapshot's row count — the fold
-    * integrity check depends on it. */
-  private def render(ddl: String, ts: Long, base: Option[Int],
-      bodyMetas: Seq[GraftFileMeta], totalRows: Long,
-      op: Option[String] = None,
-      txns: Map[String, Long] = Map.empty,
-      snapshotFiles: Option[Int] = None,
-      ids: Option[Seq[Int]] = None,
-      checks: Seq[(String, String)] = Nil,
-      partSpec: Option[String] = None,
-      sortSpec: Option[String] = None,
-      format: Option[String] = None,
-      eqDels: Seq[GraftEqDel] = Nil,
-      idxCols: Option[GraftIdx] = None,
-      props: Map[String, String] = Map.empty): String = {
-    val meta = bodyMetas.flatMap { m =>
-      val p = m.partition.map { case (c, v) => s"$c,$v" }.getOrElse(",")
-      (s"#meta=${m.name},${m.ncols},$p" +:
-        (if (m.seq > 0) Seq(s"#seq=${m.name},${m.seq}") else Nil) ++:
-        m.stats.toSeq.sortBy(_._1).map { case (i, (mn, mx)) =>
-          val kind = if (m.bounds(i)) "#bstats" else "#stats"
-          s"$kind=${m.name},$i,${escStat(mn)},${escStat(mx)}" }) ++
-        m.nulls.map(ns => s"#nulls=${m.name}," + ns.toSeq.filter(_._2 > 0)
-          .sortBy(_._1).map { case (i, n) => s"$i:$n" }.mkString(";")).toSeq ++
-        m.dv.map { case (sc, n) => s"#dv=${m.name},$sc,$n" }.toSeq ++
-        // zero sums stay listed (zero is a KNOWN sum); only unknown
-        // columns are absent — the opposite filter from #nulls
-        m.sums.filter(_.nonEmpty).map(ss => s"#sums=${m.name}," + ss.toSeq
-          .sortBy(_._1).map { case (i, v) => s"$i:$v" }.mkString(";")).toSeq ++
-        m.blooms.toSeq.sortBy(_._1).map { case (i, b64) =>
-          s"#bloom=${m.name},$i,${GraftBloomSidecars.renderPayload(b64)}" } ++
-        // fixed-width PREFIX bloom (round 15): hashes of the first `w`
-        // chars of every value of length >= w — `LIKE 'p%'` skipping on
-        // layouts the envelopes can't prune (hash-scattered strings)
-        // payloads render through [[GraftBloomSidecars.renderPayload]]:
-        // a sidecar reference persists as its BARE name (relocation-
-        // safe; parse re-qualifies), inline/marker payloads verbatim
-        m.pblooms.toSeq.sortBy(_._1).map { case (i, (w, pay)) =>
-          s"#pbloom=${m.name},$i,$w,${GraftBloomSidecars.renderPayload(pay)}" } ++
-        // N-GRAM bloom (round 15): hashes of EVERY w-char window of each
-        // value — `LIKE '%s%'` (contains) file skipping; prefix/suffix/
-        // equality probes reuse it (they imply contains)
-        m.ngblooms.toSeq.sortBy(_._1).map { case (i, (w, pay)) =>
-          s"#ngbloom=${m.name},$i,$w,${GraftBloomSidecars.renderPayload(pay)}" } ++
-        // OBSERVED-ALPHABET fact (round 16): the sorted char set of every
-        // value of a windowed column — a probe char the file never wrote
-        // proves no contains/prefix/suffix/equality match, decided INLINE
-        // (no sidecar fetch), at ANY probe length, even on `!sat` files
-        m.ngalphas.toSeq.sortBy(_._1).map { case (i, a) =>
-          s"#ngalpha=${m.name},$i,${escStat(a)}" } ++
-        m.ndvs.toSeq.sortBy(_._1).map { case (i, b64) =>
-          s"#ndv=${m.name},$i,$b64" } ++
-        // per-file vector centroid (round 14): base64 little-endian
-        // doubles, the mean of the column's non-null vectors — the
-        // scan-side ANN routing fact (`annProbe` file pruning)
-        m.centroids.toSeq.sortBy(_._1).map { case (i, b64) =>
-          s"#centroid=${m.name},$i,$b64" } ++
-        // per-ROW-GROUP centroids (round 15): every group of the file in
-        // file order — start:end:rows:b64 (b64 `-` = poisoned, no claim)
-        m.rgcens.toSeq.sortBy(_._1).map { case (i, gs) =>
-          s"#rgcen=${m.name},$i," + gs.map(g =>
-            s"${g.start}:${g.end}:${g.rows}:${g.b64}").mkString(";") } ++
-        // REVERSED-string bound envelope (round 15): lo <= reverse(v) < hi
-        // for every non-null v — the suffix-probe (`LIKE '%s'`) skip on a
-        // reverse(c)-clustered layout; pruning-grade only, never exact
-        m.rvstats.toSeq.sortBy(_._1).map { case (i, (lo, hi)) =>
-          s"#rvstats=${m.name},$i,${escStat(lo)},${escStat(hi)}" }
-    }
-    // `_total` rides in the HEADER (parse is position-agnostic): a delta
-    // commit then learns the prior total from [[readHeader]] without
-    // parsing the checkpoint's whole file list
-    (s"#schema=$ddl" +: s"#ts=$ts" +: (base.map(b => s"#base=$b").toSeq ++
-      op.filter(o => o.nonEmpty && !o.contains('\n')).map(o => s"#op=$o").toSeq ++
-      snapshotFiles.map(n => s"#files=$n").toSeq ++
-      ids.map(is => s"#ids=${is.mkString(",")}").toSeq ++
-      partSpec.map(s => s"#partspec=$s").toSeq ++
-      sortSpec.map(s => s"#sortspec=$s").toSeq ++
-      format.map(f => s"#format=$f").toSeq ++
-      // TABLE PROPERTIES (round 14): `#prop=<key>=<escaped value>` —
-      // free-form table metadata riding every commit like checks/ids
-      // (each commit re-emits the full set; keys are validated
-      // [A-Za-z0-9._-]+ at set time, so the first '=' splits). Sorted
-      // for byte-stable manifests.
-      props.toSeq.sortBy(_._1).map { case (k, v) =>
-        s"#prop=$k=${escStat(v)}" } ++
-      // the table's INDEXED COLUMN SETS (bloom/NDV, and round 15:
-      // prefix-bloom widths / centroid columns / row-group granularity)
-      // as a HEADER fact: what lets a per-epoch streaming commit learn
-      // them in O(header) instead of folding the chain's per-file facts
-      // (ADVICE r11 #2). Emitted even when empty — absence means LEGACY
-      // manifest (fall back to one fold), not "no indexed columns".
-      idxCols.map(ix => s"#idx=${renderIdx(ix)}").toSeq ++
-      eqDels.map(e => s"#eqdel=${e.v},${e.col},${e.sidecar},${e.n}") ++
-      checks.map { case (n, e) => s"#check=$n,$e" } ++
-      txns.toSeq.sortBy(_._1).map { case (w, e) => s"#txn=$w:$e" }) ++:
-      s"_total,$totalRows" +: meta ++:
-      bodyMetas.map(m => s"${m.name},${m.rows}")).mkString("\n")
-  }
-
   /** Header-only raw read — schema, commit clock, base pointer, total —
     * O(header lines) regardless of how many files the manifest names.
     * This is what keeps a delta APPEND O(1): it needs exactly these four
@@ -1231,75 +1115,9 @@ object GraftManifest {
     if (!Files.exists(f)) throw new IllegalStateException(
       s"graft-sink: manifest v$v missing at $path")
     val in = Files.newBufferedReader(f, StandardCharsets.UTF_8)
-    try {
-      var ddl: Option[String] = None
-      var ts: Option[Long] = None
-      var base: Option[Int] = None
-      var op: Option[String] = None
-      var nFiles: Option[Int] = None
-      var ids: Option[Seq[Int]] = None
-      var partSpec: Option[String] = None
-      var sortSpec: Option[String] = None
-      var format: Option[String] = None
-      var idxCols: Option[GraftIdx] = None
-      val props = scala.collection.mutable.Map[String, String]()
-      val eqDels = Seq.newBuilder[GraftEqDel]
-      val checks = Seq.newBuilder[(String, String)]
-      val txns = scala.collection.mutable.Map[String, Long]()
-      var total = -1L
-      var line = in.readLine()
-      while (line != null && total < 0 && (line.startsWith("#") || line.startsWith("_total,"))) {
-        if (line.startsWith("#schema=")) ddl = Some(line.stripPrefix("#schema="))
-        else if (line.startsWith("#ts=")) ts = Some(line.stripPrefix("#ts=").toLong)
-        else if (line.startsWith("#base=")) base = Some(line.stripPrefix("#base=").toInt)
-        else if (line.startsWith("#op=")) op = Some(line.stripPrefix("#op="))
-        else if (line.startsWith("#files=")) nFiles = Some(line.stripPrefix("#files=").toInt)
-        else if (line.startsWith("#ids="))
-          ids = Some(line.stripPrefix("#ids=").split(",").map(_.toInt).toSeq)
-        else if (line.startsWith("#partspec="))
-          partSpec = Some(line.stripPrefix("#partspec="))
-        else if (line.startsWith("#sortspec="))
-          sortSpec = Some(line.stripPrefix("#sortspec="))
-        else if (line.startsWith("#prop=")) {
-          line.stripPrefix("#prop=").split("=", 2) match {
-            case Array(k, v) => props(k) = unescStat(v)
-            case bad => throw new IllegalStateException(
-              s"malformed #prop line: '${bad.mkString("=")}'")
-          }
-        }
-        else if (line.startsWith("#format="))
-          format = Some(line.stripPrefix("#format="))
-        else if (line.startsWith("#idx="))
-          idxCols = Some(parseIdx(line.stripPrefix("#idx=")))
-        else if (line.startsWith("#eqdel=")) {
-          line.stripPrefix("#eqdel=").split(",", 4) match {
-            case Array(v, c, sc, n) => eqDels += GraftEqDel(v.toInt, c, sc, n.toLong)
-            case bad => throw new IllegalStateException(
-              s"malformed #eqdel line: '${bad.mkString(",")}'")
-          }
-        }
-        else if (line.startsWith("#check=")) {
-          line.stripPrefix("#check=").split(",", 2) match {
-            case Array(n, e) => checks += (n -> e)
-            case bad => throw new IllegalStateException(
-              s"malformed #check line: '${bad.mkString(",")}'")
-          }
-        }
-        else if (line.startsWith("#txn=")) {
-          line.stripPrefix("#txn=").split(":", 2) match {
-            case Array(w, e) => txns(w) = e.toLong
-            case bad => throw new IllegalStateException(
-              s"malformed #txn line: '${bad.mkString(":")}'")
-          }
-        }
-        else if (line.startsWith("_total,")) total = line.stripPrefix("_total,").toLong
-        line = in.readLine()
-      }
-      if (total >= 0) GraftManifest(v, Seq.empty, total, ddl, ts, base, op,
-        txns.toMap, nFiles, ids, checks.result(), partSpec, sortSpec, format,
-        eqDels.result(), idxCols, props.toMap)
-      else readRaw(path, v)
-    } finally in.close()
+    val header = try decode(v, Iterator.continually(in.readLine()).takeWhile(_ != null),
+      Some(path), headerOnly = true) finally in.close()
+    header.getOrElse(readRaw(path, v))
   }
 
   /** Header-only schema of one committed version (None for manifests
@@ -1596,16 +1414,17 @@ object GraftManifest {
         // data demands
         ms.flatMap(_.ngblooms.toSeq).groupBy(_._1).toSeq.sortBy(_._1)
           .map { case (i, ws) => (i, ws.map(_._2._1).min) })
+      val common = GraftManifest(next, Nil, newTotal, Some(unionDdl), Some(commitTs),
+        op = op, ids = Some(ids), checks = checks, partSpec = partSpec,
+        sortSpec = sortSpec, format = format, props = props)
       val body =
-        if (isDelta) render(unionDdl, commitTs, headV, jobStamped, newTotal, op,
-          txn.toMap,
+        if (isDelta) render(common.copy(metas = jobStamped, base = headV,
+          txns = txn.toMap,
           // snapshot file count carried forward like `_total`; a legacy
           // head without one leaves it absent until the next checkpoint
-          snapshotFiles = head.flatMap(_.nFiles).map(_ + jobStamped.size),
-          ids = Some(ids), checks = checks, partSpec = partSpec,
-          sortSpec = sortSpec, format = format, eqDels = eqDels0,
-          idxCols = head.flatMap(_.idxCols).map(_.union(idxOf(jobStamped))),
-          props = props)
+          nFiles = head.flatMap(_.nFiles).map(_ + jobStamped.size),
+          eqDels = eqDels0,
+          idxCols = head.flatMap(_.idxCols).map(_.union(idxOf(jobStamped)))))
         else {
           require(all.map(_.liveRows).sum == newTotal,
             s"graft-sink: checkpoint fold at $path disagrees with the running total")
@@ -1616,9 +1435,7 @@ object GraftManifest {
           // — one manifest parse, the rewrite is already O(table).)
           val accTxns = headFolded.map(_.txns).getOrElse(Map.empty) ++ txn.toMap
           val eqPruned = eqDels0.filter(e => all.exists(_.seq < e.v))
-          render(unionDdl, commitTs, None, all, newTotal, op, accTxns,
-            snapshotFiles = Some(all.size), ids = Some(ids), checks = checks,
-            partSpec = partSpec, sortSpec = sortSpec, format = format,
+          render(common.copy(metas = all, txns = accTxns, nFiles = Some(all.size),
             eqDels = eqPruned,
             // recompute the known surfaces from the fold, but CARRY the
             // forward-compat `extra` segments — a checkpoint must not
@@ -1626,7 +1443,7 @@ object GraftManifest {
             // been faithfully unioning forward (round 16)
             idxCols = Some(headFolded.flatMap(_.idxCols)
               .map(h => idxOf(all).copy(extra = h.extra))
-              .getOrElse(idxOf(all))), props = props)
+              .getOrElse(idxOf(all)))))
         }
       // a MULTI-TABLE-TXN claim lands invisible behind its marker line
       val claimBody = pendingMarker
@@ -1736,8 +1553,8 @@ object GraftManifest {
       metas: Seq[GraftFileMeta]): Unit = {
     require(id.matches("[A-Za-z0-9_-]+"),
       s"graft-sink: WAP id '$id' must be [A-Za-z0-9_-]+")
-    val body = render(schemaDdl, System.currentTimeMillis(), None, metas,
-      metas.map(_.liveRows).sum, op = Some("WAP STAGE")) + s"\n#wapbase=$base"
+    val body = render(GraftManifest(0, metas, metas.map(_.liveRows).sum, Some(schemaDdl),
+      Some(System.currentTimeMillis()), op = Some("WAP STAGE"))) + s"\n#wapbase=$base"
     // CREATE_NEW: two stages reusing an id is a caller bug — refuse, never
     // silently replace a pending audit batch
     Files.write(Paths.get(path, WapPrefix + id),
@@ -1928,12 +1745,7 @@ object GraftManifest {
     // "dropped versions fail at manifest lookup" contract holds exactly.
     def foldToSelfContained(v: Int): Unit =
       if (readHeader(path, v).base.isDefined) {
-        val m = fold(path, v)
-        val body = render(m.schemaDdl.getOrElse(""), m.ts.getOrElse(0L),
-          None, m.metas, m.total, m.op, m.txns, Some(m.metas.size),
-          ids = m.ids, checks = m.checks, partSpec = m.partSpec,
-          sortSpec = m.sortSpec, format = m.format, eqDels = m.eqDels,
-          idxCols = m.idxCols, props = m.props)
+        val body = render(fold(path, v))
         val tmp = Files.createTempFile(Paths.get(path), s"$VPrefix$v", ".tmp")
         try {
           Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
@@ -2464,53 +2276,6 @@ object GraftBloomSidecars {
     * one bundle cost one read. Crude size bound like
     * [[GraftEqDelCache]] (payloads cap at ~1.4 MB, so 64 entries bound
     * the memo under ~100 MB). */
-  /** Bundle fetch mode (round 17, VERDICT r16 next #3). `slurp` (the
-    * default) reads each bundle ONCE and serves every ranged ref from
-    * the byte cache — the object-store posture, where plan latency is
-    * made of round trips. `ranged` issues one positional read PER REF
-    * instead: same bytes, more fetch parallelism — on a local/NVMe tier
-    * the parallel sweep's same-bundle refs no longer serialize behind
-    * one whole-bundle read (measured at 256 files: per-file sidecars
-    * beat the slurp 191 vs 688 ms wall at identical bytes; ranged
-    * bundle reads close that gap while keeping the bundle layout).
-    * Seeded from the `graft.bundle.fetchMode` system property;
-    * process-level because resolution runs on common-pool planning
-    * threads where no session conf is reliably in scope. */
-  @volatile var bundleFetchMode: String =
-    sys.props.getOrElse("graft.bundle.fetchMode", "slurp")
-  private def rangedRead(f: String, off: Int, len: Int): Option[Array[Byte]] = {
-    // same failure memo as the slurp path (review round 17): within the
-    // TTL a broken bundle costs ONE attempted open per probe wave, not
-    // one per ref — and heals after it, instead of pinning no-skip
-    val exp = bundleFails.get(f)
-    if (exp != null) {
-      if (System.nanoTime() < exp) return None
-      bundleFails.remove(f, exp); ()
-    }
-    loads.increment()
-    def failed: Option[Array[Byte]] = {
-      bundleFails.put(f, System.nanoTime() + bundleFailTtl); None
-    }
-    try {
-      val ch = java.nio.channels.FileChannel.open(
-        Paths.get(f), java.nio.file.StandardOpenOption.READ)
-      try {
-        // shape-check BEFORE allocating (review round 17 second pass): a
-        // corrupt 9-digit range must not force a ~GB buffer per ref
-        if (ch.size() < off.toLong + len) failed // truncated
-        else {
-          val buf = java.nio.ByteBuffer.allocate(len)
-          var pos = off.toLong
-          while (buf.hasRemaining) {
-            val n = ch.read(buf, pos)
-            if (n < 0) return failed
-            pos += n
-          }
-          Some(buf.array())
-        }
-      } finally ch.close()
-    } catch { case _: java.io.IOException => failed }
-  }
   def resolve(payload: String): String =
     if (!isRef(payload)) payload
     else {
@@ -2524,17 +2289,6 @@ object GraftBloomSidecars {
       val got = cache.computeIfAbsent(payload.drop(1), body => {
         val (f, range) = splitRef(body)
         range match {
-          case Some((off, len)) if off >= 0 && len >= 0 &&
-              bundleFetchMode == "ranged" =>
-            rangedRead(f, off, len) match {
-              case Some(bytes) =>
-                new String(bytes, StandardCharsets.UTF_8).trim
-              case None =>
-                warnOnce(s"$f:$off:$len",
-                  s"graft-sink: ranged bundle read $off+$len of $f failed; " +
-                    "treating as saturated (no skip)")
-                null
-            }
           case Some((off, len)) =>
             val all = bundleBytes(f)
             // shape-check before slicing (a truncated/missing bundle

@@ -203,13 +203,6 @@ object PruneScaleDemo {
       s""""bundles":$bBundles}""")
     planPhase("ngram_plan_bundled",
       rd(ngbloomed).where(col("payload").contains(needleStr)))
-    // RANGED PER-REF MODE (round 17): same bundle layout, one positional
-    // read per ref — restores the per-file sweep's fetch parallelism on
-    // a local/NVMe tier while the slurp stays the object-store default
-    graft.sources.GraftBloomSidecars.bundleFetchMode = "ranged"
-    planPhase("ngram_plan_bundled_ranged",
-      rd(ngbloomed).where(col("payload").contains(needleStr)))
-    graft.sources.GraftBloomSidecars.bundleFetchMode = "slurp"
     // SUFFIX PROBE (round 15): `payload LIKE '%ff'` on a REVERSED-column
     // layout — `#rvstats` windows; the k-clustered table is the control
     val rsorted = s"$root/rsorted"

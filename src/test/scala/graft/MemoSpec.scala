@@ -50,4 +50,16 @@ class MemoSpec extends AnyFunSuite {
     assert(result.isEmpty && setup.isEmpty,
       "evict must drain setup memos too")
   }
+
+  test("only result-memo builds advance the build tally") {
+    val result = graft.util.Memos.memo[Int]
+    val setup = graft.util.Memos.setupMemo[Int]
+    val b0 = graft.util.Memos.builds
+    assert(graft.util.Memos.cached(setup, spark, "sfZ")(1) == 1)
+    assert(graft.util.Memos.builds == b0,
+      "a setup-memo build is fixture preparation, not a kernel build")
+    assert(graft.util.Memos.cached(result, spark, "sfZ")(2) == 2)
+    assert(graft.util.Memos.builds == b0 + 1, "a result-memo build counts")
+    graft.util.Memos.evict(spark.sparkContext)
+  }
 }

@@ -101,35 +101,6 @@ class Round17Spec extends AnyFunSuite {
       "the fresh file's ref must be bundled too")
   }
 
-  test("ranged bundle mode answers identically, pays per-ref reads, degrades") {
-    val dir = tmp("graft_r17_ranged")
-    writeFixture(dir, files = 8)
-    val window = inAlphabetWindow(dir)
-    GraftBloomSidecars.dropCache()
-    val expect = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
-    val (pays, bundles, _) = GraftMaintenance.compactIndexes(dir)
-    assert(pays == 8 && bundles == 1, s"fixture wants one bundle: $pays/$bundles")
-    try {
-      GraftBloomSidecars.bundleFetchMode = "ranged"
-      GraftBloomSidecars.dropCache()
-      val l0 = GraftBloomSidecars.loads.sum()
-      val got = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
-      assert(got.sameElements(expect), "ranged mode must answer identically")
-      assert(GraftBloomSidecars.loads.sum() - l0 >= 8,
-        "ranged mode pays one positional read per candidate ref")
-      // TRUNCATE the bundle: ranged reads past the cut shape-check and
-      // degrade to keep-everything, never throw
-      val bundle = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".idb")).head
-      val bytes = java.nio.file.Files.readAllBytes(bundle.toPath)
-      java.nio.file.Files.write(bundle.toPath, bytes.take(bytes.length / 3))
-      GraftBloomSidecars.dropCache()
-      val got2 = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
-      assert(got2.sameElements(expect),
-        "a truncated bundle must still answer exactly in ranged mode")
-    } finally GraftBloomSidecars.bundleFetchMode = "slurp"
-  }
-
   test("ngram saturation beyond one step names the width OPTIMIZE lands") {
     // de Bruijn B(2,6) over {a,b}: every 6-window occurs (64 distinct —
     // saturates the w=6 auto-widened candidate) and every 4-window too

@@ -44,9 +44,7 @@ class Round18Spec extends AnyFunSuite {
       "sequential and 8-way concurrent eviction churn") {
     val prevAuto = GraftMaintenance.autoProbeEnabled
     GraftMaintenance.autoProbeEnabled = false // isolate: no sweeps mid-test
-    val prevMode = GraftBloomSidecars.bundleFetchMode
     val prevBudget = GraftBloomSidecars.bundleCacheBudget
-    GraftBloomSidecars.bundleFetchMode = "slurp" // bundleCache only fills here
     try {
       val K = 5
       val dirs = (0 until K).map(i => tmp(s"graft_r18_cache$i"))
@@ -121,7 +119,6 @@ class Round18Spec extends AnyFunSuite {
           s"(${budget + T.toLong * maxB}) — an inserter is not sweeping")
     } finally {
       GraftBloomSidecars.bundleCacheBudget = prevBudget
-      GraftBloomSidecars.bundleFetchMode = prevMode
       GraftBloomSidecars.dropCache()
       GraftMaintenance.autoProbeEnabled = prevAuto
     }
@@ -171,9 +168,7 @@ class Round18Spec extends AnyFunSuite {
       "after the TTL without a cache drop") {
     val prevAuto = GraftMaintenance.autoProbeEnabled
     GraftMaintenance.autoProbeEnabled = false
-    val prevMode = GraftBloomSidecars.bundleFetchMode
     val prevTtl = GraftBloomSidecars.bundleFailTtl
-    GraftBloomSidecars.bundleFetchMode = "slurp"
     GraftBloomSidecars.bundleFailTtl = 100L * 1000 * 1000 // 100 ms
     try {
       val dir = tmp("graft_r18_heal")
@@ -206,7 +201,6 @@ class Round18Spec extends AnyFunSuite {
           s"($accounted, $actual, $nAfter)")
     } finally {
       GraftBloomSidecars.bundleFailTtl = prevTtl
-      GraftBloomSidecars.bundleFetchMode = prevMode
       GraftBloomSidecars.dropCache()
       GraftMaintenance.autoProbeEnabled = prevAuto
     }
