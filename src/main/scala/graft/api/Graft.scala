@@ -29,7 +29,12 @@ object Graft {
   /** Connected components by alternating large-star/small-star contraction
     * (O(log²n) rounds, diameter-independent). Input: an undirected edge
     * list in any orientation; output: (`id`, `component`) with component =
-    * the min reachable id. Throws if `maxIter` rounds don't converge. */
+    * the min reachable id. Once the distinct edge list fits one shuffle
+    * task (100 000 edges) — before the first round or after any — it is
+    * collected and finished on the driver by union-find, so a small graph
+    * runs no distributed round at all. `maxIter` bounds the distributed
+    * rounds: throws if they neither converge nor shrink the list that far
+    * within it. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 30): DataFrame = {
     val (labels, _) = graft.ops.Pipeline.starContract(
@@ -115,13 +120,8 @@ object Graft {
   def dedupClusters(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val pairs = minhashDedupPairs(docs, idCol, textCol)
       .where(col("is_dup") === 1)
-      .select(col("doc_a").as("s"), col("doc_b").as("t")).localCheckpoint()
-    val (labels, _) = graft.ops.Pipeline.starContract(pairs)
-    val sizes = labels.groupBy("component")
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).cast("int").as("comp_size"))
-    labels.join(sizes, "component")
-      .select(col("id").as("doc_id"), col("component"), col("comp_size"))
+      .select(col("doc_a").as("s"), col("doc_b").as("t"))
+    graft.ops.Pipeline.ccWithSizes(pairs, "doc_id")
   }
 
   /** Deterministic train/val/test split: first hex digit of

@@ -174,7 +174,7 @@ object Dedup {
         " -1, cast((7 * (n_a + n_b) + 26) div 27 as int)) & 4294967295 as int)"))
       .withColumn("u", col("n_a") + col("n_b") - col("i"))
       .select(col("mask"),
-        (col("i") * 20 >= col("u") * 7).cast("long").as("is_dup"))
+        nearDup(col("i"), col("u")).cast("long").as("is_dup"))
     // All 8 config stats in ONE lazy aggregate over the once-computed pair
     // stream (nothing materializes the candidate table), unstacked to the
     // same 4 rows as the per-config formulation.
@@ -242,10 +242,14 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("i"), col("n_a"), col("n_b"))
   }
 
+  /** The near-duplicate verdict on exact shingle-set sizes: Jaccard
+    * i / u ≥ 7/20, in integers (u = |A ∪ B|). */
+  private[graft] def nearDup(i: Column, u: Column): Column = i * 20 >= u * 7
+
   private def minhashProject(v: DataFrame): DataFrame =
     v.withColumn("u", col("n_a") + col("n_b") - col("i"))
       .select(col("doc_a"), col("doc_b"), col("i"), col("u"),
-        (col("i") * 20 >= col("u") * 7).cast("int").as("is_dup"))
+        nearDup(col("i"), col("u")).cast("int").as("is_dup"))
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** Core MinHash-LSH dedup over any frame with (doc_id, text) —

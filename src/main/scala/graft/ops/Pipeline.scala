@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.util.Tables._
 
@@ -20,12 +21,19 @@ import graft.util.Tables._
   */
 object Pipeline {
 
+  /** Edges per shuffle task: the target each contraction round sizes its
+    * width for, and the canonical edge-list size up to which
+    * [[starContract]] finishes on the driver — a list that fits one task
+    * gains nothing from another distributed round but its job latency. */
+  private[graft] val EdgesPerTask = 100000L
+
   /** Alternating large-star/small-star contraction to a star forest whose
     * centers are the per-component minimum ids.
     *
     * Input: undirected edge list (`s`,`t` long columns, any orientation,
-    * self-loops ignored). Output: (labels DataFrame (`id`,`component`),
-    * rounds taken). Each round runs:
+    * duplicates allowed). Output: (labels DataFrame (`id`,`component`),
+    * distributed rounds taken). A node seen only through a self-loop is a
+    * component of its own. Each round runs:
     *
     *  - large-star: for every node u with neighborhood Γ(u), connect each
     *    v ∈ Γ(u) with v > u to m = min(Γ(u) ∪ {u}) — one groupBy-min +
@@ -38,23 +46,37 @@ object Pipeline {
     * (diameter-independent — the round-3 fix over one-hop min-label
     * propagation whose round count is the graph diameter). Convergence is
     * detected by a (count, xor-of-hashes) checksum — one tiny action per
-    * round, never a label collect. Throws if `maxIter` rounds don't
-    * converge rather than returning partial labels.
+    * round, never a label collect.
+    *
+    * Driver finish: the canonical list — distinct (min, max) pairs,
+    * self-loops included — is checkpointed once, and its size is checked
+    * before the first round and after every round (the checksum already
+    * counts it). As soon as it holds at most `localEdges` rows (default
+    * [[EdgesPerTask]]: it fits one task) it is collected and finished by
+    * an iterative union-find that keeps the minimum id as each root, and
+    * the labels come back as a local frame. So the distributed rounds only
+    * shrink a corpus-scale graph, and the latency-bound tail of a few
+    * edges runs on the driver; a fixture-scale graph takes 0 rounds.
+    * `maxIter` bounds the distributed rounds: if they neither converge nor
+    * shrink the list to `localEdges` within it, this throws rather than
+    * return partial labels. (`localEdges` is a test seam: 0 forces the
+    * rounds for any non-empty list.)
     *
     * Adaptive round width: contraction shrinks the edge list monotonically,
     * so late rounds over a handful of surviving edges would still pay the
     * session's full shuffle width in empty-task overhead (measured: most of
     * the fixture-scale cost). Each round's shuffles are sized from the
     * PREVIOUS round's edge count (free — the convergence checksum already
-    * counts), targeting ~100k edges/partition, capped at the session width.
-    * Same shared-conf discipline as Streaming.withStreamShuffle
-    * (synchronized + restore); results are partitioning-invariant (the
-    * determinism suite pins this). */
-  private[graft] def starContract(edges0: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
+    * counts), targeting [[EdgesPerTask]] edges/partition, capped at the
+    * session width. Same shared-conf discipline as
+    * Streaming.withStreamShuffle (synchronized + restore); results are
+    * partitioning-invariant (the determinism suite pins this). */
+  private[graft] def starContract(edges0: DataFrame, maxIter: Int = 30,
+      localEdges: Long = EdgesPerTask): (DataFrame, Int) = {
     val spark = edges0.sparkSession
     val sessionWidth = spark.sessionState.conf.numShufflePartitions
     def widthFor(edgeCount: Long): Int =
-      math.max(1L, math.min(sessionWidth.toLong, edgeCount / 100000L + 1L)).toInt
+      math.max(1L, math.min(sessionWidth.toLong, edgeCount / EdgesPerTask + 1L)).toInt
     // AQE off inside each round (r19): every exchange in the round is
     // already explicitly sized (repartition(w, s) / the atWidth shuffle
     // width), so adaptive re-planning buys nothing here — it only splits
@@ -73,20 +95,27 @@ object Pipeline {
         case (k, None)    => spark.conf.unset(k)
       }
     }
-    val nodes = edges0.select(col("s").as("id"))
-      .unionByName(edges0.select(col("t").as("id"))).distinct()
-    var edges = edges0.where(col("s") =!= col("t"))
+    val canon = edges0
       .select(least(col("s"), col("t")).as("s"), greatest(col("s"), col("t")).as("t"))
       .distinct().localCheckpoint()
-    def checksum(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(s, t))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+    val loops = canon.where(col("s") === col("t"))
+    var edges = canon.where(col("s") =!= col("t"))
+    // (edge count, xor of edge hashes, self-loop count): self-loops stay
+    // out of the rounds and their checksum, but count toward the driver
+    // finish, which must see every node
+    def checksum(df: DataFrame): (Long, Long, Long) = {
+      val edge = col("s") =!= col("t")
+      val r = df.agg(count(when(edge, lit(1))),
+        coalesce(bit_xor(when(edge, xxhash64(col("s"), col("t")))), lit(0L)),
+        count(when(!edge, lit(1)))).head()
+      (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    var prev = checksum(edges)
+    val (n0, x0, nLoops) = checksum(canon)
+    var prev = (n0, x0)
+    def fits = prev._1 + nLoops <= localEdges
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) atWidth(widthFor(prev._1)) {
+    while (!converged && !fits && iter < maxIter) atWidth(widthFor(prev._1)) {
       val w = widthFor(prev._1)
       // ONE exchange per star phase (r18, guide §2.4 "share the exchange"):
       // each phase's groupBy, join and (s, t)-distinct are all keyed on s,
@@ -130,20 +159,53 @@ object Pipeline {
         .where(col("s") =!= col("t"))
         .distinct()
         .localCheckpoint()
-      val cur = checksum(small)
-      converged = cur == prev
-      prev = cur
+      val (n, x, _) = checksum(small)
+      converged = (n, x) == prev
+      prev = (n, x)
       edges = small
       iter += 1
     }
-    require(converged, s"starContract did not converge in $maxIter rounds")
-    // Star forest: every node's label = least(itself, min neighbor).
-    val nbrs = edges.unionByName(
-      edges.select(col("t").as("s"), col("s").as("t")))
-    val labels = nodes.join(nbrs, nodes("id") === nbrs("s"), "left")
-      .groupBy(col("id"))
-      .agg(least(first(col("id")), coalesce(min(col("t")), first(col("id")))).as("component"))
-    (labels, iter)
+    if (fits) (componentsOnDriver(spark, edges.unionByName(loops)), iter)
+    else {
+      require(converged, s"starContract did not converge in $maxIter rounds")
+      // Star forest: every node's label = least(itself, min neighbor).
+      val nodes = canon.select(col("s").as("id"))
+        .unionByName(canon.select(col("t").as("id"))).distinct()
+      val nbrs = edges.unionByName(
+        edges.select(col("t").as("s"), col("s").as("t")))
+      val labels = nodes.join(nbrs, nodes("id") === nbrs("s"), "left")
+        .groupBy(col("id"))
+        .agg(least(first(col("id")), coalesce(min(col("t")), first(col("id")))).as("component"))
+      (labels, iter)
+    }
+  }
+
+  /** The driver finish of [[starContract]]: collect a small (s, t) list
+    * (self-loops register their node) and label every node with the
+    * minimum id of its component by union-find — iterative find with path
+    * compression, and the smaller root always wins a union, so each root
+    * is its component's minimum. Returns a local (`id`, `component`)
+    * frame. */
+  private def componentsOnDriver(spark: SparkSession, edges: DataFrame): DataFrame = {
+    val rows = edges.collect()
+    val ids = rows.flatMap(r => Array(r.getLong(0), r.getLong(1))).distinct.sorted
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    val parent = Array.range(0, ids.length) // index order = id order
+    def find(i: Int): Int = {
+      var root = i
+      while (parent(root) != root) root = parent(root)
+      var c = i
+      while (parent(c) != root) { val next = parent(c); parent(c) = root; c = next }
+      root
+    }
+    rows.foreach { r =>
+      val a = find(at(r.getLong(0)))
+      val b = find(at(r.getLong(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val labels = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    spark.createDataFrame(java.util.Arrays.asList(labels: _*),
+      StructType(Seq(StructField("id", LongType), StructField("component", LongType))))
   }
 
   /** Canonical-id clustering of the near-duplicate graph: connected
@@ -167,7 +229,7 @@ object Pipeline {
     * each label with its component size, `id` renamed to `idName` —
     * extracted round 17 (the recorded ETL-review duplication); behavior
     * pinned by the three consuming keys' recursive-CTE oracles. */
-  private def ccWithSizes(pairs: DataFrame, idName: String): DataFrame = {
+  private[graft] def ccWithSizes(pairs: DataFrame, idName: String): DataFrame = {
     val (labels, _) = starContract(pairs)
     val sizes = labels.groupBy("component")
       .agg(count(lit(1)).cast("int").as("comp_size"))
@@ -284,10 +346,11 @@ object Pipeline {
   }
 
   /** THE 100 TB dedup pipeline composition, end to end: MinHash-LSH banded
-    * candidates → exact-Jaccard verify ([[Dedup.dedupMinhashLsh]] survivor
-    * pairs at ≥ 7/20) → [[starContract]] clustering → per-component
-    * canonical id + size. Every stage is the banded/contracted scale shape
-    * — no all-pairs join and no diameter-bound loop anywhere. This is what
+    * candidates → exact-Jaccard verify (the [[Dedup.dedupMinhashLsh]]
+    * pairs at ≥ 7/20, [[lshCcPairs]]) → [[starContract]] clustering →
+    * per-component canonical id + size. Every stage is the
+    * banded/contracted scale shape — no all-pairs join and no
+    * diameter-bound loop anywhere. This is what
     * "keep one doc per near-dup cluster" actually runs at scale; the
     * recursive-CTE oracle recomputes it exactly. */
   def dedupLshCc(spark: SparkSession, sf: String): DataFrame =
@@ -304,11 +367,17 @@ object Pipeline {
 
   private def lshCcLabels(spark: SparkSession, sf: String): DataFrame =
     graft.util.Memos.cached(lshCcMemo, spark, sf) {
-      val pairs = Dedup.dedupMinhashLsh(spark, sf)
-        .where(col("is_dup") === 1)
-        .select(col("doc_a").as("s"), col("doc_b").as("t")).localCheckpoint()
-      ccWithSizes(pairs, "doc_id").localCheckpoint()
+      ccWithSizes(lshCcPairs(spark, sf), "doc_id").localCheckpoint()
     }
+
+  /** The verified near-duplicate edges [[lshCcLabels]] clusters: the
+    * UNSORTED verify kernel under the [[Dedup.nearDup]] verdict — no
+    * presentation sort and no checkpoint of its own (the kernel is
+    * checkpointed, and [[starContract]] materializes its canonical list). */
+  private[graft] def lshCcPairs(spark: SparkSession, sf: String): DataFrame =
+    Dedup.verifiedCands(spark, sf)
+      .where(Dedup.nearDup(col("i"), col("n_a") + col("n_b") - col("i")))
+      .select(col("doc_a").as("s"), col("doc_b").as("t"))
 
   /** The dedup pipeline's FINAL answer: which docs to KEEP. Extends
     * [[dedupLshCc]]'s clusters with per-cluster canonical selection —

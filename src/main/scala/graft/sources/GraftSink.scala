@@ -390,7 +390,10 @@ class ObjectStoreClaim extends CommitClaim {
       index.get(key) match {
         case c if c eq Writing => return false // in-flight winner owns it
         case null => ()
-        case done => index.remove(key, done) // object deleted: key released
+        // DONE is set only after the object moved in, so the exists check
+        // above may predate a winner's move: release only if it is gone now
+        // (releasing on the stale check let a second PUT overwrite it)
+        case done => if (!Files.exists(target)) index.remove(key, done)
       }
       if (index.putIfAbsent(key, Writing) == null) {
         // ACCEPTED — the one atomic decision point (the store's internal

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Schema-pinned parquet readers for the driver fixtures (see FIXTURES.md).
   *
@@ -14,8 +15,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `.select`/`.where` on the returned frame rather than materialize it.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The footer schema of a fixture file, inferred ONCE per JVM: a read
+    * without a schema runs a Spark schema-inference job on every call.
+    * Keyed by the file's length and mtime (a regenerated fixture is
+    * re-inferred) and by the nanos-as-long setting (it changes the
+    * inferred type of a TIMESTAMP(NANOS) column). */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long, String), StructType]
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = (path, st.getLen, st.getModificationTime, spark.conf.get(NanosAsLong, "false"))
+    schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
 
   /** `events.ts` has shipped as two physical layouts across fixture
     * generations: INT64 TIMESTAMP(NANOS) (which Spark 4 refuses to read as
@@ -27,20 +47,17 @@ object Tables {
     * value-preserving under the pinned UTC session timezone. Every
     * downstream operator and oracle sees the same instants either way. */
   private def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(table(spark, sfDir, "events"), eventsTsType(spark, sfDir), sfDir)
+    val tsType = eventsTsType(spark, sfDir) // sets nanos-as-long first
+    normalizeTs(table(spark, sfDir, "events"), tsType, sfDir)
   }
 
-  /** The fixture's physical ts type — a pure function of the sf dir, so
-    * probe the footer ONCE per (JVM, dir) instead of per call (the
-    * streaming reader probes it for its explicit schema on every key). */
-  private val tsTypes =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]
-  def eventsTsType(s: SparkSession, d: String): org.apache.spark.sql.types.DataType =
-    tsTypes.computeIfAbsent(d, dir => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-    })
+  /** The fixture's physical ts type, read off the cached footer schema
+    * (the streaming reader needs it for its explicit schema). Sets the
+    * nanos-as-long reading the events readers rely on. */
+  def eventsTsType(s: SparkSession, d: String): DataType = {
+    s.conf.set(NanosAsLong, "true")
+    schemaOf(s, s"$d/events.parquet")("ts").dataType
+  }
 
   /** events.ts has shipped as INT64 TIMESTAMP(NANOS) or TIMESTAMP(MICROS)
     * NTZ across fixture generations — ONE normalization to session-UTC

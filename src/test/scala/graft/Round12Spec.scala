@@ -417,6 +417,32 @@ class Round12Spec extends AnyFunSuite {
       20000 + 20)
   }
 
+  test("ObjectStoreClaim: of 8 racers on one key exactly one PUT is accepted, every time") {
+    // the bare CAS, raced 200 times: a claimer whose exists check predates
+    // the winner's move but whose index read follows its DONE mark must
+    // not release the key and overwrite the winner
+    val dir = java.nio.file.Files.createTempDirectory("graft_r12_oscrace")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (0 until 200).foreach { round =>
+      val store = new graft.sources.ObjectStoreClaim
+      val target = dir.resolve(s"v$round")
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val wins = (0 until 8).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = {
+            start.await()
+            store.claim(target, s"body-$i".getBytes("UTF-8"))
+          }
+        })
+      }
+      start.countDown()
+      val won = wins.zipWithIndex.collect { case (f, i) if f.get() => i }
+      assert(won.size == 1, s"round $round: accepted PUTs $won")
+      assert(new String(java.nio.file.Files.readAllBytes(target), "UTF-8") ==
+        s"body-${won.head}", s"round $round: the winner's object was overwritten")
+    } finally pool.shutdown()
+  }
+
   test("ObjectStoreClaim: 8-appender race loses nothing; response-lost PUT never tears") {
     import graft.sources.{GraftManifest, ObjectStoreClaim, PosixLinkClaim}
     val store = new ObjectStoreClaim

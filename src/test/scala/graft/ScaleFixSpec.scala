@@ -69,7 +69,9 @@ class ScaleFixSpec extends AnyFunSuite {
     val n = 64
     val edges = spark.range(n - 1)
       .select(col("id").as("s"), (col("id") + 1).as("t"))
-    val (labels, rounds) = Pipeline.starContract(edges)
+    // localEdges = 0 forces the distributed rounds (the default finishes
+    // a graph this small on the driver in 0 rounds)
+    val (labels, rounds) = Pipeline.starContract(edges, localEdges = 0)
     val bound = math.ceil(math.log(n.toDouble) / math.log(2.0)).toInt + 2
     assert(rounds <= bound, s"chain of $n took $rounds rounds (bound $bound)")
     val comps = labels.select("component").distinct().collect().map(_.getLong(0))
@@ -85,7 +87,8 @@ class ScaleFixSpec extends AnyFunSuite {
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 10L -> 10L, 11L -> 10L, 20L -> 20L))
     val big = spark.range(31).select(col("id").as("s"), (col("id") + 1).as("t"))
-    assertThrows[IllegalArgumentException](Pipeline.starContract(big, maxIter = 1))
+    assertThrows[IllegalArgumentException](
+      Pipeline.starContract(big, maxIter = 1, localEdges = 0))
   }
 
   test("LshPrefilter rewrites the naive cosine-threshold join into banded equi-joins") {

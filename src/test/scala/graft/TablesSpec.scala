@@ -1,0 +1,70 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.util.Tables
+
+/** The fixture readers are schema-pinned: each file's footer schema is
+  * inferred once per JVM, equals a plain inference, and a repeated read
+  * starts no Spark job. */
+class TablesSpec extends AnyFunSuite {
+  import TestSpark._
+
+  private val names = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Spark jobs `body` starts on this thread, counted by their job group.
+    * A marker job in a second group flushes the listener bus, which
+    * delivers events in order, so every job of `body` has been seen. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (probe, marker) = ("tables-spec-probe", "tables-spec-marker")
+    val groups = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(probe, probe)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!groups.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains(marker), "listener bus did not deliver the marker job")
+      groups.toArray.count(_ == probe)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("every sf0.01 fixture schema equals a plain inference, and a repeated read starts no job") {
+    // the events readers read TIMESTAMP(NANOS) as raw longs; infer alike
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    names.foreach { n =>
+      val pinned = Tables.table(spark, sf01, n).schema
+      assert(pinned == spark.read.parquet(s"$sf01/$n.parquet").schema, n)
+      var again: org.apache.spark.sql.types.StructType = null
+      assert(jobsOf { again = Tables.table(spark, sf01, n).schema } == 0,
+        s"second read of $n started a job")
+      assert(again == pinned, n)
+    }
+    // the plain read above does start the inference job the cache saves
+    assert(jobsOf(spark.read.parquet(s"$sf01/region.parquet")) > 0)
+  }
+
+  test("a regenerated fixture is re-inferred") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables_spec").toString
+    Seq(1L, 2L).toDF("a").write.parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").schema.fieldNames.toSeq == Seq("a"))
+    Thread.sleep(20) // a distinct mtime even on a coarse clock
+    Seq("x").toDF("b").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").schema.fieldNames.toSeq == Seq("b"))
+    assert(Tables.table(spark, dir, "t").collect().map(_.getString(0)).toSeq == Seq("x"))
+  }
+}
