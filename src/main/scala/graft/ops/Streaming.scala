@@ -39,7 +39,6 @@ object Streaming {
       StructField("value", DoubleType), StructField("props", StringType)))
 
   private def eventsStream(spark: SparkSession, sf: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The file stream source wants a directory; expose the single fixture
     // file through a fixed per-(run, sf) scratch dir (symlink — no copy;
     // idempotent across repeated calls, removed at JVM exit).
@@ -55,7 +54,7 @@ object Streaming {
       try java.nio.file.Files.createSymbolicLink(link,
         java.nio.file.Paths.get(s"$sf/events.parquet").toAbsolutePath)
       catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    val tsType = graft.util.Tables.eventsTsType(spark, sf)
+    val tsType = graft.util.Tables.eventsTsType(spark, sf) // sets nanos-as-long
     val raw = spark.readStream.schema(rawSchema(tsType)).parquet(dir.toString)
     graft.util.Tables.normalizeTs(raw, tsType, sf)
   }
