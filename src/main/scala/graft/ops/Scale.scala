@@ -3941,9 +3941,7 @@ object Scale {
       spark.sql(s"ALTER TABLE gsql.db.$atbl SET TBLPROPERTIES " +
         "('compactIndex.autoProbeLoads'='4')")
     }
-    val prevAuto = graft.sources.GraftMaintenance.autoProbeEnabled
-    graft.sources.GraftMaintenance.autoProbeEnabled = true
-    val autoLoads = try {
+    val autoLoads = {
       val vsBefore = graft.sources.GraftManifest.versions(adir).size
       graft.sources.GraftBloomSidecars.dropCache()
       val firstRows = probe(adir).collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -3964,7 +3962,7 @@ object Scale {
       require(graft.sources.GraftManifest.versions(adir).size == vs.size,
         "the sweep must not re-trigger once everything is bundled")
       d
-    } finally graft.sources.GraftMaintenance.autoProbeEnabled = prevAuto
+    }
     require(autoLoads >= 1L && autoLoads <= 2L,
       s"the auto-compacted table's second cold probe must pay " +
         s"O(bundles)=1 reads, not O(files): $autoLoads")

@@ -1244,10 +1244,6 @@ object GraftMaintenance {
     * so an over-threshold probe on an already-bundled table pays the
     * O(files) pendingSidecars fold once per version, not once per plan. */
   val AutoCompactProbeLoads = 64
-  /** Process-level switch (demo/measurement hook): the per-table
-    * `compactIndex.autoProbeLoads` property is the USER surface; this
-    * exists so a harness can measure the untriggered baseline. */
-  @volatile private[graft] var autoProbeEnabled = true
   private[sources] val autoCompacted =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   /** path -> head version proven to have zero pending sidecars. */
@@ -1296,7 +1292,7 @@ object GraftMaintenance {
     }
   }
   private[sources] def autoCompactProbe(path: String, probeLoads: Long): Unit =
-    if (autoProbeEnabled && probeLoads >= 1 &&
+    if (probeLoads >= 1 &&
         autoCompacted.putIfAbsent(path, java.lang.Boolean.TRUE) == null) {
       try {
         val threshold = resolvedThreshold(path)

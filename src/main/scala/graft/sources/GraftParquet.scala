@@ -94,7 +94,7 @@ object GraftParquet {
     * `rowGroupBytes` (write option of the same name) sets the row-group
     * target size — the granularity of read-side row-group skipping; the
     * parquet default (128 MB) is right for production files, small values
-    * let tests/demos exercise multi-group files without GB fixtures.
+    * let tests exercise multi-group files without GB fixtures.
     *
     * Writes [[InternalRow]]s DIRECTLY through Spark's own
     * `ParquetWriteSupport` (round 12) — the row-at-a-time `Group` object

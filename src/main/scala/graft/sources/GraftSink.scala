@@ -1918,12 +1918,11 @@ object GraftCheck {
   *
   * The round-9 ASCII line-per-position format measured ~6 bytes/row on
   * wide deletes — the one scale-killer VERDICT r9 flagged in the DML
-  * design; DvScaleDemo's every-7th wide delete now encodes at <1
-  * byte/row. LEGACY sidecars (one ASCII decimal per line) remain
-  * readable: their first byte is a digit, never 0x47, so [[positions]]
-  * dispatches on the magic. Writers always emit the new format. An
-  * unknown format byte fails loudly — silently misdecoding a vector
-  * would resurrect deleted rows. */
+  * design; an every-7th wide delete now encodes at <1 byte/row. LEGACY
+  * sidecars (one ASCII decimal per line) remain readable: their first
+  * byte is a digit, never 0x47, so [[positions]] dispatches on the magic.
+  * Writers always emit the new format. An unknown format byte fails
+  * loudly — silently misdecoding a vector would resurrect deleted rows. */
 /** Per-(file, column) BLOOM FILTER — point-lookup skipping for columns
   * the layout does NOT cluster (the Delta bloom-filter-index / Parquet
   * column-bloom role): on an unsorted 100 TB table every file's min/max
@@ -4060,7 +4059,8 @@ case class GraftSinkScan(path: String, version: Option[Int],
     // parquet, no DV/eqdel/eqSel anywhere, no `_pos`, and at least one
     // real column requested (zero-column scans answer from footers).
     // `spark.graft.columnar.enabled=false` is the session escape hatch
-    // (ops fallback + the A/B control FormatScaleDemo measures with).
+    // (ops fallback; the specs use its Group-tree path as the reference
+    // the vectorized decoders must match).
     val vecOn = scala.util.Try(org.apache.spark.sql.SparkSession.active.conf
       .get("spark.graft.columnar.enabled", "true").toBoolean).getOrElse(true)
     val colr = vecOn &&
@@ -4887,7 +4887,7 @@ private[sources] case class GraftSpjBucket(n: Int, src: String)
 /** JVM-wide observability counter: parquet data-file records actually
   * MATERIALIZED by graft scans (records inside skipped row groups, or
   * dropped by parquet's record-level filter, are never counted). What the
-  * row-group-pushdown spec/demo measures — in local[32] all executors
+  * row-group-pushdown spec measures — in local mode all executors
   * share the JVM, so a delta across a query is the query's decode bill. */
 object GraftReadStats {
   val parquetRecordsDecoded = new java.util.concurrent.atomic.LongAdder

@@ -91,4 +91,25 @@ class CurationSpec extends AnyFunSuite {
       assert(r.getAs[Long]("sum_cnt") >= r.getAs[Long]("n_bg"))
     }
   }
+
+  test("minhash dedup + starContract recover planted near-duplicate replicas") {
+    // 3 replicas of the corpus, each with an id offset and a one-token
+    // tail mutation (near-dups, not clones): every original should
+    // collapse with its replicas into one component of size >= 3.
+    val replicas = 3
+    val base = graft.util.Tables.documents(spark, sf01)
+      .select(col("doc_id"), col("lang"), col("text"))
+    val corpus = (0 until replicas).map { k =>
+      base.select((col("doc_id") + lit(k.toLong * 1000000000L)).as("doc_id"),
+        col("lang"), concat(col("text"), lit(s" rep$k")).as("text"))
+    }.reduce(_.unionByName(_))
+    val pairs = graft.api.Graft.minhashDedupPairs(corpus, "doc_id", "text")
+      .where(col("is_dup") === 1)
+      .select(col("doc_a").as("s"), col("doc_b").as("t"))
+    val (labels, _) = graft.ops.Pipeline.starContract(pairs)
+    val comps = labels.groupBy("component").count()
+    // pinned: 500 originals, some already near-dups of each other
+    assert(comps.count() == 472L)
+    assert(comps.where(col("count") >= replicas).count() == 458L)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Shared n-gram-sidecar fixture (Round17Spec + Round18Spec): wide-alphabet
+/** Shared n-gram-sidecar fixture (Round16b/17/18Spec): wide-alphabet
   * 64-char strings whose 4-gram filters all externalize to per-file
   * sidecars, plus the matching in-alphabet probe helpers — ONE encoding so
   * the suites cannot silently diverge in what they exercise (round-18

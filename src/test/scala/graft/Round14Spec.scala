@@ -18,9 +18,6 @@ class Round14Spec extends AnyFunSuite {
   type Ev = R14Ev
   private def Ev(id: Long, t: String, c: Long): Ev = R14Ev(id, t, c)
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
   /** Seed a declared-sort 2-file range table on event_id. */
   private def seed(dir: String, ids: Range): Unit =
     spark.createDataFrame(ids.map(i => Ev(i.toLong, s"t${i % 3}", i.toLong * 7)))

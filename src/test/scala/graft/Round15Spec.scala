@@ -11,9 +11,6 @@ import graft.sources.GraftManifest
 class Round15Spec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
   test("zorder_by on a DATE column completes (ADVICE r14)") {
     // DATE passes the type gate but cannot cast directly to DOUBLE —
     // before the numSql unix_date hop, approx_percentile died with an

@@ -13,17 +13,6 @@ import graft.sources.{GraftBloomSidecars, GraftManifest}
 class Round16Spec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
-  private def manifestText(dir: String): String = {
-    val head = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("_manifest-v"))
-      .maxBy(_.getName.stripPrefix("_manifest-v").toInt)
-    new String(java.nio.file.Files.readAllBytes(head.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-  }
-
   private def scanParts(df: DataFrame): Int = {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val scans = df.queryExecution.executedPlan.collect {

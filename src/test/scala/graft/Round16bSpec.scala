@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,32 +12,6 @@ import graft.sources.{GraftBloomSidecars, GraftManifest}
   * `@bundle:off:len` byte ranges, resolved by one whole-bundle slurp. */
 class Round16bSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
-  private def manifestText(dir: String): String = {
-    val head = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("_manifest-v"))
-      .maxBy(_.getName.stripPrefix("_manifest-v").toInt)
-    new String(java.nio.file.Files.readAllBytes(head.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  /** 8 scattered files of wide-alphabet 64-char strings: every file's
-    * n-gram filter externalizes (>= 4 KB base64), no width widening
-    * (base64 alphabet keeps w=4 sparse). */
-  private def writeFixture(dir: String, files: Int = 8): Unit =
-    NgramFixture.write(dir, files)
-
-  private def inAlphabetWindow(dir: String): String =
-    spark.read.format("graft-sink").option("path", dir).load()
-      .where(col("id") === 7L).select("s").head().getString(0)
-      .substring(10, 18)
-
-  private def containsProbe(dir: String, window: String): DataFrame =
-    spark.read.format("graft-sink").option("path", dir).load()
-      .where(col("s").contains(window))
 
   test("ranged-ref codec round-trips and stays bare-name in render") {
     val ranged = "@idx-3-0.idb:1024:2048"
@@ -63,18 +36,18 @@ class Round16bSpec extends AnyFunSuite {
 
   test("compact_index bundles sidecars; a contains probe pays O(bundles) reads") {
     val dir = tmp("graft_r16b_bundle")
-    writeFixture(dir)
+    NgramFixture.write(dir)
     val v1 = GraftManifest.readVersion(dir, None).get
     assert(v1.metas.size == 8, s"fixture wants 8 files, got ${v1.metas.size}")
     assert(v1.metas.forall(m => GraftBloomSidecars.isRef(m.ngblooms(1)._2)),
       "fixture: every file's filter must have externalized")
-    val window = inAlphabetWindow(dir)
+    val window = NgramFixture.inAlphabetWindow(dir)
 
     // BEFORE: one sidecar read per candidate file (all 8 reach the
     // bloom conjunct — no envelope can decide a contains)
     GraftBloomSidecars.dropCache()
     val l0 = GraftBloomSidecars.loads.sum()
-    val expect = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    val expect = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     assert(expect.nonEmpty)
     assert(GraftBloomSidecars.loads.sum() - l0 == 8L,
       s"pre-bundle probe must fetch one sidecar per file, got ${
@@ -101,7 +74,7 @@ class Round16bSpec extends AnyFunSuite {
     // AFTER: the same probe pays ONE bundle read and answers identically
     GraftBloomSidecars.dropCache()
     val l1 = GraftBloomSidecars.loads.sum()
-    val got = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    val got = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     assert(got.sameElements(expect), "bundling must not change the answer")
     assert(GraftBloomSidecars.loads.sum() - l1 == 1L,
       s"post-bundle probe must pay one bundle read, got ${
@@ -116,7 +89,7 @@ class Round16bSpec extends AnyFunSuite {
 
   test("appends after compaction mix plain and ranged refs; recompaction re-packs") {
     val dir = tmp("graft_r16b_mix")
-    writeFixture(dir, files = 4)
+    NgramFixture.write(dir, files = 4)
     graft.sources.GraftMaintenance.compactIndexes(dir)
     // an APPEND lands fresh per-file sidecars next to the bundled head
     NgramFixture.write(dir, files = 1, lo = 2000, hi = 2500, mode = "append")
@@ -130,7 +103,7 @@ class Round16bSpec extends AnyFunSuite {
     // finds its row
     val one = spark.read.format("graft-sink").option("path", dir).load()
       .where(col("id") === 2100L).select("s").head().getString(0)
-    val got = containsProbe(dir, one.substring(20, 28))
+    val got = NgramFixture.containsProbe(dir, one.substring(20, 28))
       .collect().map(_.getLong(0))
     assert(got.contains(2100L))
     // recompaction packs EVERYTHING (prior bundle slices + the fresh
@@ -139,7 +112,7 @@ class Round16bSpec extends AnyFunSuite {
     assert(pays2 == 5 && bundles2 == 1, s"recompaction: ($pays2, $bundles2)")
     GraftBloomSidecars.dropCache()
     val l0 = GraftBloomSidecars.loads.sum()
-    val again = containsProbe(dir, one.substring(20, 28))
+    val again = NgramFixture.containsProbe(dir, one.substring(20, 28))
       .collect().map(_.getLong(0))
     assert(again.sameElements(got))
     assert(GraftBloomSidecars.loads.sum() - l0 == 1L,
@@ -148,9 +121,9 @@ class Round16bSpec extends AnyFunSuite {
 
   test("vacuum reclaims replaced per-file sidecars and keeps the live bundle") {
     val dir = tmp("graft_r16b_vac")
-    writeFixture(dir, files = 4)
-    val window = inAlphabetWindow(dir)
-    val expect = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    NgramFixture.write(dir, files = 4)
+    val window = NgramFixture.inAlphabetWindow(dir)
+    val expect = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     graft.sources.GraftMaintenance.compactIndexes(dir)
     def names() = new java.io.File(dir).listFiles().map(_.getName).toSet
     assert(names().count(_.endsWith(".ngb")) == 4 &&
@@ -161,15 +134,15 @@ class Round16bSpec extends AnyFunSuite {
     assert(names().count(_.endsWith(".idb")) == 1,
       "the referenced bundle must survive vacuum")
     GraftBloomSidecars.dropCache()
-    val got = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    val got = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     assert(got.sameElements(expect), "the vacuumed table still answers exactly")
   }
 
   test("a missing or truncated bundle degrades to keep-everything, never fails") {
     val dir = tmp("graft_r16b_degrade")
-    writeFixture(dir, files = 4)
-    val window = inAlphabetWindow(dir)
-    val expect = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    NgramFixture.write(dir, files = 4)
+    val window = NgramFixture.inAlphabetWindow(dir)
+    val expect = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     graft.sources.GraftMaintenance.compactIndexes(dir)
     val bundle = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".idb")).head
@@ -178,13 +151,13 @@ class Round16bSpec extends AnyFunSuite {
     val bytes = java.nio.file.Files.readAllBytes(bundle.toPath)
     java.nio.file.Files.write(bundle.toPath, bytes.take(bytes.length / 3))
     GraftBloomSidecars.dropCache()
-    val got1 = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    val got1 = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     assert(got1.sameElements(expect), "a truncated bundle must still answer exactly")
     // DELETE the bundle entirely: every ref degrades on ONE failed read
     assert(bundle.delete())
     GraftBloomSidecars.dropCache()
     val l0 = GraftBloomSidecars.loads.sum()
-    val got2 = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    val got2 = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     assert(got2.sameElements(expect), "a missing bundle must still answer exactly")
     assert(GraftBloomSidecars.loads.sum() - l0 == 1L,
       "the failed bundle read must be attempted once, not once per ref")
@@ -196,7 +169,7 @@ class Round16bSpec extends AnyFunSuite {
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g16b.root", root)
     val dir = s"$root/db/t"
-    writeFixture(dir, files = 4)
+    NgramFixture.write(dir, files = 4)
     val row = spark.sql("CALL g16b.system.compact_index('db.t')").head()
     assert(row.getInt(0) == 4 && row.getInt(1) == 1 && row.getInt(2) == 2,
       s"CALL result: $row")
@@ -216,7 +189,7 @@ class Round16bSpec extends AnyFunSuite {
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g16m.root", root)
     val dir = s"$root/db/t"
-    writeFixture(dir, files = 4)
+    NgramFixture.write(dir, files = 4)
     // index policy ALONE is a valid maintenance declaration (no
     // autoOptimize.* needed — the refusal message names both)
     spark.sql("ALTER TABLE g16m.db.t SET TBLPROPERTIES " +
@@ -252,8 +225,8 @@ class Round16bSpec extends AnyFunSuite {
     val head = GraftManifest.readVersion(dir, None).get
     assert(head.props.get("compactIndex.minSidecars").contains("1"),
       s"properties must ride index commits: ${head.props}")
-    val window = inAlphabetWindow(dir)
-    assert(containsProbe(dir, window).collect().nonEmpty)
+    val window = NgramFixture.inAlphabetWindow(dir)
+    assert(NgramFixture.containsProbe(dir, window).collect().nonEmpty)
   }
 
   test("OPTIMIZE and DROP COLUMN carry externalized sidecars with their rewrite") {
@@ -271,8 +244,8 @@ class Round16bSpec extends AnyFunSuite {
       .write.format("graft-sink").option("path", dir)
       .option("ngramBloomFor", "s:4")
       .option("distributionMode", "none").mode("overwrite").save()
-    val window = inAlphabetWindow(dir)
-    val expect = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    val window = NgramFixture.inAlphabetWindow(dir)
+    val expect = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     def refsLive(): Unit = {
       val head = GraftManifest.readVersion(dir, None).get
       assert(head.metas.nonEmpty)
@@ -291,12 +264,12 @@ class Round16bSpec extends AnyFunSuite {
     // die with the rewrite's temp dir
     spark.sql("CALL g16w.system.optimize('db.t', 2)").collect()
     refsLive()
-    assert(containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    assert(NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
       .sameElements(expect), "post-OPTIMIZE probe answers exactly")
     // DROP COLUMN keeps the SURVIVING column's index through its rewrite
     spark.sql("ALTER TABLE g16w.db.t DROP COLUMN extra")
     refsLive()
-    assert(containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    assert(NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
       .sameElements(expect), "post-DROP-COLUMN probe answers exactly")
   }
 
@@ -322,7 +295,7 @@ class Round16bSpec extends AnyFunSuite {
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g16c.root", root)
     val src = s"$root/db/src"
-    writeFixture(src, files = 4)
+    NgramFixture.write(src, files = 4)
     // bundle TWO of the four via... full compaction bundles all; append
     // one more so the clone carries BOTH shapes (ranged + plain)
     graft.sources.GraftMaintenance.compactIndexes(src)
@@ -336,10 +309,10 @@ class Round16bSpec extends AnyFunSuite {
       assert(f.isFile, s"clone must link index file ${f.getName}")
     }
     // and the cloned index actually answers: in-alphabet probe exact
-    val window = inAlphabetWindow(dst)
+    val window = NgramFixture.inAlphabetWindow(dst)
     GraftBloomSidecars.dropCache()
     val l0 = GraftBloomSidecars.loads.sum()
-    assert(containsProbe(dst, window).collect().nonEmpty)
+    assert(NgramFixture.containsProbe(dst, window).collect().nonEmpty)
     assert(GraftBloomSidecars.loads.sum() > l0,
       "the clone's probes must resolve real payloads, not degrade")
   }
@@ -383,7 +356,7 @@ class Round16bSpec extends AnyFunSuite {
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g16o.root", root)
     val dir = s"$root/db/t"
-    writeFixture(dir, files = 4)
+    NgramFixture.write(dir, files = 4)
     graft.sources.GraftMaintenance.compactIndexes(dir)
     // all referenced (v1 refs the .ngb files, v2 refs the .idb): zero orphans
     val r0 = spark.sql("CALL g16o.system.orphans('db.t', 0)").head()

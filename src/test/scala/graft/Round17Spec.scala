@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftBloomSidecars, GraftMaintenance, GraftManifest}
+import graft.sources.{GraftBloomSidecars, GraftManifest}
 
 /** Round-17 gate: PROBE-TRIGGERED index compaction (VERDICT r16 next #2 —
   * retiring the "cold contains-probe on an UNCOMPACTED table" residual).
@@ -16,26 +15,13 @@ import graft.sources.{GraftBloomSidecars, GraftMaintenance, GraftManifest}
 class Round17Spec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
-  /** Same fixture as Round16bSpec — shared via [[NgramFixture]]
-    * (round-18 review dedup). */
-  private def writeFixture(dir: String, files: Int = 8): Unit =
-    NgramFixture.write(dir, files)
-  private def inAlphabetWindow(dir: String): String =
-    NgramFixture.inAlphabetWindow(dir)
-  private def containsProbe(dir: String, window: String): DataFrame =
-    NgramFixture.containsProbe(dir, window)
-
   test("auto-compaction: a small table never churns versions from a probe") {
-    GraftMaintenance.autoProbeEnabled = true
     val dir = tmp("graft_r17_small")
-    writeFixture(dir, files = 4)
-    val window = inAlphabetWindow(dir)
+    NgramFixture.write(dir, files = 4)
+    val window = NgramFixture.inAlphabetWindow(dir)
     GraftBloomSidecars.dropCache()
-    containsProbe(dir, window).collect()
-    containsProbe(dir, window).collect()
+    NgramFixture.containsProbe(dir, window).collect()
+    NgramFixture.containsProbe(dir, window).collect()
     assert(GraftManifest.versions(dir).size == 1,
       "4 sidecar fetches sit under the 64-load default threshold: the " +
         "read path must not have committed anything")
@@ -46,22 +32,21 @@ class Round17Spec extends AnyFunSuite {
 
   test("auto-compaction: past the table's threshold the first cold probe " +
       "is the last per-file one") {
-    GraftMaintenance.autoProbeEnabled = true
     val root = tmp("graft_r17_auto")
     spark.conf.set("spark.sql.catalog.g17a",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g17a.root", root)
     val dir = s"$root/db/t"
-    writeFixture(dir, files = 8)
+    NgramFixture.write(dir, files = 8)
     spark.sql("ALTER TABLE g17a.db.t SET TBLPROPERTIES " +
       "('compactIndex.autoProbeLoads'='4')")
-    val window = inAlphabetWindow(dir)
+    val window = NgramFixture.inAlphabetWindow(dir)
     val vsBefore = GraftManifest.versions(dir).size
 
     // FIRST cold probe: pays one fetch per candidate file AND arms the
     // sweep — a COMPACT-INDEX version lands synchronously
     GraftBloomSidecars.dropCache()
-    val expect = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    val expect = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     assert(expect.nonEmpty, "fixture: the in-alphabet window must match")
     val vs = GraftManifest.versions(dir)
     assert(vs.size == vsBefore + 1,
@@ -74,7 +59,7 @@ class Round17Spec extends AnyFunSuite {
     // SECOND cold probe: O(bundles) loads, same rows, no further commit
     GraftBloomSidecars.dropCache()
     val l0 = GraftBloomSidecars.loads.sum()
-    val got = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+    val got = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
     val bundledLoads = GraftBloomSidecars.loads.sum() - l0
     assert(got.sameElements(expect), "the bundled probe answers identically")
     assert(bundledLoads >= 1 && bundledLoads < 8,
@@ -90,7 +75,7 @@ class Round17Spec extends AnyFunSuite {
     NgramFixture.write(dir, files = 4, lo = 2000, hi = 3000, mode = "append")
     val vsAfterAppend = GraftManifest.versions(dir).size
     GraftBloomSidecars.dropCache()
-    containsProbe(dir, window).collect()
+    NgramFixture.containsProbe(dir, window).collect()
     val vsFinal = GraftManifest.versions(dir)
     assert(vsFinal.size == vsAfterAppend + 1,
       s"a post-ingest big probe must land one more sweep: $vsFinal")
@@ -233,19 +218,18 @@ class Round17Spec extends AnyFunSuite {
   }
 
   test("auto-compaction: autoProbeLoads=0 disables the trigger") {
-    GraftMaintenance.autoProbeEnabled = true
     val root = tmp("graft_r17_off")
     spark.conf.set("spark.sql.catalog.g17o",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g17o.root", root)
     val dir = s"$root/db/t"
-    writeFixture(dir, files = 8)
+    NgramFixture.write(dir, files = 8)
     spark.sql("ALTER TABLE g17o.db.t SET TBLPROPERTIES " +
       "('compactIndex.autoProbeLoads'='0')")
-    val window = inAlphabetWindow(dir)
+    val window = NgramFixture.inAlphabetWindow(dir)
     val vsBefore = GraftManifest.versions(dir).size
     GraftBloomSidecars.dropCache()
-    containsProbe(dir, window).collect()
+    NgramFixture.containsProbe(dir, window).collect()
     assert(GraftManifest.versions(dir).size == vsBefore,
       "a 0 threshold must disable the probe trigger entirely")
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,36 +25,24 @@ import graft.sources.{GraftBloomSidecars, GraftMaintenance}
 class Round18Spec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
-  private def writeFixture(dir: String, files: Int = 8): Unit =
-    NgramFixture.write(dir, files)
-  private def inAlphabetWindow(dir: String): String =
-    NgramFixture.inAlphabetWindow(dir)
-  private def containsProbe(dir: String, window: String): DataFrame =
-    NgramFixture.containsProbe(dir, window)
-
   private def bundleFiles(dir: String): Array[java.io.File] =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".idb"))
 
   test("bundle cache: budget holds and accounting stays exact under " +
       "sequential and 8-way concurrent eviction churn") {
-    val prevAuto = GraftMaintenance.autoProbeEnabled
-    GraftMaintenance.autoProbeEnabled = false // isolate: no sweeps mid-test
     val prevBudget = GraftBloomSidecars.bundleCacheBudget
     try {
       val K = 5
       val dirs = (0 until K).map(i => tmp(s"graft_r18_cache$i"))
-      dirs.foreach(writeFixture(_))
+      dirs.foreach(NgramFixture.write(_))
       dirs.foreach { d =>
         val (pays, bundles, _) = GraftMaintenance.compactIndexes(d)
         assert(pays == 8 && bundles == 1, s"fixture wants 1 bundle: $pays/$bundles")
       }
-      val windows = dirs.map(inAlphabetWindow)
+      val windows = dirs.map(NgramFixture.inAlphabetWindow)
       val expect = dirs.zip(windows).map { case (d, w) =>
-        containsProbe(d, w).collect().map(_.getLong(0)).sorted }
+        NgramFixture.containsProbe(d, w).collect().map(_.getLong(0)).sorted }
       val sizes = dirs.map(d => bundleFiles(d).map(_.length).sum)
       assert(sizes.forall(_ > 0), s"every table must hold bundle bytes: $sizes")
       val maxB = sizes.max
@@ -67,7 +54,7 @@ class Round18Spec extends AnyFunSuite {
       // probe the sweep has run, so accounted <= budget and == actual
       GraftBloomSidecars.dropCache()
       for (round <- 0 until 2; i <- dirs.indices) {
-        val got = containsProbe(dirs(i), windows(i)).collect()
+        val got = NgramFixture.containsProbe(dirs(i), windows(i)).collect()
           .map(_.getLong(0)).sorted
         assert(got.sameElements(expect(i)), s"table $i round $round answers")
         val (accounted, actual, n) = GraftBloomSidecars.bundleCacheStats()
@@ -98,7 +85,7 @@ class Round18Spec extends AnyFunSuite {
           try {
             val order = new scala.util.Random(t).shuffle(dirs.indices.toList)
             for (_ <- 0 until 3; i <- order) {
-              val got = containsProbe(dirs(i), windows(i)).collect()
+              val got = NgramFixture.containsProbe(dirs(i), windows(i)).collect()
                 .map(_.getLong(0)).sorted
               if (!got.sameElements(expect(i)))
                 throw new AssertionError(s"thread $t table $i wrong rows")
@@ -120,7 +107,6 @@ class Round18Spec extends AnyFunSuite {
     } finally {
       GraftBloomSidecars.bundleCacheBudget = prevBudget
       GraftBloomSidecars.dropCache()
-      GraftMaintenance.autoProbeEnabled = prevAuto
     }
   }
 
@@ -166,17 +152,15 @@ class Round18Spec extends AnyFunSuite {
 
   test("bundle cache: a transient read failure degrades once and heals " +
       "after the TTL without a cache drop") {
-    val prevAuto = GraftMaintenance.autoProbeEnabled
-    GraftMaintenance.autoProbeEnabled = false
     val prevTtl = GraftBloomSidecars.bundleFailTtl
     GraftBloomSidecars.bundleFailTtl = 100L * 1000 * 1000 // 100 ms
     try {
       val dir = tmp("graft_r18_heal")
-      writeFixture(dir)
+      NgramFixture.write(dir)
       val (pays, bundles, _) = GraftMaintenance.compactIndexes(dir)
       assert(pays == 8 && bundles == 1)
-      val window = inAlphabetWindow(dir)
-      val expect = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+      val window = NgramFixture.inAlphabetWindow(dir)
+      val expect = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
       val idb = bundleFiles(dir).head
       val away = new java.io.File(idb.getPath + ".away")
 
@@ -184,7 +168,7 @@ class Round18Spec extends AnyFunSuite {
       // keep-everything (same rows) and memoizes the failure
       assert(idb.renameTo(away), "fixture: could not move the bundle away")
       GraftBloomSidecars.dropCache()
-      val got1 = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+      val got1 = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
       assert(got1.sameElements(expect), "a failed bundle read must never be wrong")
       val (_, actualFailed, _) = GraftBloomSidecars.bundleCacheStats()
       assert(actualFailed == 0L, "a failed read must not populate the cache")
@@ -193,7 +177,7 @@ class Round18Spec extends AnyFunSuite {
       // bundle and repopulates the cache — no dropCache in between
       assert(away.renameTo(idb), "fixture: could not restore the bundle")
       Thread.sleep(200)
-      val got2 = containsProbe(dir, window).collect().map(_.getLong(0)).sorted
+      val got2 = NgramFixture.containsProbe(dir, window).collect().map(_.getLong(0)).sorted
       assert(got2.sameElements(expect), "the healed probe answers identically")
       val (accounted, actual, nAfter) = GraftBloomSidecars.bundleCacheStats()
       assert(nAfter >= 1 && actual > 0L && accounted == actual,
@@ -202,7 +186,6 @@ class Round18Spec extends AnyFunSuite {
     } finally {
       GraftBloomSidecars.bundleFailTtl = prevTtl
       GraftBloomSidecars.dropCache()
-      GraftMaintenance.autoProbeEnabled = prevAuto
     }
   }
 

@@ -19,4 +19,17 @@ object TestSpark {
   }
   val sf001 = "/root/testdata/sf0.001"
   val sf01  = "/root/testdata/sf0.01"
+
+  /** A fresh temp directory named after `p`. */
+  def tmp(p: String): String =
+    java.nio.file.Files.createTempDirectory(p).toString
+
+  /** The text of a graft-sink table's newest `_manifest-v<N>` file. */
+  def manifestText(dir: String): String = {
+    val head = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("_manifest-v"))
+      .maxBy(_.getName.stripPrefix("_manifest-v").toInt)
+    new String(java.nio.file.Files.readAllBytes(head.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+  }
 }
