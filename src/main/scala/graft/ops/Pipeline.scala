@@ -85,16 +85,9 @@ object Pipeline {
     // the driver-side job latency, not the tasks, dominates the loop.
     // With AQE off a round is 2 jobs: the checkpoint and the checksum.
     // Output is partitioning-invariant (DeterminismSpec pins it).
-    def atWidth[T](w: Int)(body: => T): T = spark.synchronized {
-      val keys = Seq("spark.sql.shuffle.partitions" -> w.toString,
-        "spark.sql.adaptive.enabled" -> "false")
-      val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-      keys.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
+    def atWidth[T](w: Int)(body: => T): T = graft.util.Confs.withConfs(spark,
+      "spark.sql.shuffle.partitions" -> w.toString,
+      "spark.sql.adaptive.enabled" -> "false")(body)
     val canon = edges0
       .select(least(col("s"), col("t")).as("s"), greatest(col("s"), col("t")).as("t"))
       .distinct().localCheckpoint()

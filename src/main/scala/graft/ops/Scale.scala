@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.Confs.withConfs
 import graft.util.Tables._
 
 /** Round-2 engine-surface operators: file-format sources (CSV/JSON) with
@@ -1023,20 +1024,6 @@ object Scale {
       .orderBy(col("lang"))
   }
 
-  /** Set/restore session confs around `body`, synchronized on the session
-    * (same shared-conf discipline as Streaming.withStreamShuffle): a
-    * concurrent caller serializes here instead of silently planning under
-    * someone else's toggles. */
-  private[graft] def withConfs[T](spark: SparkSession, pairs: (String, String)*)(body: => T): T =
-    spark.synchronized {
-      val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-
   /** Runtime BLOOM-FILTER join pruning (Catalyst's InjectRuntimeFilter): a
     * selective filter on the dim side is turned into a bloom filter that is
     * pushed into the fact scan, so fact rows that cannot join die before
@@ -1130,51 +1117,26 @@ object Scale {
   /** Custom-SINK roundtrip through the V2 write path
     * (graft.sources.GraftSinkProvider): the aggregate is written via the
     * connector's task-commit (.tmp → .csv rename) + job-commit (atomic
-    * versioned `_manifest-v{N}`) protocol, then read back ONLY as the
-    * legacy `_manifest` head copy directs — rows from files the manifest
-    * names, row count cross-checked against the manifest's committed total
-    * (a torn write would fail loudly). Overwrite mode (SupportsTruncate)
-    * keeps repeated invocations idempotent now that append MERGES prior
-    * versions. The oracle recomputes the same aggregate straight from
-    * events. */
+    * versioned `_manifest-v{N}`) protocol in the v1 csv line codec, then
+    * read back through the connector, row count cross-checked against the
+    * head version's committed total (a torn write would fail loudly).
+    * Overwrite mode (SupportsTruncate) keeps repeated invocations
+    * idempotent now that append MERGES prior versions. The oracle
+    * recomputes the same aggregate straight from events. */
   def sinkCustomV2(spark: SparkSession, sf: String): DataFrame = {
     val dir = tmpDir("v2sink", sf)
     events(spark, sf)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 100).cast("long")).as("sum_cents"))
-      // this key demonstrates the V1 protocol surface (legacy `_manifest`
-      // head copy + raw csv() read-back of the named parts) — pin the v1
-      // line codec (default is parquet since round 11)
+      // pin the v1 line codec (default is parquet since round 11)
       .write.format("graft-sink").option("format", "csv")
       .option("path", dir).mode("overwrite").save()
-    // A malformed line fails loudly (the manifest is the integrity record —
-    // a silently-skipped line would be a silently-dropped file), and an
-    // empty committed set reads back as an empty frame instead of letting
-    // csv() throw on a zero-path read.
-    // STALENESS BOUND of the legacy `_manifest` head copy: it is refreshed
-    // only on FULL commits (truncates and every CheckpointEvery-th append),
-    // so after a run of delta appends it can trail the true head by up to
-    // CheckpointEvery-1 commits. This key writes in OVERWRITE mode — always
-    // a full commit — so the copy read here is exactly the head; any
-    // consumer reading `_manifest` under appends must accept that bound or
-    // read the versioned `_manifest-v{N}` chain instead.
-    val manifest = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_manifest")), "UTF-8")
-      .split("\n").filter(_.nonEmpty).map(_.split(",") match {
-        case Array(f, n) => f -> n.toLong
-        case bad => throw new IllegalStateException(
-          s"malformed manifest line: '${bad.mkString(",")}'")
-      }).toMap
-    val committed = manifest.keys.filter(_ != "_total").map(f => s"$dir/$f").toSeq
-    val sch = "event_type STRING, n LONG, sum_cents LONG"
-    val back =
-      if (committed.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(sch))
-      else spark.read.schema(sch).csv(committed: _*)
-    require(back.count() == manifest("_total"),
-      s"manifest total ${manifest("_total")} != read-back rows")
+    val head = graft.sources.GraftManifest.readVersion(dir, None)
+      .getOrElse(throw new IllegalStateException(s"no committed version at $dir"))
+    val back = spark.read.format("graft-sink").option("path", dir).load()
+    require(back.count() == head.total,
+      s"manifest total ${head.total} != read-back rows")
     back.orderBy(col("event_type"))
   }
 
@@ -1407,10 +1369,7 @@ object Scale {
     * object-store layout wants. The oracle recomputes all three phases
     * from events. */
   def sqlCatalogTravel(spark: SparkSession, sf: String): DataFrame = {
-    val root = graft.util.Scratch.dir("sqlcat_root", "all")
-    spark.conf.set("spark.sql.catalog.gsql",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gsql.root", root)
+    val root = gsqlRoot(spark)
     val tbl = "t_" + sf.replaceAll("[^A-Za-z0-9]", "_")
     val dir = s"$root/db/$tbl"
     def slice(m: Int): DataFrame = events(spark, sf)
@@ -1453,10 +1412,7 @@ object Scale {
     * append-only; VACUUM is the only eraser). The oracle recomputes all
     * three phases from events, phase 3 = phase 1 by construction. */
   def sinkRestoreVersion(spark: SparkSession, sf: String): DataFrame = {
-    val root = graft.util.Scratch.dir("sqlcat_root", "all")
-    spark.conf.set("spark.sql.catalog.gsql",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gsql.root", root)
+    val root = gsqlRoot(spark)
     val tbl = "r_" + sf.replaceAll("[^A-Za-z0-9]", "_")
     val dir = s"$root/db/$tbl"
     def slice(m: Int): DataFrame = events(spark, sf)
@@ -2758,9 +2714,9 @@ object Scale {
 
   // ---- round 9: SQL row-level DML + merge-on-read deletion vectors ----
 
-  /** Catalog bootstrap shared by the SQL-DML keys: the same `gsql`
-    * catalog the travel/restore keys register, rooted in scratch. */
-  private def gsqlRoot(spark: SparkSession): String = {
+  /** The one bootstrap of the `gsql` catalog (rooted in scratch) that
+    * every catalog key, here and in Vectors, registers through. */
+  private[graft] def gsqlRoot(spark: SparkSession): String = {
     val root = graft.util.Scratch.dir("sqlcat_root", "all")
     spark.conf.set("spark.sql.catalog.gsql",
       classOf[graft.sources.GraftCatalog].getName)
@@ -3930,10 +3886,7 @@ object Scale {
     // re-trigger. This pins the whole read-path chain (per-file fetch
     // counting -> threshold resolution through the r18 TTL memo ->
     // pendingSidecars -> sweep -> ranged refs) as one oracled key.
-    val root = graft.util.Scratch.dir("sqlcat_root", "all")
-    spark.conf.set("spark.sql.catalog.gsql",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gsql.root", root)
+    val root = gsqlRoot(spark)
     val atbl = "idxauto_" + sf.replaceAll("[^A-Za-z0-9]", "_")
     val adir = s"$root/db/$atbl"
     graft.util.Scratch.once(adir) {
@@ -4697,7 +4650,6 @@ object Scale {
         .writeStream.format("graft-sink")
         .option("path", table)
         .option("checkpointLocation", tmpDir(prefix + "_chk", sf))
-        .option("commitVersions", "true")
       val armed = if (auto)
         w.option("autoOptimize.smallFiles", "2")
           .option("autoOptimize.maxFileBytes", (1L << 30).toString)

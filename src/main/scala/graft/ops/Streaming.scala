@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
+import graft.util.Confs.withConfs
 import graft.util.Determinism._
 
 /** SURVEY.md §2.L — real Structured Streaming over the events table replayed
@@ -69,12 +70,7 @@ object Streaming {
     * callers (parallel suites, future parallel key execution) serialize
     * here instead of silently running batch work at width 4. */
   private def withStreamShuffle[T](spark: SparkSession)(body: => T): T =
-    spark.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "4")
-      try body finally spark.conf.set(key, prev)
-    }
+    withConfs(spark, "spark.sql.shuffle.partitions" -> "4")(body)
 
   /** Run a streaming frame to completion (foreachBatch accumulation with
     * memory-sink semantics), return the result as a batch frame. A round-6
@@ -112,7 +108,7 @@ object Streaming {
     //    stream_dedup 1.53→0.96 s, stream_stream_join 2.51→1.6-1.9 s.
     val ck = graft.util.Scratch.dir("drain_ck", "s") +
       "/" + java.util.UUID.randomUUID().toString.take(12)
-    withSessionConfs(spark,
+    withConfs(spark,
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
       // pre-merge session rows map-side before the stateful shuffle
@@ -303,23 +299,9 @@ object Streaming {
     }
   }
 
-  /** Shared-conf scope (synchronized + restore-or-unset) for streaming
-    * keys that must flip session confs while a query runs — the
-    * withStreamShuffle discipline generalized to arbitrary pairs. */
-  private def withSessionConfs[T](spark: SparkSession,
-      pairs: (String, String)*)(body: => T): T =
-    spark.synchronized {
-      val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-
   /** transformWithState requires the RocksDB state store provider. */
   private def withRocksDb[T](spark: SparkSession)(body: => T): T =
-    withSessionConfs(spark,
+    withConfs(spark,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
@@ -342,7 +324,7 @@ object Streaming {
     // so with no-data batches enabled even Trigger.AvailableNow never
     // terminates — it schedules empty eviction batches forever. Expiry
     // itself doesn't need them: state is filtered on READ past its TTL.
-    withSessionConfs(spark,
+    withConfs(spark,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
@@ -417,13 +399,13 @@ object Streaming {
   }
 
   /** STREAMING WRITE through the custom V2 sink
-    * (graft.sources.GraftSinkStreamingWrite): the event stream lands in
-    * per-epoch part files whose `_manifest_epoch_<n>` job commit is
-    * atomic — the idempotent-sink half of exactly-once (checkpointed
-    * offsets being the other half; a re-run against the same checkpoint
-    * produces no new epochs and the read-back is unchanged). The result
-    * is the aggregate of ONLY what the epoch manifests name, oracled
-    * against the plain batch SQL over the same events. */
+    * (graft.sources.GraftSinkStreamingWrite) in the v1 csv line codec:
+    * each epoch lands atomically as a table version, which is the
+    * idempotent-sink half of exactly-once (checkpointed offsets being the
+    * other half; a re-run against the same checkpoint produces no new
+    * epochs and the read-back is unchanged). The result is the aggregate
+    * of ONLY what the committed versions name, oracled against the plain
+    * batch SQL over the same events. */
   def streamSinkCustom(spark: SparkSession, sf: String): DataFrame = {
     val dir = graft.util.Scratch.dir("v2ssink", sf)
     val chk = graft.util.Scratch.dir("v2ssink_chk", sf)
@@ -431,43 +413,22 @@ object Streaming {
       .select(col("event_id"), col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
       .writeStream.format("graft-sink")
-      // the LEGACY epoch-manifest protocol is what this key demonstrates,
-      // and its read-back below is a raw csv() over the named part files —
-      // pin the v1 line codec (default is parquet since round 11)
+      // pin the v1 line codec (default is parquet since round 11): this
+      // key keeps the csv part format under streaming commits
       .option("format", "csv")
       .option("path", dir).option("checkpointLocation", chk)
       .outputMode(OutputMode.Append())
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("_manifest_epoch_"))
-      .flatMap { m =>
-        val src = scala.io.Source.fromFile(m)
-        // Malformed lines fail loudly — a silently-skipped manifest line
-        // would be a silently-dropped part file.
-        try src.getLines().filter(_.nonEmpty).map(_.split(",") match {
-          case Array(f, _) => f
-          case bad => throw new IllegalStateException(
-            s"malformed manifest line in ${m.getName}: '${bad.mkString(",")}'")
-        }).collect { case f if f != "_total" => s"$dir/$f" }.toList
-        finally src.close()
-      }
-    val sch = "event_id LONG, event_type STRING, cents LONG"
-    val committed =
-      if (files.isEmpty) // empty stream → empty frame, not a csv() throw
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(sch))
-      else spark.read.schema(sch).csv(files.toIndexedSeq: _*)
-    committed
+    spark.read.format("graft-sink").option("path", dir).load()
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
         min(col("event_id")).as("min_id"))
       .orderBy(col("event_type"))
   }
 
-  /** STREAMING INGEST AS VERSIONED TABLE COMMITS (`commitVersions=true`):
-    * each micro-batch epoch lands as an ordinary table version
-    * (op=STREAM APPEND) instead of a side-channel epoch manifest, so
+  /** STREAMING INGEST AS VERSIONED TABLE COMMITS: each micro-batch
+    * epoch lands as an ordinary table version (op=STREAM APPEND), so
     * streamed-in rows are immediately time-travelable, CDF-visible, and
     * readable through the SAME manifest-trusting batch path as every
     * other commit — no epoch-glue code at read time, which is the point.
@@ -488,7 +449,6 @@ object Streaming {
           floor(col("value") * 100).cast("long").as("cents"))
         .writeStream.format("graft-sink")
         .option("path", dir).option("checkpointLocation", chk)
-        .option("commitVersions", "true")
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -516,7 +476,7 @@ object Streaming {
   }
 
   /** THE CLOSED LAKEHOUSE LOOP in one key: a streaming producer lands
-    * events as VERSIONED commits (`commitVersions=true`), and a second,
+    * events as VERSIONED commits, and a second,
     * independent streaming consumer drains the SAME table through the
     * table-feed source into parquet — producer and consumer meet only at
     * the committed manifests, which is exactly how a 100 TB pipeline's
@@ -535,7 +495,6 @@ object Streaming {
         floor(col("value") * 100).cast("long").as("cents"))
       .writeStream.format("graft-sink")
       .option("path", table).option("checkpointLocation", chkIn)
-      .option("commitVersions", "true")
       .outputMode(OutputMode.Append())
       .trigger(Trigger.AvailableNow()).start()
     producer.awaitTermination()
@@ -783,7 +742,7 @@ object Streaming {
       val q = spark.readStream.format("graft-sink").option("path", src).load()
         .writeStream.format("graft-sink")
         .option("path", dst).option("checkpointLocation", chk)
-        .option("commitVersions", "true").option("upsertKey", "user_id")
+        .option("upsertKey", "user_id")
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()

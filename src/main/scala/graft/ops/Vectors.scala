@@ -365,10 +365,7 @@ object Vectors {
     * vector (v2). Returns the table directory. */
   private def annDvFixture(spark: SparkSession, sf: String): String = {
     val seeds = loadSeeds(spark, sf)
-    val root = graft.util.Scratch.dir("sqlcat_root", "all")
-    spark.conf.set("spark.sql.catalog.gsql",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gsql.root", root)
+    val root = Scale.gsqlRoot(spark)
     val tbl = "annrgdv_" + sf.replaceAll("[^A-Za-z0-9]", "_")
     val dir = s"$root/db/$tbl"
     graft.util.Scratch.once(dir) {
@@ -527,10 +524,7 @@ object Vectors {
     * group PER SLICE, top-3 among kept groups excluding deleted ids. */
   def scanAnnStream(spark: SparkSession, sf: String): DataFrame = {
     VectorDot.register(spark)
-    val root = graft.util.Scratch.dir("sqlcat_root", "all")
-    spark.conf.set("spark.sql.catalog.gsql",
-      classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gsql.root", root)
+    val root = Scale.gsqlRoot(spark)
     val tag = sf.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"annstream_$tag"
     val dir = s"$root/db/$tbl"
@@ -562,7 +556,6 @@ object Vectors {
         .writeStream.format("graft-sink")
         .option("path", dir)
         .option("checkpointLocation", graft.util.Scratch.dir("annstream_chk", sf))
-        .option("commitVersions", "true")
         .option("rowGroupBytes", "8192")
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()

@@ -32,10 +32,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - flat records of long / double / string (no unions, no nesting);
   *  - write: one Avro Object Container File per task (snappy-less null
   *    codec — codec jars are environment-dependent), task commit renames
-  *    `.tmp` → `.avro`, JOB commit atomically replaces `_avro_manifest`
-  *    naming exactly the committed files (the graft-sink idempotency
-  *    pattern: a re-run's manifest supersedes the old file set, orphans
-  *    stay invisible to manifest-trusting readers);
+  *    `.tmp` → `.avro`, JOB commit claims the next `_avro_manifest.g{N}`
+  *    generation naming exactly the committed files (the graft-sink
+  *    idempotency pattern: a re-run's manifest supersedes the old file
+  *    set, orphans stay invisible to manifest-trusting readers);
   *  - read: schema INFERRED from the container header of the first
   *    manifest-named file (Avro is self-describing — no user schema
   *    needed), one input partition per file, column pruning applied at
@@ -65,17 +65,6 @@ class AvroSourceProvider extends TableProvider
 }
 
 object AvroSourceProvider {
-  /** The manifest-named committed files (sorted for deterministic
-    * partition order); every `.avro` present if no manifest landed yet.
-    *
-    * Reads the MAX `_avro_manifest.g{N}` generation, not the legacy
-    * `_avro_manifest` head copy: the head copy is refreshed with a
-    * REPLACE_EXISTING move AFTER the generation link is won, so two
-    * racing committers can land their refreshes out of order and leave
-    * the head at the older generation forever — a reader-visible lost
-    * update under exactly the concurrency the generation CAS fixed. The
-    * generation files are the durable record; the legacy file is only
-    * consulted for pre-generation dirs. */
   /** The current manifest generation (0 = none yet) — the ONE scan both
     * readers and committers use, so their views of the head can never
     * desynchronize (review: the listing was duplicated verbatim). */
@@ -87,19 +76,19 @@ object AvroSourceProvider {
     if (gens.isEmpty) 0 else gens.max
   }
 
-  def committedFiles(path: String): Seq[File] = {
-    val g = maxGeneration(path)
-    val manifest =
-      if (g > 0) Some(new File(path, s"_avro_manifest.g$g"))
-      else Some(new File(path, "_avro_manifest")).filter(_.exists())
-    manifest match {
-      case Some(m) =>
-        new String(Files.readAllBytes(m.toPath), "UTF-8")
-          .split("\n").filter(_.nonEmpty).toSeq.sorted.map(new File(path, _))
-      case None =>
-        Option(new File(path).listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".avro")).sortBy(_.getName).toSeq
-    }
+  /** The file names generation `g` commits (empty for g = 0). */
+  private[sources] def generation(path: String, g: Int): Seq[String] =
+    if (g == 0) Seq.empty
+    else new String(Files.readAllBytes(Paths.get(path, s"_avro_manifest.g$g")), "UTF-8")
+      .split("\n").filter(_.nonEmpty).toSeq
+
+  /** The files the newest generation names (sorted for deterministic
+    * partition order); every `.avro` present if no generation landed yet. */
+  def committedFiles(path: String): Seq[File] = maxGeneration(path) match {
+    case 0 =>
+      Option(new File(path).listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".avro")).sortBy(_.getName).toSeq
+    case g => generation(path, g).sorted.map(new File(path, _))
   }
 
   def toSpark(s: Schema): StructType = {
@@ -237,9 +226,8 @@ class AvroBatchWrite(path: String, schema: StructType, replace: Boolean,
     * silently replaces — the second committer's REPLACE_EXISTING move
     * erases the first's merge). Each commit instead claims
     * `_avro_manifest.g{N+1}` with `Files.createLink` (atomic EEXIST on a
-    * taken slot → re-read the WINNER's generation and retry) and then
-    * refreshes `_avro_manifest` as the derived head copy readers use —
-    * best-effort under races, the generation files are the record. */
+    * taken slot → re-read the WINNER's generation and retry). The
+    * generation files are the only record readers consult. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val mine = messages.map(_.asInstanceOf[AvroCommit])
       .map(m => new File(m.file).getName)
@@ -248,18 +236,7 @@ class AvroBatchWrite(path: String, schema: StructType, replace: Boolean,
     while (attempt < 1000) {
       attempt += 1
       val g = AvroSourceProvider.maxGeneration(path)
-      val prior =
-        if (replace) Seq.empty
-        else {
-          // latest generation is authoritative; fall back to the legacy
-          // single manifest for dirs written before generations existed
-          val src = if (g > 0) new File(path, s"_avro_manifest.g$g")
-            else new File(path, "_avro_manifest")
-          if (src.exists())
-            new String(Files.readAllBytes(src.toPath), "UTF-8")
-              .split("\n").filter(_.nonEmpty).toSeq
-          else Seq.empty
-        }
+      val prior = if (replace) Seq.empty else AvroSourceProvider.generation(path, g)
       val names = (prior ++ mine).distinct.sorted
       val body = names.mkString("\n").getBytes("UTF-8")
       val tmp = Files.createTempFile(Paths.get(path), "_avro_manifest.g", ".tmp")
@@ -267,10 +244,6 @@ class AvroBatchWrite(path: String, schema: StructType, replace: Boolean,
       try {
         Files.createLink(Paths.get(path, s"_avro_manifest.g${g + 1}"), tmp)
         Files.delete(tmp)
-        val ltmp = Files.createTempFile(Paths.get(path), "_avro_manifest", ".tmp")
-        Files.write(ltmp, body)
-        Files.move(ltmp, Paths.get(path, "_avro_manifest"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
         return
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>

@@ -42,10 +42,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * over self-describing tables, exactly the posture a 100 TB object-store
   * layout wants (any engine that can read manifests can mount the same
   * root). */
-private[sources] object GraftFs {
+private[graft] object GraftFs {
   /** Recursive directory delete (symlink-agnostic, best-effort like
-    * File.delete) — shared by DROP TABLE, staged-create abort, and the
-    * binpack temp cleanup. */
+    * File.delete) — shared by DROP TABLE, staged-create abort, the
+    * binpack temp cleanup and the scratch roots' exit hooks. */
   def deleteTree(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteTree)); f.delete(); ()
   }
@@ -920,7 +920,7 @@ private[sources] class GraftOrphansProcedure(cat: GraftCatalog)
         // in-flight ones stay protected by the same grace window
         // (ADVICE r16: .idb.tmp was invisible to this report)
         f.getName.endsWith(".tmp")) &&
-        !f.getName.startsWith("epoch-") && !keep.contains(f.getName) &&
+        !keep.contains(f.getName) &&
         f.lastModified() <= cutoff)
     result(StructType.fromDDL("n_orphans BIGINT, orphan_bytes BIGINT"),
       orphans.length.toLong, orphans.map(_.length()).sum)

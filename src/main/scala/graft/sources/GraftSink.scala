@@ -1198,11 +1198,7 @@ object GraftManifest {
     * Temp hygiene: the body tmp is deleted on EVERY exit path (claim won,
     * claim lost, unexpected IO failure) — without the finally, a non-
     * EEXIST failure would leak `_manifest-v*.tmp` files forever (vacuum
-    * additionally sweeps aged ones, belt and braces).
-    *
-    * Also refreshes the legacy `_manifest` head copy (files + `_total`
-    * only) for readers that predate versioning — best-effort derived
-    * state under concurrency; the version files are the durable record. */
+    * additionally sweeps aged ones, belt and braces). */
   def commitMetas(path: String, jobMetas: Seq[GraftFileMeta], schemaDdl: String,
       truncate: Boolean, expectedBase: Option[Int] = None,
       evolve: Boolean = false, op: Option[String] = None,
@@ -1455,32 +1451,6 @@ object GraftManifest {
       // lost the race — loop re-reads the new head and retries one slot up
       if (claimer.claim(Paths.get(path, s"$VPrefix$next"),
           claimBody.getBytes(StandardCharsets.UTF_8))) {
-        // head pointer for pre-versioning readers; REPLACE is safe — it is
-        // derived state, the version files are the durable record — and
-        // BEST-EFFORT: the version is already durably committed, so a
-        // refresh failure must not fail the job. Refreshed only on FULL
-        // commits: writing the complete list per delta commit would put
-        // the O(table files) cost the delta design removes right back.
-        if (!isDelta && pendingMarker.isEmpty) scala.util.Try {
-          if (all.exists(_.dv.isDefined)) {
-            // a DV-bearing snapshot has NO faithful legacy rendering: the
-            // v1 contract equates per-file line counts with the total, but
-            // here physical rows != live rows. Remove the head copy so a
-            // pre-versioning reader fails at "no manifest" instead of
-            // resurrecting deleted rows or tripping its own total check.
-            Files.deleteIfExists(Paths.get(path, "_manifest"))
-            ()
-          } else {
-            val legacy = (all.map(m => s"${m.name},${m.rows}") :+
-              s"_total,${all.map(_.liveRows).sum}").mkString("\n")
-            val ltmp = Files.createTempFile(Paths.get(path), "_manifest", ".tmp")
-            try {
-              Files.write(ltmp, legacy.getBytes(StandardCharsets.UTF_8))
-              Files.move(ltmp, Paths.get(path, "_manifest"),
-                StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-            } finally Files.deleteIfExists(ltmp)
-          }
-        }
         // a committed version may carry new table properties (ALTER SET
         // TBLPROPERTIES lands here) — drop the auto-compact threshold
         // memo for this path so an IN-PROCESS property change is seen by
@@ -1725,9 +1695,8 @@ object GraftManifest {
     * vacuum ships with); pass 0 only when the caller KNOWS no write is in
     * flight (single-writer fixtures). Aged `.tmp` leftovers (crashed
     * writers, failed commits) are swept under the same grace window.
-    * Batch-table dirs only: streaming epoch manifests are a different
-    * lifecycle and are not consulted here. Returns the number of data
-    * files deleted (tmp sweep not counted — it is garbage, not data). */
+    * Returns the number of data files deleted (tmp sweep not counted —
+    * it is garbage, not data). */
   def vacuum(path: String, retainLast: Int,
       graceMs: Long = 10 * 60 * 1000L): Int = {
     require(retainLast >= 1, "vacuum must retain at least the head version")
@@ -1807,7 +1776,6 @@ object GraftManifest {
           // via refName, which strips the range suffix)
           f.getName.endsWith(".ngb") || f.getName.endsWith(".pbb") ||
           f.getName.endsWith(".blm") || f.getName.endsWith(".idb")) &&
-        !f.getName.startsWith("epoch-") &&
         !keep.contains(f.getName) && f.lastModified() <= cutoff)
     victims.foreach(_.delete())
     listing.filter(f => f.getName.endsWith(".tmp") && f.lastModified() <= cutoff)
@@ -3021,12 +2989,6 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
                 .map(_.toInt).getOrElse(1))
           }
         private val autoOpt = policyOf
-        // option-sourced policy only — a table PROPERTY must not abort a
-        // legacy (non-versioned) stream that never opted in; the explicit
-        // option keeps its loud commitVersions requirement
-        private val autoOptExplicit =
-          if (Option(opts.get("autoOptimize.smallFiles")).exists(_.nonEmpty))
-            autoOpt else None
         override def toBatch: BatchWrite =
           new GraftSinkBatchWrite(path, info.schema(), truncating, tag,
             expectedBase, evolve, partCol, opLabel, replaceWhere,
@@ -3036,13 +2998,10 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
             autoOpt = autoOpt, prefixBloomFor = prefixBloomFor,
             rgCentroids = rgCentroids, ngramBloomFor = ngramBloomFor)
         override def toStreaming: StreamingWrite = {
-          val versioned = Option(opts.get("commitVersions")).exists(_.toBoolean)
           // partCol includes the declared-spec default: a streaming
           // ingest into a PARTITIONED BY table conforms like any batch
-          new GraftSinkStreamingWrite(path, info.schema(), tag,
-            versioned, partCol,
-            format = fileFormat, upsertKey = upsertKeyOpt,
-            autoOpt = if (versioned) autoOpt else autoOptExplicit,
+          new GraftSinkStreamingWrite(path, info.schema(), tag, partCol,
+            format = fileFormat, upsertKey = upsertKeyOpt, autoOpt = autoOpt,
             // physical write knob, same as the batch path: a streamed
             // vector corpus needs small groups for #rgcen routing to
             // have anything to route (round 16)
@@ -6022,13 +5981,10 @@ class GraftSinkWriterFactory(path: String, schema: StructType, tag: String,
 
 /** Named (serializable) streaming factory — an anonymous class here would
   * drag the non-serializable StreamingWrite along as its outer pointer.
-  * Versioned-commit mode drops the `epoch-` part-name prefix: those files
-  * are referenced by ordinary version manifests, and vacuum's lifecycle
-  * split (epoch files are the legacy per-epoch protocol's, never swept by
-  * version retention) must classify them as ordinary data files so
-  * orphans from re-delivered epochs age into the sweep. */
+  * Epoch parts are ordinary data files referenced by version manifests,
+  * so orphans from re-delivered epochs age into vacuum's sweep. */
 case class GraftSinkStreamingFactory(path: String, schema: StructType,
-    tag: String, versioned: Boolean = false,
+    tag: String,
     checks: Seq[(String, String)] = Nil,
     partCol: Option[String] = None,
     bloomFor: Seq[String] = Nil, ndvFor: Seq[String] = Nil,
@@ -6044,7 +6000,7 @@ case class GraftSinkStreamingFactory(path: String, schema: StructType,
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftSinkWriter(path, schema, partitionId, taskId,
-      prefix = if (versioned) s"e$epochId-$tag-" else s"epoch-$epochId-$tag-",
+      prefix = s"e$epochId-$tag-",
       partCol = partCol, checks = checks, bloomFor = bloomFor, ndvFor = ndvFor,
       format = format, upsertKey = upsertKey, rowGroupBytes = rowGroupBytes,
       prefixBloomFor = prefixBloomFor, centroidFor = centroidFor,
@@ -6052,33 +6008,6 @@ case class GraftSinkStreamingFactory(path: String, schema: StructType,
       ngramBloomFor = ngramBloomFor)
 }
 
-/** The STREAMING half of the sink: identical task-commit protocol, but job
-  * commit is PER EPOCH — `_manifest_epoch_<n>.<tag>` lands atomically once
-  * every task of micro-batch n has renamed its part file. The tag is the
-  * write query's id: two streaming queries sharing one directory commit
-  * DISJOINT epoch-manifest names (before the tag, query B's epoch-5 commit
-  * replaced query A's epoch-5 manifest, orphaning A's committed files
-  * even though the part files themselves were already tag-disambiguated).
-  * If an epoch is re-delivered after a failure, the SAME query's manifest
-  * is atomically REPLACED with the new attempt's file set; parts from the
-  * failed attempt become orphans that manifest-trusting readers never
-  * see. That idempotent commit is what composes with checkpointed source
-  * offsets into end-to-end exactly-once.
-  *
-  * `commitVersions=true` lands each epoch as a VERSIONED table commit
-  * instead (op=STREAM APPEND, delta-manifest appends like any batch
-  * writer), so streamed-in rows are immediately time-travelable,
-  * CDF-visible, and table-feed-streamable — the full lakehouse loop with
-  * a streaming producer. Exactly-once across epoch RE-DELIVERY (failure
-  * replay, restart from checkpoint) comes from the `#txn=<writer>:<epoch>`
-  * watermark: each commit records its (query-id, epoch), the head fold
-  * accumulates the latest epoch per writer (checkpoints and rewrites
-  * carry the map forward), and a commit whose epoch is at or below the
-  * watermark is a no-op. The write query id is STABLE across restarts
-  * (it is the streaming query's checkpointed id, not the run id), which
-  * is what makes the watermark durable. Single-writer-per-query check:
-  * re-delivery is sequential within one query, so check-then-commit does
-  * not race itself; concurrent OTHER writers are ordinary CAS contenders. */
 /** Streaming auto-maintenance policy (the write-option surface of the
   * Delta auto-compaction role): after an epoch commit, once this writer
   * has appended `smallFiles` files since the last sweep, fold every file
@@ -6101,21 +6030,31 @@ object GraftSinkStreamingWrite {
 
 }
 
+/** The STREAMING half of the sink: identical task-commit protocol, and
+  * each micro-batch epoch lands as a VERSIONED table commit (op=STREAM
+  * APPEND, delta-manifest appends like any batch writer), so streamed-in
+  * rows are immediately time-travelable, CDF-visible, and
+  * table-feed-streamable — the full lakehouse loop with a streaming
+  * producer, through the one commit record every other writer uses.
+  * Exactly-once across epoch RE-DELIVERY (failure replay, restart from
+  * checkpoint) comes from the `#txn=<writer>:<epoch>` watermark: each
+  * commit records its (query-id, epoch), the head fold accumulates the
+  * latest epoch per writer (checkpoints and rewrites carry the map
+  * forward), and a commit whose epoch is at or below the watermark is a
+  * no-op; the re-delivered attempt's parts stay unreferenced orphans that
+  * vacuum reclaims. The write query id is STABLE across restarts (it is
+  * the streaming query's checkpointed id, not the run id), which is what
+  * makes the watermark durable; it also tags part names, so two queries
+  * sharing one directory never collide. Single-writer-per-query check:
+  * re-delivery is sequential within one query, so check-then-commit does
+  * not race itself; concurrent OTHER writers are ordinary CAS contenders. */
 class GraftSinkStreamingWrite(path: String, schema: StructType, tag: String,
-    commitVersions: Boolean = false, partCol: Option[String] = None,
+    partCol: Option[String] = None,
     format: String = GraftFormat.Default,
     upsertKey: Option[String] = None,
     autoOpt: Option[GraftAutoOptimize] = None,
     rowGroupBytes: Option[Int] = None)
     extends StreamingWrite {
-  // upsert semantics need the versioned commit line (equality deletes are
-  // manifest facts; the legacy epoch protocol has no manifest to carry them)
-  require(upsertKey.isEmpty || commitVersions,
-    "graft-sink: streaming upsertKey requires commitVersions=true")
-  // auto-maintenance compacts committed VERSIONS; the legacy epoch
-  // protocol has no manifest for binpack to rewrite
-  require(autoOpt.isEmpty || commitVersions,
-    "graft-sink: autoOptimize requires commitVersions=true")
   /** Head-derived write-plan facts (CHECK constraints, bloom/NDV index
     * columns) in O(HEADER): createStreamingWriterFactory fires per
     * MICRO-BATCH — Spark rebuilds the StreamingWrite itself each epoch,
@@ -6128,13 +6067,11 @@ class GraftSinkStreamingWrite(path: String, schema: StructType, tag: String,
     * [[GraftSinkStreamingWrite.legacyIdxCache]]; the table upgrades to
     * the header fact at its next full commit. */
   private lazy val headFactsOnce: Option[GraftManifest] =
-    if (commitVersions)
-      GraftManifest.versions(path).lastOption
-        .map(v => GraftManifest.headerFacts(path, v))
-    else None
+    GraftManifest.versions(path).lastOption
+      .map(v => GraftManifest.headerFacts(path, v))
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    // versioned streaming ingest into an indexed table keeps the table
+    // streaming ingest into an indexed table keeps the table
     // indexed: derive EVERY index surface (bloom/NDV/prefix-bloom/
     // centroid + granularity, round 15) from the head's #idx header fact
     // (or one cached legacy fold), the same rule OPTIMIZE and DML
@@ -6160,7 +6097,7 @@ class GraftSinkStreamingWrite(path: String, schema: StructType, tag: String,
     }
     def names(is: Seq[Int]): Seq[String] =
       is.flatMap(i => schema.fields.lift(i).map(_.name))
-    GraftSinkStreamingFactory(path, schema, tag, commitVersions,
+    GraftSinkStreamingFactory(path, schema, tag,
       head.map(_.checks).getOrElse(Nil), partCol,
       names(idx.bloom), names(idx.ndv), format, upsertKey,
       rowGroupBytes = rowGroupBytes,
@@ -6177,37 +6114,25 @@ class GraftSinkStreamingWrite(path: String, schema: StructType, tag: String,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val ms = messages.flatMap(_.asInstanceOf[GraftSinkCommit].files)
     val eqDels = messages.flatMap(_.asInstanceOf[GraftSinkCommit].eqDels)
-    if (commitVersions) {
-      if (ms.isEmpty) return // empty epoch: nothing to version
-      // O(header chain), never a fold: this runs EVERY micro-batch
-      val committed = GraftManifest.committedEpoch(path, tag)
-        .getOrElse(Long.MinValue)
-      if (epochId <= committed) {
-        // re-delivered epoch: its rows are already in a committed version;
-        // this attempt's task-committed parts stay unreferenced orphans
-        // (vacuum sweeps them), and committing them again would double rows.
-        // This pre-check is only the FAST PATH — the authoritative check
-        // re-runs against the freshly-read head inside commitMetas' claim
-        // loop, so two live instances of one query racing past this line
-        // still commit the epoch exactly once.
-        return
-      }
-      GraftManifest.commitMetas(path, ms.toSeq, schema.toDDL, truncate = false,
-        op = Some(if (upsertKey.isDefined) "STREAM UPSERT" else "STREAM APPEND"),
-        txn = Some(tag -> epochId),
-        formatSet = Some(format), newEqDels = eqDels.toSeq)
-      maybeAutoOptimize(ms.length)
+    if (ms.isEmpty) return // empty epoch: nothing to version
+    // O(header chain), never a fold: this runs EVERY micro-batch
+    val committed = GraftManifest.committedEpoch(path, tag)
+      .getOrElse(Long.MinValue)
+    if (epochId <= committed) {
+      // re-delivered epoch: its rows are already in a committed version;
+      // this attempt's task-committed parts stay unreferenced orphans
+      // (vacuum sweeps them), and committing them again would double rows.
+      // This pre-check is only the FAST PATH — the authoritative check
+      // re-runs against the freshly-read head inside commitMetas' claim
+      // loop, so two live instances of one query racing past this line
+      // still commit the epoch exactly once.
       return
     }
-    val body = (ms.map(m => s"${m.name},${m.rows}") :+
-      s"_total,${ms.map(_.rows).sum}").mkString("\n")
-    val tmp = Paths.get(path, s"_manifest_epoch_$epochId.$tag.tmp")
-    try {
-      Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, Paths.get(path, s"_manifest_epoch_$epochId.$tag"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } finally Files.deleteIfExists(tmp)
-    ()
+    GraftManifest.commitMetas(path, ms.toSeq, schema.toDDL, truncate = false,
+      op = Some(if (upsertKey.isDefined) "STREAM UPSERT" else "STREAM APPEND"),
+      txn = Some(tag -> epochId),
+      formatSet = Some(format), newEqDels = eqDels.toSeq)
+    maybeAutoOptimize(ms.length)
   }
 
   /** Post-commit auto-maintenance — the shared [[GraftMaintenance

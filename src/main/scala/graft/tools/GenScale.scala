@@ -62,10 +62,7 @@ object GenScale {
       java.nio.file.Files.move(part.head.toPath,
         java.nio.file.Paths.get(out, s"$t.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(stage))
+      graft.sources.GraftFs.deleteTree(new java.io.File(stage))
       println(s"[genscale] $t -> ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
     }
     /** Replicate with per-replica key shifts: (column, span) pairs. */

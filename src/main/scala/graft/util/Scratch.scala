@@ -32,13 +32,7 @@ object Scratch {
   lazy val root: String = {
     val dir = s"$base/graft_run_${UUID.randomUUID().toString.take(8)}"
     new java.io.File(dir).mkdirs()
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    sys.addShutdownHook(graft.sources.GraftFs.deleteTree(new java.io.File(dir)))
     dir
   }
 

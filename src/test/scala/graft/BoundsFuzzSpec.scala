@@ -541,7 +541,7 @@ class BoundsFuzzSpec extends AnyFunSuite {
       genValid(params, Seed(i.toLong)).getOrElse("fallback")
     val values = (0 until 300).map(sample)
       .filter(s => !s.contains('\n') && !s.contains('\r')) // cell rule
-    val dir = java.nio.file.Files.createTempDirectory("graft_fuzz_env").toString
+    val dir = tmp("graft_fuzz_env")
     import spark.implicits._
     values.toDF("v").coalesce(1)
       .write.format("graft-sink").option("path", dir).mode("overwrite").save()

@@ -35,7 +35,7 @@ class EngineSpec extends AnyFunSuite {
   // ----------------------------------------------------- CSV/JSON sources
 
   test("CSV source roundtrip preserves rows (explicit schema, header)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = TestSpark.tmp("graft_csv")
     val src = graft.util.Tables.orders(spark, sf001)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     src.write.mode("overwrite").option("header", "true").csv(s"$tmp/orders_csv")
@@ -47,7 +47,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("JSON-lines source roundtrip preserves rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val tmp = TestSpark.tmp("graft_json")
     val src = graft.util.Tables.customer(spark, sf001)
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
     src.write.mode("overwrite").json(s"$tmp/cust_json")
@@ -76,7 +76,7 @@ class EngineSpec extends AnyFunSuite {
   // ------------------------------------------------- partition pruning
 
   test("hive-style partitioned writes prune partitions on read") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val tmp = TestSpark.tmp("graft_part")
     val src = graft.util.Tables.orders(spark, sf001)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     src.write.mode("overwrite").partitionBy("o_orderstatus")

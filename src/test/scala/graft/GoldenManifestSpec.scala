@@ -92,7 +92,7 @@ class GoldenManifestSpec extends AnyFunSuite {
   }
 
   test("header reads match the parse; a legacy body falls back to the full read") {
-    val dir = Files.createTempDirectory("graft_golden").toString
+    val dir = TestSpark.tmp("graft_golden")
     (current :+ ("legacy" -> 1)).foreach { case (name, v) =>
       val body = resource(s"$name.manifest")
       val p = Paths.get(dir, s"$name-v$v")

@@ -91,8 +91,7 @@ class PropertySpec extends AnyFunSuite {
       val rows = (0 until n).map { _ =>
         (s"g${rnd.nextInt(nGroups)}", rnd.nextLong().abs % 100000, rnd.nextInt())
       }
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_prop_ms$round").toString
+      val dir = tmp(s"graft_prop_ms$round")
       rows.toDF("g", "k", "v")
         .write.format("graft-sink").option("path", dir)
         .option("sortBy", "g,k").option("writePartitions", "4")
@@ -132,7 +131,7 @@ class PropertySpec extends AnyFunSuite {
         if (i < edgeS.size) edgeS(i) else rnd.alphanumeric.take(rnd.nextInt(30)).mkString)
     }
     val df = rows.toDF("l", "d", "s")
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_prop").toString
+    val dir = tmp("graft_avro_prop")
     df.write.format("graft-avro").option("path", dir).mode("append").save()
     val back = spark.read.format("graft-avro").load(dir)
       .collect().map(r => (r.getLong(0),
@@ -260,7 +259,7 @@ class PropertySpec extends AnyFunSuite {
     // of the same fold — and every intermediate version must still parse.
     import graft.sources.GraftManifest
     val rnd = new Random(77)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mprop").toString
+    val dir = tmp("graft_mprop")
     var expect = Vector.empty[(String, Long)]
     for (step <- 0 until 25) {
       val files = (0 to rnd.nextInt(3)).map(j => (s"part-$step-$j.csv", rnd.nextInt(100).toLong))
@@ -287,7 +286,7 @@ class PropertySpec extends AnyFunSuite {
     // a stale view) and retries. Law: all 8 versions exist and the head
     // names every thread's file exactly once — a lost update would drop one.
     import graft.sources.GraftManifest
-    val dir = java.nio.file.Files.createTempDirectory("graft_mcas").toString
+    val dir = tmp("graft_mcas")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val tasks = (0 until 8).map { i =>
@@ -311,10 +310,10 @@ class PropertySpec extends AnyFunSuite {
   test("graft-avro manifest generations: concurrent appenders all land, none lost") {
     // The avro twin of the graft-sink CAS law: 8 racing append commits
     // each claim a _avro_manifest.g{N} generation via createLink; the
-    // derived _avro_manifest head must name every job's file (the
-    // pre-generation read-merge-rename lost updates here).
+    // newest generation must name every job's file (the pre-generation
+    // read-merge-rename lost updates here).
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val dir = java.nio.file.Files.createTempDirectory("graft_avrocas").toString
+    val dir = tmp("graft_avrocas")
     val schema = StructType(Seq(StructField("a", LongType)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
@@ -328,10 +327,7 @@ class PropertySpec extends AnyFunSuite {
       tasks.foreach(_.get())
     } finally pool.shutdown()
     // assert through committedFiles — the READ path — which consults the
-    // max generation (the durable record), NOT the legacy _avro_manifest
-    // head copy: racing committers refresh that copy with REPLACE moves
-    // that can land out of order, so asserting on it is inherently flaky
-    // (ADVICE r7) and readers were moved off it for the same reason
+    // max generation, the only record
     val head = graft.sources.AvroSourceProvider.committedFiles(dir).map(_.getName)
     assert(head.sorted == (0 until 8).map(i => s"part-$i.avro"),
       s"every concurrent avro append must survive: $head")
@@ -351,7 +347,7 @@ class PropertySpec extends AnyFunSuite {
     // re-compacts. Law: whatever interleaving the scheduler produces,
     // the final head's total equals every appended row exactly once.
     import graft.sources.{GraftFileMeta, GraftManifest}
-    val dir = java.nio.file.Files.createTempDirectory("graft_mrw").toString
+    val dir = tmp("graft_mrw")
     val nAppenders = 7
     val perAppender = 4
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nAppenders + 1)
@@ -405,7 +401,7 @@ class PropertySpec extends AnyFunSuite {
     // the head folds to exactly the rows appended so far, and after the
     // final vacuum every retained version is readable.
     import graft.sources.GraftManifest
-    val dir = java.nio.file.Files.createTempDirectory("graft_vac_race").toString
+    val dir = tmp("graft_vac_race")
     val nAppenders = 4
     val perAppender = 30 // deep enough to cross several checkpoints
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nAppenders + 1)
@@ -451,7 +447,7 @@ class PropertySpec extends AnyFunSuite {
     // apply, and nobody re-plans. Repeat under true concurrency.
     import graft.sources.{GraftDeltaBatchWrite, GraftDeltaCommit, GraftDv, GraftDvFragment, GraftManifest}
     import org.apache.spark.sql.types.StructType
-    val dir = java.nio.file.Files.createTempDirectory("graft_rebase").toString
+    val dir = tmp("graft_rebase")
     spark.range(10).selectExpr("id").coalesce(1)
       .write.format("graft-sink").option("path", dir).mode("overwrite").save()
     val head1 = GraftManifest.readVersion(dir, None).get
@@ -540,7 +536,7 @@ class PropertySpec extends AnyFunSuite {
     // re-plan then succeeds, and the final head reflects BOTH deletes.
     import graft.sources.{GraftDeltaBatchWrite, GraftDeltaCommit, GraftDvFragment, GraftManifest}
     import org.apache.spark.sql.types.StructType
-    val dir = java.nio.file.Files.createTempDirectory("graft_dml_race").toString
+    val dir = tmp("graft_dml_race")
     spark.range(10).selectExpr("id").coalesce(1)
       .write.format("graft-sink").option("path", dir).mode("overwrite").save()
     val head = GraftManifest.readVersion(dir, None).get

@@ -32,7 +32,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("free-text stats withheld past 64 chars; commas survive parquet cells") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_text").toString
+    val dir = TestSpark.tmp("graft_r11_text")
     val rows = Seq(
       (1L, "short,with,commas", "x" * 100 + ",tail"),
       (2L, "also short", "y" * 80))
@@ -59,7 +59,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("batch upsertKey: appends + equality delete, OPTIMIZE materializes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_ups").toString
+    val dir = TestSpark.tmp("graft_r11_ups")
     import spark.implicits._
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1)
       .write.format("graft-sink").option("path", dir).mode("overwrite").save()
@@ -100,8 +100,8 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("table-feed stream applies eqdels at start, refuses new ones mid-stream") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_upsfeed").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_r11_upsfeed_chk").toString
+    val dir = TestSpark.tmp("graft_r11_upsfeed")
+    val chk = TestSpark.tmp("graft_r11_upsfeed_chk")
     val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
     import spark.implicits._
     def upsert(rows: Seq[(Long, String)]): Unit = {
@@ -143,7 +143,7 @@ class Round11Spec extends AnyFunSuite {
 
   test("row-group filter pushdown: engaged when safe, off under DV/_pos") {
     import graft.sources.GraftReadStats
-    val root = java.nio.file.Files.createTempDirectory("graft_r11_rg").toString
+    val root = TestSpark.tmp("graft_r11_rg")
     spark.conf.set("spark.sql.catalog.grg", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.grg.root", root)
     val dir = s"$root/db/t"
@@ -198,8 +198,8 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("change-feed stream renders an upsert epoch as exact insert/delete rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_cdfups").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_r11_cdfups_chk").toString
+    val dir = TestSpark.tmp("graft_r11_cdfups")
+    val chk = TestSpark.tmp("graft_r11_cdfups_chk")
     val out = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
     import spark.implicits._
     def write(rows: Seq[(Long, String)], seed: Boolean): Unit = {
@@ -233,7 +233,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("batch CDF ranges across upsert and OPTIMIZE keep eqdel-row accounting") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_cdfopt").toString
+    val dir = TestSpark.tmp("graft_r11_cdfopt")
     import spark.implicits._
     Seq(1L -> "a", 2L -> "b").toDF("k", "v").coalesce(1)
       .write.format("graft-sink").option("path", dir).mode("overwrite").save()
@@ -263,7 +263,7 @@ class Round11Spec extends AnyFunSuite {
 
   test("unsorted point probe: parquet blooms ride bloomFor; decode stays bounded") {
     import graft.sources.GraftReadStats
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_ubloom").toString
+    val dir = TestSpark.tmp("graft_r11_ubloom")
     import spark.implicits._
     val n = 50000L
     // one UNSORTED file, tiny row groups: every group spans ~the full key
@@ -296,7 +296,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("struct columns: roundtrip with nulls, nested pruning, DV delete") {
-    val root = java.nio.file.Files.createTempDirectory("graft_r11_struct").toString
+    val root = TestSpark.tmp("graft_r11_struct")
     spark.conf.set("spark.sql.catalog.gst", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gst.root", root)
     val dir = s"$root/db/t"
@@ -336,7 +336,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("map<string,scalar> columns roundtrip with null values and empty maps") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_map").toString
+    val dir = TestSpark.tmp("graft_r11_map")
     import spark.implicits._
     Seq(
       (1L, Map("a" -> 10L, "b" -> 20L)),
@@ -363,7 +363,7 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("pending-txn manifests are invisible until their marker exists") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_txn").toString
+    val dir = TestSpark.tmp("graft_r11_txn")
     import spark.implicits._
     Seq((1L, 10L)).toDF("k", "n").coalesce(1)
       .write.format("graft-sink").option("path", dir).mode("overwrite").save()

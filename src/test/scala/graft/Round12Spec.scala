@@ -35,7 +35,7 @@ class Round12Spec extends AnyFunSuite {
 
   test("metadata-only commits preserve seq=0: eqdels survive add_constraint and restore") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_r12_meta").toString
+    val root = TestSpark.tmp("graft_r12_meta")
     spark.conf.set("spark.sql.catalog.g12a", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g12a.root", root)
     val dir = s"$root/db/t"
@@ -73,7 +73,7 @@ class Round12Spec extends AnyFunSuite {
 
   test("clone and fast_forward carry pending eqdels, sidecars and the version clock") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_r12_clone").toString
+    val root = TestSpark.tmp("graft_r12_clone")
     spark.conf.set("spark.sql.catalog.g12b", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g12b.root", root)
     val src = s"$root/db/s"
@@ -121,7 +121,7 @@ class Round12Spec extends AnyFunSuite {
   test("stalled txn publish aborts via marker tombstone — never a partial publish") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val root = java.nio.file.Files.createTempDirectory("graft_r12_txn").toString
+    val root = TestSpark.tmp("graft_r12_txn")
     val (t1, t2) = (s"$root/t1", s"$root/t2")
     Seq((1L, "a")).toDF("k", "v").coalesce(1)
       .write.format("graft-sink").option("path", t1).mode("overwrite").save()
@@ -169,7 +169,7 @@ class Round12Spec extends AnyFunSuite {
   }
 
   test("txn_publish rejects marker-unsafe ids") {
-    val root = java.nio.file.Files.createTempDirectory("graft_r12_ids").toString
+    val root = TestSpark.tmp("graft_r12_ids")
     spark.conf.set("spark.sql.catalog.g12c", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g12c.root", root)
     import spark.implicits._
@@ -187,7 +187,7 @@ class Round12Spec extends AnyFunSuite {
   test("vectorized decode: columnar batches on clean scans, row fallback under row identity") {
     import spark.implicits._
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val root = java.nio.file.Files.createTempDirectory("graft_r12_colr").toString
+    val root = TestSpark.tmp("graft_r12_colr")
     spark.conf.set("spark.sql.catalog.g12e", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g12e.root", root)
     val dir = s"$root/db/t"
@@ -223,7 +223,7 @@ class Round12Spec extends AnyFunSuite {
     assert(!scanOf(q4).supportsColumnar, "DV'd files must fall back to the row reader")
     assert(q4.count() == 900)
     // pending equality deletes force the row path too
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_r12_colr2").toString
+    val dir2 = TestSpark.tmp("graft_r12_colr2")
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1)
       .write.format("graft-sink").option("path", dir2).mode("overwrite").save()
     Seq((2L, "B")).toDF("k", "v").coalesce(1)
@@ -239,7 +239,7 @@ class Round12Spec extends AnyFunSuite {
   test("vectorized decode survives rename, trailing evolution and the change feed") {
     import spark.implicits._
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val root = java.nio.file.Files.createTempDirectory("graft_r12_colr3").toString
+    val root = TestSpark.tmp("graft_r12_colr3")
     spark.conf.set("spark.sql.catalog.g12d", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g12d.root", root)
     val dir = s"$root/db/t"
@@ -270,7 +270,7 @@ class Round12Spec extends AnyFunSuite {
 
   test("deep nesting roundtrips on both decode paths, nulls at every level") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val dir = java.nio.file.Files.createTempDirectory("graft_r12_nest").toString
+    val dir = TestSpark.tmp("graft_r12_nest")
     // nulls at each level: whole column (id=1), inner container / deep
     // member / map value (id=3), element inside the inner array (id=3's
     // aa too) — the decode recursion must thread absence correctly at
@@ -309,7 +309,7 @@ class Round12Spec extends AnyFunSuite {
   test("row-identity splits decode vectorized: DV skip and _pos match the Group path") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import graft.sources.GraftReadStats
-    val root = java.nio.file.Files.createTempDirectory("graft_r12_vrow").toString
+    val root = TestSpark.tmp("graft_r12_vrow")
     spark.conf.set("spark.sql.catalog.g12v", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g12v.root", root)
     val dir = s"$root/db/t"
@@ -346,8 +346,8 @@ class Round12Spec extends AnyFunSuite {
     import graft.sources.{GraftManifest, GraftReadStats}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_r12_epoch").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_r12_epoch_chk").toString
+    val dir = TestSpark.tmp("graft_r12_epoch")
+    val chk = TestSpark.tmp("graft_r12_epoch_chk")
     // seed a MANY-FILE table: the per-epoch cost must not scale with it
     (0L until 64L).map(i => (i, s"seed$i")).toDF("k", "v").repartition(32)
       .write.format("graft-sink").option("path", dir).mode("overwrite").save()
@@ -355,7 +355,6 @@ class Round12Spec extends AnyFunSuite {
     val q = ms.toDS().toDF("k", "v")
       .writeStream.format("graft-sink")
       .option("path", dir).option("checkpointLocation", chk)
-      .option("commitVersions", "true")
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(50))
       .start()
@@ -381,7 +380,7 @@ class Round12Spec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_r12_bp").toString
+    val root = TestSpark.tmp("graft_r12_bp")
     spark.conf.set("spark.sql.catalog.g12f", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g12f.root", root)
     val dir = s"$root/db/t"
@@ -421,7 +420,7 @@ class Round12Spec extends AnyFunSuite {
     // the bare CAS, raced 200 times: a claimer whose exists check predates
     // the winner's move but whose index read follows its DONE mark must
     // not release the key and overwrite the winner
-    val dir = java.nio.file.Files.createTempDirectory("graft_r12_oscrace")
+    val dir = java.nio.file.Paths.get(TestSpark.tmp("graft_r12_oscrace"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try (0 until 200).foreach { round =>
       val store = new graft.sources.ObjectStoreClaim
@@ -449,7 +448,7 @@ class Round12Spec extends AnyFunSuite {
     GraftManifest.claimer = store
     try {
       // the PropertySpec CAS law under the conditional-PUT primitive
-      val dir = java.nio.file.Files.createTempDirectory("graft_r12_osc").toString
+      val dir = TestSpark.tmp("graft_r12_osc")
       val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
       try {
         (0 until 8).map { i =>

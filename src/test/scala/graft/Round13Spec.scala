@@ -66,7 +66,7 @@ class Round13Spec extends AnyFunSuite {
     // end-to-end: a file whose ONLY row is supplementary must survive a
     // range probe that is true under Spark's order (under unit order the
     // file's max sorts below the probe value and gets wrongly pruned)
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_cp").toString
+    val dir = tmp("graft_r13_cp")
     import spark.implicits._
     Seq((1L, "😀")).toDF("id", "s").coalesce(1)
       .write.format("graft-sink").option("path", dir).mode("overwrite").save()
@@ -77,7 +77,7 @@ class Round13Spec extends AnyFunSuite {
   }
 
   test("min/max aggregate pushdown bails on bound columns — never answers from a prefix") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_agg").toString
+    val dir = tmp("graft_r13_agg")
     import spark.implicits._
     val rows = Seq((1L, "alpha " + Prose), (2L, "zeta " + Prose))
     rows.toDF("id", "prose").coalesce(1)
@@ -107,7 +107,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("#bstats roundtrips the manifest, survives re-commits and OPTIMIZE, emoji-clean") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_r13_rt").toString
+    val root = tmp("graft_r13_rt")
     spark.conf.set("spark.sql.catalog.g13", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g13.root", root)
     val dir = s"$root/db/t"
@@ -153,7 +153,7 @@ class Round13Spec extends AnyFunSuite {
   }
 
   test("bound envelopes PRUNE: text range probe plans only overlapping files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_prune").toString
+    val dir = tmp("graft_r13_prune")
     import spark.implicits._
     // two disjoint prose clusters, one file each
     Seq((1L, "apple " + Prose), (2L, "banana " + Prose)).toDF("id", "prose")
@@ -175,7 +175,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("sortspec compaction absorbs over #bstats bound envelopes soundly (r12 stretch)") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_r13_sortb").toString
+    val root = tmp("graft_r13_sortb")
     spark.conf.set("spark.sql.catalog.gsb", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gsb.root", root)
     val dir = s"$root/db/t"
@@ -222,13 +222,13 @@ class Round13Spec extends AnyFunSuite {
 
   test("runtime file pruning on the sorted leading key (DPP over envelopes)") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_dppsort").toString
+    val dir = tmp("graft_r13_dppsort")
     import spark.implicits._
     spark.range(0, 8000).toDF("k").select(col("k"), (col("k") % 97).as("v"))
       .write.format("graft-sink").option("path", dir)
       .option("sortBy", "k").option("writePartitions", "8")
       .option("distributionStrict", "true").mode("overwrite").save()
-    graft.ops.Scale.withConfs(spark,
+    graft.util.Confs.withConfs(spark,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true") {
@@ -252,7 +252,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("compound sortBy: conformance, prefix ordering report, OPTIMIZE carry") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_r13_ms").toString
+    val root = tmp("graft_r13_ms")
     spark.conf.set("spark.sql.catalog.gms", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gms.root", root)
     val dir = s"$root/db/t"
@@ -294,7 +294,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("OPTIMIZE ZORDER quantile curve prunes probes on RAW wide-domain columns") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_r13_zq").toString
+    val root = tmp("graft_r13_zq")
     spark.conf.set("spark.sql.catalog.gzq", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gzq.root", root)
     val dir = s"$root/db/t"
@@ -365,7 +365,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("eqdel/eqSel probing decodes through VectorRows (VERDICT r12 #4)") {
     import graft.sources.{GraftManifest, GraftReadStats}
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_eqvec").toString
+    val dir = tmp("graft_r13_eqvec")
     import spark.implicits._
     // typed key columns: long id + a decimal the canonical-cell form must
     // render identically to the write-side hash (the eqdel probe contract)
@@ -402,7 +402,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("sorted-key DPP composes with bound envelopes; DESC TopN proof holds on bounds") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_dppb").toString
+    val dir = tmp("graft_r13_dppb")
     import spark.implicits._
     // prose-sorted table: every file's sort-key envelope is a BOUND
     (0 until 800).map(i => (i.toLong, f"k$i%04d " + Prose)).toDF("id", "body")
@@ -411,7 +411,7 @@ class Round13Spec extends AnyFunSuite {
       .option("distributionStrict", "true").mode("overwrite").save()
     val head = graft.sources.GraftManifest.readVersion(dir, None).get
     assert(head.metas.forall(_.bounds(1)), "fixture: bound envelopes on the sort key")
-    graft.ops.Scale.withConfs(spark,
+    graft.util.Confs.withConfs(spark,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true") {
@@ -444,7 +444,7 @@ class Round13Spec extends AnyFunSuite {
   }
 
   test("files procedure reports bytes, seq and the per-file index surface") {
-    val root = java.nio.file.Files.createTempDirectory("graft_r13_files").toString
+    val root = tmp("graft_r13_files")
     spark.conf.set("spark.sql.catalog.gfp", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gfp.root", root)
     val dir = s"$root/db/t"
@@ -510,7 +510,7 @@ class Round13Spec extends AnyFunSuite {
     // the v1 line codec refuses embedded commas/newlines, so use long
     // comma-free prose — bounds are computed in the SHARED commit path,
     // not per-codec
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_csvb").toString
+    val dir = tmp("graft_r13_csvb")
     import spark.implicits._
     Seq((1L, "alpha" + Prose), (2L, "zeta" + Prose)).toDF("id", "prose")
       .coalesce(1)

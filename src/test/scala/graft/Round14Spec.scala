@@ -25,23 +25,6 @@ class Round14Spec extends AnyFunSuite {
       .option("sortBy", "event_id").option("writePartitions", "2")
       .option("distributionStrict", "true").mode("overwrite").save()
 
-  test("autoOptimize without commitVersions is refused at stream start") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    ms.addData(Ev(1L, "a", 1L))
-    val q = ms.toDF().writeStream.format("graft-sink")
-      .option("path", tmp("graft_r14_nover"))
-      .option("checkpointLocation", tmp("graft_r14_noverchk"))
-      .option("autoOptimize.smallFiles", "2")
-      .trigger(Trigger.AvailableNow()).start()
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.awaitTermination()
-    }
-    assert(e.getMessage.contains("autoOptimize requires commitVersions"),
-      s"unexpected failure: ${e.getMessage}")
-  }
-
   test("malformed autoOptimize policy (smallFiles=0) is refused") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -50,7 +33,6 @@ class Round14Spec extends AnyFunSuite {
     val q = ms.toDF().writeStream.format("graft-sink")
       .option("path", tmp("graft_r14_badpol"))
       .option("checkpointLocation", tmp("graft_r14_badpolchk"))
-      .option("commitVersions", "true")
       .option("autoOptimize.smallFiles", "0")
       .trigger(Trigger.AvailableNow()).start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -69,7 +51,6 @@ class Round14Spec extends AnyFunSuite {
     val q = ms.toDF().coalesce(1) // one file per epoch, deterministically
       .writeStream.format("graft-sink")
       .option("path", dir).option("checkpointLocation", tmp("graft_r14_autochk"))
-      .option("commitVersions", "true")
       .option("autoOptimize.smallFiles", "2")
       .option("autoOptimize.maxFileBytes", (1L << 30).toString)
       .option("autoOptimize.targetFiles", "2")
@@ -119,7 +100,6 @@ class Round14Spec extends AnyFunSuite {
     val q = ms.toDF().coalesce(1)
       .writeStream.format("graft-sink")
       .option("path", dir).option("checkpointLocation", tmp("graft_r14_partautochk"))
-      .option("commitVersions", "true")
       // a PATH-based table has no catalog-declared #partspec — the
       // stream states its layout like the batch seed did
       .option("partitionBy", "event_type")
@@ -217,26 +197,34 @@ class Round14Spec extends AnyFunSuite {
     assert(e2.getMessage.contains("vacuum.retain"), s"unexpected: ${e2.getMessage}")
   }
 
-  test("a property policy never aborts a legacy (non-versioned) stream") {
+  test("a TBLPROPERTIES policy sweeps under a plain stream with no options") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = tmp("graft_r14_proplegacy")
-    spark.conf.set("spark.sql.catalog.g14l", classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.g14l.root", root)
+    val root = tmp("graft_r14_propstream")
+    spark.conf.set("spark.sql.catalog.g14s", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.g14s.root", root)
     val dir = s"$root/db/t"
-    spark.sql("CREATE TABLE g14l.db.t (event_id BIGINT, event_type STRING, " +
-      "cents BIGINT) TBLPROPERTIES ('autoOptimize.smallFiles'='1')")
+    spark.sql("CREATE TABLE g14s.db.t (event_id BIGINT, event_type STRING, " +
+      "cents BIGINT) TBLPROPERTIES ('autoOptimize.smallFiles'='2')")
     val ms = MemoryStream[Ev]
-    ms.addData(Ev(1L, "a", 1L))
-    // legacy epoch protocol (no commitVersions): the PROPERTY policy is
-    // ignored rather than tripping the explicit-option require
-    val q = ms.toDF().writeStream.format("graft-sink")
-      .option("path", dir).option("format", "csv")
-      .option("checkpointLocation", tmp("graft_r14_proplegacychk"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination() // must not throw
-    assert(new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("_manifest_epoch_")))
+    // a PLAIN stream — no writer options beyond path and checkpoint
+    val q = ms.toDF().coalesce(1).writeStream.format("graft-sink")
+      .option("path", dir)
+      .option("checkpointLocation", tmp("graft_r14_propstreamchk"))
+      .trigger(Trigger.ProcessingTime(50)).start()
+    (1 to 2).foreach { e =>
+      ms.addData(Ev(e.toLong, "a", e.toLong))
+      q.processAllAvailable()
+    }
+    q.stop()
+    val ops = GraftManifest.versions(dir)
+      .flatMap(v => GraftManifest.headerFacts(dir, v).op)
+    assert(ops.count(_ == "STREAM APPEND") == 2,
+      s"every epoch must land as a versioned commit: $ops")
+    assert(ops.last == "AUTO-OPTIMIZE",
+      s"the durable policy must sweep after the 2nd epoch file: $ops")
+    assert(GraftManifest.readVersion(dir, None).get.metas.size == 1)
+    assert(spark.read.format("graft-sink").option("path", dir).load().count() == 2L)
   }
 
   test("property values with escapes roundtrip; REPLACE TABLE starts property-free") {

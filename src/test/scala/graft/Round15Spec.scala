@@ -505,7 +505,6 @@ class Round15Spec extends AnyFunSuite {
       .writeStream.format("graft-sink")
       .option("path", table)
       .option("checkpointLocation", s"$root/chk")
-      .option("commitVersions", "true")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination()

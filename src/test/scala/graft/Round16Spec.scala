@@ -443,12 +443,9 @@ class Round16Spec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("cannot encode")), e.getMessage)
   }
 
-  test("legacy (non-versioned) epoch streams rebuild no index surfaces (documented freeze)") {
+  test("a stream into an indexed head derives every declared index surface") {
     import graft.sources.{GraftSinkStreamingWrite, GraftSinkStreamingFactory}
-    val dir = tmp("graft_r16_legacy")
-    // even sitting on an INDEXED versioned head, the legacy epoch
-    // protocol derives nothing — index parity is a commitVersions=true
-    // feature (README "streaming & the index surfaces" note)
+    val dir = tmp("graft_r16_idxstream")
     spark.range(10).toDF("id").selectExpr("id", "md5(cast(id as string)) as s")
       .coalesce(1).write.format("graft-sink").option("path", dir)
       .option("bloomFor", "s").option("ngramBloomFor", "s:4")
@@ -457,13 +454,7 @@ class Round16Spec extends AnyFunSuite {
     val info = new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
       override def numPartitions(): Int = 1
     }
-    val legacy = new GraftSinkStreamingWrite(dir, schema, "q", commitVersions = false)
-      .createStreamingWriterFactory(info).asInstanceOf[GraftSinkStreamingFactory]
-    assert(legacy.bloomFor.isEmpty && legacy.ngramBloomFor.isEmpty &&
-      legacy.centroidFor.isEmpty && legacy.reverseFor.isEmpty,
-      s"legacy epoch sink must stay index-frozen: $legacy")
-    // the versioned protocol on the same head derives the declared set
-    val versioned = new GraftSinkStreamingWrite(dir, schema, "q", commitVersions = true)
+    val versioned = new GraftSinkStreamingWrite(dir, schema, "q")
       .createStreamingWriterFactory(info).asInstanceOf[GraftSinkStreamingFactory]
     assert(versioned.bloomFor == Seq("s") &&
       versioned.ngramBloomFor == Seq(("s", 4)),

@@ -390,7 +390,7 @@ class ScaleFixSpec extends AnyFunSuite {
     // reach planInputPartitions, so a selective predicate plans only the
     // files whose stats envelope admits it — asserted on the PLANNED
     // partition count, the join_dpp_prune/sink_bloom_skip test pattern.
-    val dir = java.nio.file.Files.createTempDirectory("graft_skip").toString
+    val dir = tmp("graft_skip")
     (0 until 3).foreach { s =>
       spark.range(s * 100, s * 100 + 100).toDF("id")
         .select(col("id"), (col("id") * 2).as("v"))
@@ -460,7 +460,7 @@ class ScaleFixSpec extends AnyFunSuite {
       assert(scans.size == 1)
       scans.head.inputRDD.getNumPartitions
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_cap").toString
+    val dir = tmp("graft_cap")
     // three appended files with disjoint id ranges (10 rows each)
     (0 until 3).foreach { s =>
       spark.range(s * 10L, s * 10L + 10).toDF("id")
@@ -481,7 +481,7 @@ class ScaleFixSpec extends AnyFunSuite {
       "TopN DESC rows must be exact")
     assert(planned(desc) == 1, "TopN DESC must plan the last range file only")
     // a NULL in the sort column makes the cap unprovable → scan everything
-    val dirN = java.nio.file.Files.createTempDirectory("graft_capn").toString
+    val dirN = tmp("graft_capn")
     import spark.implicits._
     Seq((1L, Option(5L)), (2L, Option.empty[Long])).toDF("id", "v")
       .coalesce(1).write.format("graft-sink").option("path", dirN).mode("append").save()
@@ -540,7 +540,7 @@ class ScaleFixSpec extends AnyFunSuite {
 
   test("OPTIMIZE preserves bloom and NDV indexes on rewritten files") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_idx").toString
+    val root = tmp("graft_idx")
     spark.conf.set("spark.sql.catalog.gidx", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gidx.root", root)
     val dir = s"$root/db/t"
@@ -596,7 +596,7 @@ class ScaleFixSpec extends AnyFunSuite {
 
   test("graft-sink timestamp/date columns: exact roundtrip, NULLs, pushdown aggregates") {
     import java.sql.{Date, Timestamp}
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts").toString
+    val dir = tmp("graft_ts")
     import spark.implicits._
     val rows = Seq(
       (1L, Option(Timestamp.valueOf("2024-03-01 10:30:00.123456")),
@@ -620,7 +620,7 @@ class ScaleFixSpec extends AnyFunSuite {
     assert(r.getTimestamp(0) == Timestamp.valueOf("2024-03-01 10:30:00.123456"))
     assert(r.getDate(1) == Date.valueOf("2024-03-05"))
     // a pushed timestamp range predicate skips the non-matching file
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ts2").toString
+    val dir2 = tmp("graft_ts2")
     Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00"))).toDF("id", "ts").coalesce(1)
       .write.format("graft-sink").option("path", dir2).mode("append").save()
     Seq((2L, Timestamp.valueOf("2024-06-01 00:00:00"))).toDF("id", "ts").coalesce(1)
@@ -650,7 +650,7 @@ class ScaleFixSpec extends AnyFunSuite {
       "bloom must size by distinct hashes, not row count")
     // an all-null sketched column reports NO sketch (not distinctCount=1)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nn").toString
+    val dir = tmp("graft_nn")
     Seq((1L, Option.empty[Long]), (2L, Option.empty[Long])).toDF("id", "v")
       .coalesce(1).write.format("graft-sink").option("path", dir)
       .option("ndvFor", "*").mode("overwrite").save()
@@ -658,7 +658,7 @@ class ScaleFixSpec extends AnyFunSuite {
     assert(m.ndvs.contains(0) && !m.ndvs.contains(1),
       s"all-null column must emit no NDV sketch: ${m.ndvs.keys}")
     // a capped scan pins the snapshot it proved the cap against
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_pin").toString
+    val dir2 = tmp("graft_pin")
     spark.range(0, 20).toDF("id").coalesce(1)
       .write.format("graft-sink").option("path", dir2).mode("append").save()
     spark.range(20, 40).toDF("id").coalesce(1)
@@ -679,14 +679,14 @@ class ScaleFixSpec extends AnyFunSuite {
     // bucket) — the third runtime-pruning path after identity
     // partitions and blooms
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val dir = java.nio.file.Files.createTempDirectory("graft_bdpp").toString
+    val dir = tmp("graft_bdpp")
     spark.range(0, 800).toDF("id")
       .select(col("id"), (col("id") % 13).as("v"))
       .repartition(pmod(col("id"), lit(8)).cast("int"))
       .write.format("graft-sink").option("path", dir)
       .option("partitionBy", "bucket(8,id)").mode("overwrite").save()
     assert(graft.sources.GraftManifest.readVersion(dir, None).get.files.size == 8)
-    graft.ops.Scale.withConfs(spark,
+    graft.util.Confs.withConfs(spark,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true") {
@@ -711,7 +711,7 @@ class ScaleFixSpec extends AnyFunSuite {
 
   test("OPTIMIZE preserves a declared sort layout; appends conform to it") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_sortspec").toString
+    val root = tmp("graft_sortspec")
     spark.conf.set("spark.sql.catalog.gso", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gso.root", root)
     val dir = s"$root/db/t"
@@ -762,7 +762,7 @@ class ScaleFixSpec extends AnyFunSuite {
   }
 
   test("fast_forward refuses a moved source and a foreign branch") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ff").toString
+    val root = tmp("graft_ff")
     spark.conf.set("spark.sql.catalog.gff", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gff.root", root)
     import spark.implicits._
@@ -794,7 +794,7 @@ class ScaleFixSpec extends AnyFunSuite {
     import graft.sources.GraftManifest
     // STRING bucket source: writer, pruning and the V2 function share
     // String.hashCode floorMod
-    val root = java.nio.file.Files.createTempDirectory("graft_bspec").toString
+    val root = tmp("graft_bspec")
     spark.conf.set("spark.sql.catalog.gbk", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gbk.root", root)
     val dir = s"$root/db/t"
@@ -853,7 +853,7 @@ class ScaleFixSpec extends AnyFunSuite {
     // by the column: a task holding several values writes one file PER
     // value, each recorded in the manifest, so a pinned read plans only
     // that value's files no matter how rows were distributed.
-    val dir = java.nio.file.Files.createTempDirectory("graft_pw").toString
+    val dir = tmp("graft_pw")
     spark.range(0, 300).toDF("id")
       .select(col("id"), concat(lit("g"), (col("id") % 3).cast("string")).as("grp"))
       .repartition(4) // round-robin: every task sees every grp — the adversarial layout

@@ -49,7 +49,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft-avro: schema inference, decoder pruning, idempotent manifest commit") {
     import java.io.File
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_spec").toString
+    val dir = tmp("graft_avro_spec")
     val df = graft.util.Tables.orders(spark, sf001)
       .select(col("o_orderkey"), col("o_orderstatus"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -83,13 +83,15 @@ class SourceSpec extends AnyFunSuite {
     df2.write.format("graft-avro").option("path", dir).mode("overwrite").save()
     assert(spark.read.format("graft-avro").load(dir).count() == df2.count())
     val files = new File(dir).listFiles().map(_.getName)
-    assert(files.contains("_avro_manifest"))
+    // three commits, three generations: the generation is the record
+    assert(files.contains("_avro_manifest.g3"), files.mkString(","))
     assert(!files.exists(_.endsWith(".tmp")), files.mkString(","))
   }
 
   test("graft-sink commit protocol: manifest totals, no stray temp files") {
     import java.io.File
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_spec").toString
+    import graft.sources.GraftManifest
+    val dir = tmp("graft_sink_spec")
     val df = graft.util.Tables.orders(spark, sf001)
       .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
     // this spec reads the committed parts back RAW as csv lines — pin the
@@ -97,15 +99,15 @@ class SourceSpec extends AnyFunSuite {
     df.write.format("graft-sink").option("format", "csv")
       .option("path", dir).mode("append").save()
     val files = new File(dir).listFiles().map(_.getName)
-    assert(files.contains("_manifest"))
     assert(!files.exists(_.endsWith(".tmp")), files.mkString(","))
-    val manifest = scala.io.Source.fromFile(s"$dir/_manifest").getLines()
-      .map(_.split(",")).map(a => a(0) -> a(1).toLong).toMap
+    // the version file is the only commit record: no head copy beside it
+    assert(!files.contains("_manifest"), files.mkString(","))
+    val head = GraftManifest.readVersion(dir, None).get
     // every committed file is named, totals agree with the frame
-    assert(manifest("_total") == df.count())
-    val parts = manifest.keys.filter(_ != "_total")
+    assert(head.total == df.count())
+    val parts = head.files.map(_._1)
     assert(parts.forall(files.contains), s"manifest names missing files")
-    assert(parts.map(manifest).sum == manifest("_total"))
+    assert(head.files.map(_._2).sum == head.total)
     // read-back through the manifest reproduces the frame
     val back = spark.read.schema("o_orderstatus STRING, n LONG")
       .csv(parts.map(f => s"$dir/$f").toSeq: _*)
@@ -113,7 +115,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink time travel: append merges, overwrite truncates, every version stays readable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tt_spec").toString
+    val dir = tmp("graft_tt_spec")
     def write(df: org.apache.spark.sql.DataFrame, mode: String): Unit =
       df.write.format("graft-sink").option("path", dir).mode(mode).save()
     def read(v: Option[Int]) = {
@@ -172,7 +174,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink schema evolution: add-column append, old versions stay readable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val dir = tmp("graft_evo")
     def write(df: org.apache.spark.sql.DataFrame, mode: String, evolve: Boolean = false) = {
       val w = df.write.format("graft-sink").option("path", dir).mode(mode)
       (if (evolve) w.option("evolveSchema", "true") else w).save()
@@ -214,7 +216,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink vacuum: manifests drop first, only unreferenced files reclaimed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vac_spec").toString
+    val dir = tmp("graft_vac_spec")
     val df = graft.util.Tables.orders(spark, sf001)
       .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
     df.repartition(4).write.format("graft-sink").option("path", dir).mode("append").save()
@@ -248,8 +250,8 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-docs resume: capped micro-batches, checkpointed offsets, growing corpus") {
-    val chk = java.nio.file.Files.createTempDirectory("graft_resume_chk").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_resume_out").toString
+    val chk = tmp("graft_resume_chk")
+    val out = tmp("graft_resume_out")
     def runOnce(nDocs: Int): Unit = {
       val q = spark.readStream.format("graft-docs")
         .option("nDocs", nDocs.toString).option("maxDocsPerBatch", "100")
@@ -287,7 +289,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft-sink timestampAsOf: strictly increasing commit clocks, boundary resolution") {
     import graft.sources.GraftManifest
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts_spec").toString
+    val dir = tmp("graft_ts_spec")
     def write(lo: Long, mode: String): Unit =
       spark.range(lo, lo + 5).selectExpr("id AS k")
         .coalesce(1).write.format("graft-sink").option("path", dir).mode(mode).save()
@@ -307,7 +309,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft-sink change feed: version diff plans only changed files, tags insert/delete") {
     import graft.sources.GraftSinkScan
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdf_spec").toString
+    val dir = tmp("graft_cdf_spec")
     def write(lo: Long, mode: String, base: Option[Int] = None): Unit = {
       val w = spark.range(lo, lo + 5).selectExpr("id AS k")
         .coalesce(1).write.format("graft-sink").option("path", dir).mode(mode)
@@ -351,7 +353,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft-sink delta manifests: appends write O(job) bodies, folds agree, vacuum self-contains") {
     import graft.sources.GraftManifest
-    val dir = java.nio.file.Files.createTempDirectory("graft_delta_spec").toString
+    val dir = tmp("graft_delta_spec")
     def write(lo: Long, mode: String): Unit =
       spark.range(lo, lo + 3).selectExpr("id AS k")
         .coalesce(1).write.format("graft-sink").option("path", dir).mode(mode).save()
@@ -395,7 +397,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft catalog: CREATE TABLE commits schema, INSERT appends, SQL travels, DROP is local") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cat_spec").toString
+    val root = tmp("graft_cat_spec")
     spark.conf.set("spark.sql.catalog.gspec", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gspec.root", root)
     spark.sql("CREATE TABLE gspec.ns.t (k BIGINT, s STRING)")
@@ -420,7 +422,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink reports manifest statistics: small tables auto-broadcast with no hint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stats_spec").toString
+    val dir = tmp("graft_stats_spec")
     graft.util.Tables.orders(spark, sf001)
       .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
       .coalesce(1)
@@ -437,7 +439,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink guards: reserved _change_type refused at write, startingVersion inclusive") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_guard_spec").toString
+    val dir = tmp("graft_guard_spec")
     val e = intercept[Exception] {
       spark.range(1).selectExpr("id AS k", "'x' AS _change_type")
         .write.format("graft-sink").option("path", dir).mode("overwrite").save()
@@ -447,14 +449,14 @@ class SourceSpec extends AnyFunSuite {
       spark.range(lo, lo + 5).selectExpr("id AS k")
         .coalesce(1).write.format("graft-sink").option("path", dir).mode(mode).save()
     write(0, "overwrite"); write(10, "append"); write(20, "append")
-    val out = java.nio.file.Files.createTempDirectory("graft_guard_out").toString
+    val out = tmp("graft_guard_out")
     val q = spark.readStream.format("graft-sink").option("path", dir)
       .option("startingVersion", "2").load()
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           id: Long) => b.write.mode("overwrite").parquet(s"$out/batch=$id") }
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_guard_chk").toString)
+        tmp("graft_guard_chk"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination()
     // Delta contract: version 2 INCLUSIVE — v2's and v3's adds, not v1's
@@ -464,7 +466,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft catalog procedures: CALL restore/optimize/vacuum drive the lifecycle from SQL") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_proc_spec").toString
+    val root = tmp("graft_proc_spec")
     spark.conf.set("spark.sql.catalog.gproc", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gproc.root", root)
     val dir = s"$root/ns/t"
@@ -495,21 +497,21 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft-sink streaming write conforms to the declared partition layout") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_stp").toString
+    val root = tmp("graft_stp")
     spark.conf.set("spark.sql.catalog.gstp", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gstp.root", root)
     val dir = s"$root/db/t"
     spark.sql("CREATE TABLE gstp.db.t (k BIGINT, g STRING) PARTITIONED BY (g)")
-    val src = java.nio.file.Files.createTempDirectory("graft_stp_src").toString
+    val src = tmp("graft_stp_src")
     spark.range(0, 60)
       .selectExpr("id AS k", "concat('g', cast(id % 3 AS string)) AS g")
       .coalesce(1).write.format("graft-sink").option("path", src)
       .mode("overwrite").save()
     val q = spark.readStream.format("graft-sink").option("path", src).load()
       .writeStream.format("graft-sink")
-      .option("path", dir).option("commitVersions", "true")
+      .option("path", dir)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_stp_chk").toString)
+        tmp("graft_stp_chk"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination()
     val head = GraftManifest.readVersion(dir, None).get
@@ -523,9 +525,9 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink streaming source: version offsets, rewrite fails loudly, ignoreChanges re-emits") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tstream_spec").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_tstream_chk").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_tstream_out").toString
+    val dir = tmp("graft_tstream_spec")
+    val chk = tmp("graft_tstream_chk")
+    val out = tmp("graft_tstream_out")
     def write(lo: Long, mode: String): Unit =
       spark.range(lo, lo + 5).selectExpr("id AS k")
         .coalesce(1).write.format("graft-sink").option("path", dir).mode(mode).save()
@@ -565,7 +567,7 @@ class SourceSpec extends AnyFunSuite {
     import graft.sources.GraftManifest
     // HASH write distribution (default): a partitioned write clusters by
     // the partition column itself — one file per value, no caller shaping
-    val dir = java.nio.file.Files.createTempDirectory("graft_dist").toString
+    val dir = tmp("graft_dist")
     spark.range(0, 300).toDF("id")
       .select(col("id"), concat(lit("g"), (col("id") % 3).cast("string")).as("grp"))
       .repartition(4) // adversarial input layout; the WRITE fixes it
@@ -592,7 +594,7 @@ class SourceSpec extends AnyFunSuite {
       sm.queryExecution.executedPlan.toString.take(400))
     assert(sm.head().getLong(0) == (0L until 300L).sum)
     // ...but sum(double) is never pushed: FP addition is order-dependent
-    val dirF = java.nio.file.Files.createTempDirectory("graft_dblsum").toString
+    val dirF = tmp("graft_dblsum")
     spark.range(5).selectExpr("id", "cast(id as double) as d").coalesce(1)
       .write.format("graft-sink").option("path", dirF).mode("overwrite").save()
     val tF = spark.read.format("graft-sink").option("path", dirF).load()
@@ -631,7 +633,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft-sink declared partitioning: inserts conform, options override, shape replacement drops the spec") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_ddlp").toString
+    val root = tmp("graft_ddlp")
     spark.conf.set("spark.sql.catalog.gddl", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gddl.root", root)
     val dir = s"$root/db/t"
@@ -665,7 +667,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft-sink WAP: duplicate ids refused, vacuum spares stages, moved head fails publish, abort reclaims") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_wap").toString
+    val root = tmp("graft_wap")
     spark.conf.set("spark.sql.catalog.gwap", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gwap.root", root)
     val dir = s"$root/db/t"
@@ -708,7 +710,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft catalog: DROP COLUMN rewrites once, keeps survivor ids, old versions still serve it") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_drop").toString
+    val root = tmp("graft_drop")
     spark.conf.set("spark.sql.catalog.gdrop", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gdrop.root", root)
     val dir = s"$root/db/t"
@@ -743,7 +745,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft catalog: CTAS PARTITIONED BY lands and records the layout; REPLACE without it clears") {
     import graft.sources.GraftManifest
-    val root = java.nio.file.Files.createTempDirectory("graft_ctasp").toString
+    val root = tmp("graft_ctasp")
     spark.conf.set("spark.sql.catalog.gcts", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gcts.root", root)
     spark.sql(
@@ -772,7 +774,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("graft-sink sorted write: strict range distribution tiles envelopes and prunes; non-strict rebalance loses nothing") {
     import graft.sources.GraftManifest
-    val dir = java.nio.file.Files.createTempDirectory("graft_sortw").toString
+    val dir = tmp("graft_sortw")
     spark.range(0, 400).toDF("id").repartition(8)
       .write.format("graft-sink").option("path", dir)
       .option("sortBy", "id").option("writePartitions", "4")
@@ -791,7 +793,7 @@ class SourceSpec extends AnyFunSuite {
       s"a first-slice predicate must plan exactly 1 of 4 files")
     // non-strict (default) goes through REBALANCE — layout is AQE's
     // choice, but every row lands and stays readable
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_sortw2").toString
+    val dir2 = tmp("graft_sortw2")
     spark.range(0, 400).toDF("id").repartition(8)
       .write.format("graft-sink").option("path", dir2)
       .option("sortBy", "id").mode("overwrite").save()
@@ -800,7 +802,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink column mapping + constraints: rename keeps ids, re-added names never alias, DML enforces") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cm_spec").toString
+    val root = tmp("graft_cm_spec")
     spark.conf.set("spark.sql.catalog.gcm", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gcm.root", root)
     import graft.sources.GraftManifest
@@ -848,7 +850,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink replaceWhere: straddlers vector exactly, NULLs survive negation, misfits refused") {
-    val root = java.nio.file.Files.createTempDirectory("graft_rw_spec").toString
+    val root = tmp("graft_rw_spec")
     spark.conf.set("spark.sql.catalog.grw", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.grw.root", root)
     import graft.sources.GraftManifest
@@ -922,7 +924,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink SQL DML: merge-on-read DELETE vectors rows, partition-aligned DELETE is metadata-only") {
-    val root = java.nio.file.Files.createTempDirectory("graft_dml_spec").toString
+    val root = tmp("graft_dml_spec")
     spark.conf.set("spark.sql.catalog.gdml", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gdml.root", root)
     import graft.sources.GraftManifest
@@ -939,10 +941,10 @@ class SourceSpec extends AnyFunSuite {
     val head = spark.read.format("graft-sink").option("path", dir).load()
     assert(head.count() == 16)
     assert(head.agg(sum(col("id"))).head().getLong(0) == (0L until 20).filter(_ % 5 != 0).sum)
-    // a DV-bearing snapshot has no faithful legacy rendering — the
-    // pre-versioning `_manifest` head copy must disappear, not lie
+    // the version files are the only commit record: no `_manifest` head
+    // copy exists to go stale under deletion vectors
     assert(!new java.io.File(dir, "_manifest").exists(),
-      "legacy _manifest must be removed once deletion vectors exist")
+      "no _manifest head copy may exist beside the version files")
     assert(spark.read.format("graft-sink").option("path", dir)
       .option("versionAsOf", "1").load().count() == 20)
     // the row id surfaces as metadata columns; positions skip the dead rows
@@ -973,7 +975,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink SQL DML: UPDATE and MERGE land as vector + fresh files; stale base commit throws") {
-    val root = java.nio.file.Files.createTempDirectory("graft_dml2_spec").toString
+    val root = tmp("graft_dml2_spec")
     spark.conf.set("spark.sql.catalog.gdm2", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gdm2.root", root)
     import graft.sources.GraftManifest
@@ -1024,7 +1026,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft-sink deletion vectors: CDF nets the delete, vacuum honors sidecar references") {
-    val root = java.nio.file.Files.createTempDirectory("graft_dv_spec").toString
+    val root = tmp("graft_dv_spec")
     spark.conf.set("spark.sql.catalog.gdv", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gdv.root", root)
     import graft.sources.GraftManifest
@@ -1091,7 +1093,7 @@ class SourceSpec extends AnyFunSuite {
 
 
   test("graft catalog ALTER TABLE ADD COLUMNS: trailing evolution from SQL, everything else refused") {
-    val root = java.nio.file.Files.createTempDirectory("graft_alter_spec").toString
+    val root = tmp("graft_alter_spec")
     spark.conf.set("spark.sql.catalog.galt", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.galt.root", root)
     val dir = s"$root/db/a"
@@ -1124,14 +1126,14 @@ class SourceSpec extends AnyFunSuite {
   test("graft-sink versioned streaming: epoch re-delivery is a no-op; rewrites keep the txn watermark") {
     import graft.sources.{GraftFileMeta, GraftManifest, GraftSinkCommit, GraftSinkStreamingWrite}
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_vstream_spec").toString
+    val dir = tmp("graft_vstream_spec")
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
     def fileWith(name: String, ids: Seq[Long]): GraftFileMeta = {
       Files.write(Paths.get(dir, name), ids.mkString("\n").getBytes("UTF-8"))
       GraftFileMeta(name, ids.length.toLong, 1,
         Map(0 -> (ids.min.toString, ids.max.toString)), None, Some(Map.empty))
     }
-    val w = new GraftSinkStreamingWrite(dir, schema, "q1", commitVersions = true)
+    val w = new GraftSinkStreamingWrite(dir, schema, "q1")
     w.commit(0L, Array(GraftSinkCommit(Seq(fileWith("a.csv", Seq(1L, 2L, 3L))))))
     // failure replay re-delivers epoch 0 with a fresh attempt's files: no-op
     w.commit(0L, Array(GraftSinkCommit(Seq(fileWith("b.csv", Seq(9L, 9L, 9L))))))
@@ -1152,13 +1154,13 @@ class SourceSpec extends AnyFunSuite {
       .option("operation", "OPTIMIZE").mode("overwrite").save()
     assert(GraftManifest.readVersion(dir, None).get.txns == Map("q1" -> 1L))
     // restart: a NEW write instance with the same (stable) query id
-    val w2 = new GraftSinkStreamingWrite(dir, schema, "q1", commitVersions = true)
+    val w2 = new GraftSinkStreamingWrite(dir, schema, "q1")
     w2.commit(1L, Array(GraftSinkCommit(Seq(fileWith("d.csv", Seq(7L)))))) // replayed: no-op
     assert(ids() == Seq(1L, 2L, 3L, 4L, 5L))
     w2.commit(2L, Array(GraftSinkCommit(Seq(fileWith("e.csv", Seq(6L))))))
     assert(ids() == Seq(1L, 2L, 3L, 4L, 5L, 6L))
     // a second writer keeps its own watermark
-    val w3 = new GraftSinkStreamingWrite(dir, schema, "q2", commitVersions = true)
+    val w3 = new GraftSinkStreamingWrite(dir, schema, "q2")
     w3.commit(0L, Array(GraftSinkCommit(Seq(fileWith("f.csv", Seq(8L))))))
     val head = GraftManifest.readVersion(dir, None).get
     assert(head.txns == Map("q1" -> 2L, "q2" -> 0L))
@@ -1174,7 +1176,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft tags: VERSION AS OF a name, vacuum retention, move and release") {
-    val root = java.nio.file.Files.createTempDirectory("graft_tag_spec").toString
+    val root = tmp("graft_tag_spec")
     spark.conf.set("spark.sql.catalog.gtag", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gtag.root", root)
     import graft.sources.GraftManifest
@@ -1217,7 +1219,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft optimize binpack: partitioned victims recompact per partition; files subset is strict") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bp_spec").toString
+    val root = tmp("graft_bp_spec")
     spark.conf.set("spark.sql.catalog.gbp", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gbp.root", root)
     import graft.sources.GraftManifest
@@ -1274,7 +1276,7 @@ class SourceSpec extends AnyFunSuite {
   test("graft-sink versioned streaming: two racing writers lose no epoch and keep disjoint watermarks") {
     import graft.sources.{GraftFileMeta, GraftManifest, GraftSinkCommit, GraftSinkStreamingWrite}
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_vstream_race").toString
+    val dir = tmp("graft_vstream_race")
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
     def fileWith(name: String, ids: Seq[Long]): GraftFileMeta = {
       Files.write(Paths.get(dir, name), ids.mkString("\n").getBytes("UTF-8"))
@@ -1287,7 +1289,7 @@ class SourceSpec extends AnyFunSuite {
     val perWriter = 12
     val threads = (0 until 2).map { w =>
       new Thread(() => {
-        val sw = new GraftSinkStreamingWrite(dir, schema, s"q$w", commitVersions = true)
+        val sw = new GraftSinkStreamingWrite(dir, schema, s"q$w")
         (0 until perWriter).foreach { e =>
           sw.commit(e.toLong, Array(GraftSinkCommit(Seq(
             fileWith(s"w$w-e$e.csv", Seq(w * 1000L + e))))))
@@ -1308,7 +1310,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("graft catalog: history audit, CTAS, INSERT OVERWRITE and TRUNCATE TABLE") {
-    val root = java.nio.file.Files.createTempDirectory("graft_hist_spec").toString
+    val root = tmp("graft_hist_spec")
     spark.conf.set("spark.sql.catalog.gh", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gh.root", root)
     import graft.sources.GraftManifest

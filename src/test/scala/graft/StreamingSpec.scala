@@ -51,7 +51,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import graft.ops.Streaming.{SEvent, UserRunningAgg}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = tmp("graft_ckpt")
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(provKey)
     spark.conf.set(provKey,
@@ -122,7 +122,7 @@ class StreamingSpec extends AnyFunSuite {
       // processAllAvailable on a continuous trigger, which never quiesces
       // here) — this also proves the stronger property that expiry holds
       // across a query restart.
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl").toString
+      val ckpt = tmp("graft_ttl")
       val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]
       def run(): Set[(Long, Long, Long)] = {
         buf.clear()

@@ -59,7 +59,7 @@ class TablesSpec extends AnyFunSuite {
 
   test("a regenerated fixture is re-inferred") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tables_spec").toString
+    val dir = tmp("tables_spec")
     Seq(1L, 2L).toDF("a").write.parquet(s"$dir/t.parquet")
     assert(Tables.table(spark, dir, "t").schema.fieldNames.toSeq == Seq("a"))
     Thread.sleep(20) // a distinct mtime even on a coarse clock

@@ -8,10 +8,11 @@
 # dependency resolution, one Spark core per host CPU, a driver heap of half
 # the host memory (2-8 GB), local scratch under /tmp/spark-local.
 #
-#   tools/preflight.sh          # compile main + test, run the full suite
+#   tools/preflight.sh          # compile main + test, run the full suite,
+#                               # fail if it left a new /tmp/graft_* entry
 #   tools/preflight.sh fast     # compile-only (mid-round sanity)
 #
-# Exits non-zero on any compile error or test failure.
+# Exits non-zero on any compile error, test failure or leaked temp entry.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -26,7 +27,17 @@ if [[ "${1:-}" != "fast" ]]; then
   SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
   SPARK_LOCAL_DIRS=/tmp/spark-local
   export SPARK_GRAFT_CPUS SPARK_DRIVER_MEM SPARK_LOCAL_DIRS
+  # every spec temp dir lives under one per-JVM root its exit hook removes;
+  # a graft_* entry in /tmp newer than this marker is a leak
+  marker="$(mktemp -p /tmp preflight_marker.XXXXXX)"
+  trap 'rm -f "$marker"' EXIT
   echo "[preflight] sbt testOnly * (cpus=$SPARK_GRAFT_CPUS driver=$SPARK_DRIVER_MEM)"
   timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true "testOnly *"
+  leaked="$(find /tmp -maxdepth 1 -name 'graft_*' -newer "$marker")"
+  if [[ -n "$leaked" ]]; then
+    echo "[preflight] FAIL: the test run left temp entries behind:" >&2
+    echo "$leaked" >&2
+    exit 1
+  fi
 fi
 echo "[preflight] OK"
