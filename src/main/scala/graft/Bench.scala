@@ -27,6 +27,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", s"${graft.util.Scratch.root}/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Warmup: exercise scan+join+agg codegen once, untimed.

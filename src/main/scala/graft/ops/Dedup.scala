@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.util.Tables._
 
@@ -15,6 +16,10 @@ import graft.util.Tables._
   *    generation never compares all pairs. Hash = md5 (identical hex on
   *    both engines); the min over hash strings is a lexicographic min — no
   *    integer conversion needed, so the whole pipeline is portable SQL.
+  *    The fixture chain picks its physical path by input size: a shingle
+  *    frame of at most Text.ShinglesOnDriver rows is signed on the driver,
+  *    and [[verifiedCands]] then bands and verifies on the driver too; a
+  *    larger corpus takes the distributed kernels above.
   *  - SimHash (16-bit, md5-hex-digit sign contributions) + hamming≤2 pairs.
   *  - Embedding-cosine near-dup at τ=0.45 (fixtures' max inter-pair cosine
   *    is 0.51 with a 5.5e-4 gap to τ at sf0.01 — no threshold-boundary ULP
@@ -198,14 +203,16 @@ object Dedup {
 
   /** The MinHash-family SHARED KERNEL for the fixture documents table:
     * signatures → banded candidates → exact-verify sizes
-    * (doc_a, doc_b, i, n_a, n_b), computed ONCE per (session, sf) and
-    * localCheckpointed. Four keys (`dedup_minhash_lsh`,
-    * `dedup_minhash_estimate`, `dedup_containment`, and `dedup_lsh_cc`
-    * via [[dedupMinhashLsh]]) are projections of this frame — without the
-    * memo each ran the 8-md5-per-shingle signature pass and the candidate
-    * verify end-to-end (same discipline as Text.jacSetsMemo; each key
-    * stays a pure function of (spark, sfDir), and a racing double-compute
-    * is wasted work, never wrong results). */
+    * (doc_a, doc_b, i, n_a, n_b), computed ONCE per (session, sf). Four
+    * keys (`dedup_minhash_lsh`, `dedup_minhash_estimate`,
+    * `dedup_containment`, and `dedup_lsh_cc` via [[dedupMinhashLsh]]) are
+    * projections of this frame — without the memo each ran the signature
+    * pass and the candidate verify end-to-end (same discipline as
+    * Text.jacSetsMemo; each key stays a pure function of (spark, sfDir),
+    * and a racing double-compute is wasted work, never wrong results).
+    * It follows Text.sigsAndSets' path: a local (driver-built) signature
+    * frame is verified on the driver and the answer stays local, a
+    * distributed one is verified by the band join and localCheckpointed. */
   private[graft] def fixtureSigs(spark: SparkSession, sf: String): DataFrame =
     Text.sigsAndSets(spark, sf)
       .select(col("doc_id") +: (1 to 8).map(j => col(s"h$j")): _*)
@@ -213,23 +220,68 @@ object Dedup {
   private val verifiedMemo = graft.util.Memos.memo[DataFrame]
 
   private[graft] def verifiedCands(spark: SparkSession, sf: String): DataFrame =
-    graft.util.Memos.cached(verifiedMemo, spark, sf) {
-      // exact verify over Text's memoized packed-int term index (df = 1
-      // terms can't be shared, so the df >= 2 id space is exact for |A∩B|
-      // while `n` counts ALL distinct terms — the dedup_band_sweep
-      // argument), one codegen'd merge scan per candidate instead of a
-      // fresh bigram-array pass
-      graft.functions.SortedIntersectSize.register(spark)
-      val sets = Text.packedSets(spark, sf)
-      lshCandidates(fixtureSigs(spark, sf))
-        .join(sets.select(col("doc_id").as("doc_a"), col("sids").as("sids_a"),
-          col("n").as("n_a")), "doc_a")
-        .join(sets.select(col("doc_id").as("doc_b"), col("sids").as("sids_b"),
-          col("n").as("n_b")), "doc_b")
-        .withColumn("i", expr("sorted_intersect_size(sids_a, sids_b)"))
-        .select(col("doc_a"), col("doc_b"), col("i"), col("n_a"), col("n_b"))
-        .localCheckpoint()
+    graft.util.Memos.cached(verifiedMemo, spark, sf)(
+      verifiedCandsOf(Text.sigsAndSets(spark, sf)))
+
+  /** [[verifiedCands]] over a `sigsAndSets`-shaped frame. (`onDriver` is a
+    * test seam: false runs the distributed verify over local sets.) */
+  private[graft] def verifiedCandsOf(sets: DataFrame,
+      onDriver: Boolean = true): DataFrame =
+    (if (onDriver) graft.util.Local.rows(sets) else None) match {
+      case Some(rows) => verifiedOnDriver(sets, rows)
+      case None =>
+        // exact verify over the packed-int term index (df = 1 terms can't
+        // be shared, so the df >= 2 id space is exact for |A∩B| while `n`
+        // counts ALL distinct terms — the dedup_band_sweep argument), one
+        // codegen'd merge scan per candidate instead of a fresh
+        // bigram-array pass
+        graft.functions.SortedIntersectSize.register(sets.sparkSession)
+        lshCandidates(sets)
+          .join(sets.select(col("doc_id").as("doc_a"), col("sids").as("sids_a"),
+            col("n").as("n_a")), "doc_a")
+          .join(sets.select(col("doc_id").as("doc_b"), col("sids").as("sids_b"),
+            col("n").as("n_b")), "doc_b")
+          .withColumn("i", expr("sorted_intersect_size(sids_a, sids_b)"))
+          .select(col("doc_a"), col("doc_b"), col("i"), col("n_a"), col("n_b"))
+          .localCheckpoint()
     }
+
+  /** The driver verify: a candidate is a pair doc_a < doc_b sharing band 1
+    * (`h1..h4`) or band 2 (`h5..h8`), kept once, with no lang blocking
+    * (as [[lshCandidates]]); `i` is the merge-scan intersection of the two
+    * sorted `sids`, the [[graft.functions.SortedIntersectSize]] count. */
+  private def verifiedOnDriver(sets: DataFrame, rows: Array[Row]): DataFrame = {
+    val at = Seq("doc_id", "sids", "n").map(sets.schema.fieldIndex)
+    val docs = rows.map(r =>
+      (r.getLong(at(0)), r.getSeq[Int](at(1)).toArray, r.getInt(at(2))))
+    val bands = Seq(1 to 4, 5 to 8).map(_.map(j => sets.schema.fieldIndex(s"h$j")))
+    val pairs = bands.flatMap { hs =>
+      docs.indices.groupBy(d => hs.map(rows(d).getString(_)))
+        .filter { case (band, ds) => ds.size > 1 && !band.contains(null) }
+        .values.flatMap { ds =>
+          val ids = ds.map(docs(_)._1).sorted
+          for (a <- ids.indices; b <- a + 1 until ids.size) yield (ids(a), ids(b))
+        }
+    }.distinct.sorted
+    val byId = docs.map(d => d._1 -> d).toMap
+    def intersect(x: Array[Int], y: Array[Int]): Int = {
+      var (i, j, n) = (0, 0, 0)
+      while (i < x.length && j < y.length) {
+        if (x(i) == y(j)) { n += 1; i += 1; j += 1 }
+        else if (x(i) < y(j)) i += 1 else j += 1
+      }
+      n
+    }
+    val out = pairs.map { case (a, b) =>
+      val (x, y) = (byId(a), byId(b))
+      Row(a, b, intersect(x._2, y._2), x._3, y._3)
+    }
+    val id = sets.schema("doc_id")
+    val n = sets.schema("n")
+    graft.util.Local.frame(sets.sparkSession, out, StructType(Seq(
+      id.copy(name = "doc_a"), id.copy(name = "doc_b"), StructField("i", IntegerType),
+      n.copy(name = "n_a"), n.copy(name = "n_b"))))
+  }
 
   /** Candidate pairs joined to exact shingle-intersection sizes — the
     * verify every minhash-family output projects from. */

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.util.Tables._
 
@@ -59,8 +59,11 @@ object Pipeline {
     * edges runs on the driver; a fixture-scale graph takes 0 rounds.
     * `maxIter` bounds the distributed rounds: if they neither converge nor
     * shrink the list to `localEdges` within it, this throws rather than
-    * return partial labels. (`localEdges` is a test seam: 0 forces the
-    * rounds for any non-empty list.)
+    * return partial labels. An input that is already a driver-held
+    * (`LocalRelation`) list of at most `localEdges` rows — a local
+    * Dedup.verifiedCands — goes straight to the union-find, with no
+    * canonical checkpoint and no checksum job. (`localEdges` is a test
+    * seam: 0 forces the rounds for any non-empty list.)
     *
     * Adaptive round width: contraction shrinks the edge list monotonically,
     * so late rounds over a handful of surviving edges would still pay the
@@ -74,6 +77,10 @@ object Pipeline {
   private[graft] def starContract(edges0: DataFrame, maxIter: Int = 30,
       localEdges: Long = EdgesPerTask): (DataFrame, Int) = {
     val spark = edges0.sparkSession
+    // an edge list already on the driver (a local verify) finishes there:
+    // no canonical checkpoint, no checksum job
+    if (graft.util.Local.size(edges0).exists(_ <= localEdges))
+      return (componentsOnDriver(spark, edges0.select(col("s"), col("t"))), 0)
     val sessionWidth = spark.sessionState.conf.numShufflePartitions
     def widthFor(edgeCount: Long): Int =
       math.max(1L, math.min(sessionWidth.toLong, edgeCount / EdgesPerTask + 1L)).toInt
@@ -196,8 +203,7 @@ object Pipeline {
       val b = find(at(r.getLong(1)))
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
     }
-    val labels = ids.indices.map(i => Row(ids(i), ids(find(i))))
-    spark.createDataFrame(java.util.Arrays.asList(labels: _*),
+    graft.util.Local.frame(spark, ids.indices.map(i => Row(ids(i), ids(find(i)))),
       StructType(Seq(StructField("id", LongType), StructField("component", LongType))))
   }
 
@@ -221,13 +227,23 @@ object Pipeline {
   /** Shared contraction tail: star-contract the (s, t) edges and join
     * each label with its component size, `id` renamed to `idName` —
     * extracted round 17 (the recorded ETL-review duplication); behavior
-    * pinned by the three consuming keys' recursive-CTE oracles. */
+    * pinned by the three consuming keys' recursive-CTE oracles. Labels
+    * the driver finish returned are sized on the driver and stay local. */
   private[graft] def ccWithSizes(pairs: DataFrame, idName: String): DataFrame = {
     val (labels, _) = starContract(pairs)
-    val sizes = labels.groupBy("component")
-      .agg(count(lit(1)).cast("int").as("comp_size"))
-    labels.join(sizes, "component")
-      .select(col("id").as(idName), col("component"), col("comp_size"))
+    graft.util.Local.rows(labels) match {
+      case Some(rows) => // driver-finished labels: size them on the driver
+        val sizes = rows.groupMapReduce(_.getLong(1))(_ => 1)(_ + _)
+        graft.util.Local.frame(labels.sparkSession,
+          rows.map(r => Row(r.getLong(0), r.getLong(1), sizes(r.getLong(1)))).toSeq,
+          StructType(Seq(StructField(idName, LongType), StructField("component", LongType),
+            StructField("comp_size", IntegerType, nullable = false))))
+      case None =>
+        val sizes = labels.groupBy("component")
+          .agg(count(lit(1)).cast("int").as("comp_size"))
+        labels.join(sizes, "component")
+          .select(col("id").as(idName), col("component"), col("comp_size"))
+    }
   }
 
   /** Context-window chunking: split each document's token stream into
@@ -350,7 +366,8 @@ object Pipeline {
     lshCcLabels(spark, sf).orderBy(col("doc_id"))
 
   /** The LSH→verify→CC kernel both [[dedupLshCc]] and [[dedupSurvivors]]
-    * consume, computed ONCE per (session, sf) and localCheckpointed. Each
+    * consume, computed ONCE per (session, sf): local when the verify ran
+    * on the driver, else localCheckpointed. Each
     * key remains a pure function of (spark, sfDir) — the memo only stops
     * the expensive chain from running end-to-end twice when both keys
     * execute in one session (it did: 3.5 s + 3.3 s at sf0.1). Keyed by
@@ -360,7 +377,10 @@ object Pipeline {
 
   private def lshCcLabels(spark: SparkSession, sf: String): DataFrame =
     graft.util.Memos.cached(lshCcMemo, spark, sf) {
-      ccWithSizes(lshCcPairs(spark, sf), "doc_id").localCheckpoint()
+      val labels = ccWithSizes(lshCcPairs(spark, sf), "doc_id")
+      // driver-finished labels are already local; checkpoint only a
+      // distributed answer
+      if (graft.util.Local.size(labels).isDefined) labels else labels.localCheckpoint()
     }
 
   /** The verified near-duplicate edges [[lshCcLabels]] clusters: the

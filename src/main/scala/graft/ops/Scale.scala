@@ -803,13 +803,16 @@ object Scale {
     val o = orders(spark, sf).select(col("o_orderkey"), col("o_orderstatus"),
       floor(col("o_totalprice") * 100).cast("long").as("cents"),
       year(col("o_orderdate")).as("yr"))
-    o.write.mode("overwrite").partitionBy("yr").parquet(dir) // full load (static)
+    // each year's rows in one task: every yr= directory gets one file,
+    // however many tasks scanned the input
+    o.repartition(col("yr"))
+      .write.mode("overwrite").partitionBy("yr").parquet(dir) // full load (static)
     val maxYr = o.agg(max(col("yr"))).head().getInt(0)
     val delta = o.where(col("yr") === maxYr)
       .withColumn("cents", col("cents") * 2)
     withConfs(spark,
       "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
-      delta.write.mode("overwrite").partitionBy("yr").parquet(dir)
+      delta.repartition(col("yr")).write.mode("overwrite").partitionBy("yr").parquet(dir)
     }
     spark.read.parquet(dir)
       .groupBy(col("yr"))

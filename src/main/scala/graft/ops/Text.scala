@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
 
 import graft.util.Tables._
 
@@ -221,20 +222,42 @@ object Text {
     sigsAndSets(spark, sf)
       .select(col("lang"), col("doc_id"), col("n"), col("sids"), col("m"))
 
+  /** Shingle rows up to which [[sigsAndSets]] finishes on the driver: one
+    * count of the checkpointed shingle frame decides, and a frame this
+    * small is collected and built in plain Scala rather than by a dozen
+    * Spark jobs (at fixture scale the distributed build's cost is job
+    * latency, not work). The driver build won at every measured scale
+    * up to sf1 on 4 cores; the bound is memory: collected shingle rows
+    * hold ~190 B each, so this caps them near 95 MB of driver heap (sf0.1
+    * is 256 k rows, sf1 2.6 M). Measurements in DECISIONS.md. */
+  private[graft] val ShinglesOnDriver = 500000L
+
   /** ONE aggregate pass over the shared shingle base computing BOTH
     * per-doc kernels every dedup/jaccard key needs: the packed df-≥2
     * term-id sets (the exact-verify index) AND the 8 MinHash components
-    * (min salted-md5, hashed once per DISTINCT shingle via the dict join).
-    * Separately each groupBy paid its own ~2 s of plan/codegen fixed cost
-    * on identical input; fused, the corpus is aggregated once per
-    * (session, sf) and [[packedSets]] / Dedup.fixtureSigs are free
-    * projections. A doc whose every bigram is df = 1 keeps an empty sids
-    * array here where the old inner index join dropped it — candidates
-    * can't involve such docs (a band collision implies a shared, hence
-    * df ≥ 2, shingle), so pair semantics are unchanged. */
+    * (min salted-md5, hashed once per DISTINCT shingle). Fused, the corpus
+    * is aggregated once per (session, sf) and [[packedSets]] /
+    * Dedup.fixtureSigs are free projections. A doc whose every bigram is
+    * df = 1 keeps an empty sids array — candidates can't involve such
+    * docs (a band collision implies a shared, hence df ≥ 2, shingle).
+    *
+    * Two paths, one answer (`lang, doc_id, n, sids, h1..h8, m`): a shingle
+    * frame of at most [[ShinglesOnDriver]] rows is collected and the frame
+    * is built on the driver and returned local (not checkpointed —
+    * Dedup.verifiedCands and Pipeline.starContract then stay on the
+    * driver too); a larger one takes the distributed aggregate and is
+    * localCheckpointed. */
   private[graft] def sigsAndSets(spark: SparkSession, sf: String): DataFrame =
-    graft.util.Memos.cached(jacSetsMemo, spark, sf) {
-      val d = shingles(spark, sf)
+    graft.util.Memos.cached(jacSetsMemo, spark, sf)(sigsAndSetsOf(shingles(spark, sf)))
+
+  /** [[sigsAndSets]] over any (doc_id, lang, n, sh) shingle frame.
+    * (`localRows` is a test seam: 0 forces the distributed path.) */
+  private[graft] def sigsAndSetsOf(d: DataFrame,
+      localRows: Long = ShinglesOnDriver): DataFrame =
+    // one job sizes the checkpointed frame (Dataset.count would plan an
+    // aggregate, two jobs under AQE)
+    if (localRows > 0 && d.queryExecution.toRdd.count() <= localRows) sigsAndSetsOnDriver(d)
+    else {
       // ONE distinct-term pass feeds both per-term artifacts: the
       // df-ascending packed-set id (df ≥ 2 subset, same (df, term) order
       // as termIndexOf so the ids are identical) and the 8 salted minhash
@@ -263,14 +286,50 @@ object Text {
         .localCheckpoint()
     }
 
+  /** The driver build of [[sigsAndSetsOf]], the same frame as the
+    * distributed one: term ids are 1-based over the df ≥ 2 shingles in
+    * (df, shingle) order with shingles compared as unsigned UTF-8 bytes
+    * (Spark's string order, not `String.compareTo`, which differs past
+    * U+FFFF); `h1..h8` are the minimum lowercase-hex md5 of `"j:<sh>"`
+    * over all of a doc's shingles. */
+  private def sigsAndSetsOnDriver(d: DataFrame): DataFrame = {
+    val rows = d.select(col("lang"), col("doc_id"), col("n"), col("sh")).collect()
+    val df = rows.groupMapReduce(_.getString(3))(_ => 1)(_ + _)
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val sid = df.toArray.filter(_._2 >= 2)
+      .map { case (sh, n) => (n, sh.getBytes(utf8), sh) }
+      .sortWith { (a, b) =>
+        a._1 < b._1 || a._1 == b._1 && java.util.Arrays.compareUnsigned(a._2, b._2) < 0 }
+      .iterator.map(_._3).zipWithIndex.map { case (sh, i) => sh -> (i + 1) }.toMap
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hex = java.util.HexFormat.of()
+    // per distinct term: its sid (0 for df = 1) and its 8 salted hashes
+    val terms = df.map { case (sh, _) => sh -> (sid.getOrElse(sh, 0),
+      Array.tabulate(8)(j => hex.formatHex(md.digest(s"${j + 1}:$sh".getBytes(utf8))))) }
+    val out = rows.groupBy(r => (r.getString(0), r.getLong(1), r.getInt(2)))
+      .toSeq.sortBy(_._1._2).map { case ((lang, docId, n), occ) =>
+        val ts = occ.map(r => terms(r.getString(3)))
+        val sids = ts.map(_._1).filter(_ > 0).distinct.sorted
+        val hs = (0 until 8).map(j => ts.iterator.map(_._2(j)).min)
+        Row.fromSeq(Seq(lang, docId, n, sids.toSeq) ++ hs :+ sids.length)
+      }
+    val in = d.schema
+    graft.util.Local.frame(d.sparkSession, out, StructType(
+      Seq(in("lang"), in("doc_id"), in("n"),
+        StructField("sids", ArrayType(IntegerType, containsNull = false), nullable = false)) ++
+      (1 to 8).map(j => StructField(s"h$j", StringType)) :+
+      StructField("m", IntegerType, nullable = false)))
+  }
+
   /** The term index + packed sets are a pure function of (session, sfDir)
     * and cost ~2 s of fixed zipWithIndex/localCheckpoint work per build —
     * memoized per (session, sf) exactly like Pipeline.lshCcMemo, so
     * repeated invocations in one session (bench, verify, API callers) pay
     * the index once. Keyed by session so a checkpoint never outlives the
     * session that owns it; a racing double-compute is wasted work, never
-    * wrong results. */
-  private val jacSetsMemo = graft.util.Memos.memo[DataFrame]
+    * wrong results. (private[graft]: specs fill a session's entry with the
+    * forced distributed build to run every consumer on that path.) */
+  private[graft] val jacSetsMemo = graft.util.Memos.memo[DataFrame]
 
   /** Frame-generic prefix-filter kernel over any (doc_id, text[, lang])
     * frame — no `lang` column means one global block. (private[graft]:

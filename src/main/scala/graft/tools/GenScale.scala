@@ -47,6 +47,7 @@ object GenScale {
       // schema probe expects INT64 TIMESTAMP (never INT96)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", s"${graft.util.Scratch.root}/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

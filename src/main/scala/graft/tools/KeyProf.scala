@@ -24,6 +24,7 @@ object KeyProf {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", s"${graft.util.Scratch.root}/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Optional conf overrides for A/B experiments:

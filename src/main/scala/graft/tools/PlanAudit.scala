@@ -20,6 +20,7 @@ object PlanAudit {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", s"${graft.util.Scratch.root}/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { k =>

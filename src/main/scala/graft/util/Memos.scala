@@ -3,8 +3,11 @@ package graft.util
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Registry for the per-(session, sfDir) memo tables the shared kernels
   * use (Text.sigsAndSets, Dedup.verifiedCands, Pipeline.lshCcLabels, …)
@@ -114,14 +117,30 @@ object Memos {
     * standalone cost of any shared memoized kernel the key consumes
     * (VERDICT r18 #3: min-of-N otherwise reported memo-warm minima). */
   private[graft] def dropResults(sc: SparkContext): Unit =
-    drop(registered, sc)
+    drop(registered, sc, release = true)
 
+  /** With `release`, a dropped frame that IS a checkpoint (its plan is the
+    * checkpointed RDD) has that RDD unpersisted without blocking, so its
+    * blocks leave storage memory now instead of whenever the
+    * ContextCleaner finds the frame unreachable. Only [[dropResults]]
+    * releases: the next call rebuilds a result memo, but a frame a caller
+    * derived from the dropped value before the drop can no longer run. */
   private def drop(
       list: java.util.concurrent.CopyOnWriteArrayList[Memo[_]],
-      sc: SparkContext): Unit =
+      sc: SparkContext, release: Boolean = false): Unit =
     list.forEach { m =>
       m.keySet.toSeq.foreach { k =>
-        if (k._1.sparkContext eq sc) m.remove(k)
+        if (k._1.sparkContext eq sc) m.remove(k).foreach {
+          case df: Dataset[_] if release => checkpointOf(df).foreach(_.unpersist(blocking = false))
+          case _ =>
+        }
       }
+    }
+
+  /** The persisted RDD a checkpointed frame reads, if `df` is one. */
+  private[graft] def checkpointOf(df: Dataset[_]): Option[RDD[_]] =
+    df.queryExecution.logical match {
+      case r: LogicalRDD if r.rdd.getStorageLevel != StorageLevel.NONE => Some(r.rdd)
+      case _ => None
     }
 }

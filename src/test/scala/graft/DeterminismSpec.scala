@@ -101,6 +101,23 @@ class DeterminismSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.codegen.wholeStage", old)
   }
 
+  test("SortedIntersectSize codegen and interpreted paths agree on the distributed chain") {
+    // the keys above read the driver-built sets at fixture scale; this
+    // session's sets take the forced distributed build
+    val s = distributedChain(sf001)
+    def run() = (SparkEntry.queries("text_jaccard_indexed")(s, sf001).collect().toSeq,
+      graft.ops.Text.jaccardPairsFresh(s, sf001)
+        .orderBy(org.apache.spark.sql.functions.col("doc_a"),
+          org.apache.spark.sql.functions.col("doc_b")).collect().toSeq)
+    try {
+      s.conf.set("spark.sql.codegen.wholeStage", "true")
+      val gen = run()
+      assert(gen._1.nonEmpty && gen._2.nonEmpty)
+      s.conf.set("spark.sql.codegen.wholeStage", "false")
+      assert(gen == run())
+    } finally s.conf.unset("spark.sql.codegen.wholeStage")
+  }
+
   test("approx_percentile lands within the p40..p60 band of exact order stats") {
     import org.apache.spark.sql.functions._
     // the key's OUTPUT is now rank-bound flags (oracle-checkable); the raw

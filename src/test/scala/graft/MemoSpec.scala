@@ -62,4 +62,23 @@ class MemoSpec extends AnyFunSuite {
     assert(graft.util.Memos.builds == b0 + 1, "a result-memo build counts")
     graft.util.Memos.evict(spark.sparkContext)
   }
+
+  test("dropResults unpersists a dropped checkpoint, and the next call rebuilds its answer") {
+    val key = "dedup_simhash" // reads the checkpointed Text.shingles memo
+    val before = SparkEntry.queries(key)(spark, sf001).collect().toSeq
+    val shingles = graft.ops.Text.shingles(spark, sf001)
+    val rdd = graft.util.Memos.checkpointOf(shingles)
+    assert(rdd.isDefined, "the shingle memo is a checkpointed frame")
+    val id = rdd.get.id
+    assert(org.apache.spark.BlockProbe.rddBlocks(id).nonEmpty)
+    graft.util.Memos.dropResults(spark.sparkContext)
+    // the unpersist does not block; its removal lands within moments
+    val deadline = System.currentTimeMillis() + 10000
+    while (org.apache.spark.BlockProbe.rddBlocks(id).nonEmpty &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(org.apache.spark.BlockProbe.rddBlocks(id).isEmpty,
+      "the dropped checkpoint's blocks must leave the block manager")
+    assert(!(graft.ops.Text.shingles(spark, sf001) eq shingles), "the memo rebuilds")
+    assert(SparkEntry.queries(key)(spark, sf001).collect().toSeq == before)
+  }
 }

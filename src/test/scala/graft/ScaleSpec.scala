@@ -119,4 +119,15 @@ class ScaleSpec extends AnyFunSuite {
       .orderBy(col("event_type")).collect().toSeq
     assert(streamed == batch)
   }
+
+  test("sink_dynamic_overwrite leaves exactly one data file in every yr= directory") {
+    ops.Scale.sinkDynamicOverwrite(spark, sf01).collect()
+    val years = new java.io.File(graft.util.Scratch.dir("dynover", sf01)).listFiles()
+      .filter(_.getName.startsWith("yr="))
+    assert(years.nonEmpty)
+    years.foreach { y =>
+      val data = y.listFiles().map(_.getName).filter(_.startsWith("part-"))
+      assert(data.length == 1, s"${y.getName}: ${data.mkString(", ")}")
+    }
+  }
 }

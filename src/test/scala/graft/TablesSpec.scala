@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.Tables
@@ -15,32 +12,6 @@ class TablesSpec extends AnyFunSuite {
 
   private val names = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Spark jobs `body` starts on this thread, counted by their job group.
-    * A marker job in a second group flushes the listener bus, which
-    * delivers events in order, so every job of `body` has been seen. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val (probe, marker) = ("tables-spec-probe", "tables-spec-marker")
-    val groups = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(probe, probe)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 10000
-      while (!groups.contains(marker) && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(groups.contains(marker), "listener bus did not deliver the marker job")
-      groups.toArray.count(_ == probe)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("every sf0.01 fixture schema equals a plain inference, and a repeated read starts no job") {
     // the events readers read TIMESTAMP(NANOS) as raw longs; infer alike

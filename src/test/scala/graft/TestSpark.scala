@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for all suites (mirrors Verify's config —
@@ -28,6 +31,43 @@ object TestSpark {
   }
   val sf001 = "/root/testdata/sf0.001"
   val sf01  = "/root/testdata/sf0.01"
+
+  /** Spark jobs `body` starts on this thread, counted by their job group.
+    * A marker job in a second group flushes the listener bus, which
+    * delivers events in order, so every job of `body` has been seen. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (probe, marker) = ("spec-probe", "spec-marker")
+    val groups = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(probe, probe)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!groups.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains(marker), "listener bus did not deliver the marker job")
+      groups.toArray.count(_ == probe)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A new session of the shared context whose minhash chain takes the
+    * distributed path at each of `sfs`: its `Text.sigsAndSets` memo entry
+    * is the forced distributed build, so `Dedup.verifiedCands`, the CC
+    * labels and every key over them run distributed there too. */
+  def distributedChain(sfs: String*): SparkSession = {
+    val s = spark.newSession()
+    sfs.foreach(sf => graft.util.Memos.cached(graft.ops.Text.jacSetsMemo, s, sf)(
+      graft.ops.Text.sigsAndSetsOf(graft.ops.Text.shingles(s, sf), localRows = 0)))
+    s
+  }
 
   /** A fresh temp directory named after `p`, under [[root]]. */
   def tmp(p: String): String =

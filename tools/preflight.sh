@@ -10,6 +10,7 @@
 #
 #   tools/preflight.sh          # compile main + test, run the full suite,
 #                               # fail if it left a new /tmp/graft_* entry
+#                               # or wrote a spark-warehouse/ in the repo root
 #   tools/preflight.sh fast     # compile-only (mid-round sanity)
 #
 # Exits non-zero on any compile error, test failure or leaked temp entry.
@@ -28,12 +29,15 @@ if [[ "${1:-}" != "fast" ]]; then
   SPARK_LOCAL_DIRS=/tmp/spark-local
   export SPARK_GRAFT_CPUS SPARK_DRIVER_MEM SPARK_LOCAL_DIRS
   # every spec temp dir lives under one per-JVM root its exit hook removes;
-  # a graft_* entry in /tmp newer than this marker is a leak
+  # a graft_* entry in /tmp newer than this marker is a leak, and so is a
+  # spark-warehouse/ in the repo root (a session built without a
+  # spark.sql.warehouse.dir writes one into its working directory)
   marker="$(mktemp -p /tmp preflight_marker.XXXXXX)"
   trap 'rm -f "$marker"' EXIT
   echo "[preflight] sbt testOnly * (cpus=$SPARK_GRAFT_CPUS driver=$SPARK_DRIVER_MEM)"
   timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true "testOnly *"
-  leaked="$(find /tmp -maxdepth 1 -name 'graft_*' -newer "$marker")"
+  leaked="$(find /tmp -maxdepth 1 -name 'graft_*' -newer "$marker"
+    find . -maxdepth 1 -name spark-warehouse -newer "$marker")"
   if [[ -n "$leaked" ]]; then
     echo "[preflight] FAIL: the test run left temp entries behind:" >&2
     echo "$leaked" >&2
