@@ -49,19 +49,13 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     val na = xs.numElements(); val nb = ys.numElements()
     // NULL element poisons (getInt reads the null slot as 0 — silent
     // wrong counts; round-16b review); bitmap scans first (elided on
-    // schema-clean sides) so the merge loop stays the original kernel
+    // schema-clean sides), then the shared merge scan over int copies
+    // (the interpreted path only; codegen scans the arrays in place)
     var i = 0
     if (scanLeft) while (i < na) { if (xs.isNullAt(i)) return null; i += 1 }
     if (scanRight) { var j0 = 0
       while (j0 < nb) { if (ys.isNullAt(j0)) return null; j0 += 1 } }
-    i = 0; var j = 0; var n = 0
-    while (i < na && j < nb) {
-      val x = xs.getInt(i); val y = ys.getInt(j)
-      if (x == y) { n += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    n
+    SortedIntersectSize.count(xs.toIntArray(), ys.toIntArray())
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -81,6 +75,21 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 }
 
 object SortedIntersectSize {
+  /** The merge scan: |xs ∩ ys| for two ascending int arrays, duplicates
+    * counted at their matched multiplicity. The interpreted path and the
+    * driver verify (Dedup.verifiedCands) both count with it;
+    * [[VecCodegen.intersectSize]] is its generated twin. */
+  def count(xs: Array[Int], ys: Array[Int]): Int = {
+    var i = 0; var j = 0; var n = 0
+    while (i < xs.length && j < ys.length) {
+      val x = xs(i); val y = ys(j)
+      if (x == y) { n += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    n
+  }
+
   /** Register `sorted_intersect_size` in the session FunctionRegistry
     * (same idiom as [[VectorDot.register]]). Idempotent. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

@@ -18,7 +18,8 @@ import graft.util.Tables._
   *    integer conversion needed, so the whole pipeline is portable SQL.
   *    The fixture chain picks its physical path by input size: a shingle
   *    frame of at most Text.ShinglesOnDriver rows is signed on the driver,
-  *    and [[verifiedCands]] then bands and verifies on the driver too; a
+  *    and [[verifiedCands]] then bands and verifies on the driver too
+  *    while its band buckets emit at most Pipeline.EdgesPerTask pairs; a
   *    larger corpus takes the distributed kernels above.
   *  - SimHash (16-bit, md5-hex-digit sign contributions) + hamming≤2 pairs.
   *  - Embedding-cosine near-dup at τ=0.45 (fixtures' max inter-pair cosine
@@ -211,7 +212,8 @@ object Dedup {
     * Text.jacSetsMemo; each key stays a pure function of (spark, sfDir),
     * and a racing double-compute is wasted work, never wrong results).
     * It follows Text.sigsAndSets' path: a local (driver-built) signature
-    * frame is verified on the driver and the answer stays local, a
+    * frame is verified on the driver and the answer stays local (unless
+    * its buckets hold more than Pipeline.EdgesPerTask pairs), a
     * distributed one is verified by the band join and localCheckpointed. */
   private[graft] def fixtureSigs(spark: SparkSession, sf: String): DataFrame =
     Text.sigsAndSets(spark, sf)
@@ -223,64 +225,61 @@ object Dedup {
     graft.util.Memos.cached(verifiedMemo, spark, sf)(
       verifiedCandsOf(Text.sigsAndSets(spark, sf)))
 
-  /** [[verifiedCands]] over a `sigsAndSets`-shaped frame. (`onDriver` is a
-    * test seam: false runs the distributed verify over local sets.) */
-  private[graft] def verifiedCandsOf(sets: DataFrame,
-      onDriver: Boolean = true): DataFrame =
-    (if (onDriver) graft.util.Local.rows(sets) else None) match {
-      case Some(rows) => verifiedOnDriver(sets, rows)
-      case None =>
-        // exact verify over the packed-int term index (df = 1 terms can't
-        // be shared, so the df >= 2 id space is exact for |A∩B| while `n`
-        // counts ALL distinct terms — the dedup_band_sweep argument), one
-        // codegen'd merge scan per candidate instead of a fresh
-        // bigram-array pass
-        graft.functions.SortedIntersectSize.register(sets.sparkSession)
-        lshCandidates(sets)
-          .join(sets.select(col("doc_id").as("doc_a"), col("sids").as("sids_a"),
-            col("n").as("n_a")), "doc_a")
-          .join(sets.select(col("doc_id").as("doc_b"), col("sids").as("sids_b"),
-            col("n").as("n_b")), "doc_b")
-          .withColumn("i", expr("sorted_intersect_size(sids_a, sids_b)"))
-          .select(col("doc_a"), col("doc_b"), col("i"), col("n_a"), col("n_b"))
-          .localCheckpoint()
+  /** [[verifiedCands]] over a `sigsAndSets`-shaped frame: a local frame
+    * is banded and verified on the driver unless its band buckets would
+    * emit more than [[Pipeline.EdgesPerTask]] pairs; the rest takes the
+    * band join. */
+  private[graft] def verifiedCandsOf(sets: DataFrame): DataFrame =
+    graft.util.Local.rows(sets).flatMap(verifiedOnDriver(sets, _)).getOrElse {
+      // exact verify over the packed-int term index (df = 1 terms can't
+      // be shared, so the df >= 2 id space is exact for |A∩B| while `n`
+      // counts ALL distinct terms — the dedup_band_sweep argument), one
+      // codegen'd merge scan per candidate instead of a fresh
+      // bigram-array pass
+      graft.functions.SortedIntersectSize.register(sets.sparkSession)
+      lshCandidates(sets)
+        .join(sets.select(col("doc_id").as("doc_a"), col("sids").as("sids_a"),
+          col("n").as("n_a")), "doc_a")
+        .join(sets.select(col("doc_id").as("doc_b"), col("sids").as("sids_b"),
+          col("n").as("n_b")), "doc_b")
+        .withColumn("i", expr("sorted_intersect_size(sids_a, sids_b)"))
+        .select(col("doc_a"), col("doc_b"), col("i"), col("n_a"), col("n_b"))
+        .localCheckpoint()
     }
 
   /** The driver verify: a candidate is a pair doc_a < doc_b sharing band 1
     * (`h1..h4`) or band 2 (`h5..h8`), kept once, with no lang blocking
     * (as [[lshCandidates]]); `i` is the merge-scan intersection of the two
-    * sorted `sids`, the [[graft.functions.SortedIntersectSize]] count. */
-  private def verifiedOnDriver(sets: DataFrame, rows: Array[Row]): DataFrame = {
+    * sorted `sids` ([[graft.functions.SortedIntersectSize.count]]). A
+    * bucket of k docs emits k(k-1)/2 pairs, so heavy exact duplication
+    * makes the pair list quadratic in the corpus: when the buckets' pair
+    * count passes [[Pipeline.EdgesPerTask]] this returns None and the
+    * band join spreads the pairs over the executors. */
+  private def verifiedOnDriver(sets: DataFrame, rows: Array[Row]): Option[DataFrame] = {
     val at = Seq("doc_id", "sids", "n").map(sets.schema.fieldIndex)
     val docs = rows.map(r =>
       (r.getLong(at(0)), r.getSeq[Int](at(1)).toArray, r.getInt(at(2))))
-    val bands = Seq(1 to 4, 5 to 8).map(_.map(j => sets.schema.fieldIndex(s"h$j")))
-    val pairs = bands.flatMap { hs =>
+    val buckets = Seq(1 to 4, 5 to 8).flatMap { band =>
+      val hs = band.map(j => sets.schema.fieldIndex(s"h$j"))
       docs.indices.groupBy(d => hs.map(rows(d).getString(_)))
-        .filter { case (band, ds) => ds.size > 1 && !band.contains(null) }
-        .values.flatMap { ds =>
-          val ids = ds.map(docs(_)._1).sorted
-          for (a <- ids.indices; b <- a + 1 until ids.size) yield (ids(a), ids(b))
-        }
+        .collect { case (key, ds) if ds.size > 1 && !key.contains(null) => ds }
+    }
+    if (buckets.iterator.map(ds => ds.size.toLong * (ds.size - 1) / 2).sum >
+        Pipeline.EdgesPerTask) return None
+    val pairs = buckets.flatMap { ds =>
+      val ids = ds.map(docs(_)._1).sorted
+      for (a <- ids.indices; b <- a + 1 until ids.size) yield (ids(a), ids(b))
     }.distinct.sorted
     val byId = docs.map(d => d._1 -> d).toMap
-    def intersect(x: Array[Int], y: Array[Int]): Int = {
-      var (i, j, n) = (0, 0, 0)
-      while (i < x.length && j < y.length) {
-        if (x(i) == y(j)) { n += 1; i += 1; j += 1 }
-        else if (x(i) < y(j)) i += 1 else j += 1
-      }
-      n
-    }
     val out = pairs.map { case (a, b) =>
       val (x, y) = (byId(a), byId(b))
-      Row(a, b, intersect(x._2, y._2), x._3, y._3)
+      Row(a, b, graft.functions.SortedIntersectSize.count(x._2, y._2), x._3, y._3)
     }
     val id = sets.schema("doc_id")
     val n = sets.schema("n")
-    graft.util.Local.frame(sets.sparkSession, out, StructType(Seq(
+    Some(graft.util.Local.frame(sets.sparkSession, out, StructType(Seq(
       id.copy(name = "doc_a"), id.copy(name = "doc_b"), StructField("i", IntegerType),
-      n.copy(name = "n_a"), n.copy(name = "n_b"))))
+      n.copy(name = "n_a"), n.copy(name = "n_b")))))
   }
 
   /** Candidate pairs joined to exact shingle-intersection sizes — the

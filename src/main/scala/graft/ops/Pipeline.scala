@@ -49,21 +49,23 @@ object Pipeline {
     * round, never a label collect.
     *
     * Driver finish: the canonical list — distinct (min, max) pairs,
-    * self-loops included — is checkpointed once, and its size is checked
-    * before the first round and after every round (the checksum already
-    * counts it). As soon as it holds at most `localEdges` rows (default
-    * [[EdgesPerTask]]: it fits one task) it is collected and finished by
-    * an iterative union-find that keeps the minimum id as each root, and
-    * the labels come back as a local frame. So the distributed rounds only
+    * self-loops included (an edge with one null end is a self-loop on the
+    * other, one with two names no node) — is checkpointed once, and its
+    * size is checked before the first round and after every round (the
+    * checksum already counts it). As soon as it holds at most
+    * `localEdges` rows (default [[EdgesPerTask]]: it fits one task) it is
+    * collected and finished by an iterative union-find that keeps the
+    * minimum id as each root, and the labels come back as a local frame. So the distributed rounds only
     * shrink a corpus-scale graph, and the latency-bound tail of a few
     * edges runs on the driver; a fixture-scale graph takes 0 rounds.
     * `maxIter` bounds the distributed rounds: if they neither converge nor
     * shrink the list to `localEdges` within it, this throws rather than
     * return partial labels. An input that is already a driver-held
     * (`LocalRelation`) list of at most `localEdges` rows — a local
-    * Dedup.verifiedCands — goes straight to the union-find, with no
-    * canonical checkpoint and no checksum job. (`localEdges` is a test
-    * seam: 0 forces the rounds for any non-empty list.)
+    * Dedup.verifiedCands — is oriented the same way and goes straight to
+    * the union-find, with no canonical checkpoint and no checksum job.
+    * (`localEdges` is a test seam: 0 forces the rounds for any non-empty
+    * list.)
     *
     * Adaptive round width: contraction shrinks the edge list monotonically,
     * so late rounds over a handful of surviving edges would still pay the
@@ -77,10 +79,16 @@ object Pipeline {
   private[graft] def starContract(edges0: DataFrame, maxIter: Int = 30,
       localEdges: Long = EdgesPerTask): (DataFrame, Int) = {
     val spark = edges0.sparkSession
+    // (min, max) orientation; least/greatest skip a null, so (null, v) is
+    // a self-loop on v, and a (null, null) edge names no node and is dropped
+    val oriented = edges0
+      .select(least(col("s"), col("t")).as("s"), greatest(col("s"), col("t")).as("t"))
+      .where(col("s").isNotNull)
     // an edge list already on the driver (a local verify) finishes there:
-    // no canonical checkpoint, no checksum job
+    // no canonical checkpoint, no checksum job (the projection and filter
+    // fold into the LocalRelation; the union-find ignores repeated edges)
     if (graft.util.Local.size(edges0).exists(_ <= localEdges))
-      return (componentsOnDriver(spark, edges0.select(col("s"), col("t"))), 0)
+      return (componentsOnDriver(spark, oriented), 0)
     val sessionWidth = spark.sessionState.conf.numShufflePartitions
     def widthFor(edgeCount: Long): Int =
       math.max(1L, math.min(sessionWidth.toLong, edgeCount / EdgesPerTask + 1L)).toInt
@@ -95,9 +103,7 @@ object Pipeline {
     def atWidth[T](w: Int)(body: => T): T = graft.util.Confs.withConfs(spark,
       "spark.sql.shuffle.partitions" -> w.toString,
       "spark.sql.adaptive.enabled" -> "false")(body)
-    val canon = edges0
-      .select(least(col("s"), col("t")).as("s"), greatest(col("s"), col("t")).as("t"))
-      .distinct().localCheckpoint()
+    val canon = oriented.distinct().localCheckpoint()
     val loops = canon.where(col("s") === col("t"))
     var edges = canon.where(col("s") =!= col("t"))
     // (edge count, xor of edge hashes, self-loop count): self-loops stay

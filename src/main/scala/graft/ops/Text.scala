@@ -227,10 +227,17 @@ object Text {
     * small is collected and built in plain Scala rather than by a dozen
     * Spark jobs (at fixture scale the distributed build's cost is job
     * latency, not work). The driver build won at every measured scale
-    * up to sf1 on 4 cores; the bound is memory: collected shingle rows
-    * hold ~190 B each, so this caps them near 95 MB of driver heap (sf0.1
-    * is 256 k rows, sf1 2.6 M). Measurements in DECISIONS.md. */
-  private[graft] val ShinglesOnDriver = 500000L
+    * up to sf1 on 4 cores, so the bound is memory: the whole build (the
+    * collected rows, the per-term maps and digests, the grouped rows and
+    * the output) peaked at ~300 B per shingle row on the fixture corpora
+    * and ~700 B on a worst-case vocabulary of 250 000 df = 2 terms
+    * (measured as used heap after GC, sampled through the build). At
+    * 768 B a row the build stays within an eighth of the driver heap,
+    * well inside the user share Spark leaves outside its unified memory
+    * region: ~311 000 rows at the benchmark's 2 GB parallel-collector
+    * heap (sf0.1 is 256 k rows), 1.4 M at 8 GB (sf1 is 2.6 M).
+    * Measurements in DECISIONS.md. */
+  private[graft] val ShinglesOnDriver: Long = Runtime.getRuntime.maxMemory / 8 / 768
 
   /** ONE aggregate pass over the shared shingle base computing BOTH
     * per-doc kernels every dedup/jaccard key needs: the packed df-≥2
@@ -302,16 +309,30 @@ object Text {
         a._1 < b._1 || a._1 == b._1 && java.util.Arrays.compareUnsigned(a._2, b._2) < 0 }
       .iterator.map(_._3).zipWithIndex.map { case (sh, i) => sh -> (i + 1) }.toMap
     val md = java.security.MessageDigest.getInstance("MD5")
+    // per distinct term: its sid (0 for df = 1) and its 8 salted md5
+    // digests packed into 128 bytes; unsigned byte order of a digest is
+    // the order of its lowercase hex, so only the per-doc minima are hexed
+    val terms = df.map { case (sh, _) =>
+      val g = new Array[Byte](128)
+      for (j <- 0 until 8) {
+        md.update(s"${j + 1}:$sh".getBytes(utf8))
+        md.digest(g, 16 * j, 16)
+      }
+      sh -> (sid.getOrElse(sh, 0), g)
+    }
     val hex = java.util.HexFormat.of()
-    // per distinct term: its sid (0 for df = 1) and its 8 salted hashes
-    val terms = df.map { case (sh, _) => sh -> (sid.getOrElse(sh, 0),
-      Array.tabulate(8)(j => hex.formatHex(md.digest(s"${j + 1}:$sh".getBytes(utf8))))) }
+    def minHex(gs: Array[Array[Byte]], j: Int): String = {
+      val (from, to) = (16 * j, 16 * j + 16)
+      hex.formatHex(gs.reduce((a, b) =>
+        if (java.util.Arrays.compareUnsigned(a, from, to, b, from, to) <= 0) a else b), from, to)
+    }
     val out = rows.groupBy(r => (r.getString(0), r.getLong(1), r.getInt(2)))
       .toSeq.sortBy(_._1._2).map { case ((lang, docId, n), occ) =>
         val ts = occ.map(r => terms(r.getString(3)))
         val sids = ts.map(_._1).filter(_ > 0).distinct.sorted
-        val hs = (0 until 8).map(j => ts.iterator.map(_._2(j)).min)
-        Row.fromSeq(Seq(lang, docId, n, sids.toSeq) ++ hs :+ sids.length)
+        val gs = ts.map(_._2)
+        Row.fromSeq(Seq(lang, docId, n, sids.toSeq) ++ (0 until 8).map(minHex(gs, _)) :+
+          sids.length)
       }
     val in = d.schema
     graft.util.Local.frame(d.sparkSession, out, StructType(

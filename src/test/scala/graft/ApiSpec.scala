@@ -147,6 +147,19 @@ class ApiSpec extends AnyFunSuite {
     assert(got == Map(5L -> 5L, 9L -> 5L, 7L -> 5L, 100L -> 100L, 101L -> 100L))
   }
 
+  test("connectedComponents: an edge with one null end labels the other, on both paths") {
+    import spark.implicits._
+    val edges = Seq[(Option[Long], Option[Long])]((Some(5L), Some(9L)), (None, Some(7L)),
+      (Some(8L), None), (None, None), (Some(9L), Some(5L))).toDF("from", "to")
+    val want = Map(5L -> 5L, 9L -> 5L, 7L -> 7L, 8L -> 8L)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(Graft.connectedComponents(edges, "from", "to")) == want)
+    val (rounds, _) = graft.ops.Pipeline.starContract(
+      edges.select(col("from").as("s"), col("to").as("t")), localEdges = 0)
+    assert(labels(rounds) == want)
+  }
+
   test("dedupClusters matches the dedup_lsh_cc fixture key") {
     val api = Graft.dedupClusters(renamedDocs, "my_id", "body")
       .orderBy(col("doc_id")).collect()

@@ -101,7 +101,7 @@ class DeterminismSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.codegen.wholeStage", old)
   }
 
-  test("SortedIntersectSize codegen and interpreted paths agree on the distributed chain") {
+  test("SortedIntersectFirstSize and SortedIntersectPrune codegen and interpreted paths agree on the distributed chain") {
     // the keys above read the driver-built sets at fixture scale; this
     // session's sets take the forced distributed build
     val s = distributedChain(sf001)

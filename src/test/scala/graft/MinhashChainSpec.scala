@@ -30,9 +30,22 @@ class MinhashChainSpec extends AnyFunSuite {
       assert(cands.schema == distCands.schema)
       assert(rows(cands).nonEmpty)
       assert(rows(cands) == rows(distCands))
-      // the distributed verify over the same local sets agrees as well
-      assert(rows(Dedup.verifiedCandsOf(local, onDriver = false)) == rows(cands))
     }
+  }
+
+  test("exact duplicates past EdgesPerTask band pairs are verified by the band join") {
+    import org.apache.spark.sql.functions.{count, max, min}
+    import spark.implicits._
+    // 500 copies of one 3-shingle doc: one bucket per band, 124 750 pairs
+    // each, far under the shingle gate but over the driver's pair cap
+    val d = (for (doc <- 0L until 500L; sh <- Seq("a b", "b c", "c d"))
+      yield (doc, "xx", 3, sh)).toDF("doc_id", "lang", "n", "sh")
+    val sets = Text.sigsAndSetsOf(d)
+    assert(Local.size(sets).isDefined)
+    val cands = Dedup.verifiedCandsOf(sets)
+    assert(Local.size(cands).isEmpty, "the pair cap sends the verify to the band join")
+    // identical docs share every shingle: i = n = 3 on every pair
+    assert(cands.agg(count("i"), min("i"), max("i")).head() == Row(124750L, 3, 3))
   }
 
   test("shingles past U+FFFF get the same term ids on both paths (UTF-8 byte order)") {
