@@ -3334,7 +3334,7 @@ object Scale {
     * `map<string, struct<...>>` — all land through the ordinary write
     * path (Spark's ParquetWriteSupport composes groups to any depth),
     * survive the manifest protocol, and read back exactly through the
-    * recursive Group decode / vectorized batch decode. A null element
+    * vectorized decode, in batch and in row mode. A null element
     * INSIDE the inner array exercises the depth-2 null path. Nested
     * columns stay NON-statable (REQUIREd withheld — an envelope over a
     * group prunes nothing); the scalar key keeps its exact stats. The

@@ -1213,20 +1213,32 @@ object Vectors {
 
   private[ops] def thresholdPairsOf(spark: SparkSession, sf: String): DataFrame =
     graft.util.Memos.cached(thresholdPairsMemo, spark, sf)(
-      thresholdPairsFresh(spark, sf).localCheckpoint())
+      withPrefilter(spark)(thresholdPairsFresh(spark, sf).localCheckpoint()))
 
   /** Plan probe for the spec layer: the UN-memoized rule-rewritten pair
     * plan (the memoized key surface checkpoints it into a LogicalRDD, so
-    * plan-shape assertions must look here). Sorted like the key. */
+    * plan-shape assertions must look here). Sorted like the key; its
+    * optimized plan is fixed inside the rule's scope. */
   private[graft] def thresholdPairsPlanProbe(spark: SparkSession, sf: String): DataFrame =
-    thresholdPairsFresh(spark, sf).orderBy(col("vec_a"), col("vec_b"))
+    withPrefilter(spark) {
+      val df = thresholdPairsFresh(spark, sf).orderBy(col("vec_a"), col("vec_b"))
+      df.queryExecution.optimizedPlan
+      df
+    }
 
-  private def thresholdPairsFresh(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorCosine.register(spark)
-    spark.conf.set(graft.plans.LshPrefilter.ConfKey, "true")
+  /** Runs `body` with the opt-in [[graft.plans.LshPrefilter]] rule armed
+    * and restores the session's flag after, so every later cosine theta
+    * join of the session stays exact. The rule fires at optimization
+    * time: `body` must plan or materialize its frame inside the scope. */
+  private def withPrefilter[T](spark: SparkSession)(body: => T): T = {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.LshPrefilter))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.LshPrefilter
+    graft.util.Confs.withConfs(spark, graft.plans.LshPrefilter.ConfKey -> "true")(body)
+  }
+
+  private def thresholdPairsFresh(spark: SparkSession, sf: String): DataFrame = {
+    graft.functions.VectorCosine.register(spark)
     // spread the probe side off the 1-task single-file scan (r18): each
     // rewritten band join otherwise evaluates its residual cosine over
     // every band-matching pair inside one serial task. r19: width capped

@@ -13,15 +13,15 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** VECTORIZED (columnar) decode for the graft connector's parquet scan —
-  * VERDICT r11 next-round #1.
+/** The graft connector's ONE parquet decoder — VERDICT r11 next-round #1.
   *
-  * The row path materializes every surviving record through parquet-mr's
-  * boxed `Group` API: one object tree per row, one virtual dispatch per
-  * cell — a 3-5× constant factor on the dominant cost of a full scan at
-  * 100 TB. This reader replaces that with Spark's OWN vectorized parquet
-  * decoder ([[VectorizedParquetRecordReader]], the same class behind
-  * `spark.read.parquet`): column chunks decode straight into on-heap
+  * Every parquet row the connector reads (batch scans, row-identity
+  * scans, replaceWhere straddlers, `#rgcen` write-side centroids) goes
+  * through Spark's OWN vectorized parquet decoder
+  * ([[VectorizedParquetRecordReader]], the same class behind
+  * `spark.read.parquet`), never a per-row boxed object tree — that tree
+  * was a 3-5× constant factor on the dominant cost of a full scan at
+  * 100 TB. In batch mode column chunks decode straight into on-heap
   * `ColumnarBatch` vectors, Spark's whole-stage codegen consumes the
   * batches without per-row materialization, and the scan node reports
   * `Batched: true`.
@@ -44,7 +44,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * rides the columnar path.
   *
   * Row-group/page skipping is preserved: the pushed v1 filters translate
-  * through the SAME [[GraftParquet.filterPredicate]] the row path uses
+  * through the SAME [[GraftParquet.filterPredicate]] the row mode uses
   * and land on the Hadoop conf ([[ParquetInputFormat.FILTER_PREDICATE]]),
   * where parquet-mr's reader drops refuted row groups before a byte is
   * decompressed. (Record-level filtering does not apply to vectorized
@@ -209,12 +209,12 @@ object GraftColumnar {
     * one at a time (`nextKeyValue`/`getCurrentValue` without
     * `enableReturningBatches` — each row is a cursor view over the
     * current batch, valid until the next `read()`, which is exactly the
-    * [[PartitionReader]] contract). This is the ROW-IDENTITY path's fast
-    * decode: splits that must emit rows (a deletion vector to skip by
-    * physical position, a requested `_pos`, or scan-uniform row fallback
-    * forced by a sibling split) still decode their column chunks
-    * vectorized — the per-row boxed `Group` tree is retired to the
-    * `spark.graft.columnar.enabled=false` escape hatch (and CSV). Rows
+    * [[PartitionReader]] contract). This is the row path's decode:
+    * splits that must emit rows (a deletion vector to skip by
+    * physical position, a requested `_pos`, equality-delete probes, or
+    * scan-uniform row fallback forced by a sibling split) still decode
+    * their column chunks vectorized, and so do the connector's
+    * row-at-a-time internal readers (straddler cells, `#rgcen`). Rows
     * come back in FILE ORDER whenever `rgFilter` is None — and the
     * DV/`_pos` gate in the caller forbids pushing a filter precisely
     * when positions matter — so the physical-position counter the

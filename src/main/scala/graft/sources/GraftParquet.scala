@@ -3,20 +3,13 @@ package graft.sources
 import java.nio.file.{Path => NioPath}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** PARQUET data files for the graft connector (VERDICT r10 next #1/#2).
   *
@@ -31,8 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * columnar+compressed IO story the CSV cell files could never tell at
   * 100 TB. Zstd compression (zstd-jni rides in the Spark jars).
   *
-  * Physical ROW ORDER is the contract both formats share: parquet-mr
-  * materializes records in file order, so the 0-based physical position —
+  * Physical ROW ORDER is the contract both formats share: Spark's
+  * vectorized reader ([[GraftColumnar]], the one parquet row decoder)
+  * serves records in file order, so the 0-based physical position —
   * the deletion-vector / `_pos` row identity — is the same counter the
   * line reader keeps, and the manifest's physical row count stays the
   * integrity check (checked against the footer's record count before any
@@ -55,7 +49,7 @@ object GraftParquet {
 
   /** Element types admitted inside `array<...>` columns: ANY supported
     * type, at any depth (round 12; the write path is Spark's own
-    * ParquetWriteSupport and the decode recursion below mirrors it —
+    * ParquetWriteSupport and Spark's vectorized reader decodes it —
     * `array<array<bigint>>` token matrices, `array<struct<...>>`
     * per-frame records, arrays of tag maps all encode). */
   def arrayElemOk(et: DataType): Boolean = supported(et)
@@ -139,35 +133,6 @@ object GraftParquet {
     b.build()
   }
 
-  // one parsed Hadoop conf per JVM; per-open copies are cheap (props map)
-  private lazy val baseConf = new Configuration()
-
-  /** Open a projected reader: only `projection`'s column chunks are
-    * decoded (GroupReadSupport honors PARQUET_READ_SCHEMA) — the read
-    * side of column pruning reaching the data file. An optional
-    * [[org.apache.parquet.filter2.compat.FilterCompat.Filter]] engages
-    * parquet-mr's own pruning ladder UNDER the manifest's file-level
-    * skipping: row groups whose column statistics (or dictionary pages)
-    * refute the predicate are never decompressed, and surviving groups
-    * are record-filtered before materialization — the within-file
-    * granularity a 1 GB production part needs (file-level stats can only
-    * skip all-or-nothing). */
-  def reader(file: String, projection: MessageType,
-      filter: Option[org.apache.parquet.filter2.compat.FilterCompat.Filter] = None,
-      range: Option[(Long, Long)] = None)
-      : ParquetReader[Group] = {
-    val conf = new Configuration(baseConf)
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), new HadoopPath(file))
-      .withConf(conf)
-    filter.foreach(b.withFilter)
-    // ranged split (round 15): only row groups whose midpoint falls in
-    // [start, end) are read — the same rule the vectorized reader's
-    // FileSplit applies, so both row paths agree on a range's rows
-    range.foreach { case (s, e) => b.withFileRange(s, e) }
-    b.build()
-  }
-
   /** Footer-only physical row count — what a zero-column scan (count(*)
     * after DV discount) needs instead of materializing any row. */
   def rowCount(file: NioPath): Long = {
@@ -223,83 +188,11 @@ object GraftParquet {
     try r.getFileMetaData.getSchema finally r.close()
   }
 
-  /** Positional projection: the file-schema fields at `positions`. */
-  def projectPositions(fileMt: MessageType, positions: Seq[Int]): MessageType =
-    new MessageType("graft", positions.map(fileMt.getFields.get(_)): _*)
-
-  /** Decode a projected Group field to the InternalRow value of `dt`
-    * (`j` = index in the PROJECTION). Absent optional field = null. */
-  def value(g: Group, j: Int, dt: DataType): Any = {
-    if (g.getFieldRepetitionCount(j) == 0) return null
-    dt match {
-      case LongType | TimestampType => g.getLong(j, 0)
-      case DateType | IntegerType   => g.getInteger(j, 0)
-      case DoubleType               => g.getDouble(j, 0)
-      case FloatType                => g.getFloat(j, 0)
-      case BooleanType              => g.getBoolean(j, 0)
-      case StringType => UTF8String.fromBytes(g.getBinary(j, 0).getBytes)
-      case BinaryType => g.getBinary(j, 0).getBytes
-      case d: DecimalType if d.precision <= 18 =>
-        // physical type varies by writer generation: INT32 (p<=9, the
-        // Spark-converter mapping) or INT64 (p<=18, and ALL pre-round-12
-        // files) — branch on the file's own footer type
-        val unscaled = g.getType.getType(j).asPrimitiveType()
-          .getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT32 => g.getInteger(j, 0).toLong
-          case _                       => g.getLong(j, 0)
-        }
-        Decimal.createUnsafe(unscaled, d.precision, d.scale)
-      case d: DecimalType =>
-        Decimal(new java.math.BigDecimal(
-          new java.math.BigInteger(g.getBinary(j, 0).getBytes), d.scale),
-          d.precision, d.scale)
-      case st: StructType =>
-        // members resolve BY NAME against the group actually read: the
-        // projection always requests the whole top-level field group, but
-        // Catalyst's nested-schema pruning may hand this reader a struct
-        // type with a SUBSET of members — positional decode would silently
-        // transpose them
-        val sg = g.getGroup(j, 0)
-        val gt = sg.getType
-        InternalRow.fromSeq(st.fields.toSeq.map { sf =>
-          value(sg, gt.getFieldIndex(sf.name), sf.dataType) })
-      case mt: MapType =>
-        val mg = g.getGroup(j, 0)
-        val n = mg.getFieldRepetitionCount(0)
-        val keys = new Array[Any](n); val vals = new Array[Any](n)
-        var k = 0
-        while (k < n) {
-          val kv = mg.getGroup(0, k)
-          keys(k) = UTF8String.fromBytes(kv.getBinary(0, 0).getBytes)
-          vals(k) =
-            if (kv.getFieldRepetitionCount(1) == 0) null
-            else value(kv, 1, mt.valueType)
-          k += 1
-        }
-        new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-          new GenericArrayData(keys), new GenericArrayData(vals))
-      case ArrayType(et, _) =>
-        val lg = g.getGroup(j, 0)
-        val n = lg.getFieldRepetitionCount(0)
-        val arr = new Array[Any](n)
-        var k = 0
-        while (k < n) {
-          // each repeated "list" wrapper holds one optional "element"
-          // field — recursing through value() on that field decodes ANY
-          // supported element type (scalars, structs, deeper arrays,
-          // maps) with the same null/name-resolution rules as a column
-          arr(k) = value(lg.getGroup(0, k), 0, et)
-          k += 1
-        }
-        new GenericArrayData(arr)
-      case other => throw new IllegalArgumentException(
-        s"graft-sink parquet cannot decode $other")
-    }
-  }
-
   /** Best-effort translation of the scan's pushed v1 filters into a
-    * parquet [[FilterPredicate]] for ROW-GROUP (statistics + dictionary)
-    * skipping and record-level pre-filtering inside a surviving data file.
+    * parquet [[FilterPredicate]] for ROW-GROUP (statistics + dictionary +
+    * bloom) and page skipping inside a surviving data file. The
+    * vectorized reader filters no single record: Spark re-applies every
+    * filter residually.
     *
     * Soundness rules:
     *  - every translated predicate selects a SUPERSET-or-equal row set of
@@ -308,12 +201,12 @@ object GraftParquet {
     *  - a conjunct that cannot be translated is DROPPED (And keeps the
     *    translatable side); an Or translates only if BOTH sides do;
     *  - NOT / notEq are never emitted for values (parquet's two-valued
-    *    record evaluator keeps NULL cells under notEq, which diverges
+    *    predicate semantics keep NULL cells under notEq, which diverges
     *    from SQL three-valued logic) — the only notEq formed is the
     *    well-defined `notEq(col, null)` for IsNotNull;
     *  - a filter column must be IN THE PROJECTION (`projected`, layout
-    *    positions): parquet validates record-level filter columns against
-    *    the requested schema. Spark always projects residual-filter
+    *    positions): parquet validates filter columns against the
+    *    requested schema. Spark always projects residual-filter
     *    columns, so this only drops conjuncts on pre-evolution files
     *    where the column is beyond the file's width — exactly the files
     *    file-level skipping already handles.
@@ -355,10 +248,10 @@ object GraftParquet {
             java.lang.Integer.valueOf(GraftSinkScan.canon(dt, v).toInt))
         // a ZERO literal stays untranslated: parquet's Double/Float
         // ordering separates -0.0 from 0.0 while Spark's equates them, so
-        // a record filter at the zero boundary could over-EXCLUDE rows
-        // (e.g. eq(0.0) dropping a physical -0.0 Spark would match) — and
-        // unlike file skipping, dropped records are not resurrected by
-        // the residual filter. NaN is consistent both sides (greatest,
+        // a pushed predicate at the zero boundary could over-EXCLUDE rows
+        // (e.g. eq(0.0) skipping a group of physical -0.0 Spark would
+        // match) — and skipped rows are not resurrected by the residual
+        // filter. NaN is consistent both sides (greatest,
         // self-equal) and parquet-mr withholds stats on NaN-bearing
         // groups, so it may translate.
         case DoubleType => v match {
@@ -450,41 +343,6 @@ object GraftParquet {
       case _ => None
     }
     filters.flatMap(tr(_)).reduceOption(FilterApi.and)
-  }
-
-  /** Canonical CELL string of a projected Group field — byte-identical to
-    * what the writer's cell encoder produces for the same value, so the
-    * row-level predicate evaluator ([[GraftSinkScan.rowMatches]], the
-    * replaceWhere straddler path) sees one canonical form regardless of
-    * the file format. Arrays yield the null sentinel: `evaluable()`
-    * refuses predicates over non-statable columns, so the value is never
-    * consulted. */
-  def cell(g: Group, j: Int, dt: DataType): String = {
-    if (g.getFieldRepetitionCount(j) == 0) return GraftSinkWriter.NullCell
-    dt match {
-      case LongType | TimestampType => g.getLong(j, 0).toString
-      case DateType | IntegerType   => g.getInteger(j, 0).toString
-      // + 0.0: zero-sign normalization (GraftSinkScan.canon round-14 note)
-      case DoubleType               => (g.getDouble(j, 0) + 0.0d).toString
-      case FloatType                => (g.getFloat(j, 0) + 0.0f).toString
-      case BooleanType              => g.getBoolean(j, 0).toString
-      case StringType               => g.getBinary(j, 0).toStringUsingUTF8
-      case d: DecimalType if d.precision <= 18 =>
-        val unscaled = g.getType.getType(j).asPrimitiveType()
-          .getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT32 => g.getInteger(j, 0).toLong
-          case _                       => g.getLong(j, 0)
-        }
-        java.math.BigDecimal.valueOf(unscaled, d.scale).toPlainString
-      case d: DecimalType => // wide: FLBA two's-complement unscaled bytes
-        new java.math.BigDecimal(
-          new java.math.BigInteger(g.getBinary(j, 0).getBytes), d.scale)
-          .toPlainString
-      case _: ArrayType | _: StructType | _: MapType | BinaryType =>
-        GraftSinkWriter.NullCell
-      case other => throw new IllegalArgumentException(
-        s"graft-sink parquet cannot decode $other")
-    }
   }
 }
 

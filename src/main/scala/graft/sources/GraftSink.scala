@@ -4017,15 +4017,11 @@ case class GraftSinkScan(path: String, version: Option[Int],
     // on every split (Spark refuses mixed row/columnar partitions): all
     // parquet, no DV/eqdel/eqSel anywhere, no `_pos`, and at least one
     // real column requested (zero-column scans answer from footers).
-    // `spark.graft.columnar.enabled=false` is the session escape hatch
-    // (ops fallback; the specs use its Group-tree path as the reference
-    // the vectorized decoders must match).
-    val vecOn = scala.util.Try(org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.columnar.enabled", "true").toBoolean).getOrElse(true)
-    val colr = vecOn &&
-      GraftColumnar.eligible(required,
-        planned.map { case (m, c) =>
-          (m.name, m.dv.map(_._1), eqFor(m, c), selFor(m, c)) })
+    // Ineligible scans emit rows, decoded by the same vectorized reader
+    // in row mode ([[GraftColumnar.VectorRows]]).
+    val colr = GraftColumnar.eligible(required,
+      planned.map { case (m, c) =>
+        (m.name, m.dv.map(_._1), eqFor(m, c), selFor(m, c)) })
     spjKey match {
       case Some(k) =>
         val keyType = k match {
@@ -4037,7 +4033,7 @@ case class GraftSinkScan(path: String, version: Option[Int],
           GraftSinkKeyedFileSplit(s"$path/${m.name}", m.rows, m.ncols,
             changeOf(c), m.dv.map(d => s"$path/${d._1}"), keyType,
             m.partition.get._2, eqFor(m, c), selFor(m, c),
-            columnar = colr, vecRows = vecOn): InputPartition
+            columnar = colr): InputPartition
         }.toArray
       case None =>
         planned.flatMap { case (m, c) =>
@@ -4065,14 +4061,12 @@ case class GraftSinkScan(path: String, version: Option[Int],
             case Some(rs) => rs.map { case (st, en, n) =>
               GraftSinkFileSplit(s"$path/${m.name}", n, m.ncols, changeOf(c),
                 m.dv.map(d => s"$path/${d._1}"), eqFor(m, c), Nil,
-                columnar = colr, vecRows = vecOn,
-                rangeStart = st, rangeEnd = en): InputPartition
+                columnar = colr, rangeStart = st, rangeEnd = en): InputPartition
             }
             case None => Seq(
               GraftSinkFileSplit(s"$path/${m.name}", m.rows, m.ncols,
                 changeOf(c), m.dv.map(d => s"$path/${d._1}"), eqFor(m, c),
-                selFor(m, c), columnar = colr, vecRows = vecOn)
-                : InputPartition)
+                selFor(m, c), columnar = colr): InputPartition)
           }
         }.toArray
     }
@@ -4263,12 +4257,16 @@ object GraftSinkScan {
     if (file.endsWith(".parquet")) {
       // full-width positional projection from the file's OWN footer names
       // (a renamed column's current layout name may not exist there)
-      val r = GraftParquet.reader(file, GraftParquet.fileSchema(file))
+      val fileMt = GraftParquet.fileSchema(file)
       val types = layout.fields.take(ncols).map(_.dataType)
-      val it = Iterator.continually(r.read()).takeWhile(_ != null).map { g =>
-        Array.tabulate(ncols)(j => GraftParquet.cell(g, j, types(j)))
+      val vec = new GraftColumnar.VectorRows(file,
+        StructType(types.indices.map(j => org.apache.spark.sql.types.StructField(
+          fileMt.getFields.get(j).getName, types(j), nullable = true))),
+        rgFilter = None)
+      val it = Iterator.continually(vec.read()).takeWhile(_ != null).map { r =>
+        Array.tabulate(ncols)(j => rowCell(r, j, types(j)))
       }
-      (it, () => r.close())
+      (it, () => vec.close())
     } else {
       val in = Files.newBufferedReader(Paths.get(file), StandardCharsets.UTF_8)
       val it = Iterator.continually(in.readLine()).takeWhile(_ != null)
@@ -4276,6 +4274,27 @@ object GraftSinkScan {
       (it, () => in.close())
     }
   }
+
+  /** Canonical CELL string of field `j` of a decoded parquet row —
+    * byte-identical to the cell the writer's encoder produces for the
+    * same value (the form equality-delete sidecars hash and the
+    * row-level evaluator compares), so one canonical form holds across
+    * both file formats. Non-statable types yield the null sentinel:
+    * `evaluable()` refuses predicates over them and they are never keys. */
+  def rowCell(r: InternalRow, j: Int, dt: DataType): String =
+    if (r.isNullAt(j)) GraftSinkWriter.NullCell
+    else dt match {
+      case LongType | TimestampType => r.getLong(j).toString
+      case DateType | IntegerType   => r.getInt(j).toString
+      // + 0.0: zero-sign normalization (see canon)
+      case DoubleType => (r.getDouble(j) + 0.0d).toString
+      case org.apache.spark.sql.types.FloatType => (r.getFloat(j) + 0.0f).toString
+      case org.apache.spark.sql.types.BooleanType => r.getBoolean(j).toString
+      case StringType => r.getUTF8String(j).toString
+      case d: org.apache.spark.sql.types.DecimalType =>
+        r.getDecimal(j, d.precision, d.scale).toJavaBigDecimal.toPlainString
+      case _ => GraftSinkWriter.NullCell
+    }
 
   /** Canonical CELL form of a pushed filter value — the bridge between
     * Spark's external filter values (java.sql.Timestamp/Date, the
@@ -4769,12 +4788,6 @@ sealed trait GraftSplit extends InputPartition {
     * planning time on EVERY split of an eligible scan (Spark refuses
     * mixed row/columnar partitions, so the decision cannot be per-file). */
   def columnar: Boolean
-  /** Row-mode vectorized decode permitted ([[GraftColumnar.VectorRows]]):
-    * true unless the session's `spark.graft.columnar.enabled=false`
-    * escape hatch asked for the pure Group/record-filter row path.
-    * Unlike [[columnar]] this is NOT scan-uniform-constrained — a
-    * PartitionReader[InternalRow] may decode however it likes. */
-  def vecRows: Boolean
   /** RANGED split (round 15, `#rgcen` ANN routing): when >= 0, the split
     * reads only the parquet row groups whose midpoint falls in
     * `[rangeStart, rangeEnd)` — the standard parquet split-assignment
@@ -4795,7 +4808,6 @@ case class GraftSinkFileSplit(file: String, expectedRows: Long, ncols: Int,
     eqDels: Seq[(String, String)] = Nil,
     eqSel: Seq[(String, String)] = Nil,
     columnar: Boolean = false,
-    vecRows: Boolean = true,
     rangeStart: Long = -1L,
     rangeEnd: Long = -1L)
     extends GraftSplit
@@ -4813,7 +4825,6 @@ case class GraftSinkKeyedFileSplit(file: String, expectedRows: Long, ncols: Int,
     eqDels: Seq[(String, String)] = Nil,
     eqSel: Seq[(String, String)] = Nil,
     columnar: Boolean = false,
-    vecRows: Boolean = true,
     rangeStart: Long = -1L, // SPJ splits stay whole-file (key = file)
     rangeEnd: Long = -1L)
     extends GraftSplit
@@ -4844,16 +4855,12 @@ private[sources] case class GraftSpjBucket(n: Int, src: String)
   * the crude size cap only guards pathological accumulation (sidecars
   * are O(one epoch's keys) small by construction). */
 /** JVM-wide observability counter: parquet data-file records actually
-  * MATERIALIZED by graft scans (records inside skipped row groups, or
-  * dropped by parquet's record-level filter, are never counted). What the
-  * row-group-pushdown spec measures — in local mode all executors
+  * MATERIALIZED by graft scans (records inside skipped row groups or
+  * pages are never counted). What the row-group-pushdown spec
+  * measures — in local mode all executors
   * share the JVM, so a delta across a query is the query's decode bill. */
 object GraftReadStats {
   val parquetRecordsDecoded = new java.util.concurrent.atomic.LongAdder
-  /** Splits decoded through the vectorized ROW-mode path
-    * ([[GraftColumnar.VectorRows]]) — observability that row-identity
-    * scans (DV/`_pos`) really ride the fast decode, not the Group tree. */
-  val vectorRowSplits = new java.util.concurrent.atomic.LongAdder
   /** Manifest versions FOLDED to full-snapshot form (raw manifest parses
     * along a fold, O(meta lines) each). The scale-tax observability for
     * driver-side paths that must stay O(header): a streaming epoch
@@ -5103,8 +5110,8 @@ class GraftSinkReaderFactory(full: StructType, required: StructType,
       s"graft-sink: ${split.file} has ${fileMt.getFieldCount} columns, " +
         s"manifest committed ${split.ncols}")
     // ROW-GROUP FILTER PUSHDOWN: inside a file the manifest's stats kept,
-    // parquet's own statistics/dictionary pruning skips row groups and
-    // pre-filters records — the within-file granularity a 1 GB production
+    // parquet's own statistics/dictionary/bloom pruning skips row groups
+    // and pages — the within-file granularity a 1 GB production
     // part needs (file-level skipping is all-or-nothing). Engaged ONLY
     // when row POSITIONS don't matter: a deletion vector or a requested
     // `_pos` keys rows by physical position, and a skipped row group
@@ -5119,131 +5126,37 @@ class GraftSinkReaderFactory(full: StructType, required: StructType,
       if (split.dvFile.nonEmpty || idx.contains(-3) || pushed.isEmpty) None
       else GraftParquet.filterPredicate(fileMt, full, physLayout.toSet, pushed)
 
-    // VECTORIZED ROW-MODE decode (round 12; eqdel/eqSel probing joined in
-    // round 13 — VERDICT r12 next #4, the last boxed decode path): every
-    // row-emitting split decodes through the same vectorized reader as
-    // the batch path and serves its rows one at a time. Deletion vectors
-    // and `_pos` key rows by POSITION (rgFilter stays off for them, so
-    // the physical-position counter is exact); equality-delete and CDF
-    // eqSel key probes are VALUE-based — their canonical cell strings now
-    // come from the decoded row ([[rowCell]], same canonical form as
-    // [[GraftParquet.cell]], with the key columns riding the vectorized
-    // projection). The boxed Group tree below remains only for the
-    // `spark.graft.columnar.enabled=false` escape hatch (and CSV).
-    if (split.vecRows) {
-      // phys slots first (projIdx positions), then the eqdel/eqSel key
-      // columns the query did not request (eqKeyProj positions)
-      val reqStruct = StructType((phys.map(i =>
+    // VECTORIZED ROW-MODE decode: every row-emitting parquet split
+    // decodes through the same vectorized reader as the batch path and
+    // serves its rows one at a time. Deletion vectors and `_pos` key
+    // rows by POSITION (rgFilter stays off for them, so the
+    // physical-position counter is exact); equality-delete and CDF eqSel
+    // key probes are VALUE-based, on the canonical cell strings of the
+    // decoded key columns ([[GraftSinkScan.rowCell]]).
+    // phys slots first (projIdx positions), then the eqdel/eqSel key
+    // columns the query did not request (eqKeyProj positions)
+    val reqStruct = StructType((phys.map(i =>
+      org.apache.spark.sql.types.StructField(
+        fileMt.getFields.get(idx(i)).getName, types(i), nullable = true)) ++
+      eqKeyLayout.map(li =>
         org.apache.spark.sql.types.StructField(
-          fileMt.getFields.get(idx(i)).getName, types(i), nullable = true)) ++
-        eqKeyLayout.map(li =>
-          org.apache.spark.sql.types.StructField(
-            fileMt.getFields.get(li).getName, full.fields(li).dataType,
-            nullable = true))).toIndexedSeq)
-      // canonical cell string of decoded field j — MUST match the cell
-      // form the writer hashed and [[GraftParquet.cell]] decodes, or an
-      // equality delete would silently stop applying on this path
-      def rowCell(r: InternalRow, j: Int, dt: DataType): String =
-        if (r.isNullAt(j)) GraftSinkWriter.NullCell
-        else dt match {
-          case LongType | TimestampType => r.getLong(j).toString
-          case DateType | org.apache.spark.sql.types.IntegerType =>
-            r.getInt(j).toString
-          case DoubleType => (r.getDouble(j) + 0.0d).toString
-          case org.apache.spark.sql.types.FloatType =>
-            (r.getFloat(j) + 0.0f).toString
-          case org.apache.spark.sql.types.BooleanType => r.getBoolean(j).toString
-          case StringType => r.getUTF8String(j).toString
-          case d: org.apache.spark.sql.types.DecimalType =>
-            r.getDecimal(j, d.precision, d.scale).toJavaBigDecimal.toPlainString
-          case _ => GraftSinkWriter.NullCell // non-statable: never a key
-        }
-      val vec = new GraftColumnar.VectorRows(split.file, reqStruct, rgFilter,
-        range = if (split.rangeStart >= 0)
-          Some((split.rangeStart, split.rangeEnd)) else None)
-      GraftReadStats.vectorRowSplits.increment()
-      return new PartitionReader[InternalRow] {
-        private val dv = dvCursor()
-        private var r: InternalRow = _
-        private var pos = rangePosOffset - 1
-        private var rows = 0L
-        override def next(): Boolean = {
-          while (true) {
-            r = vec.read()
-            if (r == null) {
-              if (rgFilter.isEmpty && rows != split.expectedRows)
-                throw new IllegalStateException(
-                  s"graft-sink: ${split.file} has $rows rows, manifest committed ${split.expectedRows}")
-              if (split.rangeStart < 0 && dv.hasNext)
-                throw new IllegalStateException(
-                  s"graft-sink: deletion vector for ${split.file} names position " +
-                    s"${dv.head} beyond the file's $rows physical rows")
-              return false
-            }
-            rows += 1; pos += 1
-            GraftReadStats.parquetRecordsDecoded.increment()
-            if (dv.hasNext && dv.head == pos) dv.next() // deleted: skip
-            else if (eqFilters.nonEmpty && eqFilters.exists { case (li, dt, sets) =>
-              li < split.ncols && {
-                val cell = rowCell(r, eqKeyProj(li), dt)
-                cell != GraftSinkWriter.NullCell && sets.exists(_.contains(cell))
-              }
-            }) () // equality-deleted: skip
-            else if (selFilters.nonEmpty && !selFilters.exists { case (li, dt, sets) =>
-              li < split.ncols && {
-                val cell = rowCell(r, eqKeyProj(li), dt)
-                cell != GraftSinkWriter.NullCell && sets.exists(_.contains(cell))
-              }
-            }) () // CDF delta selection: row not killed by the range — skip
-            else return true
-          }
-          false // unreachable
-        }
-        override def get(): InternalRow = {
-          val values = new Array[Any](idx.length)
-          var i = 0
-          while (i < idx.length) {
-            values(i) =
-              if (idx(i) == -1) UTF8String.fromString(split.change)
-              else if (idx(i) == -2) UTF8String.fromString(fileName)
-              else if (idx(i) == -3) pos
-              else if (idx(i) >= split.ncols) null // evolution NULL
-              else {
-                val j = projIdx(i)
-                if (r.isNullAt(j)) null else r.get(j, types(i))
-              }
-            i += 1
-          }
-          InternalRow.fromSeq(values.toIndexedSeq)
-        }
-        override def close(): Unit = vec.close()
-      }
-    }
-
+          fileMt.getFields.get(li).getName, full.fields(li).dataType,
+          nullable = true))).toIndexedSeq)
+    val vec = new GraftColumnar.VectorRows(split.file, reqStruct, rgFilter,
+      range = if (split.rangeStart >= 0)
+        Some((split.rangeStart, split.rangeEnd)) else None)
     new PartitionReader[InternalRow] {
-      // PROJECTED read: only the requested columns' chunks are decoded.
-      // Projection is POSITIONAL against the file's own footer names —
-      // column identity here is positional (#ids column mapping: a
-      // rename changes the layout name, never the file), so the CURRENT
-      // layout name may not exist in a pre-rename file.
-      private val reader =
-        GraftParquet.reader(split.file,
-          GraftParquet.projectPositions(fileMt,
-            (physLayout ++ eqKeyLayout).toSeq),
-          rgFilter.map(org.apache.parquet.filter2.compat.FilterCompat.get),
-          range = if (split.rangeStart >= 0)
-            Some((split.rangeStart, split.rangeEnd)) else None)
       private val dv = dvCursor()
-      private var g: org.apache.parquet.example.data.Group = _
+      private var r: InternalRow = _
       private var pos = rangePosOffset - 1
       private var rows = 0L
       override def next(): Boolean = {
         while (true) {
-          g = reader.read()
-          if (g == null) {
+          r = vec.read()
+          if (r == null) {
             if (rgFilter.isEmpty && rows != split.expectedRows)
               throw new IllegalStateException(
-              s"graft-sink: ${split.file} has $rows rows, manifest committed ${split.expectedRows}")
+                s"graft-sink: ${split.file} has $rows rows, manifest committed ${split.expectedRows}")
             if (split.rangeStart < 0 && dv.hasNext)
               throw new IllegalStateException(
                 s"graft-sink: deletion vector for ${split.file} names position " +
@@ -5252,16 +5165,16 @@ class GraftSinkReaderFactory(full: StructType, required: StructType,
           }
           rows += 1; pos += 1
           GraftReadStats.parquetRecordsDecoded.increment()
-          if (dv.hasNext && dv.head == pos) dv.next()
+          if (dv.hasNext && dv.head == pos) dv.next() // deleted: skip
           else if (eqFilters.nonEmpty && eqFilters.exists { case (li, dt, sets) =>
             li < split.ncols && {
-              val cell = GraftParquet.cell(g, eqKeyProj(li), dt)
+              val cell = GraftSinkScan.rowCell(r, eqKeyProj(li), dt)
               cell != GraftSinkWriter.NullCell && sets.exists(_.contains(cell))
             }
           }) () // equality-deleted: skip
           else if (selFilters.nonEmpty && !selFilters.exists { case (li, dt, sets) =>
             li < split.ncols && {
-              val cell = GraftParquet.cell(g, eqKeyProj(li), dt)
+              val cell = GraftSinkScan.rowCell(r, eqKeyProj(li), dt)
               cell != GraftSinkWriter.NullCell && sets.exists(_.contains(cell))
             }
           }) () // CDF delta selection: row not killed by the range — skip
@@ -5278,12 +5191,15 @@ class GraftSinkReaderFactory(full: StructType, required: StructType,
             else if (idx(i) == -2) UTF8String.fromString(fileName)
             else if (idx(i) == -3) pos
             else if (idx(i) >= split.ncols) null // evolution NULL
-            else GraftParquet.value(g, projIdx(i), types(i))
+            else {
+              val j = projIdx(i)
+              if (r.isNullAt(j)) null else r.get(j, types(i))
+            }
           i += 1
         }
         InternalRow.fromSeq(values.toIndexedSeq)
       }
-      override def close(): Unit = reader.close()
+      override def close(): Unit = vec.close()
     }
   }
 }
@@ -5446,16 +5362,13 @@ class GraftTableMicroBatchStream(scan: GraftSinkScan)
     // the same no-mixing rule): a plain appends-only epoch over clean
     // parquet files decodes columnar; any DV/eqdel/eqSel in the range
     // falls the whole batch back to the row reader.
-    val vecOn = scala.util.Try(org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.columnar.enabled", "true").toBoolean).getOrElse(true)
-    val colr = vecOn &&
-      GraftColumnar.eligible(scan.readSchema(),
-        planned.map { case (m, _, eq, sel) => (m.name, m.dv.map(_._1), eq, sel) })
+    val colr = GraftColumnar.eligible(scan.readSchema(),
+      planned.map { case (m, _, eq, sel) => (m.name, m.dv.map(_._1), eq, sel) })
     planned
       .map { case (m, c, eq, sel) => GraftSinkFileSplit(s"${scan.path}/${m.name}",
         m.rows, m.ncols, if (c == "eqsel") "delete" else c,
         m.dv.map(d => s"${scan.path}/${d._1}"),
-        eq, sel, columnar = colr, vecRows = vecOn): InputPartition }
+        eq, sel, columnar = colr): InputPartition }
       .toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
@@ -5595,8 +5508,8 @@ class GraftSinkBatchWrite(path: String, schema: StructType, truncate: Boolean,
             var exIdx = 0
             val hits = scala.collection.mutable.ArrayBuffer[Long]()
             // format-generic: canonical cell rows in physical order (CSV
-            // line split or parquet group decode — one evaluator, one
-            // canonical form, see GraftParquet.cell)
+            // line split or vectorized parquet decode — one evaluator, one
+            // canonical form, see GraftSinkScan.rowCell)
             val (cellRows, closer) =
               GraftSinkScan.cellRows(Paths.get(path, m.name).toString, layout, m.ncols)
             try {
@@ -6230,13 +6143,16 @@ object GraftSinkWriter {
     val spans = GraftParquet.rowGroupSpans(file)
     if (spans.isEmpty) return Map.empty
     val fileMt = GraftParquet.fileSchema(file.toString)
-    val proj = GraftParquet.projectPositions(fileMt, cenIdx.toIndexedSeq)
     val types = cenIdx.map(schema.fields(_).dataType)
     // per (column slot, group): sum vector / non-null count / poisoned
     val sums = Array.fill(cenIdx.length, spans.length)(null: Array[Double])
     val cnts = Array.fill(cenIdx.length, spans.length)(0L)
     val bad = Array.fill(cenIdx.length, spans.length)(false)
-    val r = GraftParquet.reader(file.toString, proj)
+    // positional projection to the centroid columns, by footer name
+    val r = new GraftColumnar.VectorRows(file.toString,
+      StructType(cenIdx.indices.map(s => org.apache.spark.sql.types.StructField(
+        fileMt.getFields.get(cenIdx(s)).getName, types(s), nullable = true))),
+      rgFilter = None)
     try {
       var g = 0            // current row group
       var left = spans(g)._3 // rows remaining in it
@@ -6245,9 +6161,8 @@ object GraftSinkWriter {
         while (left == 0 && g + 1 < spans.length) { g += 1; left = spans(g)._3 }
         var s = 0
         while (s < cenIdx.length) {
-          if (!bad(s)(g) && row.getFieldRepetitionCount(s) != 0) {
-            val v = GraftParquet.value(row, s, types(s))
-              .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+          if (!bad(s)(g) && !row.isNullAt(s)) {
+            val v = row.getArray(s)
             var poison = false
             var e = 0
             while (e < v.numElements() && !poison) {

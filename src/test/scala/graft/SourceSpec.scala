@@ -908,6 +908,52 @@ class SourceSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(idsP == Set(3L, 10L, 20L),
       s"startsWith('v') replace drops v2, keeps w/q9, lands vz: got $idsP")
+    // one straddler file per canonical-cell type: the row-level evaluator
+    // compares the decoded cells, so the vector must name exactly the
+    // model's matching positions (row i is position i) and the survivors
+    // must be exactly the other rows, the NULL one included
+    Seq(
+      ("tdbl", "DOUBLE", Seq("-1.5D", "-0.0D", "0.0D", "2.5D", "NULL"),
+        "c = 0.0D", "0.0D", Set(1L, 2L)),
+      ("tflt", "FLOAT", Seq("0.5", "1.5", "2.5", "NULL"),
+        "c > CAST(1.0 AS FLOAT)", "3.5", Set(1L, 2L)),
+      ("tts", "TIMESTAMP", Seq("'2024-01-01 00:00:00'", "'2024-06-01 12:00:00'",
+        "'2025-01-01 00:00:00'", "NULL"),
+        "c >= TIMESTAMP '2024-06-01 12:00:00'", "'2026-01-01 00:00:00'", Set(1L, 2L)),
+      ("tdate", "DATE", Seq("'2024-01-01'", "'2024-02-01'", "'2024-03-01'", "NULL"),
+        "c < DATE '2024-02-15'", "'2023-12-31'", Set(0L, 1L)),
+      ("tint", "INT", Seq("1", "5", "9", "NULL"),
+        "c IN (5, 9)", "5", Set(1L, 2L)),
+      ("tbool", "BOOLEAN", Seq("true", "false", "true", "NULL"),
+        "c = true", "true", Set(0L, 2L)),
+      ("tdec9", "DECIMAL(9,2)", Seq("1.25", "2.50", "3.75", "NULL"),
+        "c <= CAST(2.50 AS DECIMAL(9,2))", "0.01", Set(0L, 1L)),
+      ("tdec18", "DECIMAL(18,2)", Seq("1234567890123.45", "2.50", "9999999999999.99", "NULL"),
+        "c > CAST(100.00 AS DECIMAL(18,2))", "500.00", Set(0L, 2L))
+    ).foreach { case (name, typ, cells, pred, repl, hits) =>
+      val d = s"$root/db/$name"
+      spark.sql(s"SELECT CAST(col1 AS BIGINT) AS id, CAST(col2 AS $typ) AS c FROM VALUES " +
+          cells.zipWithIndex.map { case (c, i) => s"($i, $c)" }.mkString(", "))
+        .coalesce(1)
+        .write.format("graft-sink").option("path", d).mode("overwrite").save()
+      val file = GraftManifest.readVersion(d, None).get.metas.head.name
+      if (name == "tdbl") assert(java.lang.Double.doubleToRawLongBits(
+        spark.read.format("graft-sink").option("path", d).load().where("id = 1")
+          .head().getDouble(1)) == java.lang.Double.doubleToRawLongBits(-0.0d),
+        "the fixture must hold a physical -0.0")
+      spark.sql(s"SELECT CAST(100 AS BIGINT) AS id, CAST($repl AS $typ) AS c")
+        .writeTo(s"grw.db.$name").overwrite(expr(pred))
+      val m = GraftManifest.readVersion(d, None).get.metas.find(_.name == file)
+      val dv = m.flatMap(_.dv).map(x =>
+        graft.sources.GraftDv.positions(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(d, x._1))).toSet).getOrElse(Set.empty)
+      assert(m.flatMap(_.dv).map(_._2).contains(hits.size.toLong) && dv == hits,
+        s"$typ straddler under '$pred' must vector exactly $hits: ${m.map(_.dv)} $dv")
+      val ids = spark.read.format("graft-sink").option("path", d).load()
+        .collect().map(_.getLong(0)).toSet
+      assert(ids == cells.indices.map(_.toLong).toSet -- hits + 100L,
+        s"$typ straddler survivors under '$pred': $ids")
+    }
     // an inexpressible predicate is refused at plan time, not half-applied
     val dir3 = s"$root/db/t3"
     spark.range(3).select(col("id"), concat(lit("v"), col("id")).as("s")).coalesce(1)

@@ -73,6 +73,25 @@ object TestSpark {
   def tmp(p: String): String =
     java.nio.file.Files.createTempDirectory(root, p).toString
 
+  /** A graft-sink table's live rows read through Spark's own
+    * `spark.read.parquet` — the independent reference for the
+    * connector's decoder: every data file of the head version, each
+    * row's physical position from `_metadata.row_index` as `_pos`, and
+    * the positions of each file's deletion vector removed. Columns keep
+    * the files' footer names. */
+  def parquetRows(dir: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.GraftManifest
+    GraftManifest.readVersion(dir, None).get.metas.map { m =>
+      val dead = m.dv.map(d =>
+        graft.sources.GraftDv.positions(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(dir, d._1))).toSeq).getOrElse(Nil)
+      spark.read.parquet(s"$dir/${m.name}")
+        .select(col("*"), col("_metadata.row_index").as("_pos"))
+        .where(!col("_pos").isin(dead: _*))
+    }.reduce(_ unionByName _)
+  }
+
   /** The text of a graft-sink table's newest `_manifest-v<N>` file. */
   def manifestText(dir: String): String = {
     val head = new java.io.File(dir).listFiles()

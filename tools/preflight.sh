@@ -9,8 +9,9 @@
 # the host memory (2-8 GB), local scratch under /tmp/spark-local.
 #
 #   tools/preflight.sh          # compile main + test, run the full suite,
-#                               # fail if it left a new /tmp/graft_* entry
-#                               # or wrote a spark-warehouse/ in the repo root
+#                               # fail if it left a new graft_* entry in
+#                               # /tmp or in graft.util.Scratch's base, or
+#                               # wrote a spark-warehouse/ in the repo root
 #   tools/preflight.sh fast     # compile-only (mid-round sanity)
 #
 # Exits non-zero on any compile error, test failure or leaked temp entry.
@@ -28,15 +29,21 @@ if [[ "${1:-}" != "fast" ]]; then
   SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
   SPARK_LOCAL_DIRS=/tmp/spark-local
   export SPARK_GRAFT_CPUS SPARK_DRIVER_MEM SPARK_LOCAL_DIRS
-  # every spec temp dir lives under one per-JVM root its exit hook removes;
-  # a graft_* entry in /tmp newer than this marker is a leak, and so is a
-  # spark-warehouse/ in the repo root (a session built without a
+  # every spec temp dir lives under one per-JVM root its exit hook removes,
+  # and so does graft.util.Scratch's graft_run_* root (its base, resolved
+  # the same way: $SPARK_GRAFT_SCRATCH, else a writable /dev/shm, else
+  # /tmp); a graft_* entry in either newer than this marker is a leak, and
+  # so is a spark-warehouse/ in the repo root (a session built without a
   # spark.sql.warehouse.dir writes one into its working directory)
+  scratch_base="${SPARK_GRAFT_SCRATCH:-}"
+  if [[ -z "$scratch_base" ]]; then
+    if [[ -d /dev/shm && -w /dev/shm ]]; then scratch_base=/dev/shm; else scratch_base=/tmp; fi
+  fi
   marker="$(mktemp -p /tmp preflight_marker.XXXXXX)"
   trap 'rm -f "$marker"' EXIT
   echo "[preflight] sbt testOnly * (cpus=$SPARK_GRAFT_CPUS driver=$SPARK_DRIVER_MEM)"
   timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true "testOnly *"
-  leaked="$(find /tmp -maxdepth 1 -name 'graft_*' -newer "$marker"
+  leaked="$(find /tmp "$scratch_base" -maxdepth 1 -name 'graft_*' -newer "$marker" | sort -u
     find . -maxdepth 1 -name spark-warehouse -newer "$marker")"
   if [[ -n "$leaked" ]]; then
     echo "[preflight] FAIL: the test run left temp entries behind:" >&2
