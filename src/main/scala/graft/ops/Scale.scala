@@ -1149,7 +1149,7 @@ object Scale {
     * and both snapshots stay readable afterwards — `versionAsOf 1` pins the
     * pre-overwrite content, the unpinned read follows the head. Each job
     * commit is one atomic `_manifest-v{N}` link(2) claim (the filesystem CAS in
-    * [[graft.sources.GraftManifest.commit]]), so there is no moment where a
+    * [[graft.sources.GraftManifest.commitMetas]]), so there is no moment where a
     * reader can observe a half-replaced table. The history is built once
     * per (JVM, sf) — it is a pure function of sf, and re-appending versions
     * on every invocation would make "version 1" depend on call order. The

@@ -221,7 +221,7 @@ class AvroBatchWrite(path: String, schema: StructType, replace: Boolean,
     * REPLACES the committed set with this job's files; append MERGES the
     * prior set in, so earlier batches stay visible. Concurrency uses the
     * same link(2)-claimed GENERATION protocol as
-    * [[GraftManifest.commit]]: a plain read-merge-rename of one manifest
+    * [[GraftManifest.commitMetas]]: a plain read-merge-rename of one manifest
     * file is a lost update under two concurrent appenders (POSIX rename
     * silently replaces — the second committer's REPLACE_EXISTING move
     * erases the first's merge). Each commit instead claims

@@ -1216,12 +1216,8 @@ object GraftMaintenance {
           "@" + new java.io.File(dir, mv(n)).getPath
         case _ => pay
       }
-    val out = metas.map { m =>
-      m.copy(name = mv(m.name),
-        blooms = m.blooms.map { case (i, p) => i -> moveRef(p) },
-        pblooms = m.pblooms.map { case (i, (w, p)) => i -> (w, moveRef(p)) },
-        ngblooms = m.ngblooms.map { case (i, (w, p)) => i -> (w, moveRef(p)) })
-    }
+    val out = metas.map(m =>
+      m.copy(name = mv(m.name)).mapPayloads(moveRef))
     (out, movedNames.toSeq)
   }
 
@@ -1337,64 +1333,41 @@ object GraftMaintenance {
     * `compactIndex.minSidecars` policy's trigger measure. O(header)
     * manifest read, no payload bytes touched. */
   def pendingSidecars(dir: String): Int =
-    GraftManifest.readVersion(dir, None).fold(0)(_.metas.iterator.map(m =>
-      (m.blooms.values ++ (m.pblooms.values ++ m.ngblooms.values).map(_._2))
-        .count(pay => GraftBloomSidecars.isRef(pay) &&
-          GraftBloomSidecars.splitRef(pay.drop(1))._2.isEmpty)).sum)
+    GraftManifest.readVersion(dir, None).fold(0)(_.metas.iterator.map(
+      _.payloads.count(pay => GraftBloomSidecars.isRef(pay) &&
+        GraftBloomSidecars.splitRef(pay.drop(1))._2.isEmpty)).sum)
 
-  /** A rewrite must PRESERVE the table's secondary indexes: any column
-    * some head file carries a bloom filter or NDV sketch for gets the
-    * matching writer option, so compaction rebuilds the index for its
-    * fresh files instead of silently dropping it — an OPTIMIZE that
-    * forfeits every future point-lookup skip is maintenance making the
-    * table worse. */
+  /** A rewrite must PRESERVE the table's secondary indexes: every
+    * surface some head file carries ([[GraftIdx.of]] with the rebuild
+    * widths — a `!sat:w<N>` marker on every fact lands its suggested
+    * n-gram width) becomes the matching writer option, so the rewrite
+    * rebuilds the index for its fresh files instead of silently dropping
+    * it — an OPTIMIZE that forfeits every future point-lookup skip is
+    * maintenance making the table worse. `except` names columns whose
+    * facts must not carry (DROP COLUMN's victim: its data is gone). */
   def carryIndexes(head: GraftManifest,
       w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
       except: Set[String] = Set.empty)
       : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
     val fields = head.schemaDdl.map(StructType.fromDDL(_).fields)
       .getOrElse(Array.empty)
-    def cols(sel: GraftFileMeta => Iterable[Int]): Seq[String] =
-      head.metas.flatMap(sel).distinct.sorted
-        .flatMap(i => fields.lift(i).map(_.name))
-        .filterNot(except).toSeq
-    val blooms = cols(_.blooms.keys)
-    val ndvs = cols(_.ndvs.keys)
-    // a column is centroid-indexed if ANY fact names it — per-file OR
-    // per-row-group (a file whose per-file mean was poisoned by a null
-    // element may still carry sound group facts, and vice versa)
-    val cens = cols(m => m.centroids.keys ++ m.rgcens.keys)
-    // prefix blooms carry their width: first fact wins per column (all
-    // writers of one table option the same width in practice; a mixed
-    // history converges on the rewrite)
-    val pbls: Seq[String] = head.metas.flatMap(_.pblooms.toSeq)
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .flatMap { case (i, ws) =>
-        fields.lift(i).filterNot(f => except(f.name))
-          .map(f => s"${f.name}:${ws.head._2._1}") }
-    val ngbs: Seq[String] = head.metas.flatMap(_.ngblooms.toSeq)
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .flatMap { case (i, ws) =>
-        // MIN width on record, like idxOf: auto-widening can leave one
-        // saturated file at w+2, and rebuilding the whole table at the
-        // widened width would cost every narrow probe its pruning —
-        // UNLESS a `!sat:w<N>` marker proves every tracked width dead
-        // on some file's data, in which case the suggested width wins
-        // (round 17): this is how OPTIMIZE lands the viable width
-        fields.lift(i).filterNot(f => except(f.name))
-          .map(f =>
-            s"${f.name}:${GraftBloomSidecars.rebuildWidth(ws.map(_._2))}") }
-    val w1 = if (blooms.nonEmpty) w.option("bloomFor", blooms.mkString(",")) else w
-    val w2 = if (ndvs.nonEmpty) w1.option("ndvFor", ndvs.mkString(",")) else w1
-    val w3 = if (cens.nonEmpty) w2.option("centroidFor", cens.mkString(",")) else w2
-    val w4 = if (pbls.nonEmpty) w3.option("prefixBloomFor", pbls.mkString(",")) else w3
-    val w5 = if (ngbs.nonEmpty) w4.option("ngramBloomFor", ngbs.mkString(",")) else w4
-    // row-group centroid granularity survives rewrites too: a compaction
-    // that silently coarsened the ANN index to file level would forfeit
-    // every future sub-file skip (cens guard: the granularity option
-    // without any surviving centroidFor column would be a dangling knob)
-    if (cens.nonEmpty && head.metas.exists(_.rgcens.nonEmpty))
-      w5.option("centroidGranularity", "rowgroup") else w5
+    val ix = GraftIdx.of(head.metas, GraftBloomSidecars.rebuildWidth)
+    def name(i: Int): Option[String] =
+      fields.lift(i).map(_.name).filterNot(except)
+    def widths(ws: Seq[(Int, Int)]): Seq[String] =
+      ws.flatMap { case (i, wd) => name(i).map(n => s"$n:$wd") }
+    val cens = ix.cen.flatMap(name)
+    Seq("bloomFor" -> ix.bloom.flatMap(name), "ndvFor" -> ix.ndv.flatMap(name),
+      "centroidFor" -> cens, "prefixBloomFor" -> widths(ix.pbloom),
+      "ngramBloomFor" -> widths(ix.ngram),
+      // row-group centroid granularity survives rewrites too: a
+      // compaction that silently coarsened the ANN index to file level
+      // would forfeit every future sub-file skip (cens guard: the
+      // granularity option without any surviving centroidFor column
+      // would be a dangling knob)
+      "centroidGranularity" -> (if (cens.nonEmpty && ix.rgcen) Seq("rowgroup") else Nil))
+      .foldLeft(w) { case (acc, (k, vs)) =>
+        if (vs.isEmpty) acc else acc.option(k, vs.mkString(",")) }
   }
 
   /** Incremental (small-files-only) compaction; see
@@ -1564,7 +1537,6 @@ object GraftMaintenance {
     // driver memory at a time, never the table's whole filter volume
     // (10⁵ files × 1.4 MB caps would be a 140 GB buffer otherwise);
     // ranges are assigned as bytes land, rotating at the target size
-    val refOf = scala.collection.mutable.Map.empty[(Int, Int, Int), String]
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     var out: java.io.OutputStream = null
     var curLen = 0L
@@ -1580,42 +1552,43 @@ object GraftMaintenance {
       Files.deleteIfExists(Paths.get(dir, n + ".tmp"))
       Files.deleteIfExists(Paths.get(dir, n)); ()
     }
-    try {
-      head.metas.zipWithIndex.foreach { case (m, mi) =>
-        def add(kind: Int, col: Int, pay: String): Unit =
-          if (GraftBloomSidecars.isRef(pay) &&
-              !(pendingOnly &&
-                GraftBloomSidecars.splitRef(pay.drop(1))._2.isDefined)) {
-            val s = GraftBloomSidecars.resolve(pay)
-            // an unreadable sidecar resolves to the saturated sentinel:
-            // keep the ORIGINAL ref rather than freezing the transient
-            // degrade into durable bundle bytes
-            if (!GraftBloomSidecars.isSaturated(s)) {
-              val bytes = s.getBytes(StandardCharsets.UTF_8)
-              if (out == null || (curLen > 0 &&
-                  curLen + bytes.length > GraftBloomSidecars.BundleTargetBytes)) {
-                closeOut()
-                // createTempFile's random token makes the name unique
-                // PER ATTEMPT: racing compactions write disjoint files,
-                // so a lost commit's cleanup deletes only its own
-                val tmp = Files.createTempFile(Paths.get(dir),
-                  s"idx-$headV-${names.size}-", ".idb.tmp")
-                names += tmp.getFileName.toString.stripSuffix(".tmp")
-                out = Files.newOutputStream(tmp)
-                curLen = 0L
-              }
-              refOf((mi, kind, col)) = "@" + new File(dir, names.last).getPath +
-                s":$curLen:${bytes.length}"
-              out.write(bytes)
-              curLen += bytes.length
-              payloads += 1
-            }
+    // each bundled payload's ref names its final bundle (still `.tmp` on
+    // disk until every bundle is written and moved, below)
+    def bundled(pay: String): String =
+      if (GraftBloomSidecars.isRef(pay) &&
+          !(pendingOnly &&
+            GraftBloomSidecars.splitRef(pay.drop(1))._2.isDefined)) {
+        val s = GraftBloomSidecars.resolve(pay)
+        // an unreadable sidecar resolves to the saturated sentinel:
+        // keep the ORIGINAL ref rather than freezing the transient
+        // degrade into durable bundle bytes
+        if (GraftBloomSidecars.isSaturated(s)) pay
+        else {
+          val bytes = s.getBytes(StandardCharsets.UTF_8)
+          if (out == null || (curLen > 0 &&
+              curLen + bytes.length > GraftBloomSidecars.BundleTargetBytes)) {
+            closeOut()
+            // createTempFile's random token makes the name unique
+            // PER ATTEMPT: racing compactions write disjoint files,
+            // so a lost commit's cleanup deletes only its own
+            val tmp = Files.createTempFile(Paths.get(dir),
+              s"idx-$headV-${names.size}-", ".idb.tmp")
+            names += tmp.getFileName.toString.stripSuffix(".tmp")
+            out = Files.newOutputStream(tmp)
+            curLen = 0L
           }
-        m.blooms.toSeq.sortBy(_._1).foreach { case (i, p) => add(0, i, p) }
-        m.pblooms.toSeq.sortBy(_._1).foreach { case (i, (_, p)) => add(1, i, p) }
-        m.ngblooms.toSeq.sortBy(_._1).foreach { case (i, (_, p)) => add(2, i, p) }
-      }
+          val ref = "@" + new File(dir, names.last).getPath +
+            s":$curLen:${bytes.length}"
+          out.write(bytes)
+          curLen += bytes.length
+          payloads += 1
+          ref
+        }
+      } else pay
+    val newMetas = try {
+      val ms = head.metas.map(_.mapPayloads(bundled))
       if (payloads == 0) return (0, 0, headV)
+      ms
     } catch { case e: Throwable =>
       closeOut(); dropStaged(); throw e
     } finally closeOut()
@@ -1624,15 +1597,6 @@ object GraftMaintenance {
         StandardCopyOption.ATOMIC_MOVE)
     } catch { case e: Throwable => dropStaged(); throw e }
     val bundles = names
-    val newMetas = head.metas.zipWithIndex.map { case (m, mi) =>
-      m.copy(
-        blooms = m.blooms.map { case (i, p) =>
-          i -> refOf.getOrElse((mi, 0, i), p) },
-        pblooms = m.pblooms.map { case (i, (w, p)) =>
-          i -> (w, refOf.getOrElse((mi, 1, i), p)) },
-        ngblooms = m.ngblooms.map { case (i, (w, p)) =>
-          i -> (w, refOf.getOrElse((mi, 2, i), p)) })
-    }
     val nv =
       try GraftManifest.commitMetas(dir, newMetas,
         head.schemaDdl.getOrElse(throw new IllegalStateException(

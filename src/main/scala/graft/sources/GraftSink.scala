@@ -35,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `Files.createLink`) — the filesystem primitive that atomically
   *    FAILS on an existing target, i.e. a real compare-and-swap. POSIX
   *    rename silently replaces, so rename can never claim a slot (see
-  *    [[GraftManifest.commit]]); a losing committer re-reads the new head
+  *    [[GraftManifest.commitMetas]]); a losing committer re-reads the new head
   *    and retries at N+1. Part-file names additionally carry a
   *    per-write-query tag, so append jobs from DIFFERENT applications
   *    cannot collide on (partitionId, taskId) and clobber each other's
@@ -199,6 +199,25 @@ case class GraftFileMeta(name: String, rows: Long, ncols: Int,
     * `stats` — a widened envelope only may-matches more / proves less. */
   def exactStats(i: Int): Option[(String, String)] =
     if (bounds(i)) None else stats.get(i)
+
+  /** Every bloom-family payload of this file — `#bloom`, then `#pbloom`,
+    * then `#ngbloom`, each in column order: the one walk the sidecar
+    * consumers share (vacuum keep-sets, eager cleanup, rewrite moves,
+    * index compaction). */
+  def payloads: Seq[String] =
+    blooms.toSeq.sortBy(_._1).map(_._2) ++
+      pblooms.toSeq.sortBy(_._1).map(_._2._2) ++
+      ngblooms.toSeq.sortBy(_._1).map(_._2._2)
+
+  /** This file with each payload replaced by `f(payload)`, widths kept;
+    * `f` runs once per payload, in [[payloads]] order. */
+  def mapPayloads(f: String => String): GraftFileMeta = {
+    def wide(m: Map[Int, (Int, String)]): Map[Int, (Int, String)] =
+      m.toSeq.sortBy(_._1).map { case (i, (w, p)) => i -> (w, f(p)) }.toMap
+    val b = blooms.toSeq.sortBy(_._1).map { case (i, p) => i -> f(p) }.toMap
+    val pb = wide(pblooms)
+    copy(blooms = b, pblooms = pb, ngblooms = wide(ngblooms))
+  }
 }
 
 /** One ROW GROUP's centroid fact (round 15, VERDICT r14 next #5): the
@@ -214,12 +233,14 @@ case class GraftFileMeta(name: String, rows: Long, ncols: Int,
   * splits without reading any footer at plan time. */
 case class GraftRgCen(start: Long, end: Long, rows: Long, b64: String)
 
-/** The table's INDEXED-COLUMN sets as one `#idx=` HEADER fact (layout
-  * positions): bloom / NDV (round 11), prefix-bloom with widths, vector
-  * centroids, and whether centroids are row-group-granular (round 15).
-  * What lets a per-epoch streaming commit — and any other O(header)
-  * consumer — rebuild EVERY index surface for its fresh files without
-  * folding the chain's per-file facts. */
+/** The table's INDEXED-COLUMN sets (layout positions): bloom / NDV
+  * (round 11), prefix-bloom with widths, vector centroids, whether
+  * centroids are row-group-granular (round 15), and n-gram bloom with
+  * widths. Two roles, one value: the `#idx=` HEADER fact — what lets a
+  * per-epoch streaming commit, and any other O(header) consumer, rebuild
+  * EVERY index surface for its fresh files without folding the chain's
+  * per-file facts — and the index plan every task writer takes
+  * ([[GraftSinkWriter]]'s `idx`, positions of its write schema). */
 case class GraftIdx(bloom: Seq[Int], ndv: Seq[Int],
     pbloom: Seq[(Int, Int)] = Nil, cen: Seq[Int] = Nil,
     rgcen: Boolean = false, ngram: Seq[(Int, Int)] = Nil,
@@ -237,6 +258,121 @@ case class GraftIdx(bloom: Seq[Int], ndv: Seq[Int],
     rgcen || o.rgcen,
     widthUnion(ngram, o.ngram),
     (extra ++ o.extra).distinct)
+}
+
+object GraftIdx {
+  val Empty: GraftIdx = GraftIdx(Nil, Nil)
+
+  /** The index surfaces `metas` carry — the ONLY code that reads them off
+    * per-file facts (`#idx` recompute, the legacy-head streaming fold, DML
+    * re-inserts, OPTIMIZE / DROP COLUMN). A column is centroid-indexed if
+    * ANY fact names it, per-file OR per-row-group (a file whose per-file
+    * mean was poisoned by a null element may still carry sound group
+    * facts). Prefix widths: first fact wins per column (one table = one
+    * width in practice). `ngramWidth` picks a column's n-gram width from
+    * its recorded (width, payload) facts: by default the MIN on record —
+    * auto-widening (round 16) can leave a saturated file at w+2, and the
+    * table's BASE width is the narrowest — while the rewrites that rebuild
+    * the filters pass [[GraftBloomSidecars.rebuildWidth]], which lets a
+    * `!sat:w<N>` suggestion land (round 17). */
+  def of(metas: Seq[GraftFileMeta],
+      ngramWidth: Seq[(Int, String)] => Int = _.map(_._1).min): GraftIdx = {
+    def cols(sel: GraftFileMeta => Iterable[Int]): Seq[Int] =
+      metas.flatMap(sel).distinct.sorted
+    def widths(facts: Seq[(Int, (Int, String))],
+        pick: Seq[(Int, String)] => Int): Seq[(Int, Int)] =
+      facts.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (i, ws) => (i, pick(ws.map(_._2))) }
+    GraftIdx(cols(_.blooms.keys), cols(_.ndvs.keys),
+      widths(metas.flatMap(_.pblooms.toSeq), _.head._1),
+      cols(m => m.centroids.keys ++ m.rgcens.keys),
+      metas.exists(_.rgcens.nonEmpty),
+      widths(metas.flatMap(_.ngblooms.toSeq), ngramWidth))
+  }
+
+  /** The index plan a batch write DECLARES through its options, in
+    * positions of the write `schema` — the one parser of the six index
+    * options, validated at plan time so a bad declaration fails before
+    * any task runs:
+    *  - `bloomFor=col,...`: per-(file, column) bloom of the canonical
+    *    cell strings — point-lookup skipping for columns the layout does
+    *    not cluster ([[GraftBloom]]). Long/string only: double formatting
+    *    is not canonical enough to probe byte-exactly.
+    *  - `ndvFor=col,...` or `*`: per-(file, column) HyperLogLog registers
+    *    ([[GraftHll]]) — write-time distinct counts the scan merges and
+    *    reports as DSv2 column statistics. `*` names every column; the
+    *    writer skips the ones with no canonical cell.
+    *  - `prefixBloomFor=col[:width],...` (round 15): bloom of each value's
+    *    first `width` chars (default 4) — `LIKE 'p%'` skipping on layouts
+    *    the stats envelopes can't prune. Sound because a value can start
+    *    with probe p (|p| >= w) only if its own w-prefix equals p's.
+    *  - `ngramBloomFor=col[:width],...` (round 15): bloom of EVERY
+    *    `width`-char window (the pg_trgm idea at file granularity) —
+    *    `LIKE '%s%'` skipping, which no order-based fact can serve. A
+    *    value containing p (|p| >= w) contains every w-window of p, so
+    *    ANY absent window proves no row matches. O(chars) hashes per row.
+    *  - `centroidFor=col,...` (round 14): the double-accumulated MEAN of
+    *    each file's array<float|double> vectors — the fact an `annProbe`
+    *    read routes on.
+    *  - `centroidGranularity=file|rowgroup` (round 15): `rowgroup` also
+    *    records one `#rgcen` mean per parquet row group — sub-file ANN
+    *    routing for one projected re-read of the vector columns per file
+    *    at write time. Parquet-only: row groups are a parquet shape. */
+  def fromOptions(opts: CaseInsensitiveStringMap, schema: StructType,
+      format: String): GraftIdx = {
+    def list(k: String): Seq[String] = Option(opts.get(k)).filter(_.nonEmpty)
+      .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
+    def typed(k: String, c: String, what: String)(ok: DataType => Boolean): Int = {
+      val i = scala.util.Try(schema.fieldIndex(c)).getOrElse(
+        throw new IllegalArgumentException(
+          s"graft-sink: $k column '$c' not in write schema"))
+      val dt = schema.fields(i).dataType
+      if (!ok(dt)) throw new IllegalArgumentException(
+        s"graft-sink: $k supports $what, got $dt for '$c'")
+      i
+    }
+    def strings(k: String, default: Int, lo: Int, hi: Int): Seq[(Int, Int)] =
+      list(k).map(spec => spec.split(":") match {
+        case Array(c) => (c, default)
+        case Array(c, w) if scala.util.Try(w.toInt).toOption
+            .exists(x => x >= lo && x <= hi) => (c, w.toInt)
+        case _ => throw new IllegalArgumentException(
+          s"graft-sink: $k entry '$spec' must be " +
+            s"col or col:width with width in $lo..$hi")
+      }).map { case (c, w) => (typed(k, c, "string only")(_ == StringType), w) }
+    val bloom = list("bloomFor").map(c =>
+      typed("bloomFor", c, "long/string")(dt => dt == LongType || dt == StringType))
+    val pbloom = strings("prefixBloomFor", GraftBloom.DefaultPrefixWidth, 1, 64)
+    val ngram = strings("ngramBloomFor", GraftBloom.DefaultNgramWidth, 2, 16)
+    val ndv =
+      if (Option(opts.get("ndvFor")).exists(_.trim == "*")) schema.indices
+      else list("ndvFor").map { c =>
+        require(scala.util.Try(schema.fieldIndex(c)).isSuccess,
+          s"graft-sink: ndvFor column '$c' not in write schema")
+        schema.fieldIndex(c)
+      }
+    val cen = list("centroidFor").map(c =>
+      typed("centroidFor", c, "array<float|double>") {
+        case ArrayType(org.apache.spark.sql.types.FloatType, _) |
+             ArrayType(DoubleType, _) => true
+        case _ => false
+      })
+    val rgcen = Option(opts.get("centroidGranularity")).filter(_.nonEmpty).exists {
+      case "file"     => false
+      case "rowgroup" => true
+      case other => throw new IllegalArgumentException(
+        "graft-sink: centroidGranularity must be file|rowgroup, " +
+          s"got '$other'")
+    }
+    if (rgcen) {
+      require(cen.nonEmpty,
+        "graft-sink: centroidGranularity=rowgroup needs centroidFor")
+      require(format == GraftFormat.Parquet,
+        "graft-sink: centroidGranularity=rowgroup is parquet-only " +
+          s"(table format is $format)")
+    }
+    GraftIdx(bloom, ndv, pbloom, cen, rgcen, ngram)
+  }
 }
 
 /** One EQUALITY-DELETE sidecar (the Iceberg equality-delete design,
@@ -1400,19 +1536,6 @@ object GraftManifest {
       // head (no #idx) omits the line — a partial set would lie to the
       // O(header) consumers — so legacy tables upgrade at their next
       // full commit.
-      def idxOf(ms: Seq[GraftFileMeta]): GraftIdx = GraftIdx(
-        ms.flatMap(_.blooms.keys).distinct.sorted,
-        ms.flatMap(_.ndvs.keys).distinct.sorted,
-        ms.flatMap(_.pblooms.toSeq).groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (i, ws) => (i, ws.head._2._1) },
-        ms.flatMap(m => m.centroids.keys ++ m.rgcens.keys).distinct.sorted,
-        ms.exists(_.rgcens.nonEmpty),
-        // MIN width, not head: auto-widening (round 16) can leave a
-        // saturated file at w+2 — the table's BASE width is the
-        // narrowest on record, and rebuilds re-widen per file as the
-        // data demands
-        ms.flatMap(_.ngblooms.toSeq).groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (i, ws) => (i, ws.map(_._2._1).min) })
       val common = GraftManifest(next, Nil, newTotal, Some(unionDdl), Some(commitTs),
         op = op, ids = Some(ids), checks = checks, partSpec = partSpec,
         sortSpec = sortSpec, format = format, props = props)
@@ -1423,7 +1546,7 @@ object GraftManifest {
           // head without one leaves it absent until the next checkpoint
           nFiles = head.flatMap(_.nFiles).map(_ + jobStamped.size),
           eqDels = eqDels0,
-          idxCols = head.flatMap(_.idxCols).map(_.union(idxOf(jobStamped)))))
+          idxCols = head.flatMap(_.idxCols).map(_.union(GraftIdx.of(jobStamped)))))
         else {
           require(all.map(_.liveRows).sum == newTotal,
             s"graft-sink: checkpoint fold at $path disagrees with the running total")
@@ -1440,9 +1563,8 @@ object GraftManifest {
             // forward-compat `extra` segments — a checkpoint must not
             // drop a newer writer's surface declaration the deltas have
             // been faithfully unioning forward (round 16)
-            idxCols = Some(headFolded.flatMap(_.idxCols)
-              .map(h => idxOf(all).copy(extra = h.extra))
-              .getOrElse(idxOf(all)))))
+            idxCols = Some(GraftIdx.of(all).copy(extra =
+              headFolded.flatMap(_.idxCols).map(_.extra).getOrElse(Nil)))))
         }
       // a MULTI-TABLE-TXN claim lands invisible behind its marker line
       val claimBody = pendingMarker
@@ -1748,9 +1870,7 @@ object GraftManifest {
         m0.metas.flatMap(m => m.name +: (m.dv.map(_._1).toSeq ++
           // bloom sidecars (round 16): a reclaimed payload would fail
           // the lazy fetch at the next probe that consults the filter
-          (m.pblooms.values ++ m.ngblooms.values)
-            .flatMap(f => GraftBloomSidecars.refName(f._2)) ++
-          m.blooms.values.flatMap(GraftBloomSidecars.refName))) ++
+          GraftBloomSidecars.refsOf(m))) ++
           // pending equality-delete sidecars: reclaiming one would
           // resurrect its deleted keys on the next read
           m0.eqDels.map(_.sidecar)))
@@ -1760,10 +1880,7 @@ object GraftManifest {
       // the batch out from under its publish. A corrupt stage fails the
       // vacuum loudly (same rule as corrupt _ref- files).
       wapIds(path).flatMap(id => readWap(path, id)._1.metas.flatMap(m =>
-        m.name +: (m.dv.map(_._1).toSeq ++
-          (m.pblooms.values ++ m.ngblooms.values)
-            .flatMap(f => GraftBloomSidecars.refName(f._2)) ++
-          m.blooms.values.flatMap(GraftBloomSidecars.refName)))).toSet
+        m.name +: (m.dv.map(_._1).toSeq ++ GraftBloomSidecars.refsOf(m)))).toSet
     dropped.foreach(v => Files.deleteIfExists(Paths.get(path, s"$VPrefix$v")))
     val cutoff = System.currentTimeMillis() - graceMs
     val listing = Option(new File(path).listFiles()).getOrElse(Array.empty)
@@ -2089,7 +2206,7 @@ object GraftBloomSidecars {
     * PLAIN `!sat` (ADVICE r17: the writer proved NO tracked width
     * viable for that file's data) must not let a sibling's suggestion
     * force a whole-column rebuild at a width already known dead there;
-    * otherwise the MIN width on record (idxOf's note). Dense data
+    * otherwise the MIN width on record ([[GraftIdx.of]]'s note). Dense data
     * merged with healthy data re-saturates and re-suggests on its own
     * next rewrite. */
   def rebuildWidth(ws: Seq[(Int, String)]): Int = {
@@ -2293,8 +2410,7 @@ object GraftBloomSidecars {
   /** Every sidecar file name a meta's bloom facts reference — the
     * cleanup surface (vacuum keep-sets, eager abort deletion). */
   def refsOf(m: GraftFileMeta): Seq[String] =
-    ((m.pblooms.values ++ m.ngblooms.values).map(_._2) ++ m.blooms.values)
-      .flatMap(refName).toSeq
+    m.payloads.flatMap(refName)
   /** Test hook: force the next resolve to hit disk (loads-counting). */
   def dropCache(): Unit = {
     cache.clear(); bundleCache.clear(); bundleCacheBytes.set(0L)
@@ -2777,98 +2893,6 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
         // audit label for the commit's `#op=` line; maintenance rewrites
         // (OPTIMIZE/RESTORE run as ordinary overwrites) pass their verb
         private val opLabel = Option(opts.get("operation")).filter(_.nonEmpty)
-        // BLOOM FILTERS (`bloomFor=col,...`): each task records a
-        // per-(file, column) bloom of the canonical cell strings in its
-        // commit message — point-lookup skipping for columns the layout
-        // does not cluster ([[GraftBloom]]). Long/string only: double
-        // formatting is not canonical enough to probe byte-exactly.
-        private val bloomFor = Option(opts.get("bloomFor")).filter(_.nonEmpty)
-          .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
-        bloomFor.foreach { c =>
-          val i = scala.util.Try(info.schema().fieldIndex(c)).getOrElse(
-            throw new IllegalArgumentException(
-              s"graft-sink: bloomFor column '$c' not in write schema"))
-          info.schema().fields(i).dataType match {
-            case LongType | StringType => ()
-            case dt => throw new IllegalArgumentException(
-              s"graft-sink: bloomFor supports long/string, got $dt for '$c'")
-          }
-        }
-        // PREFIX BLOOMS (`prefixBloomFor=col[:width],...`, round 15):
-        // per-(file, column) bloom of each value's first `width` chars
-        // (default 4) — `LIKE 'p%'` file skipping on layouts the stats
-        // envelopes can't prune (hash-scattered strings, where every
-        // file's min/max spans the domain). String columns only; sound
-        // because a value can start with probe p (|p| >= w) only if its
-        // own w-prefix equals p's w-prefix.
-        private val prefixBloomFor: Seq[(String, Int)] =
-          Option(opts.get("prefixBloomFor")).filter(_.nonEmpty)
-            .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
-            .map { spec =>
-              spec.split(":") match {
-                case Array(c) => (c, GraftBloom.DefaultPrefixWidth)
-                case Array(c, w) if scala.util.Try(w.toInt).toOption
-                    .exists(x => x >= 1 && x <= 64) => (c, w.toInt)
-                case _ => throw new IllegalArgumentException(
-                  s"graft-sink: prefixBloomFor entry '$spec' must be " +
-                    "col or col:width with width in 1..64")
-              }
-            }
-        prefixBloomFor.foreach { case (c, _) =>
-          val i = scala.util.Try(info.schema().fieldIndex(c)).getOrElse(
-            throw new IllegalArgumentException(
-              s"graft-sink: prefixBloomFor column '$c' not in write schema"))
-          info.schema().fields(i).dataType match {
-            case StringType => ()
-            case dt => throw new IllegalArgumentException(
-              s"graft-sink: prefixBloomFor supports string only, got $dt for '$c'")
-          }
-        }
-        // N-GRAM BLOOMS (`ngramBloomFor=col[:width],...`, round 15): a
-        // per-(file, column) bloom of EVERY `width`-char window of each
-        // value (the pg_trgm idea at file granularity) — `LIKE '%s%'`
-        // (contains) file skipping, which no order-based fact can serve.
-        // Sound: a value containing probe p (|p| >= w) contains every
-        // w-window of p, so ANY absent window proves no row matches;
-        // prefix/suffix/equality probes imply contains and reuse it.
-        // Write cost is O(chars) hashes per row — opt-in, meant for
-        // short-to-medium strings (urls, paths, log messages).
-        private val ngramBloomFor: Seq[(String, Int)] =
-          Option(opts.get("ngramBloomFor")).filter(_.nonEmpty)
-            .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
-            .map { spec =>
-              spec.split(":") match {
-                case Array(c) => (c, GraftBloom.DefaultNgramWidth)
-                case Array(c, w) if scala.util.Try(w.toInt).toOption
-                    .exists(x => x >= 2 && x <= 16) => (c, w.toInt)
-                case _ => throw new IllegalArgumentException(
-                  s"graft-sink: ngramBloomFor entry '$spec' must be " +
-                    "col or col:width with width in 2..16")
-              }
-            }
-        ngramBloomFor.foreach { case (c, _) =>
-          val i = scala.util.Try(info.schema().fieldIndex(c)).getOrElse(
-            throw new IllegalArgumentException(
-              s"graft-sink: ngramBloomFor column '$c' not in write schema"))
-          info.schema().fields(i).dataType match {
-            case StringType => ()
-            case dt => throw new IllegalArgumentException(
-              s"graft-sink: ngramBloomFor supports string only, got $dt for '$c'")
-          }
-        }
-        // NDV SKETCHES (`ndvFor=col,...` or `*`): per-(file, column)
-        // HyperLogLog registers in the commit message ([[GraftHll]]) —
-        // write-time distinct counts the scan merges and reports as
-        // DSv2 column statistics for cost-based optimization.
-        private val ndvFor = Option(opts.get("ndvFor")).filter(_.nonEmpty)
-          .map { v =>
-            if (v.trim == "*") info.schema().fieldNames.toSeq
-            else v.split(",").map(_.trim).toSeq
-          }.getOrElse(Nil)
-        ndvFor.foreach { c =>
-          require(scala.util.Try(info.schema().fieldIndex(c)).isSuccess,
-            s"graft-sink: ndvFor column '$c' not in write schema")
-        }
         private def asc(c: String): org.apache.spark.sql.connector.expressions.SortOrder =
           Expressions.sort(Expressions.column(c),
             org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)
@@ -2909,6 +2933,10 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
         // (cell codec + file suffix) and the commit (header line).
         private val fileFormat =
           GraftFormat.resolve(Option(opts.get("format")).filter(_.nonEmpty), path)
+        // the INDEX PLAN this write declares (bloom / NDV / prefix and
+        // n-gram bloom / centroid options): a plain batch write takes its
+        // surfaces from its options only
+        private val idx = GraftIdx.fromOptions(opts, info.schema(), fileFormat)
         // UPSERT-BY-KEY (`upsertKey=<col>`): the batch's rows land as
         // ordinary appends PLUS an equality-delete sidecar of their keys
         // — MERGE semantics in O(changed keys), the target never read.
@@ -2923,45 +2951,6 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
         // granularity knob of the reader's row-group skipping
         private val rowGroupBytes =
           Option(opts.get("rowGroupBytes")).filter(_.nonEmpty).map(_.toInt)
-        // PER-FILE VECTOR CENTROIDS (`centroidFor=col,...`, round 14):
-        // each task records the double-accumulated MEAN of the column's
-        // vectors per file — the manifest fact an `annProbe` read routes
-        // on (nprobe-nearest-centroid file pruning at plan time).
-        // array<float>/array<double> only.
-        private val centroidFor = Option(opts.get("centroidFor"))
-          .filter(_.nonEmpty).map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
-        centroidFor.foreach { c =>
-          val i = scala.util.Try(info.schema().fieldIndex(c)).getOrElse(
-            throw new IllegalArgumentException(
-              s"graft-sink: centroidFor column '$c' not in write schema"))
-          info.schema().fields(i).dataType match {
-            case ArrayType(org.apache.spark.sql.types.FloatType, _) |
-                 ArrayType(org.apache.spark.sql.types.DoubleType, _) => ()
-            case dt => throw new IllegalArgumentException(
-              s"graft-sink: centroidFor supports array<float|double>, got $dt for '$c'")
-          }
-        }
-        // ROW-GROUP GRANULARITY (round 15, VERDICT r14 next #5):
-        // `centroidGranularity=rowgroup` additionally records one
-        // `#rgcen` mean per parquet row group — sub-file ANN routing —
-        // at the cost of one projected re-read of the vector columns per
-        // file at write time (opt-in; the per-file fact stays free).
-        // Parquet-only: row groups are a parquet shape.
-        private val rgCentroids = Option(opts.get("centroidGranularity"))
-          .filter(_.nonEmpty).map {
-            case "file"     => false
-            case "rowgroup" => true
-            case other => throw new IllegalArgumentException(
-              "graft-sink: centroidGranularity must be file|rowgroup, " +
-                s"got '$other'")
-          }.getOrElse(false)
-        if (rgCentroids) {
-          require(centroidFor.nonEmpty,
-            "graft-sink: centroidGranularity=rowgroup needs centroidFor")
-          require(fileFormat == GraftFormat.Parquet,
-            "graft-sink: centroidGranularity=rowgroup is parquet-only " +
-              s"(table format is $fileFormat)")
-        }
         // AUTO-MAINTENANCE POLICY (round 14, VERDICT r13 next #1 — the
         // streamed-sorted-table papercut): `autoOptimize.smallFiles=N`
         // arms a post-commit hook that counts files THIS writer appends
@@ -2992,11 +2981,9 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
         override def toBatch: BatchWrite =
           new GraftSinkBatchWrite(path, info.schema(), truncating, tag,
             expectedBase, evolve, partCol, opLabel, replaceWhere,
-            wapStage = wapStage, bloomFor = bloomFor, ndvFor = ndvFor,
+            wapStage = wapStage, idx = idx,
             sortCol = sortCol, format = fileFormat, upsertKey = upsertKeyOpt,
-            rowGroupBytes = rowGroupBytes, centroidFor = centroidFor,
-            autoOpt = autoOpt, prefixBloomFor = prefixBloomFor,
-            rgCentroids = rgCentroids, ngramBloomFor = ngramBloomFor)
+            rowGroupBytes = rowGroupBytes, autoOpt = autoOpt)
         override def toStreaming: StreamingWrite = {
           // partCol includes the declared-spec default: a streaming
           // ingest into a PARTITIONED BY table conforms like any batch
@@ -4176,8 +4163,6 @@ object GraftSinkScan {
   private def hasCol(layout: StructType, c: String): Boolean =
     scala.util.Try(layout.fieldIndex(c)).isSuccess
 
-  /** Typed three-way compare of the manifest's string-form stats (shared
-    * with the aggregate-pushdown fold). */
   /** Public: the ONE stats order (ops-layer REQUIREs assert against it). */
   def cmpStats(dt: DataType, a: String, b: String): Int = cmp(dt, a, b)
   private def cmp(dt: DataType, a: String, b: String): Int = dt match {
@@ -5386,18 +5371,13 @@ class GraftSinkBatchWrite(path: String, schema: StructType, truncate: Boolean,
     replaceWhere: Option[Seq[Filter]] = None,
     declaredSpec: Option[Option[String]] = None,
     wapStage: Option[String] = None,
-    bloomFor: Seq[String] = Nil,
-    ndvFor: Seq[String] = Nil,
+    idx: GraftIdx = GraftIdx.Empty,
     sortCol: Option[String] = None,
     format: String = GraftFormat.Default,
     upsertKey: Option[String] = None,
     rowGroupBytes: Option[Int] = None,
-    centroidFor: Seq[String] = Nil,
     autoOpt: Option[GraftAutoOptimize] = None,
-    propsSet: Option[Map[String, String]] = None,
-    prefixBloomFor: Seq[(String, Int)] = Nil,
-    rgCentroids: Boolean = false,
-    ngramBloomFor: Seq[(String, Int)] = Nil) extends BatchWrite {
+    propsSet: Option[Map[String, String]] = None) extends BatchWrite {
   /** Writer factory — resolved at JOB START on the driver, including the
     * head's CHECK constraints: every task writer enforces them per row,
     * so a violating batch aborts before any manifest commit (nothing
@@ -5406,10 +5386,8 @@ class GraftSinkBatchWrite(path: String, schema: StructType, truncate: Boolean,
     new GraftSinkWriterFactory(path, schema, tag, partCol,
       GraftManifest.versions(path).lastOption
         .map(v => GraftManifest.headerFacts(path, v).checks).getOrElse(Nil),
-      bloomFor, ndvFor, format, upsertKey, rowGroupBytes, centroidFor,
-      prefixBloomFor, rgCentroids,
-      reverseFor = sortCol.flatMap(GraftManifest.reverseCol),
-      ngramBloomFor = ngramBloomFor)
+      idx, format, upsertKey, rowGroupBytes,
+      reverseFor = sortCol.flatMap(GraftManifest.reverseCol))
 
   /** Job commit: the atomic point. Only files named by task commits enter
     * the manifest; half-written .tmp files are invisible to readers. */
@@ -5667,33 +5645,18 @@ class GraftDeltaBatchWrite(path: String, schema: StructType, tag: String,
     extends DeltaBatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     // re-inserted rows (UPDATE/MERGE) must REBUILD the table's secondary
-    // indexes, not silently drop them: derive bloom/NDV columns from the
-    // base snapshot's per-file index facts (same rule as OPTIMIZE)
+    // indexes, not silently drop them: every surface derives from the
+    // base snapshot's per-file facts with OPTIMIZE's rebuild widths (a
+    // `!sat:w<N>` suggestion lands here too); the declared reverse(...)
+    // layout arms `#rvstats` through the sortSpec header fact
     val base = GraftManifest.readVersion(path, Some(baseVersion))
-    def idxCols(sel: GraftFileMeta => Iterable[Int]): Seq[String] =
-      base.map(_.metas.flatMap(sel).distinct.sorted
-        .flatMap(i => schema.fields.lift(i).map(_.name)).toSeq).getOrElse(Nil)
     val hdr = GraftManifest.headerFacts(path, baseVersion)
-    GraftDeltaWriterFactory(path, schema, tag, partCol,
-      hdr.checks,
-      idxCols(_.blooms.keys), idxCols(_.ndvs.keys),
+    GraftDeltaWriterFactory(path, schema, tag, partCol, hdr.checks,
+      base.fold(GraftIdx.Empty)(b =>
+        GraftIdx.of(b.metas, GraftBloomSidecars.rebuildWidth)),
       // re-inserted rows land in the TABLE's format (header fact)
       GraftFormat.resolve(None, path),
-      // round 15: the newer surfaces rebuild too — prefix blooms with
-      // their widths, centroids (+ row-group granularity), and the
-      // declared reverse(...) layout's #rvstats
-      prefixBloomFor = base.toSeq.flatMap(_.metas.flatMap(_.pblooms.toSeq))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .flatMap { case (i, ws) =>
-          schema.fields.lift(i).map(f => (f.name, ws.head._2._1)) },
-      centroidFor = idxCols(m => m.centroids.keys ++ m.rgcens.keys),
-      rgCentroids = base.exists(_.metas.exists(_.rgcens.nonEmpty)),
-      reverseFor = hdr.sortSpec.flatMap(GraftManifest.reverseCol),
-      ngramBloomFor = base.toSeq.flatMap(_.metas.flatMap(_.ngblooms.toSeq))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .flatMap { case (i, ws) => // min width, or a !sat:w suggestion
-          schema.fields.lift(i).map(f =>
-            (f.name, GraftBloomSidecars.rebuildWidth(ws.map(_._2)))) })
+      reverseFor = hdr.sortSpec.flatMap(GraftManifest.reverseCol))
   }
 
   /** Job commit: merge every task's vector fragments into one final
@@ -5804,18 +5767,13 @@ class GraftDeltaBatchWrite(path: String, schema: StructType, tag: String,
 case class GraftDeltaWriterFactory(path: String, schema: StructType,
     tag: String, partCol: Option[String] = None,
     checks: Seq[(String, String)] = Nil,
-    bloomFor: Seq[String] = Nil, ndvFor: Seq[String] = Nil,
+    idx: GraftIdx = GraftIdx.Empty,
     format: String = GraftFormat.Default,
-    prefixBloomFor: Seq[(String, Int)] = Nil,
-    centroidFor: Seq[String] = Nil,
-    rgCentroids: Boolean = false,
-    reverseFor: Option[String] = None,
-    ngramBloomFor: Seq[(String, Int)] = Nil)
+    reverseFor: Option[String] = None)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new GraftDeltaWriter(path, schema, partitionId, taskId, tag, partCol, checks,
-      bloomFor, ndvFor, format, prefixBloomFor, centroidFor, rgCentroids,
-      reverseFor, ngramBloomFor)
+      idx, format, reverseFor)
 }
 
 /** Task-side delta writer: deletes accumulate (file → positions) and
@@ -5826,13 +5784,9 @@ case class GraftDeltaWriterFactory(path: String, schema: StructType,
 class GraftDeltaWriter(path: String, schema: StructType, partitionId: Int,
     taskId: Long, tag: String, partCol: Option[String] = None,
     checks: Seq[(String, String)] = Nil,
-    bloomFor: Seq[String] = Nil, ndvFor: Seq[String] = Nil,
+    idx: GraftIdx = GraftIdx.Empty,
     format: String = GraftFormat.Default,
-    prefixBloomFor: Seq[(String, Int)] = Nil,
-    centroidFor: Seq[String] = Nil,
-    rgCentroids: Boolean = false,
-    reverseFor: Option[String] = None,
-    ngramBloomFor: Seq[(String, Int)] = Nil)
+    reverseFor: Option[String] = None)
     extends DeltaWriter[InternalRow] {
   private var inserts: GraftSinkWriter = _
   private val dels =
@@ -5852,10 +5806,7 @@ class GraftDeltaWriter(path: String, schema: StructType, partitionId: Int,
     if (inserts == null)
       inserts = new GraftSinkWriter(path, schema, partitionId, taskId,
         prefix = s"$tag-", partCol = partCol, checks = checks,
-        bloomFor = bloomFor, ndvFor = ndvFor, format = format,
-        prefixBloomFor = prefixBloomFor, centroidFor = centroidFor,
-        rgCentroids = rgCentroids, reverseFor = reverseFor,
-        ngramBloomFor = ngramBloomFor)
+        idx = idx, format = format, reverseFor = reverseFor)
     inserts.write(row)
   }
 
@@ -5876,20 +5827,16 @@ class GraftDeltaWriter(path: String, schema: StructType, partitionId: Int,
 
 class GraftSinkWriterFactory(path: String, schema: StructType, tag: String,
     partCol: Option[String], checks: Seq[(String, String)] = Nil,
-    bloomFor: Seq[String] = Nil, ndvFor: Seq[String] = Nil,
+    idx: GraftIdx = GraftIdx.Empty,
     format: String = GraftFormat.Default,
     upsertKey: Option[String] = None, rowGroupBytes: Option[Int] = None,
-    centroidFor: Seq[String] = Nil, prefixBloomFor: Seq[(String, Int)] = Nil,
-    rgCentroids: Boolean = false, reverseFor: Option[String] = None,
-    ngramBloomFor: Seq[(String, Int)] = Nil)
+    reverseFor: Option[String] = None)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftSinkWriter(path, schema, partitionId, taskId, prefix = s"$tag-",
-      partCol = partCol, checks = checks, bloomFor = bloomFor, ndvFor = ndvFor,
-      format = format, upsertKey = upsertKey, rowGroupBytes = rowGroupBytes,
-      centroidFor = centroidFor, prefixBloomFor = prefixBloomFor,
-      rgCentroids = rgCentroids, reverseFor = reverseFor,
-      ngramBloomFor = ngramBloomFor)
+      partCol = partCol, checks = checks, idx = idx, format = format,
+      upsertKey = upsertKey, rowGroupBytes = rowGroupBytes,
+      reverseFor = reverseFor)
 }
 
 /** Named (serializable) streaming factory — an anonymous class here would
@@ -5900,25 +5847,19 @@ case class GraftSinkStreamingFactory(path: String, schema: StructType,
     tag: String,
     checks: Seq[(String, String)] = Nil,
     partCol: Option[String] = None,
-    bloomFor: Seq[String] = Nil, ndvFor: Seq[String] = Nil,
+    idx: GraftIdx = GraftIdx.Empty,
     format: String = GraftFormat.Default,
     upsertKey: Option[String] = None,
     rowGroupBytes: Option[Int] = None,
-    prefixBloomFor: Seq[(String, Int)] = Nil,
-    centroidFor: Seq[String] = Nil,
-    rgCentroids: Boolean = false,
-    reverseFor: Option[String] = None,
-    ngramBloomFor: Seq[(String, Int)] = Nil)
+    reverseFor: Option[String] = None)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftSinkWriter(path, schema, partitionId, taskId,
       prefix = s"e$epochId-$tag-",
-      partCol = partCol, checks = checks, bloomFor = bloomFor, ndvFor = ndvFor,
-      format = format, upsertKey = upsertKey, rowGroupBytes = rowGroupBytes,
-      prefixBloomFor = prefixBloomFor, centroidFor = centroidFor,
-      rgCentroids = rgCentroids, reverseFor = reverseFor,
-      ngramBloomFor = ngramBloomFor)
+      partCol = partCol, checks = checks, idx = idx, format = format,
+      upsertKey = upsertKey, rowGroupBytes = rowGroupBytes,
+      reverseFor = reverseFor)
 }
 
 /** Streaming auto-maintenance policy (the write-option surface of the
@@ -5991,37 +5932,14 @@ class GraftSinkStreamingWrite(path: String, schema: StructType, tag: String,
     // re-inserts follow; a declared reverse(...) layout arms `#rvstats`
     // tracking through the sortSpec header fact.
     val head = headFactsOnce
-    val idx: GraftIdx = head match {
-      case None => GraftIdx(Nil, Nil)
-      case Some(h) => h.idxCols.getOrElse(
-        GraftSinkStreamingWrite.legacyIdxCache.computeIfAbsent(
-          s"$path@${h.version}", _ => {
-            val m = GraftManifest.readVersion(path, Some(h.version)).get
-            GraftIdx(m.metas.flatMap(_.blooms.keys).distinct.sorted,
-              m.metas.flatMap(_.ndvs.keys).distinct.sorted,
-              m.metas.flatMap(_.pblooms.toSeq).groupBy(_._1).toSeq
-                .sortBy(_._1).map { case (i, ws) => (i, ws.head._2._1) },
-              m.metas.flatMap(x => x.centroids.keys ++ x.rgcens.keys)
-                .distinct.sorted,
-              m.metas.exists(_.rgcens.nonEmpty),
-              m.metas.flatMap(_.ngblooms.toSeq).groupBy(_._1).toSeq
-                .sortBy(_._1).map { case (i, ws) => (i, ws.map(_._2._1).min) })
-          }))
-    }
-    def names(is: Seq[Int]): Seq[String] =
-      is.flatMap(i => schema.fields.lift(i).map(_.name))
+    val idx: GraftIdx = head.fold(GraftIdx.Empty)(h => h.idxCols.getOrElse(
+      GraftSinkStreamingWrite.legacyIdxCache.computeIfAbsent(
+        s"$path@${h.version}",
+        _ => GraftIdx.of(GraftManifest.readVersion(path, Some(h.version)).get.metas))))
     GraftSinkStreamingFactory(path, schema, tag,
-      head.map(_.checks).getOrElse(Nil), partCol,
-      names(idx.bloom), names(idx.ndv), format, upsertKey,
+      head.map(_.checks).getOrElse(Nil), partCol, idx, format, upsertKey,
       rowGroupBytes = rowGroupBytes,
-      prefixBloomFor = idx.pbloom.flatMap { case (i, w) =>
-        schema.fields.lift(i).map(f => (f.name, w)) },
-      centroidFor = names(idx.cen),
-      rgCentroids = idx.rgcen && format == GraftFormat.Parquet,
-      reverseFor = head.flatMap(_.sortSpec)
-        .flatMap(GraftManifest.reverseCol),
-      ngramBloomFor = idx.ngram.flatMap { case (i, w) =>
-        schema.fields.lift(i).map(f => (f.name, w)) })
+      reverseFor = head.flatMap(_.sortSpec).flatMap(GraftManifest.reverseCol))
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -6314,12 +6232,10 @@ object GraftSinkWriter {
   * skipping. */
 class GraftSinkWriter(path: String, schema: StructType, partitionId: Int,
     taskId: Long, prefix: String = "", partCol: Option[String] = None,
-    checks: Seq[(String, String)] = Nil, bloomFor: Seq[String] = Nil,
-    ndvFor: Seq[String] = Nil, format: String = GraftFormat.Default,
+    checks: Seq[(String, String)] = Nil, idx: GraftIdx = GraftIdx.Empty,
+    format: String = GraftFormat.Default,
     upsertKey: Option[String] = None, rowGroupBytes: Option[Int] = None,
-    centroidFor: Seq[String] = Nil, prefixBloomFor: Seq[(String, Int)] = Nil,
-    rgCentroids: Boolean = false, reverseFor: Option[String] = None,
-    ngramBloomFor: Seq[(String, Int)] = Nil)
+    reverseFor: Option[String] = None)
     extends DataWriter[InternalRow] {
   new File(path).mkdirs()
   private val fileSuffix = GraftFormat.suffix(format) // validates the name
@@ -6338,19 +6254,18 @@ class GraftSinkWriter(path: String, schema: StructType, partitionId: Int,
     }
   }
   private val upsertKeys = scala.collection.mutable.LinkedHashSet[String]()
-  /** Columns to bloom (validated long/string at plan time; a narrower
-    * pre-evolution schema simply blooms the columns it carries). */
-  private val bloomIdx: Array[Int] = bloomFor
-    .flatMap(c => scala.util.Try(schema.fieldIndex(c)).toOption).toArray
+  /** The index plan's positions this writer carries — a narrower
+    * (pre-evolution) write schema simply indexes the columns it holds. */
+  private def carried(is: Seq[Int]): Seq[Int] = is.filter(_ < schema.length)
+  /** Columns to bloom (validated long/string at plan time). */
+  private val bloomIdx: Array[Int] = carried(idx.bloom).toArray
   /** Prefix-bloomed columns: layout index → prefix width (validated
-    * string at plan time; same narrower-schema tolerance as bloomIdx). */
-  private val pbloomIdx: Map[Int, Int] = prefixBloomFor
-    .flatMap { case (c, w) =>
-      scala.util.Try(schema.fieldIndex(c)).toOption.map(_ -> w) }.toMap
+    * string at plan time). */
+  private val pbloomIdx: Map[Int, Int] =
+    idx.pbloom.filter(_._1 < schema.length).toMap
   /** N-gram-bloomed columns: layout index → window width. */
-  private val ngbloomIdx: Map[Int, Int] = ngramBloomFor
-    .flatMap { case (c, w) =>
-      scala.util.Try(schema.fieldIndex(c)).toOption.map(_ -> w) }.toMap
+  private val ngbloomIdx: Map[Int, Int] =
+    idx.ngram.filter(_._1 < schema.length).toMap
   /** CANDIDATE widths per n-grammed column (round 16, VERDICT r15 next
     * #2 — width auto-selection): the configured width plus one step
     * wider (clamped to the option's 16 cap), tracked SIMULTANEOUSLY
@@ -6375,8 +6290,7 @@ class GraftSinkWriter(path: String, schema: StructType, partitionId: Int,
     case (i, ws) if ws.last + GraftSinkWriter.NgramWidenStep <= 16 =>
       i -> (ws.last + GraftSinkWriter.NgramWidenStep)
   }
-  private val ndvIdx: Array[Int] = ndvFor
-    .flatMap(c => scala.util.Try(schema.fieldIndex(c)).toOption)
+  private val ndvIdx: Array[Int] = carried(idx.ndv)
     // `ndvFor=*` may sweep in array columns — they have no canonical cell
     // to hash, and an empty sketch would CLAIM ~0 distinct values
     .filter(i => GraftSinkScan.statable(schema.fields(i).dataType)).toArray
@@ -6391,8 +6305,7 @@ class GraftSinkWriter(path: String, schema: StructType, partitionId: Int,
   /** Vector columns to centroid (`centroidFor`): per-file mean of the
     * non-null array<float|double> cells, accumulated in DOUBLE (round
     * 14 — the scan-side ANN routing fact). */
-  private val cenIdx: Array[Int] = centroidFor
-    .flatMap(c => scala.util.Try(schema.fieldIndex(c)).toOption)
+  private val cenIdx: Array[Int] = carried(idx.cen)
     .filter(i => schema.fields(i).dataType match {
       case ArrayType(org.apache.spark.sql.types.FloatType, _) |
            ArrayType(DoubleType, _) => true
@@ -6875,7 +6788,7 @@ class GraftSinkWriter(path: String, schema: StructType, partitionId: Int,
       // row-group centroid facts (opt-in): the file just closed — one
       // footer read + one projected pass over the still-cached bytes
       val rgc: Map[Int, Seq[GraftRgCen]] =
-        if (rgCentroids && parquetFmt && cenIdx.nonEmpty && p.rows > 0)
+        if (idx.rgcen && parquetFmt && cenIdx.nonEmpty && p.rows > 0)
           GraftSinkWriter.rowGroupCentroids(fin.toPath, schema, cenIdx)
         else Map.empty
       // reversed-cell BOUND envelope: lower = 32-char prefix of the

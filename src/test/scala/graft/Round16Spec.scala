@@ -456,8 +456,9 @@ class Round16Spec extends AnyFunSuite {
     }
     val versioned = new GraftSinkStreamingWrite(dir, schema, "q")
       .createStreamingWriterFactory(info).asInstanceOf[GraftSinkStreamingFactory]
-    assert(versioned.bloomFor == Seq("s") &&
-      versioned.ngramBloomFor == Seq(("s", 4)),
+    // `s` is column 1 of the write schema
+    assert(versioned.idx.bloom == Seq(1) &&
+      versioned.idx.ngram == Seq((1, 4)),
       s"versioned streams derive every index surface: $versioned")
   }
 
