@@ -10,9 +10,11 @@ import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, Proced
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, Write, WriteBuilder}
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import GraftProcedure.param
 
 /** A DataSource V2 [[TableCatalog]] over graft-sink versioned tables — the
   * SQL half of the lakehouse surface. Registered via
@@ -389,6 +391,12 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       if (ps.size == 1 && head.metas.forall(_.partition.isDefined)) Some(ps.head)
       else head.partSpec
     }
+    // a declared reversed layout whose column survives keeps its
+    // declaration, so the fresh files re-record `#rvstats` (as OPTIMIZE
+    // does); the commit re-declares it because dropping a non-trailing
+    // column counts as a shape replacement, which inherits no `#sortspec`
+    val keepSort = head.sortSpec.filter(sc =>
+      GraftManifest.reverseCol(sc).exists(remaining.contains))
     val tmp = java.nio.file.Files.createTempDirectory("graft-dropcol").toString
     try {
       // the rewrite lands in the TABLE's data-file format (the tmp dir has
@@ -402,7 +410,8 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         snapshot.write.format("graft-sink").option("path", tmp)
           .option("format", head.format.getOrElse(GraftFormat.Default)),
         except = Set(c))
-      keepLayout.fold(w)(pc => w.option("partitionBy", pc))
+      val ws = keepSort.fold(w)(sc => w.option("sortBy", sc))
+      keepLayout.fold(ws)(pc => ws.option("partitionBy", pc))
         .mode("overwrite").save()
       val (moved, movedNames) = GraftMaintenance.moveRewrite(tmp, dir,
         s"d${head.version}", GraftManifest.readVersion(tmp, None).get.metas)
@@ -410,7 +419,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         expectedBase = Some(head.version), op = Some("DROP COLUMN"),
         idsOverride = Some(survivorIds),
         checksOverride = Some(head.checks),
-        partSpecSet = Some(head.partSpec))
+        partSpecSet = Some(head.partSpec), sortSpecSet = keepSort.map(Some(_)))
       catch {
         case e: Throwable =>
           movedNames.foreach(n => java.nio.file.Files.deleteIfExists(
@@ -497,48 +506,35 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
   /** Catalog root dir — where multi-table transaction markers live. */
   private[sources] def rootDir: String = root
 
+  /** The procedure table, in listing order: each procedure declares its
+    * own name, so SHOW PROCEDURES, dispatch and the unknown-procedure
+    * error cannot drift apart. */
+  private val procedures: Seq[GraftProcedure] = Seq(
+    new GraftVacuumProcedure(this), new GraftRestoreProcedure(this),
+    new GraftOptimizeProcedure(this), new GraftCompactIndexProcedure(this),
+    new GraftHistoryProcedure(this), new GraftTagProcedure(this),
+    new GraftDropTagProcedure(this), new GraftTagsProcedure(this),
+    new GraftAddConstraintProcedure(this), new GraftDropConstraintProcedure(this),
+    new GraftConstraintsProcedure(this), new GraftFilesProcedure(this),
+    new GraftPartitionsProcedure(this),
+    new GraftWapProcedure(this, publish = true),
+    new GraftWapProcedure(this, publish = false),
+    new GraftTxnPublishProcedure(this), new GraftCloneProcedure(this),
+    new GraftSetPartitionSpecProcedure(this), new GraftOrphansProcedure(this),
+    new GraftFastForwardProcedure(this), new GraftMaintenanceProcedure(this))
+
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     if (namespace.sameElements(Array("system")))
-      Array("vacuum", "restore", "optimize", "compact_index", "history",
-        "tag", "drop_tag", "tags",
-        "add_constraint", "drop_constraint", "constraints", "files", "partitions",
-        "wap_publish", "wap_abort", "txn_publish",
-        "clone", "set_partition_spec", "orphans", "fast_forward", "maintenance")
-        .map(Identifier.of(Array("system"), _))
+      procedures.map(p => Identifier.of(Array("system"), p.name())).toArray
     else Array.empty
 
   override def loadProcedure(ident: Identifier): UnboundProcedure = {
     require(ident.namespace.sameElements(Array("system")),
       s"graft catalog procedures live in the 'system' namespace, got $ident")
-    ident.name match {
-      case "vacuum"   => new GraftVacuumProcedure(this)
-      case "restore"  => new GraftRestoreProcedure(this)
-      case "optimize" => new GraftOptimizeProcedure(this)
-      case "history"  => new GraftHistoryProcedure(this)
-      case "tag"      => new GraftTagProcedure(this)
-      case "drop_tag" => new GraftDropTagProcedure(this)
-      case "tags"     => new GraftTagsProcedure(this)
-      case "add_constraint"  => new GraftAddConstraintProcedure(this)
-      case "drop_constraint" => new GraftDropConstraintProcedure(this)
-      case "constraints"     => new GraftConstraintsProcedure(this)
-      case "files"           => new GraftFilesProcedure(this)
-      case "partitions"      => new GraftPartitionsProcedure(this)
-      case "wap_publish"     => new GraftWapProcedure(this, publish = true)
-      case "wap_abort"       => new GraftWapProcedure(this, publish = false)
-      case "txn_publish"     => new GraftTxnPublishProcedure(this)
-      case "clone"           => new GraftCloneProcedure(this)
-      case "set_partition_spec" => new GraftSetPartitionSpecProcedure(this)
-      case "orphans"         => new GraftOrphansProcedure(this)
-      case "fast_forward"    => new GraftFastForwardProcedure(this)
-      case "maintenance"     => new GraftMaintenanceProcedure(this)
-      case "compact_index"   => new GraftCompactIndexProcedure(this)
-      case other => throw new UnsupportedOperationException(
-        s"graft catalog: no procedure system.$other " +
-          "(have vacuum, restore, optimize, compact_index, history, tag, " +
-          "drop_tag, tags, add_constraint, drop_constraint, constraints, " +
-          "files, partitions, wap_publish, wap_abort, txn_publish, clone, " +
-          "set_partition_spec, orphans, fast_forward, maintenance)")
-    }
+    procedures.find(_.name() == ident.name).getOrElse(
+      throw new UnsupportedOperationException(
+        s"graft catalog: no procedure system.${ident.name} " +
+          procedures.map(_.name()).mkString("(have ", ", ", ")")))
   }
 }
 
@@ -629,19 +625,45 @@ private[sources] class GraftStagedTable(dir: String, schema: StructType,
 }
 
 /** Shared plumbing for the catalog's SQL procedures: each is a
-  * deterministic-parameter, driver-side maintenance action returning a
-  * one-row [[LocalScan]] result. */
-private[sources] abstract class GraftProcedure(cat: GraftCatalog)
+  * deterministic-parameter, driver-side maintenance action, declared by
+  * its name, description and parameters (see [[GraftProcedure.param]]),
+  * returning a [[LocalScan]] result. */
+private[sources] abstract class GraftProcedure(cat: GraftCatalog,
+    procName: String, desc: String, params: ProcedureParameter*)
     extends UnboundProcedure with BoundProcedure {
+  override def name(): String = procName
+  override def description(): String = desc
+  override def parameters(): Array[ProcedureParameter] = params.toArray
   override def bind(inputType: StructType): BoundProcedure = this
   override def isDeterministic: Boolean = false
-  protected def result(schema: StructType, values: Any*): java.util.Iterator[Scan] = {
+
+  /** Argument `i`, a table name, with its directory under the catalog root. */
+  protected def tableArg(input: InternalRow, i: Int): (String, String) = {
+    val table = input.getUTF8String(i).toString
+    (table, cat.dirForName(table))
+  }
+  /** Trailing argument `i`, or None when the call omits it or passes NULL. */
+  protected def optArg[T](input: InternalRow, i: Int)(get: Int => T): Option[T] =
+    if (input.numFields > i && !input.isNullAt(i)) Some(get(i)) else None
+
+  protected def result(schema: StructType, values: Any*): java.util.Iterator[Scan] =
+    resultRows(schema, Seq(values))
+  protected def resultRows(schema: StructType,
+      values: Seq[Seq[Any]]): java.util.Iterator[Scan] = {
+    val out = values.map(InternalRow.fromSeq).toArray
     val scan: Scan = new LocalScan {
-      override def rows(): Array[InternalRow] =
-        Array(InternalRow.fromSeq(values.toIndexedSeq))
+      override def rows(): Array[InternalRow] = out
       override def readSchema(): StructType = schema
     }
     java.util.Collections.singletonList(scan).iterator()
+  }
+}
+
+private[sources] object GraftProcedure {
+  /** An IN parameter; `default` is the SQL text a call may omit it for. */
+  def param(name: String, dt: DataType, default: String = null): ProcedureParameter = {
+    val b = ProcedureParameter.in(name, dt)
+    Option(default).fold(b)(d => b.defaultValue(d)).build()
   }
 }
 
@@ -662,21 +684,15 @@ private[sources] abstract class GraftProcedure(cat: GraftCatalog)
   * (the clone is a different table — a re-delivered epoch must not
   * no-op against it). Cloning over an existing table is refused. */
 private[sources] class GraftCloneProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "clone"
-  override def description(): String =
-    "zero-copy shallow clone of a committed snapshot into a new table"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("source", StringType).build(),
-    ProcedureParameter.in("target", StringType).build(),
-    ProcedureParameter.in("version", IntegerType).defaultValue("-1").build())
+    extends GraftProcedure(cat, "clone",
+      "zero-copy shallow clone of a committed snapshot into a new table",
+      param("source", StringType), param("target", StringType),
+      param("version", IntegerType, "-1")) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     import java.nio.file.{Files, Paths}
-    val srcName = input.getUTF8String(0).toString
-    val dstName = input.getUTF8String(1).toString
-    val srcDir = cat.dirForName(srcName)
-    val dstDir = cat.dirForName(dstName)
-    val vArg = if (input.numFields > 2 && !input.isNullAt(2)) input.getInt(2) else -1
+    val (srcName, srcDir) = tableArg(input, 0)
+    val (dstName, dstDir) = tableArg(input, 1)
+    val vArg = optArg(input, 2)(input.getInt).getOrElse(-1)
     val m = GraftManifest.readVersion(srcDir, Some(vArg).filter(_ >= 0))
       .getOrElse(throw new IllegalArgumentException(
         s"graft clone: no committed version at '$srcName'"))
@@ -736,16 +752,11 @@ private[sources] class GraftCloneProcedure(cat: GraftCatalog)
   * PARTITION SPEC`), so it is versioned, time-travelable and racing
   * writers conflict through the usual CAS. */
 private[sources] class GraftSetPartitionSpecProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "set_partition_spec"
-  override def description(): String =
-    "change the declared partition layout for future writes (metadata-only)"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("spec", StringType).build())
+    extends GraftProcedure(cat, "set_partition_spec",
+      "change the declared partition layout for future writes (metadata-only)",
+      param("table", StringType), param("spec", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val dir = cat.dirForName(table)
+    val (table, dir) = tableArg(input, 0)
     val head = GraftManifest.readVersion(dir, None).getOrElse(
       throw new IllegalArgumentException(
         s"graft set_partition_spec: no committed table at '$table'"))
@@ -791,19 +802,13 @@ private[sources] class GraftSetPartitionSpecProcedure(cat: GraftCatalog)
   * preserved: the pre-merge state stays readable, the merge is just a
   * version. */
 private[sources] class GraftFastForwardProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "fast_forward"
-  override def description(): String =
-    "publish a branch (clone) head back onto its unmoved source"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("source", StringType).build(),
-    ProcedureParameter.in("branch", StringType).build())
+    extends GraftProcedure(cat, "fast_forward",
+      "publish a branch (clone) head back onto its unmoved source",
+      param("source", StringType), param("branch", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     import java.nio.file.{Files, Paths}
-    val srcName = input.getUTF8String(0).toString
-    val brName = input.getUTF8String(1).toString
-    val srcDir = cat.dirForName(srcName)
-    val brDir = cat.dirForName(brName)
+    val (srcName, srcDir) = tableArg(input, 0)
+    val (brName, brDir) = tableArg(input, 1)
     val cert = GraftManifest.versions(brDir).headOption
       .map(v => GraftManifest.headerFacts(brDir, v).op.getOrElse(""))
       .getOrElse(throw new IllegalArgumentException(
@@ -873,18 +878,12 @@ private[sources] class GraftFastForwardProcedure(cat: GraftCatalog)
   * retention policy. In-flight `.tmp` files are NOT orphans (they are
   * the task-commit protocol's working state). */
 private[sources] class GraftOrphansProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "orphans"
-  override def description(): String =
-    "report files no version or pending stage references (read-only)"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("grace_ms", LongType).defaultValue("600000").build())
+    extends GraftProcedure(cat, "orphans",
+      "report files no version or pending stage references (read-only)",
+      param("table", StringType), param("grace_ms", LongType, "600000")) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val dir = cat.dirForName(table)
-    val grace = if (input.numFields > 1 && !input.isNullAt(1))
-      input.getLong(1) else 600000L
+    val (table, dir) = tableArg(input, 0)
+    val grace = optArg(input, 1)(input.getLong).getOrElse(600000L)
     val vs = GraftManifest.versions(dir)
     if (vs.isEmpty) throw new IllegalArgumentException(
       s"graft orphans: no committed table at '$table'")
@@ -941,15 +940,11 @@ private[sources] class GraftOrphansProcedure(cat: GraftCatalog)
   * table declares no policy — a policy-less sweep has no small-file
   * threshold to honor. */
 private[sources] class GraftMaintenanceProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "maintenance"
-  override def description(): String =
-    "run the table's own autoOptimize.* property policy once"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build())
+    extends GraftProcedure(cat, "maintenance",
+      "run the table's own autoOptimize.* property policy once",
+      param("table", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val dir = cat.dirForName(table)
+    val (table, dir) = tableArg(input, 0)
     val head = GraftManifest.readVersion(dir, None).getOrElse(
       throw new IllegalArgumentException(
         s"graft maintenance: no committed table at '$table'"))
@@ -1001,15 +996,11 @@ private[sources] class GraftMaintenanceProcedure(cat: GraftCatalog)
   * residual of the round-16 lazy-sidecar design). Metadata-only:
   * no data byte moves; kernel in [[GraftMaintenance.compactIndexes]]. */
 private[sources] class GraftCompactIndexProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "compact_index"
-  override def description(): String =
-    "bundle per-file bloom sidecars into few index bundles (metadata-only)"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build())
+    extends GraftProcedure(cat, "compact_index",
+      "bundle per-file bloom sidecars into few index bundles (metadata-only)",
+      param("table", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val dir = cat.dirForName(table)
+    val (table, dir) = tableArg(input, 0)
     if (GraftManifest.versions(dir).isEmpty)
       throw new IllegalArgumentException(
         s"graft compact_index: no committed table at '$table'")
@@ -1021,22 +1012,18 @@ private[sources] class GraftCompactIndexProcedure(cat: GraftCatalog)
 }
 
 private[sources] class GraftVacuumProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "vacuum"
-  override def description(): String =
-    "drop old versions and reclaim unreferenced files"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    // -1 = resolve from the table's `vacuum.retain` property (round 14) —
-    // the retention policy travels WITH the table instead of every
-    // operator re-typing it; an explicit argument still wins
-    ProcedureParameter.in("retain", IntegerType).defaultValue("-1").build(),
-    // safe-by-default in-flight grace (1 h): required args must precede
-    // optional ones, so retain's property default forces one here too
-    ProcedureParameter.in("grace_ms", LongType).defaultValue("3600000").build())
+    extends GraftProcedure(cat, "vacuum",
+      "drop old versions and reclaim unreferenced files",
+      param("table", StringType),
+      // -1 = resolve from the table's `vacuum.retain` property (round 14) —
+      // the retention policy travels WITH the table instead of every
+      // operator re-typing it; an explicit argument still wins
+      param("retain", IntegerType, "-1"),
+      // safe-by-default in-flight grace (1 h): required args must precede
+      // optional ones, so retain's property default forces one here too
+      param("grace_ms", LongType, "3600000")) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val dir = cat.dirForName(table)
+    val (table, dir) = tableArg(input, 0)
     val vs = GraftManifest.versions(dir)
     if (vs.isEmpty) throw new IllegalArgumentException(
       s"graft vacuum: no committed table at '$table'")
@@ -1062,15 +1049,11 @@ private[sources] class GraftVacuumProcedure(cat: GraftCatalog)
   * intermediate version stays readable until VACUUM; restoring past a
   * vacuumed version fails loudly at the manifest lookup. */
 private[sources] class GraftRestoreProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "restore"
-  override def description(): String =
-    "roll back to a committed version as a new head (metadata-only)"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("version", IntegerType).build())
+    extends GraftProcedure(cat, "restore",
+      "roll back to a committed version as a new head (metadata-only)",
+      param("table", StringType), param("version", IntegerType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (_, dir) = tableArg(input, 0)
     val v = input.getInt(1)
     val m = GraftManifest.readVersion(dir, Some(v)).getOrElse(
       throw new IllegalArgumentException(s"graft restore: no committed version at $dir"))
@@ -1614,15 +1597,10 @@ object GraftMaintenance {
 }
 
 private[sources] class GraftOptimizeProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "optimize"
-  override def description(): String =
-    "compact (optionally Z-ORDER, optionally small-files-only) the head snapshot"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("target_files", IntegerType).build(),
-    ProcedureParameter.in("zorder_by", StringType).defaultValue("''").build(),
-    ProcedureParameter.in("max_file_bytes", LongType).defaultValue("0").build())
+    extends GraftProcedure(cat, "optimize",
+      "compact (optionally Z-ORDER, optionally small-files-only) the head snapshot",
+      param("table", StringType), param("target_files", IntegerType),
+      param("zorder_by", StringType, "''"), param("max_file_bytes", LongType, "0")) {
 
   /** Incremental (small-files-only) compaction — shared kernel in
     * [[GraftMaintenance]] (round 14: the streaming sink's auto-optimize
@@ -1639,14 +1617,12 @@ private[sources] class GraftOptimizeProcedure(cat: GraftCatalog)
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.{col, lit, pmod, shiftleft, shiftright}
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (_, dir) = tableArg(input, 0)
     val target = input.getInt(1)
     val zcolsArg: Seq[String] =
-      (if (input.numFields > 2 && !input.isNullAt(2))
-        input.getUTF8String(2).toString else "")
+      optArg(input, 2)(input.getUTF8String(_).toString).getOrElse("")
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val maxBytes =
-      if (input.numFields > 3 && !input.isNullAt(3)) input.getLong(3) else 0L
+    val maxBytes = optArg(input, 3)(input.getLong).getOrElse(0L)
     val spark = org.apache.spark.sql.SparkSession.active
     val head = GraftManifest.readVersion(dir, None).getOrElse(
       throw new IllegalArgumentException(s"graft optimize: no committed version at $dir"))
@@ -1862,16 +1838,12 @@ private[sources] object GraftOptimizeProcedure {
   * existing name moves it (atomic replace; a ref is derived state over
   * immutable versions, so last-writer-wins is the correct semantic). */
 private[sources] class GraftTagProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "tag"
-  override def description(): String =
-    "name a committed version; tagged versions survive vacuum until drop_tag"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("name", StringType).build(),
-    ProcedureParameter.in("version", IntegerType).build())
+    extends GraftProcedure(cat, "tag",
+      "name a committed version; tagged versions survive vacuum until drop_tag",
+      param("table", StringType), param("name", StringType),
+      param("version", IntegerType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (_, dir) = tableArg(input, 0)
     val tag = input.getUTF8String(1).toString
     val v = input.getInt(2)
     GraftManifest.setRef(dir, tag, v)
@@ -1883,14 +1855,10 @@ private[sources] class GraftTagProcedure(cat: GraftCatalog)
 /** `CALL cat.system.drop_tag(table, name)` — release a tag; the next
   * vacuum may reclaim the version it protected. */
 private[sources] class GraftDropTagProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "drop_tag"
-  override def description(): String = "release a tag"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("name", StringType).build())
+    extends GraftProcedure(cat, "drop_tag", "release a tag",
+      param("table", StringType), param("name", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (_, dir) = tableArg(input, 0)
     val tag = input.getUTF8String(1).toString
     val existed = GraftManifest.dropRef(dir, tag)
     result(StructType.fromDDL("tag STRING, existed BOOLEAN"),
@@ -1902,26 +1870,15 @@ private[sources] class GraftDropTagProcedure(cat: GraftCatalog)
   * (tag, version) rows, tag-sorted (SHOW TAGS). A directory listing of
   * `_ref-*` files — O(tags), no manifest read. */
 private[sources] class GraftTagsProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "tags"
-  override def description(): String = "list the table's tags"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build())
+    extends GraftProcedure(cat, "tags", "list the table's tags",
+      param("table", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (table, dir) = tableArg(input, 0)
     if (GraftManifest.versions(dir).isEmpty) throw new IllegalArgumentException(
-      s"graft tags: no committed table at '${input.getUTF8String(0)}'")
-    val schema = StructType.fromDDL("tag STRING, version BIGINT")
-    // named `listed`, NOT `rows`: the LocalScan's rows() method would
-    // shadow a local of that name and compile into an infinite self-loop
-    val listed = GraftManifest.refs(dir).toSeq.sortBy(_._1).map { case (t, v) =>
-      InternalRow.fromSeq(Seq[Any](UTF8String.fromString(t), v.toLong))
-    }.toArray
-    val scan: Scan = new LocalScan {
-      override def rows(): Array[InternalRow] = listed
-      override def readSchema(): StructType = schema
-    }
-    java.util.Collections.singletonList(scan).iterator()
+      s"graft tags: no committed table at '$table'")
+    resultRows(StructType.fromDDL("tag STRING, version BIGINT"),
+      GraftManifest.refs(dir).toSeq.sortBy(_._1).map { case (t, v) =>
+        Seq(UTF8String.fromString(t), v.toLong) })
   }
 }
 
@@ -1935,16 +1892,12 @@ private[sources] class GraftTagsProcedure(cat: GraftCatalog)
   * every task writer enforces it per appended row; a violating batch
   * aborts with nothing committed. */
 private[sources] class GraftAddConstraintProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "add_constraint"
-  override def description(): String =
-    "add a CHECK constraint: validate existing rows, enforce on every future write"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("name", StringType).build(),
-    ProcedureParameter.in("expr", StringType).build())
+    extends GraftProcedure(cat, "add_constraint",
+      "add a CHECK constraint: validate existing rows, enforce on every future write",
+      param("table", StringType), param("name", StringType),
+      param("expr", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (_, dir) = tableArg(input, 0)
     val cname = input.getUTF8String(1).toString
     val expr = input.getUTF8String(2).toString.trim
     require(cname.nonEmpty && cname.forall(c =>
@@ -1980,14 +1933,10 @@ private[sources] class GraftAddConstraintProcedure(cat: GraftCatalog)
 /** `CALL cat.system.drop_constraint(table, name)` — release a CHECK;
   * later writes stop enforcing it. */
 private[sources] class GraftDropConstraintProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "drop_constraint"
-  override def description(): String = "drop a CHECK constraint"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("name", StringType).build())
+    extends GraftProcedure(cat, "drop_constraint", "drop a CHECK constraint",
+      param("table", StringType), param("name", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (_, dir) = tableArg(input, 0)
     val cname = input.getUTF8String(1).toString
     val head = GraftManifest.readVersion(dir, None).getOrElse(
       throw new IllegalArgumentException(
@@ -2008,26 +1957,16 @@ private[sources] class GraftDropConstraintProcedure(cat: GraftCatalog)
   * CHECK constraints as (constraint, expr) rows, name-sorted. One header
   * read — O(constraints), never O(data). */
 private[sources] class GraftConstraintsProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "constraints"
-  override def description(): String = "list the table's CHECK constraints"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build())
+    extends GraftProcedure(cat, "constraints", "list the table's CHECK constraints",
+      param("table", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (table, dir) = tableArg(input, 0)
     val vs = GraftManifest.versions(dir)
     if (vs.isEmpty) throw new IllegalArgumentException(
-      s"graft constraints: no committed table at '${input.getUTF8String(0)}'")
-    val schema = StructType.fromDDL("constraint STRING, expr STRING")
-    val listed = GraftManifest.headerFacts(dir, vs.max).checks.sortBy(_._1)
-      .map { case (n, e) =>
-        InternalRow.fromSeq(Seq[Any](UTF8String.fromString(n), UTF8String.fromString(e)))
-      }.toArray
-    val scan: Scan = new LocalScan {
-      override def rows(): Array[InternalRow] = listed
-      override def readSchema(): StructType = schema
-    }
-    java.util.Collections.singletonList(scan).iterator()
+      s"graft constraints: no committed table at '$table'")
+    resultRows(StructType.fromDDL("constraint STRING, expr STRING"),
+      GraftManifest.headerFacts(dir, vs.max).checks.sortBy(_._1).map {
+        case (n, e) => Seq(UTF8String.fromString(n), UTF8String.fromString(e)) })
   }
 }
 
@@ -2041,45 +1980,34 @@ private[sources] class GraftConstraintsProcedure(cat: GraftCatalog)
   * merge-on-read debt is outstanding" on a 100 TB table without a scan.
   * Rows are name-sorted for a stable display order. */
 private[sources] class GraftFilesProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "files"
-  override def description(): String =
-    "one row per live data file: partition, rows, bytes, seq, index surface"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("version", IntegerType).defaultValue("-1").build())
+    extends GraftProcedure(cat, "files",
+      "one row per live data file: partition, rows, bytes, seq, index surface",
+      param("table", StringType), param("version", IntegerType, "-1")) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
-    val v = if (input.numFields > 1 && !input.isNullAt(1) && input.getInt(1) >= 0)
-      Some(input.getInt(1)) else None
+    val (table, dir) = tableArg(input, 0)
+    val v = optArg(input, 1)(input.getInt).filter(_ >= 0)
     val m = GraftManifest.readVersion(dir, v).getOrElse(
       throw new IllegalArgumentException(
-        s"graft files: no committed table at '${input.getUTF8String(0)}'"))
+        s"graft files: no committed table at '$table'"))
     // round 13 appended the ops columns a capacity audit needs — bytes
     // on disk, data sequence number, and the per-file index surface
     // (exact-stat / bound / bloom / NDV column counts): "why is this
     // probe slow" answers from O(files) manifest facts, zero data reads
-    val schema = StructType.fromDDL(
+    resultRows(StructType.fromDDL(
       "file STRING, partition_col STRING, partition_value STRING, " +
         "rows BIGINT, live_rows BIGINT, dv_rows BIGINT, n_cols INT, " +
         "bytes BIGINT, seq BIGINT, n_stats INT, n_bounds INT, " +
-        "n_blooms INT, n_ndvs INT, n_centroids INT")
-    val listed = m.metas.sortBy(_.name).map { f =>
-      val sz = scala.util.Try(java.nio.file.Files.size(
-        java.nio.file.Paths.get(dir, f.name))).getOrElse(-1L)
-      InternalRow.fromSeq(Seq[Any](
-        UTF8String.fromString(f.name),
-        f.partition.map(p => UTF8String.fromString(p._1)).orNull,
-        f.partition.map(p => UTF8String.fromString(p._2)).orNull,
-        f.rows, f.liveRows, f.dv.map(_._2).getOrElse(0L), f.ncols,
-        sz, f.seq.toLong, f.stats.size - f.bounds.size, f.bounds.size,
-        f.blooms.size, f.ndvs.size, f.centroids.size))
-    }.toArray
-    val scan: Scan = new LocalScan {
-      override def rows(): Array[InternalRow] = listed
-      override def readSchema(): StructType = schema
-    }
-    java.util.Collections.singletonList(scan).iterator()
+        "n_blooms INT, n_ndvs INT, n_centroids INT"),
+      m.metas.sortBy(_.name).map { f =>
+        val sz = scala.util.Try(java.nio.file.Files.size(
+          java.nio.file.Paths.get(dir, f.name))).getOrElse(-1L)
+        Seq(UTF8String.fromString(f.name),
+          f.partition.map(p => UTF8String.fromString(p._1)).orNull,
+          f.partition.map(p => UTF8String.fromString(p._2)).orNull,
+          f.rows, f.liveRows, f.dv.map(_._2).getOrElse(0L), f.ncols,
+          sz, f.seq.toLong, f.stats.size - f.bounds.size, f.bounds.size,
+          f.blooms.size, f.ndvs.size, f.centroids.size)
+      })
   }
 }
 
@@ -2091,36 +2019,27 @@ private[sources] class GraftFilesProcedure(cat: GraftCatalog)
   * 10k files) BEFORE it becomes a slow scan — and feeding `optimize`
   * exactly the values worth compacting. */
 private[sources] class GraftPartitionsProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "partitions"
-  override def description(): String =
-    "per partition value: file count, physical rows, live rows, bytes"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build())
+    extends GraftProcedure(cat, "partitions",
+      "per partition value: file count, physical rows, live rows, bytes",
+      param("table", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (table, dir) = tableArg(input, 0)
     val m = GraftManifest.readVersion(dir, None).getOrElse(
       throw new IllegalArgumentException(
-        s"graft partitions: no committed table at '${input.getUTF8String(0)}'"))
+        s"graft partitions: no committed table at '$table'"))
     // bytes appended round 13 (mirrors `files`): the skew/fragmentation
     // audit needs SIZE, not just counts — one value at 10 GB in 10k files
     // and one at 10 GB in one file read the same by rows alone
-    val schema = StructType.fromDDL(
+    resultRows(StructType.fromDDL(
       "partition STRING, n_files BIGINT, rows BIGINT, live_rows BIGINT, " +
-        "bytes BIGINT")
-    val listed = m.metas.groupBy(_.partition.map(_._2)).toSeq
-      .sortBy(_._1.getOrElse("")).map { case (pv, fs) =>
-        val bytes = fs.map(f => scala.util.Try(java.nio.file.Files.size(
-          java.nio.file.Paths.get(dir, f.name))).getOrElse(0L)).sum
-        InternalRow.fromSeq(Seq[Any](
-          pv.map(UTF8String.fromString).orNull,
-          fs.size.toLong, fs.map(_.rows).sum, fs.map(_.liveRows).sum, bytes))
-      }.toArray
-    val scan: Scan = new LocalScan {
-      override def rows(): Array[InternalRow] = listed
-      override def readSchema(): StructType = schema
-    }
-    java.util.Collections.singletonList(scan).iterator()
+        "bytes BIGINT"),
+      m.metas.groupBy(_.partition.map(_._2)).toSeq
+        .sortBy(_._1.getOrElse("")).map { case (pv, fs) =>
+          val bytes = fs.map(f => scala.util.Try(java.nio.file.Files.size(
+            java.nio.file.Paths.get(dir, f.name))).getOrElse(0L)).sum
+          Seq(pv.map(UTF8String.fromString).orNull,
+            fs.size.toLong, fs.map(_.rows).sum, fs.map(_.liveRows).sum, bytes)
+        })
   }
 }
 
@@ -2138,32 +2057,23 @@ private[sources] class GraftPartitionsProcedure(cat: GraftCatalog)
   * never by data size; vacuumed versions simply no longer appear
   * (vacuum is the audit's eraser too). */
 private[sources] class GraftHistoryProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "history"
-  override def description(): String =
-    "one row per committed version: clock, operation, snapshot file/row counts"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build())
+    extends GraftProcedure(cat, "history",
+      "one row per committed version: clock, operation, snapshot file/row counts",
+      param("table", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (table, dir) = tableArg(input, 0)
     val vs = GraftManifest.versions(dir)
     if (vs.isEmpty) throw new IllegalArgumentException(
-      s"graft history: no committed table at '${input.getUTF8String(0)}'")
-    val schema = StructType.fromDDL(
-      "version BIGINT, ts_millis BIGINT, operation STRING, n_files BIGINT, total_rows BIGINT")
-    val audit = vs.sorted.reverse.map { v =>
-      val h = GraftManifest.headerFacts(dir, v)
-      val m = if (h.nFiles.isDefined) h
-        else GraftManifest.readVersion(dir, Some(v)).get // pre-#files: fold once
-      InternalRow.fromSeq(Seq[Any](v.toLong, m.ts.getOrElse(0L),
-        UTF8String.fromString(m.op.getOrElse("WRITE")),
-        m.nFiles.getOrElse(m.metas.size).toLong, m.total))
-    }.toArray
-    val scan: Scan = new LocalScan {
-      override def rows(): Array[InternalRow] = audit
-      override def readSchema(): StructType = schema
-    }
-    java.util.Collections.singletonList(scan).iterator()
+      s"graft history: no committed table at '$table'")
+    resultRows(StructType.fromDDL(
+      "version BIGINT, ts_millis BIGINT, operation STRING, n_files BIGINT, total_rows BIGINT"),
+      vs.sorted.reverse.map { v =>
+        val h = GraftManifest.headerFacts(dir, v)
+        val m = if (h.nFiles.isDefined) h
+          else GraftManifest.readVersion(dir, Some(v)).get // pre-#files: fold once
+        Seq(v.toLong, m.ts.getOrElse(0L), UTF8String.fromString(m.op.getOrElse("WRITE")),
+          m.nFiles.getOrElse(m.metas.size).toLong, m.total)
+      })
   }
 }
 
@@ -2222,13 +2132,9 @@ private[sources] object GraftBucketOfString extends GraftBucketBound {
   * warehouse refresh needs — no reader can observe the fact advanced
   * without its dim. */
 private[sources] class GraftTxnPublishProcedure(cat: GraftCatalog)
-    extends GraftProcedure(cat) {
-  override def name(): String = "txn_publish"
-  override def description(): String =
-    "atomically publish staged WAP batches across multiple tables (all or none)"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("tables", StringType).build(),
-    ProcedureParameter.in("ids", StringType).build())
+    extends GraftProcedure(cat, "txn_publish",
+      "atomically publish staged WAP batches across multiple tables (all or none)",
+      param("tables", StringType), param("ids", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val tables = input.getUTF8String(0).toString.split(",").map(_.trim)
       .filter(_.nonEmpty).toSeq
@@ -2252,18 +2158,9 @@ private[sources] class GraftTxnPublishProcedure(cat: GraftCatalog)
       "_txncommit-" + ids.mkString("-"))
     val versions = GraftManifest.txnPublish(
       tables.zip(ids).map { case (t, id) => (cat.dirForName(t), id) }, marker)
-    val outSchema = StructType.fromDDL("table_name STRING, id STRING, new_version BIGINT")
-    // binder name distinct from the LocalScan member (the
-    // GraftTagsProcedure lesson: `rows` would shadow into a self-call)
-    val outRows = tables.zip(ids).zip(versions).map { case ((t, id), v) =>
-      InternalRow.fromSeq(Seq[Any](
-        UTF8String.fromString(t), UTF8String.fromString(id), v.toLong))
-    }.toArray
-    val scan: Scan = new LocalScan {
-      override def rows(): Array[InternalRow] = outRows
-      override def readSchema(): StructType = outSchema
-    }
-    java.util.Collections.singletonList(scan).iterator()
+    resultRows(StructType.fromDDL("table_name STRING, id STRING, new_version BIGINT"),
+      tables.zip(ids).zip(versions).map { case ((t, id), v) =>
+        Seq(UTF8String.fromString(t), UTF8String.fromString(id), v.toLong) })
   }
 }
 
@@ -2274,27 +2171,17 @@ private[sources] class GraftTxnPublishProcedure(cat: GraftCatalog)
   * unaudited state); abort deletes the staged files eagerly (no version
   * ever named them). */
 private[sources] class GraftWapProcedure(cat: GraftCatalog, publish: Boolean)
-    extends GraftProcedure(cat) {
-  override def name(): String = if (publish) "wap_publish" else "wap_abort"
-  override def description(): String =
-    if (publish) "publish a staged WAP batch as a conditioned append commit"
-    else "abort a staged WAP batch, deleting its files"
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("id", StringType).build())
+    extends GraftProcedure(cat, if (publish) "wap_publish" else "wap_abort",
+      if (publish) "publish a staged WAP batch as a conditioned append commit"
+      else "abort a staged WAP batch, deleting its files",
+      param("table", StringType), param("id", StringType)) {
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.dirForName(input.getUTF8String(0).toString)
+    val (_, dir) = tableArg(input, 0)
     val id = input.getUTF8String(1).toString
-    val schema = StructType.fromDDL("action STRING, id STRING, result BIGINT")
     val (action, res) =
       if (publish) ("published", GraftManifest.publishWap(dir, id).toLong)
       else ("aborted", GraftManifest.abortWap(dir, id).toLong)
-    val row = InternalRow.fromSeq(Seq[Any](
-      UTF8String.fromString(action), UTF8String.fromString(id), res))
-    val scan: Scan = new LocalScan {
-      override def rows(): Array[InternalRow] = Array(row)
-      override def readSchema(): StructType = schema
-    }
-    java.util.Collections.singletonList(scan).iterator()
+    result(StructType.fromDDL("action STRING, id STRING, result BIGINT"),
+      UTF8String.fromString(action), UTF8String.fromString(id), res)
   }
 }

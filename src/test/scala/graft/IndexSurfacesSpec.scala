@@ -75,15 +75,26 @@ class IndexSurfacesSpec extends AnyFunSuite {
     spark.sql("UPDATE gip.db.t SET x = x + 1 WHERE id < 20")
     check("an UPDATE re-insert")
 
-    // 4. OPTIMIZE rewrites the whole table
-    spark.sql("CALL gip.system.optimize('db.t', 1)").collect()
+    // 4. OPTIMIZE rewrites the whole table into two reversed-range files
+    spark.sql("CALL gip.system.optimize('db.t', 2)").collect()
     check("OPTIMIZE")
 
-    // 5. DROP COLUMN of the unindexed column rewrites the survivors. Its
-    // rewrite does not pass the declared sortBy layout, so the reversed
-    // envelope (a layout fact, not an index option) is not re-recorded
+    // 5. DROP COLUMN of the unindexed column rewrites the survivors
     spark.sql("ALTER TABLE gip.db.t DROP COLUMN x")
-    check("DROP COLUMN", all - "rvstats:s")
-    assert(spark.read.format("graft-sink").option("path", dir).load().count() == 300)
+    check("DROP COLUMN")
+    val head = GraftManifest.readVersion(dir, None).get
+    assert(head.sortSpec.contains("reverse(s)"),
+      s"DROP COLUMN must keep the reverse declaration: ${head.sortSpec}")
+    val t = spark.read.format("graft-sink").option("path", dir).load()
+    assert(t.count() == 300)
+    // a 2-char suffix is below the n-gram width, so only the reversed
+    // envelopes can prune it
+    val probe = t.where(org.apache.spark.sql.functions.col("s").endsWith("_0"))
+    val planned = probe.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputRDD.getNumPartitions }.sum
+    assert(planned < head.metas.size,
+      s"the suffix probe planned $planned of ${head.metas.size} files")
+    assert(probe.count() == 43)
   }
 }

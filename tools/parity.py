@@ -3,6 +3,8 @@
 
 Usage: python3 tools/parity.py <verifyOutDir> <sfDir>
 
+Exits 1 when any oracled key fails its compare or has no output.
+
 Reads each <outDir>/<name>/ parquet (written by `graft.Verify`) with
 **pandas** (like the driver), runs the matching SQL from
 <outDir>/oracle_sql.json in DuckDB and materializes it with **.df()**
@@ -84,9 +86,14 @@ def main(out_dir, sf_dir):
         else:
             n_ok += 1
             print(f"ok    {name} ({len(got)} rows)")
+    # an oracled key with no output dir is a Verify run that threw (Verify
+    # logs the error and moves on): it fails the gate like a mismatch
+    missing = sorted(k for k in oracle if k not in names)
+    for name in missing:
+        print(f"MISSING {name}: no output")
     print(f"\n{n_ok} ok, {n_fail} fail, {n_noracle} no-oracle, "
-          f"{len(oracle) - n_ok - n_fail} missing-output")
-    sys.exit(1 if n_fail else 0)
+          f"{len(missing)} missing-output")
+    sys.exit(1 if n_fail or missing else 0)
 
 
 if __name__ == "__main__":

@@ -13,8 +13,14 @@
 #                               # /tmp or in graft.util.Scratch's base, or
 #                               # wrote a spark-warehouse/ in the repo root
 #   tools/preflight.sh fast     # compile-only (mid-round sanity)
+#   tools/preflight.sh oracle [sfDir]
+#                               # compile, run graft.Verify on sfDir
+#                               # (default /root/testdata/sf0.01) into a
+#                               # fresh temp dir, compare it with
+#                               # tools/parity.py, remove the dir
 #
-# Exits non-zero on any compile error, test failure or leaked temp entry.
+# Exits non-zero on any compile error, test failure, leaked temp entry,
+# or oracle key that fails its compare or has no output.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -24,11 +30,23 @@ export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.co
 echo "[preflight] sbt Test/compile"
 timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true Test/compile
 
-if [[ "${1:-}" != "fast" ]]; then
+mode="${1:-}"
+if [[ "$mode" != "fast" ]]; then
   SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
   SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
   SPARK_LOCAL_DIRS=/tmp/spark-local
   export SPARK_GRAFT_CPUS SPARK_DRIVER_MEM SPARK_LOCAL_DIRS
+fi
+
+if [[ "$mode" == "oracle" ]]; then
+  sf_dir="${2:-/root/testdata/sf0.01}"
+  out="$(mktemp -d -p /tmp preflight_oracle.XXXXXX)"
+  trap 'rm -rf "$out"' EXIT
+  echo "[preflight] graft.Verify $sf_dir (cpus=$SPARK_GRAFT_CPUS driver=$SPARK_DRIVER_MEM)"
+  timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true "runMain graft.Verify $sf_dir $out"
+  echo "[preflight] tools/parity.py"
+  python3 tools/parity.py "$out" "$sf_dir"
+elif [[ "$mode" != "fast" ]]; then
   # every spec temp dir lives under one per-JVM root its exit hook removes,
   # and so does graft.util.Scratch's graft_run_* root (its base, resolved
   # the same way: $SPARK_GRAFT_SCRATCH, else a writable /dev/shm, else
