@@ -78,6 +78,13 @@ object GraftCatalog {
     m.foreach { case (k, v) => validProp(k, v) }
     m
   }
+
+  /** The header edit of a commit that imports snapshot `m` (CLONE,
+    * FAST FORWARD): its schema, field ids, CHECKs, declared partition
+    * and sort spec and pending equality deletes; the data-file format
+    * and TBLPROPERTIES stay the target's own. */
+  private[sources] def imported(m: GraftManifest): GraftManifest => GraftManifest =
+    h => m.copy(format = h.format, props = h.props)
 }
 
 class GraftCatalog extends TableCatalog with ProcedureCatalog
@@ -197,10 +204,10 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     // create ATOMIC with the exists-check above: of two racing CREATEs
     // both passing the check, the link(2) loser throws here instead of
     // silently appending an empty v2 under the winner's schema.
-    try GraftManifest.commitMetas(dirOf(ident), Seq.empty, schema.toDDL,
-      truncate = false, expectedBase = Some(0), op = Some("CREATE TABLE"),
-      partSpecSet = Some(spec),
-      propsSet = Some(GraftCatalog.userProps(properties)))
+    try GraftManifest.commitMetas(dirOf(ident), Seq.empty, truncate = false,
+      expectedBase = Some(0), op = Some("CREATE TABLE"),
+      header = _.copy(schemaDdl = Some(schema.toDDL), partSpec = spec,
+        props = GraftCatalog.userProps(properties)))
     catch {
       case _: java.util.ConcurrentModificationException =>
         throw new TableAlreadyExistsException(ident)
@@ -232,27 +239,21 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       case cs if cs.nonEmpty && cs.forall(c =>
           c.isInstanceOf[TableChange.SetProperty] ||
             c.isInstanceOf[TableChange.RemoveProperty]) =>
-        val head = GraftManifest.headerFacts(dir, vs.max)
-        val next = cs.foldLeft(head.props) {
-          case (m, sp: TableChange.SetProperty) =>
-            GraftCatalog.validProp(sp.property(), sp.value())
-            m + (sp.property() -> sp.value())
-          case (m, rp: TableChange.RemoveProperty) => m - rp.property()
-          case (m, _) => m
-        }
-        // CAS on the version the fold read (ADVICE r14): property commits
-        // are read-modify-write over the whole `#prop=` set, so two
-        // concurrent ALTERs would silently drop one side's keys without
-        // the expectedBase guard. The ConcurrentModificationException it
-        // raises is the retryable-conflict signal, same as createTable.
-        GraftManifest.commitMetas(dir, Seq.empty,
-          head.schemaDdl.getOrElse(throw new IllegalStateException(
-            s"graft catalog: $ident carries no schema")),
-          truncate = false, expectedBase = Some(vs.max),
-          op = Some("SET TBLPROPERTIES"), propsSet = Some(next))
-        val schema = GraftManifest.headerSchema(dir, vs.max).getOrElse(
-          throw new IllegalStateException(s"graft catalog: $ident carries no schema"))
-        return new GraftSinkTable(dir, schema, None)
+        // CAS on the version the edit reads (ADVICE r14): property
+        // commits are read-modify-write over the whole `#prop=` set, so
+        // two concurrent ALTERs would silently drop one side's keys
+        // without the expectedBase guard. The ConcurrentModificationException
+        // it raises is the retryable-conflict signal, same as createTable.
+        GraftManifest.commitMetas(dir, Seq.empty, truncate = false,
+          expectedBase = Some(vs.max), op = Some("SET TBLPROPERTIES"),
+          header = h => h.copy(props = cs.foldLeft(h.props) {
+            case (m, sp: TableChange.SetProperty) =>
+              GraftCatalog.validProp(sp.property(), sp.value())
+              m + (sp.property() -> sp.value())
+            case (m, rp: TableChange.RemoveProperty) => m - rp.property()
+            case (m, _) => m
+          }))
+        return loadTable(ident)
       case _ => ()
     }
     val prior = GraftManifest.headerSchema(dir, vs.max).getOrElse(
@@ -281,9 +282,31 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       s"graft catalog: ADD COLUMNS would duplicate column name(s) " +
         names.diff(names.distinct).distinct.mkString("'", "', '", "'"))
     val widened = StructType(prior.fields ++ added)
-    GraftManifest.commitMetas(dir, Seq.empty, widened.toDDL,
-      truncate = false, evolve = true, op = Some("ADD COLUMNS"))
+    GraftManifest.commitMetas(dir, Seq.empty, truncate = false, evolve = true,
+      op = Some("ADD COLUMNS"), header = _.copy(schemaDdl = Some(widened.toDDL)))
     new GraftSinkTable(dir, widened, None)
+  }
+
+  /** The head, its schema and the position of the one top-level column
+    * `names` a column DDL `verb` targets; refuses a nested or unknown
+    * column, and one a CHECK constrains (`hint` says what to do). */
+  private def columnDdl(ident: Identifier, dir: String, verb: String,
+      names: Array[String], hint: String): (GraftManifest, StructType, Int) = {
+    require(names.length == 1, s"graft catalog: $verb supports " +
+      s"top-level columns only, got '${names.mkString(".")}'")
+    val c = names.head
+    val head = GraftManifest.readVersion(dir, None).getOrElse(
+      throw new NoSuchTableException(ident))
+    val schema = head.schemaDdl.map(StructType.fromDDL).getOrElse(
+      throw new IllegalStateException(s"graft catalog: $ident carries no schema"))
+    val i = scala.util.Try(schema.fieldIndex(c)).getOrElse(
+      throw new IllegalArgumentException(
+        s"graft catalog: no column '$c' in ${schema.toDDL}"))
+    head.checks.find { case (_, e) => GraftCheck.columnOf(e) == c }.foreach {
+      case (n, _) => throw new IllegalArgumentException(
+        s"graft catalog: column '$c' is constrained by check '$n' — $hint")
+    }
+    (head, schema, i)
   }
 
   /** `ALTER TABLE ... RENAME COLUMN a TO b` — METADATA-ONLY via COLUMN
@@ -301,40 +324,36 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     * would stop enforcing); destructive drops stay refused entirely. */
   private def renameColumn(ident: Identifier, dir: String,
       r: TableChange.RenameColumn): Table = {
-    require(r.fieldNames.length == 1, "graft catalog: RENAME COLUMN supports " +
-      s"top-level columns only, got '${r.fieldNames.mkString(".")}'")
+    val (head, schema, i) = columnDdl(ident, dir, "RENAME COLUMN", r.fieldNames,
+      "CALL drop_constraint first, then re-add against the new name")
     val from = r.fieldNames.head
     val to = r.newName
-    val head = GraftManifest.readVersion(dir, None).getOrElse(
-      throw new NoSuchTableException(ident))
-    val schema = GraftManifest.headerSchema(dir, head.version).getOrElse(
-      throw new IllegalStateException(s"graft catalog: $ident carries no schema"))
-    val i = scala.util.Try(schema.fieldIndex(from)).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft catalog: no column '$from' in ${schema.toDDL}"))
     require(!schema.fieldNames.contains(to),
       s"graft catalog: column '$to' already exists")
     require(!GraftSinkScan.Reserved.contains(to),
       s"graft catalog: '$to' is reserved for virtual read columns")
-    head.checks.find { case (_, e) => GraftCheck.columnOf(e) == from }.foreach {
-      case (n, _) => throw new IllegalArgumentException(
-        s"graft catalog: column '$from' is constrained by check '$n' — " +
-          "CALL drop_constraint first, then re-add against the new name")
-    }
     val renamed = StructType(schema.fields.updated(i, schema.fields(i).copy(name = to)))
-    val metas = head.metas.map(m => m.partition match {
-      case Some((pc, pv)) if pc == from => m.copy(partition = Some((to, pv)))
-      // a bucket(n, src) layout remaps its SOURCE column name too — the
-      // transform string is the stored partition name
-      case Some((pc, pv)) if GraftBucket.parse(pc).exists(_._2 == from) =>
-        val n = GraftBucket.parse(pc).get._1
-        m.copy(partition = Some((GraftBucket.manifestForm(n, to), pv)))
-      case _ => m
-    })
-    val ids = head.ids.getOrElse(schema.fields.indices.toSeq)
-    GraftManifest.commitMetas(dir, metas, renamed.toDDL, truncate = true,
+    def rn(c: String) = if (c == from) to else c
+    // a partition name is a column or a bucket(n, src) transform over
+    // one — the transform string is the stored name, so its SOURCE
+    // column remaps too
+    def renamePart(pc: String) = GraftBucket.parse(pc) match {
+      case Some((n, src)) if src == from => GraftBucket.manifestForm(n, to)
+      case _ => rn(pc)
+    }
+    def renameSort(sc: String) =
+      if (!GraftManifest.sortSpecCols(sc).contains(from)) sc
+      else GraftManifest.zorderCols(sc).map(cs => s"zorder(${cs.map(rn).mkString(",")})")
+        .orElse(GraftManifest.reverseCol(sc).map(c => s"reverse(${rn(c)})"))
+        .getOrElse(GraftManifest.sortCols(sc).map(rn).mkString(","))
+    val metas = head.metas.map(m =>
+      m.copy(partition = m.partition.map { case (pc, pv) => (renamePart(pc), pv) }))
+    // the header stays the head's (field ids ride with their positions);
+    // the declared layouts follow the column to its new name
+    GraftManifest.commitMetas(dir, metas, truncate = true,
       expectedBase = Some(head.version), op = Some("RENAME COLUMN"),
-      idsOverride = Some(ids))
+      header = h => h.copy(schemaDdl = Some(renamed.toDDL),
+        partSpec = h.partSpec.map(renamePart), sortSpec = h.sortSpec.map(renameSort)))
     new GraftSinkTable(dir, renamed, None)
   }
 
@@ -352,22 +371,10 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     * on it. */
   private def dropColumn(ident: Identifier, dir: String,
       d: TableChange.DeleteColumn): Table = {
-    require(d.fieldNames.length == 1, "graft catalog: DROP COLUMN supports " +
-      s"top-level columns only, got '${d.fieldNames.mkString(".")}'")
+    val (head, schema, i) = columnDdl(ident, dir, "DROP COLUMN", d.fieldNames,
+      "CALL drop_constraint first")
     val c = d.fieldNames.head
-    val head = GraftManifest.readVersion(dir, None).getOrElse(
-      throw new NoSuchTableException(ident))
-    val schema = GraftManifest.headerSchema(dir, head.version).getOrElse(
-      throw new IllegalStateException(s"graft catalog: $ident carries no schema"))
-    val i = scala.util.Try(schema.fieldIndex(c)).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft catalog: no column '$c' in ${schema.toDDL}"))
     require(schema.length > 1, "graft catalog: cannot drop the only column")
-    head.checks.find { case (_, e) => GraftCheck.columnOf(e) == c }.foreach {
-      case (n, _) => throw new IllegalArgumentException(
-        s"graft catalog: column '$c' is constrained by check '$n' — " +
-          "CALL drop_constraint first")
-    }
     val layoutCols = (head.partSpec.toSeq ++
       head.metas.flatMap(_.partition.map(_._1))).distinct
       .map(pc => GraftBucket.parse(pc).map(_._2).getOrElse(pc))
@@ -378,8 +385,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     val spark = org.apache.spark.sql.SparkSession.active
     val remaining = schema.fieldNames.filterNot(_ == c)
     val narrowed = StructType(schema.fields.filterNot(_.name == c))
-    val survivorIds = head.ids.getOrElse(schema.fields.indices.toSeq)
-      .zipWithIndex.collect { case (id, j) if j != i => id }
+    val survivorIds = head.ids.getOrElse(schema.fields.indices).patch(i, Nil, 1)
     // rewrite into a temp dir, move in under collision-free names, and
     // publish with ONE conditioned commit (the binpack pattern): a lost
     // race deletes the moved files instead of stranding orphans
@@ -391,12 +397,10 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       if (ps.size == 1 && head.metas.forall(_.partition.isDefined)) Some(ps.head)
       else head.partSpec
     }
-    // a declared reversed layout whose column survives keeps its
-    // declaration, so the fresh files re-record `#rvstats` (as OPTIMIZE
-    // does); the commit re-declares it because dropping a non-trailing
-    // column counts as a shape replacement, which inherits no `#sortspec`
-    val keepSort = head.sortSpec.filter(sc =>
-      GraftManifest.reverseCol(sc).exists(remaining.contains))
+    // a declared sort layout whose columns all survive stays declared,
+    // and the rewrite writes under it (as OPTIMIZE does); one that names
+    // the dropped column goes with it
+    val keepSort = head.sortSpec.filter(GraftManifest.sortSpecCols(_).forall(remaining.contains))
     val tmp = java.nio.file.Files.createTempDirectory("graft-dropcol").toString
     try {
       // the rewrite lands in the TABLE's data-file format (the tmp dir has
@@ -415,11 +419,10 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         .mode("overwrite").save()
       val (moved, movedNames) = GraftMaintenance.moveRewrite(tmp, dir,
         s"d${head.version}", GraftManifest.readVersion(tmp, None).get.metas)
-      try GraftManifest.commitMetas(dir, moved, narrowed.toDDL, truncate = true,
+      try GraftManifest.commitMetas(dir, moved, truncate = true,
         expectedBase = Some(head.version), op = Some("DROP COLUMN"),
-        idsOverride = Some(survivorIds),
-        checksOverride = Some(head.checks),
-        partSpecSet = Some(head.partSpec), sortSpecSet = keepSort.map(Some(_)))
+        header = _.copy(schemaDdl = Some(narrowed.toDDL), ids = Some(survivorIds),
+          sortSpec = keepSort))
       catch {
         case e: Throwable =>
           movedNames.foreach(n => java.nio.file.Files.deleteIfExists(
@@ -552,6 +555,10 @@ private[sources] class GraftStagedTable(dir: String, schema: StructType,
     props: Map[String, String] = Map.empty)
     extends GraftSinkTable(dir, schema, None) with StagedTable {
   @volatile private var wrote = false
+  /** The stage's declared header facts: its partition spec (or none)
+    * and its TBLPROPERTIES (or none). */
+  private val declared: GraftManifest => GraftManifest =
+    _.copy(partSpec = spec, props = props)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     // SupportsTruncate because the atomic RTAS plan writes truncate-style;
@@ -592,8 +599,7 @@ private[sources] class GraftStagedTable(dir: String, schema: StructType,
           // drop them; a REPLACE with none declares property-free)
           new GraftSinkBatchWrite(dir, info.schema(), replacing, tag,
             Some(baseAtStage), evolve = false, partCol = spec,
-            opLabel = Some(label), declaredSpec = Some(spec),
-            propsSet = Some(props))
+            opLabel = Some(label), declared = declared)
         }
       }
     }
@@ -603,14 +609,13 @@ private[sources] class GraftStagedTable(dir: String, schema: StructType,
     * schema as an empty snapshot under the same conditioned claim. */
   override def commitStagedChanges(): Unit = {
     if (!wrote)
-      GraftManifest.commitMetas(dir, Seq.empty, schema.toDDL,
-        truncate = replacing, expectedBase = Some(baseAtStage), op = Some(label),
-        partSpecSet = Some(spec),
-        // the no-write settle declares the staged TBLPROPERTIES exactly
-        // like the write path (round-16b review: omitting propsSet here
-        // let a plain `REPLACE TABLE ... TBLPROPERTIES(...)` silently
+      GraftManifest.commitMetas(dir, Seq.empty, truncate = replacing,
+        expectedBase = Some(baseAtStage), op = Some(label),
+        // the no-write settle declares the staged layout and
+        // TBLPROPERTIES exactly like the write path (round-16b review:
+        // a plain `REPLACE TABLE ... TBLPROPERTIES(...)` must not
         // inherit the OLD table's properties and drop the declared ones)
-        propsSet = Some(props))
+        header = h => declared(GraftManifest.replacing(h, Some(schema.toDDL))))
     ()
   }
 
@@ -716,16 +721,13 @@ private[sources] class GraftCloneProcedure(cat: GraftCatalog)
         Files.createLink(Paths.get(dstDir, n), Paths.get(srcDir, n))
         linked += n
       }
-      val nv = GraftManifest.commitMetas(dstDir, m.metas,
-        m.schemaDdl.getOrElse(throw new IllegalStateException(
-          s"graft clone: v${m.version} at $srcDir carries no schema")),
-        truncate = false, op = Some(s"CLONE $srcName v${m.version}"),
-        idsOverride = m.ids, checksOverride = Some(m.checks),
-        partSpecSet = Some(m.partSpec), sortSpecSet = Some(m.sortSpec),
+      val nv = GraftManifest.commitMetas(dstDir, m.metas, truncate = false,
+        op = Some(s"CLONE $srcName v${m.version}"),
+        header = GraftCatalog.imported(m),
         // the clone's first version lands AT the source clock (#seq and
         // #eqdel versions ride along verbatim; a v1 clone would let the
         // target's next writes mint seqs below the imported ones)
-        eqDelsSet = Some(m.eqDels), minVersion = math.max(1, m.version))
+        minVersion = math.max(1, m.version))
       result(StructType.fromDDL(
         "source_version INT, files_linked INT, new_version INT"),
         m.version, names.size, nv)
@@ -761,10 +763,9 @@ private[sources] class GraftSetPartitionSpecProcedure(cat: GraftCatalog)
       throw new IllegalArgumentException(
         s"graft set_partition_spec: no committed table at '$table'"))
     val spec = Option(input.getUTF8String(1)).map(_.toString.trim).filter(_.nonEmpty)
-    val ddl = head.schemaDdl.getOrElse(throw new IllegalStateException(
-      s"graft set_partition_spec: head at $dir carries no schema"))
     spec.foreach { sp =>
-      val schema = StructType.fromDDL(ddl)
+      val schema = StructType.fromDDL(head.schemaDdl.getOrElse(throw new IllegalStateException(
+        s"graft set_partition_spec: head at $dir carries no schema")))
       val src = GraftBucket.parse(sp).map(_._2).getOrElse(sp)
       val i = scala.util.Try(schema.fieldIndex(src)).getOrElse(
         throw new IllegalArgumentException(
@@ -777,10 +778,9 @@ private[sources] class GraftSetPartitionSpecProcedure(cat: GraftCatalog)
             s"'$src' is $dt")
       }
     }
-    val nv = GraftManifest.commitMetas(dir, head.metas,
-      ddl, truncate = true, expectedBase = Some(head.version),
-      op = Some("SET PARTITION SPEC"), idsOverride = head.ids,
-      checksOverride = Some(head.checks), partSpecSet = Some(spec))
+    val nv = GraftManifest.commitMetas(dir, head.metas, truncate = true,
+      expectedBase = Some(head.version), op = Some("SET PARTITION SPEC"),
+      header = _.copy(partSpec = spec))
     result(StructType.fromDDL("spec STRING, new_version INT"),
       org.apache.spark.unsafe.types.UTF8String.fromString(spec.getOrElse("")), nv)
   }
@@ -844,18 +844,14 @@ private[sources] class GraftFastForwardProcedure(cat: GraftCatalog)
           Files.createLink(Paths.get(srcDir, n), Paths.get(brDir, n))
           linked += n
         }
-      // eqDelsSet + minVersion: the branch head's PENDING equality
-      // deletes publish with it (their sidecars linked above), and the
-      // merge commit lands at or above the branch clock so the imported
-      // #seq / #eqdel version pairs keep their ordering on the source.
-      val nv = GraftManifest.commitMetas(srcDir, brHead.metas,
-        brHead.schemaDdl.getOrElse(throw new IllegalStateException(
-          s"graft fast_forward: branch head at $brDir carries no schema")),
-        truncate = true, expectedBase = Some(base),
+      // the branch head's PENDING equality deletes publish with it
+      // (their sidecars linked above), and the merge commit lands at or
+      // above the branch clock so the imported #seq / #eqdel version
+      // pairs keep their ordering on the source.
+      val nv = GraftManifest.commitMetas(srcDir, brHead.metas, truncate = true,
+        expectedBase = Some(base),
         op = Some(s"FAST FORWARD $brName v${brHead.version}"),
-        idsOverride = brHead.ids, checksOverride = Some(brHead.checks),
-        partSpecSet = Some(brHead.partSpec), sortSpecSet = Some(brHead.sortSpec),
-        eqDelsSet = Some(brHead.eqDels),
+        header = GraftCatalog.imported(brHead),
         minVersion = math.max(base + 1, brHead.version))
       result(StructType.fromDDL(
         "base_version INT, branch_version INT, new_version INT"),
@@ -1058,16 +1054,14 @@ private[sources] class GraftRestoreProcedure(cat: GraftCatalog)
     val m = GraftManifest.readVersion(dir, Some(v)).getOrElse(
       throw new IllegalArgumentException(s"graft restore: no committed version at $dir"))
     val head = GraftManifest.readVersion(dir, None).get.version
-    // eqDelsSet: the restored state includes the restored version's
-    // PENDING equality deletes — inheriting the abandoned head's would
-    // keep applying deletes the restored snapshot predates (rows vanish
-    // from a supposedly-restored table), and restoring to a pre-upsert
+    // the restored state includes the restored version's PENDING
+    // equality deletes — inheriting the abandoned head's would keep
+    // applying deletes the restored snapshot predates (rows vanish from
+    // a supposedly-restored table), and restoring to a pre-upsert
     // version must NOT drag the upsert's entries along.
-    val nv = GraftManifest.commitMetas(dir, m.metas,
-      m.schemaDdl.getOrElse(throw new IllegalStateException(
-        s"graft restore: v$v at $dir carries no schema")),
-      truncate = true, expectedBase = Some(head), op = Some("RESTORE"),
-      eqDelsSet = Some(m.eqDels))
+    val nv = GraftManifest.commitMetas(dir, m.metas, truncate = true,
+      expectedBase = Some(head), op = Some("RESTORE"),
+      header = h => GraftManifest.replacing(h, m.schemaDdl).copy(eqDels = m.eqDels))
     result(StructType.fromDDL("restored_version INT, new_version INT"), v, nv)
   }
 }
@@ -1469,10 +1463,8 @@ object GraftMaintenance {
       // names them yet, so deleting them eagerly on ANY commit failure is
       // safe — the caller re-runs the procedure against the new head.
       val nv =
-        try GraftManifest.commitMetas(dir, big ++ moved,
-          head.schemaDdl.getOrElse(throw new IllegalStateException(
-            s"graft optimize: head at $dir carries no schema")),
-          truncate = true, expectedBase = Some(head.version), op = Some(op))
+        try GraftManifest.commitMetas(dir, big ++ moved, truncate = true,
+          expectedBase = Some(head.version), op = Some(op))
         catch {
           case e: Throwable =>
             movedNames.foreach(n => java.nio.file.Files.deleteIfExists(
@@ -1581,11 +1573,8 @@ object GraftMaintenance {
     } catch { case e: Throwable => dropStaged(); throw e }
     val bundles = names
     val nv =
-      try GraftManifest.commitMetas(dir, newMetas,
-        head.schemaDdl.getOrElse(throw new IllegalStateException(
-          s"graft compact_index: head at $dir carries no schema")),
-        truncate = true, expectedBase = Some(headV),
-        op = Some("COMPACT-INDEX"))
+      try GraftManifest.commitMetas(dir, newMetas, truncate = true,
+        expectedBase = Some(headV), op = Some("COMPACT-INDEX"))
       catch {
         case e: Throwable =>
           bundles.foreach(name => Files.deleteIfExists(Paths.get(dir, name)))
@@ -1921,10 +1910,9 @@ private[sources] class GraftAddConstraintProcedure(cat: GraftCatalog)
     require(violations == 0L,
       s"graft add_constraint: $violations existing row(s) violate '$expr' — " +
         "clean the data first (a recorded-but-false constraint would lie to readers)")
-    val nv = GraftManifest.commitMetas(dir, head.metas, head.schemaDdl.get,
-      truncate = true, expectedBase = Some(head.version),
-      op = Some("ADD CONSTRAINT"),
-      checksOverride = Some(head.checks :+ (cname -> expr)))
+    val nv = GraftManifest.commitMetas(dir, head.metas, truncate = true,
+      expectedBase = Some(head.version), op = Some("ADD CONSTRAINT"),
+      header = h => h.copy(checks = h.checks :+ (cname -> expr)))
     result(StructType.fromDDL("constraint STRING, expr STRING, new_version INT"),
       UTF8String.fromString(cname), UTF8String.fromString(expr), nv)
   }
@@ -1943,11 +1931,9 @@ private[sources] class GraftDropConstraintProcedure(cat: GraftCatalog)
         s"graft drop_constraint: no committed table at $dir"))
     val existed = head.checks.exists(_._1 == cname)
     if (existed)
-      GraftManifest.commitMetas(dir, head.metas, head.schemaDdl.getOrElse(
-          throw new IllegalStateException(s"graft drop_constraint: no schema at $dir")),
-        truncate = true, expectedBase = Some(head.version),
-        op = Some("DROP CONSTRAINT"),
-        checksOverride = Some(head.checks.filterNot(_._1 == cname)))
+      GraftManifest.commitMetas(dir, head.metas, truncate = true,
+        expectedBase = Some(head.version), op = Some("DROP CONSTRAINT"),
+        header = h => h.copy(checks = h.checks.filterNot(_._1 == cname)))
     result(StructType.fromDDL("constraint STRING, existed BOOLEAN"),
       UTF8String.fromString(cname), existed)
   }

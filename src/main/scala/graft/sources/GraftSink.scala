@@ -593,6 +593,10 @@ object GraftManifest {
   def sortCols(spec: String): Seq[String] =
     if (zorderCols(spec).isDefined || reverseCol(spec).isDefined) Nil
     else spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** Every column a `#sortspec` value names, whatever its kind. */
+  def sortSpecCols(spec: String): Seq[String] =
+    zorderCols(spec).orElse(reverseCol(spec).map(Seq(_))).getOrElse(sortCols(spec))
   private val VPrefix = "_manifest-v"
   private val RefPrefix = "_ref-"
 
@@ -1300,7 +1304,32 @@ object GraftManifest {
       truncate: Boolean): Int = {
     val w = StructType.fromDDL(schemaDdl).length
     commitMetas(path, jobFiles.map { case (f, n) =>
-      GraftFileMeta(f, n, w, Map.empty, None) }, schemaDdl, truncate)
+      GraftFileMeta(f, n, w, Map.empty, None) }, truncate,
+      header = _.copy(schemaDdl = Some(schemaDdl)))
+  }
+
+  /** The header of a table with no committed version. */
+  private val NoHeader = GraftManifest(0, Nil, 0L, None)
+
+  /** The header a commit that REPLACES the table's rows with rows of
+    * `schemaDdl` starts from — the one rule for "this commit starts a
+    * fresh header". A schema that keeps the head's column names (the
+    * same names, or one name list a prefix of the other) keeps the
+    * head's header; any other schema is a new table shape and starts
+    * without field ids, CHECK constraints, declared partition or sort
+    * spec, or TBLPROPERTIES. The data-file format and the pending
+    * equality deletes ride on either way (a writer re-declares the one,
+    * a full commit prunes the other). Used by the truncating batch
+    * write, its write builder's declared-partition default, the no-write
+    * REPLACE TABLE settle and RESTORE. */
+  def replacing(head: GraftManifest, schemaDdl: Option[String]): GraftManifest = {
+    def names(ddl: Option[String]) =
+      ddl.map(StructType.fromDDL(_).fieldNames.toSeq).getOrElse(Nil)
+    val (was, now) = (names(head.schemaDdl), names(schemaDdl))
+    val kept = if (was.startsWith(now) || now.startsWith(was)) head
+      else head.copy(ids = None, checks = Nil, partSpec = None, sortSpec = None,
+        props = Map.empty)
+    kept.copy(schemaDdl = schemaDdl)
   }
 
   /** Publish `jobMetas` as the next version. The version slot is claimed
@@ -1326,6 +1355,20 @@ object GraftManifest {
     * overwrites ("table := my data") pass None and truncate
     * unconditionally.
     *
+    * `header`: this commit's edit of the table header — the schema,
+    * field ids, CHECK constraints, declared partition and sort spec,
+    * data-file format, TBLPROPERTIES and pending equality deletes. It
+    * runs on the head's header as read on each claim attempt (an empty
+    * header when nothing is committed), so a commit that loses a claim
+    * inherits the winner's header on its retry; the default keeps the
+    * head's header whole. An edit that writes new columns sets
+    * `schemaDdl`; a commit that replaces the rows under a new schema
+    * starts from [[replacing]]. Field ids default to the header's when
+    * they map every committed column (the same names, or an edit that
+    * mapped them: RENAME, DROP COLUMN, an imported snapshot), extend
+    * with never-reused ids on a trailing evolution, and start a fresh
+    * id space otherwise.
+    *
     * `evolve`: admit an append whose schema extends the committed one by
     * trailing columns (or is a prefix of it — an old-shaped producer
     * appending after an evolution). The manifest schema becomes the
@@ -1335,18 +1378,12 @@ object GraftManifest {
     * claim lost, unexpected IO failure) — without the finally, a non-
     * EEXIST failure would leak `_manifest-v*.tmp` files forever (vacuum
     * additionally sweeps aged ones, belt and braces). */
-  def commitMetas(path: String, jobMetas: Seq[GraftFileMeta], schemaDdl: String,
+  def commitMetas(path: String, jobMetas: Seq[GraftFileMeta],
       truncate: Boolean, expectedBase: Option[Int] = None,
       evolve: Boolean = false, op: Option[String] = None,
       txn: Option[(String, Long)] = None,
-      idsOverride: Option[Seq[Int]] = None,
-      checksOverride: Option[Seq[(String, String)]] = None,
-      partSpecSet: Option[Option[String]] = None,
-      sortSpecSet: Option[Option[String]] = None,
-      formatSet: Option[String] = None,
-      propsSet: Option[Map[String, String]] = None,
+      header: GraftManifest => GraftManifest = identity,
       newEqDels: Seq[(String, String, Long)] = Nil,
-      eqDelsSet: Option[Seq[GraftEqDel]] = None,
       minVersion: Int = 1,
       pendingMarker: Option[java.nio.file.Path] = None): Int = {
     new File(path).mkdirs() // a zero-task job commits a manifest into an empty dir
@@ -1381,6 +1418,9 @@ object GraftManifest {
           s"graft-sink: commit planned against version $base but head is $at at $path — " +
             "re-read the table and re-plan the rewrite (a blind retry would drop concurrent commits)")
       }
+      val edited = header(head.getOrElse(NoHeader))
+      val schemaDdl = edited.schemaDdl.getOrElse(throw new IllegalStateException(
+        s"graft-sink: commit at $path carries no schema"))
       val priorDdl = head.flatMap(_.schemaDdl)
       // Union schema under evolution: the trailing columns some committed
       // files LACK must be nullable in the manifest schema — those files
@@ -1393,9 +1433,6 @@ object GraftManifest {
       // INSERT into a nullable table is fine, and a nullable append into
       // a NOT NULL table must widen the committed schema — the new file
       // may hold nulls, and a reader trusting NOT NULL would miscompute).
-      def sameShape(a: StructType, b: StructType): Boolean =
-        a.length == b.length && a.fields.zip(b.fields).forall { case (x, y) =>
-          x.name == y.name && x.dataType == y.dataType }
       def unionNull(a: StructType, b: StructType): String =
         StructType(a.fields.zip(b.fields).map { case (x, y) =>
           x.copy(nullable = x.nullable || y.nullable) }).toDDL
@@ -1405,7 +1442,7 @@ object GraftManifest {
           case None | Some(`schemaDdl`) => schemaDdl
           case Some(prior) =>
             val (p, j) = (StructType.fromDDL(prior), StructType.fromDDL(schemaDdl))
-            if (sameShape(p, j)) unionNull(p, j)
+            if (p.length == j.length && isPrefixOf(p, j)) unionNull(p, j)
             else if (evolve && isPrefixOf(p, j)) widened(j, p.length)
             else if (evolve && isPrefixOf(j, p)) widened(p, j.length)
             else if (evolve) throw new IllegalArgumentException(
@@ -1417,62 +1454,29 @@ object GraftManifest {
         }
       // STABLE FIELD IDS (column mapping): positions are the storage
       // identity (cells are positional), ids are the LOGICAL identity —
-      // a rename keeps them (idsOverride from the ALTER path), trailing
-      // evolution extends with fresh never-reused ids (max+1, so a
-      // dropped-then-readded name can never alias an old column), and an
-      // arbitrary schema replacement starts a fresh id space (it IS a
-      // new table shape). Legacy manifests without ids adopt positional
+      // a rename keeps them, trailing evolution extends with fresh
+      // never-reused ids (max+1, so a dropped-then-readded name can
+      // never alias an old column), and a new table shape starts a
+      // fresh id space. Legacy manifests without ids adopt positional
       // ids on their next commit.
       val unionLen = StructType.fromDDL(unionDdl).length
       val priorNames = priorDdl.map(StructType.fromDDL(_).fieldNames.toSeq)
         .getOrElse(Seq.empty)
       val unionNames = StructType.fromDDL(unionDdl).fieldNames.toSeq
-      val priorIds = head.flatMap(_.ids)
-        .orElse(head.map(_ => priorNames.indices.toSeq))
-      val ids = idsOverride.getOrElse {
-        priorIds match {
-          case Some(pi) if unionNames == priorNames => pi
-          case Some(pi) if unionNames.startsWith(priorNames) =>
-            val base0 = if (pi.isEmpty) 0 else pi.max + 1
-            pi ++ (0 until (unionLen - pi.length)).map(base0 + _)
-          case _ => (0 until unionLen).toSeq // replaced shape: fresh id space
-        }
+      val ids = edited.ids match {
+        case Some(pi) if pi.length == unionLen => pi
+        case Some(pi) if pi.length == priorNames.length &&
+            unionNames.startsWith(priorNames) =>
+          val base0 = if (pi.isEmpty) 0 else pi.max + 1
+          pi ++ (0 until (unionLen - pi.length)).map(base0 + _)
+        case _ => (0 until unionLen).toSeq
       }
-      require(ids.length == unionLen && ids.distinct.length == ids.length,
+      require(ids.distinct.length == ids.length,
         s"graft-sink: field ids $ids do not map the ${unionLen}-column schema")
-      // CHECK constraints ride every commit; a full shape REPLACEMENT
-      // (REPLACE TABLE) starts constraint-free (it is a new table shape),
-      // while any commit that keeps the shape but would drop a
-      // constrained column must drop the constraint FIRST — silently
-      // shedding a data-quality promise is the failure mode.
-      val shapeReplaced = truncate && unionNames != priorNames &&
-        !unionNames.startsWith(priorNames) && !priorNames.startsWith(unionNames)
-      val checks = checksOverride.getOrElse(
-        if (shapeReplaced) Nil else head.map(_.checks).getOrElse(Nil))
-      // the DECLARED partition spec (`CREATE TABLE ... PARTITIONED BY`)
-      // rides every commit like checks: writes without an explicit
-      // partitionBy option conform to it. A full shape replacement drops
-      // it — a REPLACE TABLE is a new table shape.
-      // tri-state: None = inherit; Some(s) = the DDL (re)declared s,
-      // including Some(None) = a REPLACE that declared NO partitioning
-      val partSpec = partSpecSet.getOrElse(
-        if (shapeReplaced) None else head.flatMap(_.partSpec))
-      // the declared SORT (range-clustering) layout rides like partSpec:
-      // recorded by truncating sortBy writes, carried by every other
-      // commit, honored by OPTIMIZE so maintenance preserves clustering
-      val sortSpec = sortSpecSet.getOrElse(
-        if (shapeReplaced) None else head.flatMap(_.sortSpec))
-      // the DATA-FILE format rides every commit like partSpec: resolved
-      // writers record it (formatSet); internal commits (DML vectors,
-      // metadata deletes, WAP publish, vacuum folds) inherit the header's
-      val format = formatSet.orElse(head.flatMap(_.format))
-      // TABLE PROPERTIES ride every commit like checks (the Delta/Iceberg
-      // table-metadata contract): set/unset replaces the whole map
-      // (propsSet); a shape REPLACEMENT starts property-free
-      val props = propsSet.getOrElse(
-        if (shapeReplaced) Map.empty[String, String]
-        else head.map(_.props).getOrElse(Map.empty[String, String]))
-      checks.foreach { case (n, e) =>
+      // a commit that keeps a constrained column's shape but would drop
+      // the column must drop the constraint FIRST — silently shedding a
+      // data-quality promise is the failure mode
+      edited.checks.foreach { case (n, e) =>
         require(unionNames.contains(GraftCheck.columnOf(e)),
           s"graft-sink: schema '$unionDdl' lacks column '${GraftCheck.columnOf(e)}' " +
             s"constrained by check '$n' — CALL drop_constraint first")
@@ -1521,13 +1525,13 @@ object GraftManifest {
       // this commit's version. Full commits PRUNE: an entry no surviving
       // file predates (f.seq < e.v) can never delete a row again — a full
       // rewrite's fresh files therefore retire every pending entry.
-      // `eqDelsSet` REPLACES the inherited list for commits that restore
-      // or import a different snapshot's state (restore must adopt the
-      // RESTORED version's pending entries, not the abandoned head's;
-      // clone/fast_forward must carry the source/branch head's — each
-      // would otherwise resurrect equality-deleted rows or delete rows
-      // the restored snapshot still holds).
-      val eqDels0 = eqDelsSet.getOrElse(head.map(_.eqDels).getOrElse(Nil)) ++
+      // Commits that restore or import a different snapshot's state
+      // replace the inherited list in their header edit (restore must
+      // adopt the RESTORED version's pending entries, not the abandoned
+      // head's; clone/fast_forward must carry the source/branch head's —
+      // each would otherwise resurrect equality-deleted rows or delete
+      // rows the restored snapshot still holds).
+      val eqDels0 = edited.eqDels ++
         newEqDels.map { case (c, sc, n) => GraftEqDel(next, c, sc, n) }
       // INDEXED-COLUMN header fact (`#idx=`, ADVICE r11 #2): deltas union
       // the prior header's sets with the job's files' — O(header + job);
@@ -1537,8 +1541,8 @@ object GraftManifest {
       // O(header) consumers — so legacy tables upgrade at their next
       // full commit.
       val common = GraftManifest(next, Nil, newTotal, Some(unionDdl), Some(commitTs),
-        op = op, ids = Some(ids), checks = checks, partSpec = partSpec,
-        sortSpec = sortSpec, format = format, props = props)
+        op = op, ids = Some(ids), checks = edited.checks, partSpec = edited.partSpec,
+        sortSpec = edited.sortSpec, format = edited.format, props = edited.props)
       val body =
         if (isDelta) render(common.copy(metas = jobStamped, base = headV,
           txns = txn.toMap,
@@ -1686,9 +1690,8 @@ object GraftManifest {
     * (safe), never a lost batch. */
   def publishWap(path: String, id: String): Int = {
     val (m, base) = readWap(path, id)
-    val v = commitMetas(path, m.metas, m.schemaDdl.getOrElse(
-        throw new IllegalStateException(s"staged WAP '$id' carries no schema")),
-      truncate = false, expectedBase = Some(base), op = Some("WAP PUBLISH"))
+    val v = commitMetas(path, m.metas, truncate = false, expectedBase = Some(base),
+      op = Some("WAP PUBLISH"), header = _.copy(schemaDdl = m.schemaDdl))
     Files.deleteIfExists(Paths.get(path, WapPrefix + id))
     v
   }
@@ -1751,11 +1754,9 @@ object GraftManifest {
     try {
       stages.foreach { case (path, id) =>
         val (m, base) = readWap(path, id)
-        val v = commitMetas(path, m.metas, m.schemaDdl.getOrElse(
-            throw new IllegalStateException(
-              s"staged WAP '$id' at $path carries no schema")),
-          truncate = false, expectedBase = Some(base), op = Some("TXN PUBLISH"),
-          pendingMarker = Some(marker))
+        val v = commitMetas(path, m.metas, truncate = false,
+          expectedBase = Some(base), op = Some("TXN PUBLISH"),
+          header = _.copy(schemaDdl = m.schemaDdl), pendingMarker = Some(marker))
         claimed += (path -> v)
       }
       // The marker CAS is the transaction's single sound commit point
@@ -2718,8 +2719,8 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
     // no file matched: committing would churn an O(table-files) manifest
     // version for a statement that changed nothing
     if (kept.size == head.metas.size) return
-    GraftManifest.commitMetas(path, kept, head.schemaDdl.get,
-      truncate = true, expectedBase = Some(head.version), op = Some("DELETE"))
+    GraftManifest.commitMetas(path, kept, truncate = true,
+      expectedBase = Some(head.version), op = Some("DELETE"))
     ()
   }
 
@@ -2730,9 +2731,8 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
   override def truncateTable(): Boolean = {
     val head = headForDml("TRUNCATE")
     if (head.metas.isEmpty && head.total == 0L) return true // already empty: no-op
-    GraftManifest.commitMetas(path, Seq.empty, head.schemaDdl.getOrElse(
-        throw new IllegalStateException(s"graft-sink: head at $path carries no schema")),
-      truncate = true, expectedBase = Some(head.version), op = Some("TRUNCATE"))
+    GraftManifest.commitMetas(path, Seq.empty, truncate = true,
+      expectedBase = Some(head.version), op = Some("TRUNCATE"))
     true
   }
 
@@ -2799,6 +2799,10 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
             "graft-sink: wapStage is append-only — stage the batch, audit, publish")
         }
         private val evolve = Option(opts.get("evolveSchema")).exists(_.toBoolean)
+        // the head's header, read once: the layouts and properties this
+        // write conforms to
+        private val head = GraftManifest.versions(path).lastOption
+          .map(GraftManifest.headerFacts(path, _))
         // partitionBy rides as an OPTION, not DataFrameWriter.partitionBy:
         // the V1 save() path rejects explicit partition columns on a
         // path-based V2 TableProvider before the table ever sees them
@@ -2807,15 +2811,10 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
         // through the catalog conforms to the declared layout without
         // the writer knowing anything — layout is TABLE metadata
         private val partCol = Option(opts.get("partitionBy")).filter(_.nonEmpty)
-          .orElse(GraftManifest.versions(path).lastOption.flatMap(v =>
-            GraftManifest.headerFacts(path, v).partSpec)
-            // a shape-replacing overwrite doesn't carry the spec's source
-            // column — the spec is dropped by the commit (shapeReplaced),
-            // so the write must not try to conform to it either
-            .filter { s =>
-              val src = GraftBucket.parse(s).map(_._2).getOrElse(s)
-              info.schema().fieldNames.contains(src)
-            })
+          // a truncating write conforms to the header its commit starts
+          // from: a new table shape declares no partitioning
+          .orElse(head.flatMap(h => (if (truncating)
+            GraftManifest.replacing(h, Some(info.schema().toDDL)) else h).partSpec))
         // write DISTRIBUTION (the Iceberg write.distribution-mode
         // contract): a partitioned write requests CLUSTERING on the
         // partition column by default ("hash"), so each value's rows
@@ -2840,9 +2839,7 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
         // pins the shuffle width (requiredNumPartitions) — the file-count
         // knob; 0 lets Spark/AQE choose.
         private val declaredSort: Option[String] =
-          if (truncating) None
-          else GraftManifest.versions(path).lastOption.flatMap(v =>
-            GraftManifest.headerFacts(path, v).sortSpec)
+          if (truncating) None else head.flatMap(_.sortSpec)
         // an EXPLICIT append sortBy must CONFORM to a declared layout
         // (round-16 review): the commit would keep the old #sortspec
         // while the new files sort by the new key, and the scan's
@@ -2963,10 +2960,8 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
         // writer options FIRST, then the table's durable `#prop=`
         // properties (ALTER TABLE SET TBLPROPERTIES — a property-carrying
         // table maintains itself under ANY writer), field by field.
-        private lazy val tableProps: Map[String, String] =
-          GraftManifest.versions(path).lastOption
-            .map(v => GraftManifest.headerFacts(path, v).props)
-            .getOrElse(Map.empty)
+        private def tableProps: Map[String, String] =
+          head.map(_.props).getOrElse(Map.empty)
         private def policyField(k: String): Option[String] =
           Option(opts.get(k)).filter(_.nonEmpty).orElse(tableProps.get(k))
         private def policyOf: Option[GraftAutoOptimize] =
@@ -5369,15 +5364,14 @@ class GraftSinkBatchWrite(path: String, schema: StructType, truncate: Boolean,
     tag: String, expectedBase: Option[Int], evolve: Boolean,
     partCol: Option[String], opLabel: Option[String] = None,
     replaceWhere: Option[Seq[Filter]] = None,
-    declaredSpec: Option[Option[String]] = None,
+    declared: GraftManifest => GraftManifest = identity,
     wapStage: Option[String] = None,
     idx: GraftIdx = GraftIdx.Empty,
     sortCol: Option[String] = None,
     format: String = GraftFormat.Default,
     upsertKey: Option[String] = None,
     rowGroupBytes: Option[Int] = None,
-    autoOpt: Option[GraftAutoOptimize] = None,
-    propsSet: Option[Map[String, String]] = None) extends BatchWrite {
+    autoOpt: Option[GraftAutoOptimize] = None) extends BatchWrite {
   /** Writer factory — resolved at JOB START on the driver, including the
     * head's CHECK constraints: every task writer enforces them per row,
     * so a violating batch aborts before any manifest commit (nothing
@@ -5409,16 +5403,19 @@ class GraftSinkBatchWrite(path: String, schema: StructType, truncate: Boolean,
         GraftManifest.stageWap(path, id, schema.toDDL, headV, metas.toSeq)
       case (None, Some(filters)) => commitReplaceWhere(metas.toSeq, filters)
       case (None, None) =>
-        GraftManifest.commitMetas(path, metas.toSeq, schema.toDDL, truncate,
-          expectedBase, evolve,
+        GraftManifest.commitMetas(path, metas.toSeq, truncate, expectedBase, evolve,
           op = opLabel.orElse(Some(if (truncate) "OVERWRITE" else "APPEND")),
-          partSpecSet = declaredSpec,
-          propsSet = propsSet,
-          // a truncating write DEFINES the sort layout (its sortBy, or
-          // none); appends inherit the declared one
-          sortSpecSet = if (truncate) Some(sortCol.filter(_ => partCol.isEmpty))
-            else None,
-          formatSet = Some(format),
+          // a truncating write starts from the header its shape keeps and
+          // DEFINES the sort layout (its sortBy, or none); appends inherit
+          // the declared one. `declared` applies a catalog DDL's own
+          // declarations last.
+          header = { h =>
+            val own =
+              if (truncate) GraftManifest.replacing(h, Some(schema.toDDL))
+                .copy(sortSpec = sortCol.filter(_ => partCol.isEmpty))
+              else h.copy(schemaDdl = Some(schema.toDDL))
+            declared(own.copy(format = Some(format)))
+          },
           newEqDels = eqDels.toSeq)
         // BATCH-side auto-maintenance (round 14): plain APPENDs count
         // toward the same per-path sweep trigger the streaming epochs
@@ -5462,9 +5459,9 @@ class GraftSinkBatchWrite(path: String, schema: StructType, truncate: Boolean,
     GraftManifest.readVersion(path, None) match {
       case None =>
         // empty table: nothing to replace, land the batch as version 1
-        GraftManifest.commitMetas(path, jobMetas, schema.toDDL,
-          truncate = false, op = Some("REPLACE WHERE"),
-          formatSet = Some(format))
+        GraftManifest.commitMetas(path, jobMetas, truncate = false,
+          op = Some("REPLACE WHERE"),
+          header = _.copy(schemaDdl = Some(schema.toDDL), format = Some(format)))
         ()
       case Some(head) =>
         val layout = StructType.fromDDL(head.schemaDdl.getOrElse(
@@ -5511,9 +5508,9 @@ class GraftSinkBatchWrite(path: String, schema: StructType, truncate: Boolean,
             }
           }
         }
-        try GraftManifest.commitMetas(path, kept ++ jobMetas, head.schemaDdl.get,
-          truncate = true, expectedBase = Some(head.version),
-          op = Some("REPLACE WHERE"), formatSet = Some(format))
+        try GraftManifest.commitMetas(path, kept ++ jobMetas, truncate = true,
+          expectedBase = Some(head.version), op = Some("REPLACE WHERE"),
+          header = _.copy(format = Some(format)))
         catch {
           case e: Throwable =>
             newSidecars.foreach(sc => Files.deleteIfExists(Paths.get(path, sc)))
@@ -5731,8 +5728,9 @@ class GraftDeltaBatchWrite(path: String, schema: StructType, tag: String,
         }
       } ++ cms.flatMap(_.files)
       try {
-        GraftManifest.commitMetas(path, newMetas, head.schemaDdl.getOrElse(schema.toDDL),
-          truncate = true, expectedBase = Some(base), op = Some(cmd.toString))
+        GraftManifest.commitMetas(path, newMetas, truncate = true,
+          expectedBase = Some(base), op = Some(cmd.toString),
+          header = _.copy(schemaDdl = head.schemaDdl.orElse(Some(schema.toDDL))))
         // fragment hygiene: positions are folded into the final sidecars
         cms.flatMap(_.dvFrags).foreach(fr => Files.deleteIfExists(Paths.get(path, fr.frag)))
         return
@@ -5959,10 +5957,11 @@ class GraftSinkStreamingWrite(path: String, schema: StructType, tag: String,
       // still commit the epoch exactly once.
       return
     }
-    GraftManifest.commitMetas(path, ms.toSeq, schema.toDDL, truncate = false,
+    GraftManifest.commitMetas(path, ms.toSeq, truncate = false,
       op = Some(if (upsertKey.isDefined) "STREAM UPSERT" else "STREAM APPEND"),
       txn = Some(tag -> epochId),
-      formatSet = Some(format), newEqDels = eqDels.toSeq)
+      header = _.copy(schemaDdl = Some(schema.toDDL), format = Some(format)),
+      newEqDels = eqDels.toSeq)
     maybeAutoOptimize(ms.length)
   }
 

@@ -369,8 +369,9 @@ class PropertySpec extends AnyFunSuite {
             val merged = GraftFileMeta(s"compact-v${head.version}.csv",
               head.total, 1, Map.empty, None)
             try {
-              GraftManifest.commitMetas(dir, Seq(merged), "a BIGINT",
-                truncate = true, expectedBase = Some(head.version))
+              GraftManifest.commitMetas(dir, Seq(merged),
+                truncate = true, expectedBase = Some(head.version),
+                header = _.copy(schemaDdl = Some("a BIGINT")))
               compactions += 1
             } catch {
               case _: java.util.ConcurrentModificationException => conflicts += 1
@@ -584,8 +585,8 @@ class PropertySpec extends AnyFunSuite {
     val mid = GraftManifest.versions(dir)(1) // the race winner's version
     val midMetas = GraftManifest.readVersion(dir, Some(mid)).get
     GraftManifest.commitMetas(dir, midMetas.metas,
-      midMetas.schemaDdl.get, truncate = true,
-      expectedBase = Some(GraftManifest.versions(dir).last))
+      truncate = true, expectedBase = Some(GraftManifest.versions(dir).last),
+      header = _.copy(schemaDdl = midMetas.schemaDdl))
     GraftManifest.vacuum(dir, 1, 0)
     assert(spark.read.format("graft-sink").option("path", dir).load().count() == 8L)
   }

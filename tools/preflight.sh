@@ -9,9 +9,10 @@
 # the host memory (2-8 GB), local scratch under /tmp/spark-local.
 #
 #   tools/preflight.sh          # compile main + test, run the full suite,
-#                               # fail if it left a new graft_* entry in
-#                               # /tmp or in graft.util.Scratch's base, or
-#                               # wrote a spark-warehouse/ in the repo root
+#                               # fail if it left a new graft_* or graft-*
+#                               # entry in /tmp or in graft.util.Scratch's
+#                               # base, or wrote a spark-warehouse/ in the
+#                               # repo root
 #   tools/preflight.sh fast     # compile-only (mid-round sanity)
 #   tools/preflight.sh oracle [sfDir]
 #                               # compile, run graft.Verify on sfDir
@@ -51,8 +52,10 @@ elif [[ "$mode" != "fast" ]]; then
   # and so does graft.util.Scratch's graft_run_* root (its base, resolved
   # the same way: $SPARK_GRAFT_SCRATCH, else a writable /dev/shm, else
   # /tmp); a graft_* entry in either newer than this marker is a leak, and
-  # so is a spark-warehouse/ in the repo root (a session built without a
-  # spark.sql.warehouse.dir writes one into its working directory)
+  # so is a graft-* one (the rewrite dirs DROP COLUMN and OPTIMIZE create
+  # under java.io.tmpdir) or a spark-warehouse/ in the repo root (a
+  # session built without a spark.sql.warehouse.dir writes one into its
+  # working directory)
   scratch_base="${SPARK_GRAFT_SCRATCH:-}"
   if [[ -z "$scratch_base" ]]; then
     if [[ -d /dev/shm && -w /dev/shm ]]; then scratch_base=/dev/shm; else scratch_base=/tmp; fi
@@ -61,7 +64,7 @@ elif [[ "$mode" != "fast" ]]; then
   trap 'rm -f "$marker"' EXIT
   echo "[preflight] sbt testOnly * (cpus=$SPARK_GRAFT_CPUS driver=$SPARK_DRIVER_MEM)"
   timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true "testOnly *"
-  leaked="$(find /tmp "$scratch_base" -maxdepth 1 -name 'graft_*' -newer "$marker" | sort -u
+  leaked="$(find /tmp "$scratch_base" -maxdepth 1 \( -name 'graft_*' -o -name 'graft-*' \) -newer "$marker" | sort -u
     find . -maxdepth 1 -name spark-warehouse -newer "$marker")"
   if [[ -n "$leaked" ]]; then
     echo "[preflight] FAIL: the test run left temp entries behind:" >&2
