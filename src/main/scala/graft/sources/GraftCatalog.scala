@@ -78,13 +78,6 @@ object GraftCatalog {
     m.foreach { case (k, v) => validProp(k, v) }
     m
   }
-
-  /** The header edit of a commit that imports snapshot `m` (CLONE,
-    * FAST FORWARD): its schema, field ids, CHECKs, declared partition
-    * and sort spec and pending equality deletes; the data-file format
-    * and TBLPROPERTIES stay the target's own. */
-  private[sources] def imported(m: GraftManifest): GraftManifest => GraftManifest =
-    h => m.copy(format = h.format, props = h.props)
 }
 
 class GraftCatalog extends TableCatalog with ProcedureCatalog
@@ -723,7 +716,9 @@ private[sources] class GraftCloneProcedure(cat: GraftCatalog)
       }
       val nv = GraftManifest.commitMetas(dstDir, m.metas, truncate = false,
         op = Some(s"CLONE $srcName v${m.version}"),
-        header = GraftCatalog.imported(m),
+        // the target is new: it takes the source header whole, data-file
+        // format and TBLPROPERTIES included
+        header = _ => m,
         // the clone's first version lands AT the source clock (#seq and
         // #eqdel versions ride along verbatim; a v1 clone would let the
         // target's next writes mint seqs below the imported ones)
@@ -851,7 +846,9 @@ private[sources] class GraftFastForwardProcedure(cat: GraftCatalog)
       val nv = GraftManifest.commitMetas(srcDir, brHead.metas, truncate = true,
         expectedBase = Some(base),
         op = Some(s"FAST FORWARD $brName v${brHead.version}"),
-        header = GraftCatalog.imported(brHead),
+        // the branch header, but the data-file format and TBLPROPERTIES
+        // stay the source's own: they are table-level, not per branch
+        header = h => brHead.copy(format = h.format, props = h.props),
         minVersion = math.max(base + 1, brHead.version))
       result(StructType.fromDDL(
         "base_version INT, branch_version INT, new_version INT"),

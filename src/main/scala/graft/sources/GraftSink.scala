@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, 
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or, StringStartsWith}
+import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types.{ArrayType, DataType, DateType, DoubleType, IntegerType, LongType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -164,7 +164,7 @@ object GraftSinkProvider {
   * `bounds`: column indices whose `stats` entry is a truncated BOUND
   * envelope (`#bstats`, prose columns past the exact-stat length cap),
   * not the exact min/max. Bounds CONTAIN every value — sound for every
-  * pruning/proof consumer (mayMatch, mustMatchAll, TopN file caps,
+  * pruning/proof consumer (the file verdict, TopN file caps,
   * sortspec absorption: each only widens conservatively) — but they are
   * NOT the extreme values themselves, so the exact consumers (min/max
   * aggregate pushdown) must treat a bound column as stat-less. */
@@ -195,7 +195,7 @@ case class GraftFileMeta(name: String, rows: Long, ncols: Int,
     * envelope contains every value but IS NOT a value, and returning it
     * as one fabricates a string that does not exist in the table
     * (VERDICT r12 "What's wrong" #2). Pruning/proof consumers
-    * (mayMatch, mustMatchAll, TopN caps, sortspec absorption) stay on
+    * (the file verdict, TopN caps, sortspec absorption) stay on
     * `stats` — a widened envelope only may-matches more / proves less. */
   def exactStats(i: Int): Option[(String, String)] =
     if (bounds(i)) None else stats.get(i)
@@ -2148,8 +2148,8 @@ object GraftBloom {
   * into per-file SIDECAR files next to the data (the deletion-vector
   * arrangement, reused), so the manifest line carries a constant-size
   * reference and the payload bytes are fetched ONLY when a probe
-  * actually reaches the bloom conjunct — which [[GraftSinkScan
-  * .mayMatch]] now orders LAST, after the cheap envelope/bucket facts,
+  * actually reaches the bloom fact — which [[GraftSinkScan.verdict]]
+  * asks LAST, after the cheap envelope/bucket facts,
   * so a file the stats already dropped never costs a sidecar read.
   *
   * Payload grammar (the 4th field of `#pbloom=`/`#ngbloom=` lines):
@@ -2692,9 +2692,7 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
     versionAsOf.isEmpty && GraftManifest.readVersion(path, None).exists { head =>
       plannedDeleteBase = Some(head.version)
       head.schemaDdl.map(StructType.fromDDL).exists { layout =>
-        head.metas.forall(m =>
-          filters.forall(GraftSinkScan.mustMatchAll(m, layout, _)) ||
-            !filters.forall(GraftSinkScan.mayMatch(m, layout, _)))
+        head.metas.forall(GraftSinkScan.verdict(_, layout, filters) != GraftSinkScan.SomeRows)
       }
     }
 
@@ -2708,13 +2706,14 @@ class GraftSinkTable(path: String, schema0: StructType, versionAsOf: Option[Int]
     val layout = StructType.fromDDL(head.schemaDdl.getOrElse(
       throw new IllegalStateException(s"graft-sink: head at $path carries no schema")))
     val kept = head.metas.filter { m =>
-      val drop = filters.forall(GraftSinkScan.mustMatchAll(m, layout, _))
-      // canDeleteWhere ran against an earlier head read; re-prove on THIS
-      // read and fail loudly if a file has become undecidable in between
-      if (!drop && filters.forall(GraftSinkScan.mayMatch(m, layout, _)))
-        throw new IllegalStateException(
+      GraftSinkScan.verdict(m, layout, filters) match {
+        case GraftSinkScan.AllRows => false
+        case GraftSinkScan.NoRow => true
+        // canDeleteWhere ran against an earlier head read; re-prove on THIS
+        // read and fail loudly if a file has become undecidable in between
+        case GraftSinkScan.SomeRows => throw new IllegalStateException(
           s"graft-sink: metadata-only delete cannot decide file ${m.name} — re-plan")
-      !drop
+      }
     }
     // no file matched: committing would churn an O(table-files) manifest
     // version for a statement that changed nothing
@@ -3666,7 +3665,7 @@ case class GraftSinkScan(path: String, version: Option[Int],
     * against it into an IN-set of the build side's actual join keys,
     * delivered here AT EXECUTION via [[filter]] and applied through the
     * same manifest skipper static predicates use ([[GraftSinkScan
-    * .mayMatch]]: exact partition values, bucket ordinals, stats
+    * .verdict]]: exact partition values, bucket ordinals, stats
     * envelopes). At 100 TB this is the star-schema accelerator: a fact
     * table partitioned on the dim key scans only the partitions the
     * filtered dim actually references — file pruning decided by the
@@ -3735,7 +3734,7 @@ case class GraftSinkScan(path: String, version: Option[Int],
     if (wapId.isDefined)
       GraftSinkScan.parKeep(GraftManifest.readWap(path, wapId.get)._1.metas
         .map(_ -> null.asInstanceOf[String])) { case (m, _) =>
-        filters.forall(GraftSinkScan.mayMatch(m, full, _)) }
+        GraftSinkScan.verdict(m, full, filters) != GraftSinkScan.NoRow }
     else {
     val tagged = changesFrom match {
       case Some(fromV) =>
@@ -3783,7 +3782,7 @@ case class GraftSinkScan(path: String, version: Option[Int],
     // pendingSidecars against the head.
     val preLoads = GraftBloomSidecars.loads.sum()
     val skipped = GraftSinkScan.parKeep(scoped) { case (m, _) =>
-      filters.forall(GraftSinkScan.mayMatch(m, full, _)) }
+      GraftSinkScan.verdict(m, full, filters) != GraftSinkScan.NoRow }
     GraftMaintenance.autoCompactProbe(path,
       GraftBloomSidecars.loads.sum() - preLoads)
     // pushed-LIMIT/TopN file cap (builder-proven complete answer set)
@@ -3978,7 +3977,7 @@ case class GraftSinkScan(path: String, version: Option[Int],
     val planned =
       if (rf.isEmpty) survivors
       else GraftSinkScan.parKeep(survivors) { case (m, _) =>
-        rf.forall(GraftSinkScan.mayMatch(m, full, _)) }
+        GraftSinkScan.verdict(m, full, rf) != GraftSinkScan.NoRow }
     def paths(es: Seq[GraftEqDel], m: GraftFileMeta): Seq[(String, String)] =
       es.filter(_.v > m.seq).map(e => (e.col, s"$path/${e.sidecar}"))
     // per-tag entry roles (see `survivors` CDF planning): snapshot reads
@@ -4128,35 +4127,42 @@ object GraftSinkScan {
   }
 
   /** Filters the skipper understands (everything else is left entirely to
-    * Spark's residual evaluation). */
-  def supportedFilter(layout: StructType, f: Filter): Boolean = f match {
-    case And(l, r) => supportedFilter(layout, l) && supportedFilter(layout, r)
-    case Or(l, r)  => supportedFilter(layout, l) && supportedFilter(layout, r)
-    case Not(g)    => supportedFilter(layout, g)
-    case EqualTo(c, _)            => hasCol(layout, c)
-    case GreaterThan(c, _)        => hasCol(layout, c)
-    case GreaterThanOrEqual(c, _) => hasCol(layout, c)
-    case LessThan(c, _)           => hasCol(layout, c)
-    case LessThanOrEqual(c, _)    => hasCol(layout, c)
-    case In(c, _)                 => hasCol(layout, c)
-    case IsNotNull(c)             => hasCol(layout, c)
-    case IsNull(c)                => hasCol(layout, c)
-    // prefix probes (`LIKE 'p%'`) prune through the SAME string envelope
-    // facts as ranges: a matching row sits in [p, succ(p)) under cmpUtf8,
-    // so #stats AND truncated #bstats bounds both answer it — the
-    // url-prefix / path-prefix probe a 100 TB sorted corpus runs daily
-    case StringStartsWith(c, _)   => hasCol(layout, c)
-    // suffix probes (`LIKE '%s'`) prune through the `#rvstats` reversed
-    // envelope on a reverse(c)-clustered layout (round 15); files
-    // without the fact stay conservatively planned
-    case org.apache.spark.sql.sources.StringEndsWith(c, _) => hasCol(layout, c)
-    // contains probes (`LIKE '%s%'`) prune through the `#ngbloom` window
-    // set (round 15) — the one string shape with no order to exploit
-    case org.apache.spark.sql.sources.StringContains(c, _) => hasCol(layout, c)
-    case _ => false
+    * Spark's residual evaluation): And/Or/Not over [[leafColumn]] shapes
+    * on a column of `layout`. */
+  def supportedFilter(layout: StructType, f: Filter): Boolean =
+    admits(f, constants = false)((_, c) => colOf(layout, c).isDefined)
+
+  /** The one shape walk behind pushdown admission: And/Or/Not over leaves
+    * each caller's column test accepts; AlwaysTrue/AlwaysFalse only when
+    * `constants`. */
+  private def admits(f: Filter, constants: Boolean)(
+      ok: (Filter, String) => Boolean): Boolean = f match {
+    case And(l, r) => admits(l, constants)(ok) && admits(r, constants)(ok)
+    case Or(l, r)  => admits(l, constants)(ok) && admits(r, constants)(ok)
+    case Not(g)    => admits(g, constants)(ok)
+    case _: AlwaysTrue | _: AlwaysFalse => constants
+    case _ => leafColumn(f).exists(ok(f, _))
   }
-  private def hasCol(layout: StructType, c: String): Boolean =
-    scala.util.Try(layout.fieldIndex(c)).isSuccess
+
+  /** The column of a leaf filter graft-sink reads; None for any other
+    * shape. Comparisons, `In` and the null tests prune through the
+    * envelope facts; prefix probes (`LIKE 'p%'`) through the same string
+    * envelope (a match sits in [p, succ(p)) under cmpUtf8); suffix probes
+    * (`LIKE '%s'`) through the `#rvstats` reversed envelope of a
+    * reverse(c)-clustered layout; contains probes (`LIKE '%s%'`), the one
+    * string shape with no order to exploit, through `#ngalpha` and
+    * `#ngbloom`. */
+  private def leafColumn(f: Filter): Option[String] = f match {
+    case _: EqualTo | _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
+         _: LessThanOrEqual | _: In | _: IsNull | _: IsNotNull |
+         _: StringStartsWith | _: StringEndsWith | _: StringContains =>
+      f.references.headOption
+    case _ => None
+  }
+
+  /** Index and type of column `c` in `layout`, if it has one. */
+  private def colOf(layout: StructType, c: String): Option[(Int, DataType)] =
+    scala.util.Try(layout.fieldIndex(c)).toOption.map(i => (i, layout.fields(i).dataType))
 
   /** Public: the ONE stats order (ops-layer REQUIREs assert against it). */
   def cmpStats(dt: DataType, a: String, b: String): Int = cmp(dt, a, b)
@@ -4183,7 +4189,7 @@ object GraftSinkScan {
     * the BMP (surrogate units U+D800–DFFF sort BELOW U+E000–FFFF): under
     * it a file whose true max is a supplementary char (😀 = U+1F600)
     * records "￿" as max, and a probe `c = '😀'` compares above that
-    * recorded max — mayMatch would prune the file that holds the answer.
+    * recorded max — the verdict would prune the file that holds the answer.
     * Write-side tracking and every read consumer share this one function,
     * so the order is consistent end-to-end (ADVICE r12 surrogate audit). */
   private def cmpUtf8(a: String, b: String): Int = {
@@ -4316,7 +4322,7 @@ object GraftSinkScan {
   val ParPlanMin = 128
 
   /** Order-preserving parallel filter for the planning loops (round 16):
-    * at 10⁵ files a sequential `mayMatch` sweep with lazy sidecar
+    * at 10⁵ files a sequential verdict sweep with lazy sidecar
     * fetches serializes driver I/O; evaluating the (pure — metas are
     * immutable, the sidecar memo is concurrent) predicate on the common
     * pool keeps plan latency O(files / cores). Results are collected by
@@ -4332,344 +4338,241 @@ object GraftSinkScan {
       arr.indices.withFilter(keep(_)).map(arr(_))
     }
 
-  /** Conservative may-match: false ONLY when the file provably contains
-    * no satisfying row. A file written before `c` evolved in (column
-    * index ≥ the file's width) is all-NULL for `c`, so every comparison
-    * — and IsNotNull — is unsatisfiable there. */
-  def mayMatch(meta: GraftFileMeta, layout: StructType, f: Filter): Boolean = {
-    def col(c: String): Option[(Int, DataType)] =
-      scala.util.Try(layout.fieldIndex(c)).toOption.map(i => (i, layout.fields(i).dataType))
-    def range(c: String): Option[(DataType, String, String)] = col(c).flatMap {
-      case (i, _) if i >= meta.ncols => None // handled by allNull
-      case (i, dt) =>
-        meta.partition match {
-          case Some((pc, pv)) if pc == c => Some((dt, pv, pv)) // exact value
-          case _ => meta.stats.get(i).map { case (mn, mx) => (dt, mn, mx) }
-        }
-    }
-    def allNull(c: String): Boolean = col(c).exists(_._1 >= meta.ncols)
-    // BUCKET partition pruning: a point predicate on the bucket SOURCE
-    // column can only match the one bucket the value hashes to — the
-    // partition-pruning payoff of bucket layouts (an equality probe on a
-    // 100 TB bucketed table plans 1/N of its files before stats are even
-    // consulted). Conservative true for anything but =/IN.
-    def bucketOk(c: String, vs: Iterable[Any]): Boolean = meta.partition match {
-      case Some((pc, pv)) => GraftBucket.parse(pc) match {
-        case Some((n, src)) if src == c => col(c).forall { case (_, dt) =>
-          vs.exists(v => GraftBucket.of(n, dt, v.toString).toString == pv) }
-        case _ => true
+  /** A file's answer to a pushed filter, read by every skip and proof
+    * consumer: no row can match; not proven either way; or every row
+    * provably matches. */
+  sealed abstract class Verdict
+  case object NoRow extends Verdict
+  case object SomeRows extends Verdict
+  case object AllRows extends Verdict
+
+  /** The file's verdict for the AND of `filters` (AllRows for none).
+    * Planning keeps a file unless it is NoRow; a metadata-only DELETE
+    * and the replaceWhere split drop an AllRows file whole, keep a NoRow
+    * file untouched and treat SomeRows as undecided. Sound, never exact:
+    * NoRow and AllRows are proofs from the file's facts, and an absent
+    * or unreadable fact leaves SomeRows. */
+  def verdict(meta: GraftFileMeta, layout: StructType, filters: Iterable[Filter]): Verdict =
+    walk(meta, layout, filters.reduceOption[Filter](And(_, _)).getOrElse(AlwaysTrue), may = true)
+
+  /** False only when the file provably holds no row matching `f`. */
+  def mayMatch(meta: GraftFileMeta, layout: StructType, f: Filter): Boolean =
+    verdict(meta, layout, Seq(f)) != NoRow
+
+  /** True only when every physical row of the file provably matches `f`
+    * — the proof a metadata-only DELETE drops a file on unread. */
+  def mustMatchAll(meta: GraftFileMeta, layout: StructType, f: Filter): Boolean =
+    verdict(meta, layout, Seq(f)) == AllRows
+
+  /** The one walk. `may` false asks only "do all rows match?": an
+    * answer short of AllRows may then stay SomeRows where NoRow holds,
+    * and no fact that can only answer NoRow — the bloom family, which
+    * may fetch a sidecar, among them — is asked. And/Or combine
+    * Kleene-style and ask a side only what can still change their
+    * answer. */
+  private def walk(meta: GraftFileMeta, layout: StructType, f: Filter,
+      may: Boolean): Verdict = f match {
+    case _: AlwaysTrue  => AllRows
+    case _: AlwaysFalse => NoRow
+    case And(l, r) =>
+      val lv = walk(meta, layout, l, may)
+      if (lv == NoRow || !may && lv == SomeRows) lv
+      else { val rv = walk(meta, layout, r, may); if (rv == AllRows) lv else rv }
+    case Or(l, r) =>
+      val lv = walk(meta, layout, l, may)
+      if (lv == AllRows) lv
+      else {
+        val rv = walk(meta, layout, r, may && lv == NoRow)
+        if (rv == AllRows || lv == NoRow) rv else SomeRows
       }
-      case None => true
-    }
-    // per-file bloom probe for point predicates on UNCLUSTERED columns —
-    // the skip min/max can't make when every file's envelope spans the
-    // domain. Hashes the canonical cell string (long/string columns
-    // only; the writer never blooms doubles), conservative when absent.
-    def bloomOk(c: String, vs: Iterable[Any]): Boolean = col(c).forall {
-      // canon(dt, v), not v.toString: identical while blooms are limited
-      // to long/string, but keeps ALL value canonicalization on one path
-      // if bloom support ever extends to date/timestamp (ADVICE r10)
-      case (i, dt @ (LongType | StringType)) => meta.blooms.get(i).forall { pay =>
-        val rp = GraftBloomSidecars.resolve(pay) // sidecar-ref aware (round 16)
-        GraftBloomSidecars.isSaturated(rp) ||
-        vs.exists(v => GraftBloom.mightContain(rp, canon(dt, v)))
-      }
-      case _ => true
-    }
-    // per-file PREFIX bloom probe (round 15): a value can start with p
-    // (|p| >= w) only if its own w-char prefix equals p's — if p's
-    // w-prefix is absent from the file's prefix set, no row matches.
-    // Probes SHORTER than the width stay conservative (many stored
-    // prefixes extend them); char slicing is identical on both sides
-    // (the writer hashed value.substring(0, w)), so a split surrogate
-    // pair slices the same way in probe and cell. Equality/IN probes
-    // reuse it: v itself is a p with |p| = |v|.
-    // Payloads resolve through [[GraftBloomSidecars]] (round 16): a
-    // sidecar reference fetches its bytes ONLY here — the callers below
-    // order these conjuncts AFTER the envelope/bucket facts, so a file
-    // the cheap facts already dropped never costs a sidecar read — and
-    // the `!sat` marker keeps the file without any decode at all.
-    def pbloomOk(c: String, ps: Iterable[String]): Boolean = col(c).forall {
-      case (i, StringType) => meta.pblooms.get(i).forall { case (w, pay) =>
-        GraftBloomSidecars.isSaturated(pay) ||
-        ps.exists(p => p.length < w || {
-          val rp = GraftBloomSidecars.resolve(pay) // missing sidecar → !sat
-          GraftBloomSidecars.isSaturated(rp) ||
-          GraftBloom.mightContain(rp, p.substring(0, w))
-        })
-      }
-      case _ => true
-    }
-    // per-file N-GRAM window probe (round 15): a value CONTAINING p
-    // (|p| >= w) contains every w-char window of p — each is one of the
-    // value's own windows, which the writer hashed — so ANY absent
-    // window proves no row contains p. Prefix/suffix/equality probes
-    // imply contains and reuse the fact; probes shorter than the window
-    // stay conservative; char slicing is identical on both sides.
-    // per-file OBSERVED-ALPHABET gate (round 16): a value containing p
-    // contains every CHAR of p, so a probe char the file never wrote
-    // proves no match — decided INLINE (the fact is a small sorted char
-    // string in the manifest, emitted only for complete surrogate-free
-    // alphabets), before any sidecar fetch, at ANY probe length (even
-    // below the window width), and it keeps pruning where the window
-    // filter landed `!sat`.
-    def alphaOk(i: Int, ps: Iterable[String]): Boolean =
-      meta.ngalphas.get(i).forall(a =>
-        ps.exists(_.forall(ch => a.indexOf(ch.toInt) >= 0)))
-    def ngbloomOk(c: String, ps: Iterable[String]): Boolean = col(c).forall {
-      case (i, StringType) =>
-        alphaOk(i, ps) &&
-        meta.ngblooms.get(i).forall { case (w, pay) =>
-          GraftBloomSidecars.isSaturated(pay) ||
-          ps.exists { p =>
-            p.length < w || {
-              val rp = GraftBloomSidecars.resolve(pay) // missing sidecar → !sat
-              GraftBloomSidecars.isSaturated(rp) ||
-              GraftBloom.mightContainAll(rp,
-                (0 to p.length - w).iterator.map(o => p.substring(o, o + w)))
-            }
-          }
-        }
-      case _ => true
+    // a row matches Not(g) only when g is FALSE for it (UNKNOWN stays
+    // unmatched), so only a file where EVERY row provably satisfies g —
+    // an AllRows proof demands a known-zero null count — cannot hold a
+    // Not(g) match: the anti-probe (`c != quarantined_day`) skips the
+    // excluded partition's files. Not "g is NoRow": rows where g is
+    // UNKNOWN fail both g and Not(g).
+    case Not(g) =>
+      if (may && walk(meta, layout, g, may = false) == AllRows) NoRow else SomeRows
+    // a NULL comparison value satisfies no row (three-valued SQL), and it
+    // must never reach canon, the bloom hash or the window slicing
+    case EqualTo(_, null) | GreaterThan(_, null) | GreaterThanOrEqual(_, null) |
+         LessThan(_, null) | LessThanOrEqual(_, null) | StringStartsWith(_, null) |
+         StringEndsWith(_, null) | StringContains(_, null) => NoRow
+    case In(_, vs) if vs.forall(_ == null) => NoRow
+    case _ =>
+      leafColumn(f).flatMap(c => colOf(layout, c).map { case (i, dt) =>
+        leaf(meta, i, dt, c, f, may) }).getOrElse(SomeRows)
+  }
+
+  /** One leaf's verdict: each file fact answers once, cheapest first —
+    * the file's width, `#nulls`, the envelope (or `#rvstats` for a
+    * suffix), the bucket, `#ngalpha`, and last the bloom family, whose
+    * payload may be a sidecar fetched only here, only when the cheaper
+    * facts left SomeRows. */
+  private def leaf(meta: GraftFileMeta, i: Int, dt: DataType, c: String,
+      f: Filter, may: Boolean): Verdict = {
+    // a column the file never wrote (it evolved in later) is all-NULL
+    val unwritten = i >= meta.ncols
+    // the IS NULL answer: the width, else the known null count
+    val isNull = meta.nulls.map(_.getOrElse(i, 0L)) match {
+      case _ if unwritten => AllRows
+      case Some(n) if n == meta.rows && n > 0 => AllRows
+      case Some(0L) => NoRow
+      case _ => SomeRows
     }
     f match {
-      case And(l, r) => mayMatch(meta, layout, l) && mayMatch(meta, layout, r)
-      case Or(l, r)  => mayMatch(meta, layout, l) || mayMatch(meta, layout, r)
-      // a row matches Not(g) only when g is FALSE for it (UNKNOWN stays
-      // unmatched), so a file where EVERY row provably satisfies g —
-      // the mustMatchAll proof, which already demands a known-zero null
-      // count — cannot hold a Not(g) match: the anti-probe
-      // (`c != quarantined_day`) skips the excluded partition's files
-      // while every other file conservatively survives (the proof, not
-      // !mayMatch(g): rows where g is UNKNOWN fail BOTH g and Not(g))
-      case Not(g) => !mustMatchAll(meta, layout, g)
-      // a NULL comparison value satisfies no row (three-valued SQL), so
-      // pruning everything is EXACT, and it must never reach canon/bloom
-      // (NPE on .toString). The suffix/contains shapes are guarded too
-      // (ADVICE r15): Spark's optimizer folds null patterns before
-      // pushdown, but a synthetically-built filter must not NPE in
-      // revChars/window slicing.
-      case EqualTo(_, null) | GreaterThan(_, null) | GreaterThanOrEqual(_, null) |
-           LessThan(_, null) | LessThanOrEqual(_, null) |
-           StringStartsWith(_, null) |
-           org.apache.spark.sql.sources.StringEndsWith(_, null) |
-           org.apache.spark.sql.sources.StringContains(_, null) => false
-      // every p-prefixed string sits in [p, succ(p)) under cmpUtf8, so the
-      // file survives iff its envelope overlaps that window: mx >= p (an
-      // exact max >= some match; a strict bound upper > it) and
-      // mn < succ(p). succ comes from the shared surrogate-safe
-      // incrementer over the FULL prefix (w = p.length: no truncation —
-      // backoff only ever shortens, which WIDENS succ, conservative);
-      // None (no finite successor) leaves the upper conjunct vacuous.
-      // An UNPAIRED-surrogate prefix (can't reach here from Spark — a
-      // lone surrogate dies at UTF8String ingestion — but the fuzz
-      // constructs one) skips the succ conjunct entirely: the increment
-      // order disagrees with cmpUtf8 INSIDE the surrogate range, so succ
-      // of an invalid prefix can sort BELOW its own matches. The mx >= p
-      // conjunct stays sound for ANY p (char-prefix ⇒ v >= p).
-      case StringStartsWith(c, p) => !allNull(c) &&
-        // envelope first, blooms LAST: the bloom payload may live in a
-        // lazily-fetched sidecar — a file the stats drop never pays it
-        range(c).forall { case (dt, mn, mx) =>
-          cmp(dt, mx, p) >= 0 &&
-          (!GraftSinkWriter.pairedSurrogates(p) ||
-            GraftSinkWriter.upperBound(p, math.max(p.length, 1))
-              .forall(u => cmp(dt, mn, u) < 0)) } &&
-        pbloomOk(c, Seq(p)) && ngbloomOk(c, Seq(p))
-      // SUFFIX probe (round 15): `v endsWith s` ⟺ revChars(v)
-      // startsWith revChars(s), and the `#rvstats` bound envelope
-      // [lo, hi) contains revChars(v) for every non-null v — so the file
-      // may match only if the envelope intersects [rev(s), succ(rev(s))).
-      // hi is a STRICT upper: hi <= rev(s) proves every reversed value
-      // below the window. The succ conjunct takes the same
-      // pairedSurrogates guard as the prefix math (char-reversed
-      // supplementary chars are lone surrogates — conservative there).
-      case org.apache.spark.sql.sources.StringEndsWith(c, s) =>
-        !allNull(c) && {
-          val rs = GraftSinkWriter.revChars(s)
-          col(c).forall { case (i, dt) => meta.rvstats.get(i).forall {
-            case (lo, hi) =>
-              cmp(dt, hi, rs) > 0 &&
-              (!GraftSinkWriter.pairedSurrogates(rs) ||
-                GraftSinkWriter.upperBound(rs, math.max(rs.length, 1))
-                  .forall(u => cmp(dt, lo, u) < 0))
-          } }
-        } && ngbloomOk(c, Seq(s))
-      case org.apache.spark.sql.sources.StringContains(c, s) =>
-        !allNull(c) && ngbloomOk(c, Seq(s))
-      case EqualTo(c, v) => !allNull(c) && bucketOk(c, Seq(v)) &&
-        range(c).forall { case (dt, mn, mx) =>
-          cmp(dt, canon(dt, v), mn) >= 0 && cmp(dt, canon(dt, v), mx) <= 0 } &&
-        bloomOk(c, Seq(v)) &&
-        col(c).forall { case (_, dt) => dt != StringType ||
-          pbloomOk(c, Seq(canon(dt, v))) && ngbloomOk(c, Seq(canon(dt, v))) }
-      case GreaterThan(c, v) => !allNull(c) && range(c).forall { case (dt, _, mx) =>
-        cmp(dt, mx, canon(dt, v)) > 0 }
-      case GreaterThanOrEqual(c, v) => !allNull(c) && range(c).forall { case (dt, _, mx) =>
-        cmp(dt, mx, canon(dt, v)) >= 0 }
-      case LessThan(c, v) => !allNull(c) && range(c).forall { case (dt, mn, _) =>
-        cmp(dt, mn, canon(dt, v)) < 0 }
-      case LessThanOrEqual(c, v) => !allNull(c) && range(c).forall { case (dt, mn, _) =>
-        cmp(dt, mn, canon(dt, v)) <= 0 }
-      case In(c, vs0) =>
-        // NULL members match no row — dropping them is exact; an
-        // all-null list therefore proves no file can match
-        val vs = vs0.filter(_ != null)
-        vs.nonEmpty && !allNull(c) && bucketOk(c, vs.toSeq) &&
-        range(c).forall { case (dt, mn, mx) =>
-          vs.exists(v => cmp(dt, canon(dt, v), mn) >= 0 && cmp(dt, canon(dt, v), mx) <= 0) } &&
-        bloomOk(c, vs.toSeq) &&
-        col(c).forall { case (_, dt) => dt != StringType ||
-          pbloomOk(c, vs.toSeq.map(v => canon(dt, v))) &&
-          ngbloomOk(c, vs.toSeq.map(v => canon(dt, v))) }
-      // null counts sharpen both null predicates: IS NOT NULL also drops a
-      // full-width file that is KNOWN all-null; IS NULL drops a file KNOWN
-      // null-free. Unknown counts (pre-null-stats files) stay conservative.
-      case IsNotNull(c) => !allNull(c) &&
-        !col(c).exists { case (i, _) =>
-          meta.nulls.exists(_.getOrElse(i, 0L) == meta.rows) && meta.rows > 0 }
-      case IsNull(c) => allNull(c) ||
-        col(c).forall { case (i, _) =>
-          meta.nulls.forall(_.getOrElse(i, 0L) > 0L) }
-      case _ => true
+      case _: IsNull => isNull
+      case _: IsNotNull => isNull match { case AllRows => NoRow; case NoRow => AllRows; case v => v }
+      // every other leaf rejects NULL: an unwritten column matches no row,
+      // and min/max cover only non-null values, so all rows match only
+      // where the null count is known zero
+      case _ if unwritten => NoRow
+      case _ =>
+        val points: Seq[Any] = f match {
+          case EqualTo(_, v) => Seq(v)
+          case In(_, vs) => vs.filter(_ != null).toSeq
+          case _ => Nil
+        }
+        // string probes: a matching value holds one of them (and, unless
+        // a suffix or contains probe, starts with it)
+        val probes: Seq[String] = if (dt != StringType) Nil else f match {
+          case StringStartsWith(_, s) => Seq(s)
+          case StringEndsWith(_, s) => Seq(s)
+          case StringContains(_, s) => Seq(s)
+          case _ => points.map(canon(dt, _))
+        }
+        val prefixes = f match {
+          case _: StringEndsWith | _: StringContains => Nil
+          case _ => probes
+        }
+        val env = envelope(meta, i, dt, c, f)
+        val v = if (env == AllRows && isNull != NoRow) SomeRows else env
+        // past the envelope a fact can only answer NoRow, which only the
+        // may question needs
+        if (may && v == SomeRows && (points.nonEmpty && bucketMiss(meta, c, dt, points) ||
+            alphaMiss(meta, i, probes) || bloomMiss(meta, i, dt, points, prefixes, probes)))
+          NoRow
+        else v
     }
   }
 
-  /** Conservative must-match: true ONLY when EVERY physical row of the
-    * file provably satisfies `f` — the proof obligation of the
-    * metadata-only DELETE path (a file is droppable without being read
-    * iff all its rows match the predicate). Two facts make a proof:
-    * the stats envelope (min/max, or the exact partition value) lying
-    * entirely inside the predicate's accepting range, AND a KNOWN null
-    * count — min/max cover only non-null values, so without `#nulls` a
-    * hidden NULL (which satisfies no comparison) could survive a drop
-    * wrongly. Anything unprovable returns false and the caller falls
-    * back to the row-level (merge-on-read) plan. */
-  def mustMatchAll(meta: GraftFileMeta, layout: StructType, f: Filter): Boolean = {
-    def col(c: String): Option[(Int, DataType)] =
-      scala.util.Try(layout.fieldIndex(c)).toOption.map(i => (i, layout.fields(i).dataType))
-    // known-zero null count within the file's written width
-    def noNulls(i: Int): Boolean =
-      i < meta.ncols && meta.nulls.exists(_.getOrElse(i, 0L) == 0L)
-    def allNull(i: Int): Boolean =
-      i >= meta.ncols || meta.nulls.exists(_.getOrElse(i, 0L) == meta.rows)
-    def range(c: String): Option[(DataType, String, String)] = col(c).flatMap {
-      case (i, _) if i >= meta.ncols => None
-      case (i, dt) =>
-        meta.partition match {
-          case Some((pc, pv)) if pc == c => Some((dt, pv, pv))
-          case _ => meta.stats.get(i).map { case (mn, mx) => (dt, mn, mx) }
+  private def of(none: Boolean, all: Boolean): Verdict =
+    if (none) NoRow else if (all) AllRows else SomeRows
+
+  /** The envelope's answer for the file's non-NULL values: the exact
+    * partition value, else `#stats`/`#bstats` (a bound contains every
+    * value, so it only may-matches more and proves less); a suffix probe
+    * reads the `#rvstats` reversed envelope instead. */
+  private def envelope(meta: GraftFileMeta, i: Int, dt: DataType, c: String,
+      f: Filter): Verdict = f match {
+    // `v endsWith s` ⟺ revChars(v) startsWith revChars(s), and the
+    // `#rvstats` [lo, hi) holds revChars(v) for every non-null v (hi a
+    // STRICT upper)
+    case StringEndsWith(_, s) => meta.rvstats.get(i).fold[Verdict](SomeRows) {
+      case (lo, hi) => window(dt, lo, hi, strictHi = true, GraftSinkWriter.revChars(s)) }
+    case _ =>
+      val env = meta.partition match {
+        case Some((pc, pv)) if pc == c => Some((pv, pv))
+        case _ => meta.stats.get(i)
+      }
+      env.fold[Verdict](SomeRows) { case (mn, mx) =>
+        def x(v: Any) = canon(dt, v)
+        f match {
+          case EqualTo(_, v) => val p = x(v)
+            of(cmp(dt, mn, p) > 0 || cmp(dt, mx, p) < 0,
+              cmp(dt, mn, p) == 0 && cmp(dt, mx, p) == 0)
+          case GreaterThan(_, v) => of(cmp(dt, mx, x(v)) <= 0, cmp(dt, mn, x(v)) > 0)
+          case GreaterThanOrEqual(_, v) => of(cmp(dt, mx, x(v)) < 0, cmp(dt, mn, x(v)) >= 0)
+          case LessThan(_, v) => of(cmp(dt, mn, x(v)) >= 0, cmp(dt, mx, x(v)) < 0)
+          case LessThanOrEqual(_, v) => of(cmp(dt, mn, x(v)) > 0, cmp(dt, mx, x(v)) <= 0)
+          // a one-point envelope is the only provable In (a wider range
+          // could hold non-members between the members)
+          case In(_, vs) => val ps = vs.filter(_ != null).map(x)
+            of(!ps.exists(p => cmp(dt, mn, p) <= 0 && cmp(dt, mx, p) >= 0),
+              cmp(dt, mn, mx) == 0 && ps.exists(cmp(dt, mn, _) == 0))
+          case StringStartsWith(_, p) => window(dt, mn, mx, strictHi = false, p)
+          case _ => SomeRows
         }
-    }
-    f match {
-      case _: AlwaysTrue  => true
-      case _: AlwaysFalse => false
-      // a NULL comparison value matches no row — nothing is provable
-      case EqualTo(_, null) | GreaterThan(_, null) | GreaterThanOrEqual(_, null) |
-           LessThan(_, null) | LessThanOrEqual(_, null) |
-           StringStartsWith(_, null) |
-           org.apache.spark.sql.sources.StringEndsWith(_, null) |
-           org.apache.spark.sql.sources.StringContains(_, null) => false
-      case And(l, r) => mustMatchAll(meta, layout, l) && mustMatchAll(meta, layout, r)
-      case Or(l, r)  => mustMatchAll(meta, layout, l) || mustMatchAll(meta, layout, r)
-      case EqualTo(c, v) => col(c).exists { case (i, _) => noNulls(i) } &&
-        range(c).exists { case (dt, mn, mx) =>
-          cmp(dt, mn, canon(dt, v)) == 0 && cmp(dt, mx, canon(dt, v)) == 0 }
-      case GreaterThan(c, v) => col(c).exists { case (i, _) => noNulls(i) } &&
-        range(c).exists { case (dt, mn, _) => cmp(dt, mn, canon(dt, v)) > 0 }
-      case GreaterThanOrEqual(c, v) => col(c).exists { case (i, _) => noNulls(i) } &&
-        range(c).exists { case (dt, mn, _) => cmp(dt, mn, canon(dt, v)) >= 0 }
-      case LessThan(c, v) => col(c).exists { case (i, _) => noNulls(i) } &&
-        range(c).exists { case (dt, _, mx) => cmp(dt, mx, canon(dt, v)) < 0 }
-      case LessThanOrEqual(c, v) => col(c).exists { case (i, _) => noNulls(i) } &&
-        range(c).exists { case (dt, _, mx) => cmp(dt, mx, canon(dt, v)) <= 0 }
-      // a one-point envelope is the only provable In (a wider range could
-      // contain non-member values between the members)
-      case In(c, vs) => col(c).exists { case (i, _) => noNulls(i) } &&
-        range(c).exists { case (dt, mn, mx) =>
-          cmp(dt, mn, mx) == 0 &&
-            vs.filter(_ != null).exists(v => cmp(dt, canon(dt, v), mn) == 0) }
-      case IsNull(c)    => col(c).exists { case (i, _) => allNull(i) }
-      case IsNotNull(c) => col(c).exists { case (i, _) => noNulls(i) }
-      // every row matches a prefix iff the whole envelope sits inside
-      // [p, succ(p)): mn >= p and mx STRICTLY under succ(p) — strict so
-      // the proof stays sound when mx is a #bstats bound (> every value)
-      // as well as an exact max (= a value). No finite successor → only
-      // mn >= p is needed (all extensions of p sort below +inf). NULLs
-      // satisfy no prefix, so a known-zero null count is required, same
-      // as every comparison proof above.
-      case StringStartsWith(c, p) if p != null =>
-        // the [p, succ(p)) ⇒ startsWith implication only holds for a
-        // code-point-clean prefix — an unpaired surrogate proves nothing
-        GraftSinkWriter.pairedSurrogates(p) &&
-        col(c).exists { case (i, _) => noNulls(i) } &&
-        range(c).exists { case (dt, mn, mx) =>
-          cmp(dt, mn, p) >= 0 &&
-          GraftSinkWriter.upperBound(p, math.max(p.length, 1))
-            .forall(u => cmp(dt, mx, u) < 0) }
-      // every row matches a SUFFIX iff the whole `#rvstats` reversed
-      // envelope sits inside [rev(s), succ(rev(s))) — the same window
-      // proof as the prefix case one mirror over (round 15): lo >= rev(s)
-      // forces every reversed value >= rev(s) (lo <= the true reversed
-      // min), and hi <= succ forces them under the window's strict upper
-      // (hi > every reversed value). This is what prunes the anti-suffix
-      // probe `path NOT LIKE '%.tmp'` on a reverse-clustered table via
-      // mayMatch(Not(g)) = !mustMatchAll(g).
-      case org.apache.spark.sql.sources.StringEndsWith(c, s) if s != null =>
-        val rs = GraftSinkWriter.revChars(s)
-        GraftSinkWriter.pairedSurrogates(rs) &&
-        col(c).exists { case (i, _) =>
-          noNulls(i) && meta.rvstats.get(i).exists { case (lo, hi) =>
-            cmp(StringType, lo, rs) >= 0 &&
-            GraftSinkWriter.upperBound(rs, math.max(rs.length, 1))
-              .forall(u => cmp(StringType, hi, u) <= 0)
-          }
-        }
-      case _ => false
-    }
+      }
+  }
+
+  /** Values in [lo, hi] (hi a STRICT upper when `strictHi`, as a
+    * `#rvstats` hi is) against the prefix window [p, succ(p)): every
+    * p-prefixed string sits in it under cmpUtf8. succ comes from the
+    * surrogate-safe incrementer over the full prefix; None (no finite
+    * successor) leaves the upper side vacuous. An unpaired-surrogate p
+    * (Spark cannot push one, the fuzz builds one) proves nothing and
+    * prunes only on `hi` below p: its succ can sort below its own matches. */
+  private def window(dt: DataType, lo: String, hi: String, strictHi: Boolean,
+      p: String): Verdict = {
+    val clean = GraftSinkWriter.pairedSurrogates(p)
+    val succ = GraftSinkWriter.upperBound(p, math.max(p.length, 1))
+    def allBelow(u: String) = cmp(dt, hi, u) < (if (strictHi) 1 else 0)
+    of(allBelow(p) || clean && succ.exists(cmp(dt, lo, _) >= 0),
+      clean && cmp(dt, lo, p) >= 0 && succ.forall(allBelow))
+  }
+
+  /** The bucket: a point probe on a bucket layout's source column matches
+    * only the bucket its values hash to — 1/N of a bucketed table's files
+    * before any stats. */
+  private def bucketMiss(meta: GraftFileMeta, c: String, dt: DataType,
+      points: Seq[Any]): Boolean = meta.partition.exists { case (pc, pv) =>
+    GraftBucket.parse(pc).exists { case (n, src) =>
+      src == c && !points.exists(v => GraftBucket.of(n, dt, v.toString).toString == pv) }
+  }
+
+  /** `#ngalpha`: a value holding p holds every char of p, so a probe char
+    * the file never wrote proves no match — inline (a small sorted char
+    * string in the manifest), at any probe length, even where the window
+    * filter landed `!sat`. */
+  private def alphaMiss(meta: GraftFileMeta, i: Int, probes: Seq[String]): Boolean =
+    probes.nonEmpty && meta.ngalphas.get(i).exists(a =>
+      !probes.exists(_.forall(ch => a.indexOf(ch.toInt) >= 0)))
+
+  /** The bloom family, the one place a sidecar is fetched
+    * ([[GraftBloomSidecars.resolve]]; a missing sidecar resolves to the
+    * `!sat` marker and keeps the file): `#bloom` hashes the canonical
+    * cell of each point value (long/string columns); `#pbloom` holds
+    * each value's w-char prefix, which a value starting with p shares
+    * with p; `#ngbloom` holds each value's w-char windows, and a value
+    * holding p holds all of p's. Probes shorter than w stay conservative;
+    * char slicing is identical on both sides. */
+  private def bloomMiss(meta: GraftFileMeta, i: Int, dt: DataType, points: Seq[Any],
+      prefixes: Seq[String], probes: Seq[String]): Boolean = {
+    def miss(fact: Option[(Int, String)], ps: Seq[String])(
+        grams: (String, Int) => Iterator[String]): Boolean =
+      ps.nonEmpty && fact.exists { case (w, pay) =>
+        !GraftBloomSidecars.isSaturated(pay) && !ps.exists(p => p.length < w || {
+          val rp = GraftBloomSidecars.resolve(pay)
+          GraftBloomSidecars.isSaturated(rp) || GraftBloom.mightContainAll(rp, grams(p, w))
+        })
+      }
+    (dt == LongType || dt == StringType) && points.nonEmpty &&
+      meta.blooms.get(i).exists { pay =>
+        val rp = GraftBloomSidecars.resolve(pay)
+        !GraftBloomSidecars.isSaturated(rp) &&
+          !points.exists(v => GraftBloom.mightContain(rp, canon(dt, v)))
+      } ||
+      miss(meta.pblooms.get(i), prefixes)((p, w) => Iterator.single(p.substring(0, w))) ||
+      miss(meta.ngblooms.get(i), probes)((p, w) =>
+        (0 to p.length - w).iterator.map(o => p.substring(o, o + w)))
   }
 
   /** Filters the ROW-LEVEL evaluator ([[rowMatches]]) can decide — the
     * admission check `replaceWhere` runs before accepting a predicate
-    * (an inexpressible predicate is refused at plan time, never
-    * silently half-applied). */
-  def evaluable(layout: StructType, f: Filter): Boolean = {
-    // row-level evaluation runs over canonical CELL strings — only
-    // statable columns have one (an array column's cell is the null
-    // sentinel; admitting it would silently treat every row as NULL)
-    def ok(c: String): Boolean = scala.util.Try(layout.fieldIndex(c)).toOption
-      .exists(i => statable(layout.fields(i).dataType))
-    f match {
-      case And(l, r) => evaluable(layout, l) && evaluable(layout, r)
-      case Or(l, r)  => evaluable(layout, l) && evaluable(layout, r)
-      case Not(c)    => evaluable(layout, c)
-      case _: AlwaysTrue | _: AlwaysFalse => true
-      case EqualTo(c, _)            => ok(c)
-      case GreaterThan(c, _)        => ok(c)
-      case GreaterThanOrEqual(c, _) => ok(c)
-      case LessThan(c, _)           => ok(c)
-      case LessThanOrEqual(c, _)    => ok(c)
-      case In(c, _)                 => ok(c)
-      case IsNull(c)                => ok(c)
-      case IsNotNull(c)             => ok(c)
-      // string-shape predicates only exist on strings; a statable
-      // non-string column never receives them from Spark, but gate anyway
-      // so replaceWhere admission can't accept an unevaluable shape.
-      // contains has no envelope math (no order to exploit) — ROW-LEVEL
-      // ONLY: mayMatch conservatively keeps every file and the straddler
-      // vectoring does the exact work. endsWith gained `#rvstats` window
-      // pruning on reverse(c)-clustered layouts (round 15), but the
-      // row-level evaluator below is still what makes a `LIKE '%.jpg'`
-      // replaceWhere EXACT on any layout.
-      case StringStartsWith(c, _) => strCol(layout, c)
-      case org.apache.spark.sql.sources.StringEndsWith(c, _) => strCol(layout, c)
-      case org.apache.spark.sql.sources.StringContains(c, _) => strCol(layout, c)
-      case _ => false
+    * (an inexpressible predicate is refused at plan time, never silently
+    * half-applied). Row-level evaluation runs over canonical CELL strings,
+    * which only statable columns have (an array column's cell is the null
+    * sentinel); the string shapes need a string column. The row-level
+    * evaluator is what makes a suffix or contains replaceWhere exact on
+    * any layout. */
+  def evaluable(layout: StructType, f: Filter): Boolean =
+    admits(f, constants = true) { (leaf, c) =>
+      colOf(layout, c).exists { case (_, dt) => leaf match {
+        case _: StringStartsWith | _: StringEndsWith | _: StringContains => dt == StringType
+        case _ => statable(dt)
+      } }
     }
-  }
-  private def strCol(layout: StructType, c: String): Boolean =
-    scala.util.Try(layout.fieldIndex(c)).toOption
-      .exists(i => layout.fields(i).dataType == StringType)
 
   /** EXACT row-level predicate evaluation over one decoded line — what
     * the `replaceWhere` path runs on a STRADDLER file (stats envelope
@@ -4739,9 +4642,9 @@ object GraftSinkScan {
       // UTF8String's byte semantics on valid strings
       case StringStartsWith(c, p) =>
         if (p == null) None else cellOf(c).map { case (_, x) => x.startsWith(p) }
-      case org.apache.spark.sql.sources.StringEndsWith(c, p) =>
+      case StringEndsWith(c, p) =>
         if (p == null) None else cellOf(c).map { case (_, x) => x.endsWith(p) }
-      case org.apache.spark.sql.sources.StringContains(c, p) =>
+      case StringContains(c, p) =>
         if (p == null) None else cellOf(c).map { case (_, x) => x.contains(p) }
       case other => throw new IllegalArgumentException(
         s"graft-sink: cannot evaluate filter $other row-level (evaluable() admits it wrongly)")
@@ -5333,7 +5236,7 @@ class GraftTableMicroBatchStream(scan: GraftSinkScan)
     // range-START set (a row dead at s was never streamed — its removal
     // must not re-report it); 'eqsel' files select the new entries' kills
     val planned = tagged
-      .filter { case (m, _) => scan.filters.forall(GraftSinkScan.mayMatch(m, scan.full, _)) }
+      .filter { case (m, _) => GraftSinkScan.verdict(m, scan.full, scan.filters) != GraftSinkScan.NoRow }
       .map { case (m, c) => (m, c,
         paths(if (c == "insert" || c == null) toEq else fromEq, m),
         if (c == "eqsel") paths(newEq, m) else Nil) }
@@ -5436,11 +5339,11 @@ class GraftSinkBatchWrite(path: String, schema: StructType, truncate: Boolean,
     * cheapest sufficient path (the Delta replaceWhere / Iceberg
     * overwrite-by-filter design on this manifest):
     *
-    *  - provably ALL-MATCH (stats/partition envelope + known null
-    *    counts, [[GraftSinkScan.mustMatchAll]]) → file DROPPED,
+    *  - verdict AllRows (stats/partition envelope + known null
+    *    counts, [[GraftSinkScan.verdict]]) → file DROPPED,
     *    metadata-only — the partition-aligned backfill pays zero data
     *    bytes beyond its own new files;
-    *  - provably NO-MATCH ([[GraftSinkScan.mayMatch]] false) → file kept
+    *  - verdict NoRow → file kept
     *    with its manifest entry BYTE-IDENTICAL (stats, partition value,
     *    vector and all — the idempotent-refresh promise);
     *  - STRADDLER (predicate boundary crosses the file) → the file is
@@ -5473,10 +5376,10 @@ class GraftSinkBatchWrite(path: String, schema: StructType, truncate: Boolean,
           s"graft-sink: replaceWhere data schema '${schema.toDDL}' must match " +
             s"the committed '${layout.toDDL}' (no evolution through a replace)")
         val newSidecars = scala.collection.mutable.ArrayBuffer[String]()
-        val kept = head.metas.flatMap { m =>
-          if (filters.forall(GraftSinkScan.mustMatchAll(m, layout, _))) None
-          else if (!filters.forall(GraftSinkScan.mayMatch(m, layout, _))) Some(m)
-          else {
+        val kept = head.metas.flatMap { m => GraftSinkScan.verdict(m, layout, filters) match {
+          case GraftSinkScan.AllRows => None
+          case GraftSinkScan.NoRow => Some(m)
+          case GraftSinkScan.SomeRows =>
             // straddler: one pass over the file, vector out matching live rows
             val existing = m.dv.map(d => GraftManifest.readDv(Paths.get(path, d._1)))
               .getOrElse(Array.emptyLongArray)
@@ -6170,7 +6073,7 @@ object GraftSinkWriter {
     * by a low one and no low surrogate stands alone. Spark strings are
     * always clean (UTF8String ingestion sanitizes), but filter/fuzz
     * inputs may not be — consumers whose math assumes code-point order
-    * (the prefix-probe succ conjunct, the mustMatchAll prefix proof)
+    * (the prefix window's succ side, both in pruning and in proof)
     * gate on this instead of silently mis-ordering. O(|s|). */
   def pairedSurrogates(s: String): Boolean = {
     var i = 0

@@ -203,8 +203,8 @@ class TableHeaderSpec extends AnyFunSuite {
     step()
     write(rowsY(0 until 5), "append", Map("upsertKey" -> "id"))
     step()
-    // a clone imports the source's schema, ids, CHECKs, layouts and
-    // pending deletes; its data-file format and properties stay unset
+    // a clone imports the source's header whole: schema, ids, CHECKs,
+    // layouts, pending deletes, data-file format and properties
     spark.sql("CALL ghw.system.clone('db.t', 'db.b')")
     val branch = s"$root/db/b"
     step(branch)
@@ -241,8 +241,8 @@ class TableHeaderSpec extends AnyFunSuite {
       "v20 STREAM APPEND | id BIGINT,g STRING,s STRING,y BIGINT | ids=0,1,2,3 checks=id_nonneg:id >= 0 part=bucket(4,id) sort=- fmt=parquet props=tier=gold,vacuum.retain=4 eqdels=",
       "v21 RESTORE | id BIGINT,g STRING,s STRING,y BIGINT | ids=0,1,2,3 checks=id_nonneg:id >= 0 part=bucket(4,id) sort=- fmt=parquet props=tier=gold,vacuum.retain=4 eqdels=",
       "v22 APPEND | id BIGINT,g STRING,s STRING,y BIGINT | ids=0,1,2,3 checks=id_nonneg:id >= 0 part=bucket(4,id) sort=- fmt=parquet props=tier=gold,vacuum.retain=4 eqdels=id@22,id@22",
-      "v22 CLONE db.t v22 | id BIGINT,g STRING,s STRING,y BIGINT | ids=0,1,2,3 checks=id_nonneg:id >= 0 part=bucket(4,id) sort=- fmt=- props= eqdels=id@22,id@22",
-      "v25 APPEND | id BIGINT,g STRING,s STRING,y BIGINT | ids=0,1,2,3 checks=id_nonneg:id >= 0;y_nonneg:y >= 0 part=bucket(4,id) sort=- fmt=parquet props=branch=b1 eqdels=id@22,id@22,id@25,id@25",
+      "v22 CLONE db.t v22 | id BIGINT,g STRING,s STRING,y BIGINT | ids=0,1,2,3 checks=id_nonneg:id >= 0 part=bucket(4,id) sort=- fmt=parquet props=tier=gold,vacuum.retain=4 eqdels=id@22,id@22",
+      "v25 APPEND | id BIGINT,g STRING,s STRING,y BIGINT | ids=0,1,2,3 checks=id_nonneg:id >= 0;y_nonneg:y >= 0 part=bucket(4,id) sort=- fmt=parquet props=branch=b1,tier=gold,vacuum.retain=4 eqdels=id@22,id@22,id@25,id@25",
       "v25 FAST FORWARD db.b v25 | id BIGINT,g STRING,s STRING,y BIGINT | ids=0,1,2,3 checks=id_nonneg:id >= 0;y_nonneg:y >= 0 part=bucket(4,id) sort=- fmt=parquet props=tier=gold,vacuum.retain=4 eqdels=id@22,id@22,id@25,id@25",
       "v26 RESTORE | id BIGINT NOT NULL,k STRING,s STRING | ids=0,1,2 checks= part=- sort=- fmt=parquet props= eqdels=")
     got.zipAll(want, "", "").zipWithIndex.foreach { case ((g, w), i) =>
@@ -273,5 +273,26 @@ class TableHeaderSpec extends AnyFunSuite {
     assert(h.files == Seq("part-late.csv" -> 1L))
     assert(h.props == Map("tier" -> "gold", "vacuum.retain" -> "5"),
       s"the retried append must inherit the winner's properties: ${h.props}")
+  }
+
+  test("a clone of a csv-format table appends csv files and keeps its properties") {
+    val root = tmp("graft_hdr_clone")
+    catalog("ghk", root)
+    spark.sql("CREATE TABLE ghk.db.t (id BIGINT, s STRING) TBLPROPERTIES ('tier'='gold')")
+    def write(ids: Range, dir: String, opts: Map[String, String] = Map.empty): Unit =
+      spark.range(ids.start, ids.end).selectExpr("id", "cast(id as string) as s")
+        .coalesce(1).write.format("graft-sink").option("path", dir).options(opts)
+        .mode("append").save()
+    write(0 until 10, s"$root/db/t", Map("format" -> "csv"))
+    spark.sql("CALL ghk.system.clone('db.t', 'db.c')")
+    val clone = s"$root/db/c"
+    val before = GraftManifest.readVersion(clone, None).get.files.map(_._1).toSet
+    write(10 until 20, clone)
+    val h = GraftManifest.readVersion(clone, None).get
+    val added = h.files.map(_._1).filterNot(before)
+    assert(h.format.contains("csv") && added.nonEmpty && added.forall(_.endsWith(".csv")),
+      s"the clone must keep writing csv: format ${h.format}, new files $added")
+    assert(h.props == Map("tier" -> "gold"), s"the clone must keep its properties: ${h.props}")
+    assert(spark.read.format("graft-sink").option("path", clone).load().count() == 20L)
   }
 }

@@ -12,7 +12,8 @@
 #                               # fail if it left a new graft_* or graft-*
 #                               # entry in /tmp or in graft.util.Scratch's
 #                               # base, or wrote a spark-warehouse/ in the
-#                               # repo root
+#                               # repo root; then print the line counts of
+#                               # sources/, src/main and src/test
 #   tools/preflight.sh fast     # compile-only (mid-round sanity)
 #   tools/preflight.sh oracle [sfDir]
 #                               # compile, run graft.Verify on sfDir
@@ -71,5 +72,8 @@ elif [[ "$mode" != "fast" ]]; then
     echo "$leaked" >&2
     exit 1
   fi
+  # the code size every change reports, by the one line counter
+  echo "[preflight] tools/loc.sh"
+  tools/loc.sh src/main/scala/graft/sources src/main src/test
 fi
 echo "[preflight] OK"
