@@ -5,9 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Driver-run benchmark: times every SparkEntry query (`.count()`) at the
   * SPARK_GRAFT_SF_DIR scale factor and prints one JSON line.
   *
-  * One untimed warmup action runs first so the numbers measure operator
-  * cost, not SparkSession/codegen/JIT bring-up (which otherwise lands
-  * entirely on whichever query happens to run first). Keys run in sorted
+  * Untimed warm-up actions run first ([[warmUp]]). Keys run in sorted
   * order for stable, comparable per-query timings across rounds.
   *
   * Output hygiene (the round-1 driver failed to parse the bench line): the
@@ -21,35 +19,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"${graft.util.Scratch.root}/warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Warmup: exercise scan+join+agg codegen once, untimed.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    // ... and the HOF / explode / window / hash codegen families, which
-    // the entry query never touches — without this the first key in sort
-    // order that uses them absorbs their one-time codegen bring-up
-    // (documented intent of the warmup: operator cost, not bring-up).
-    try {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      spark.range(1000).toDF("id")
-        .select(col("id"),
-          explode(split(md5(col("id").cast("string")), "")).as("ch"))
-        .withColumn("rn",
-          row_number().over(Window.partitionBy(col("ch")).orderBy(col("id"))))
-        .where(expr("aggregate(sequence(1, 4), 0L, (a, b) -> a + b) = 10"))
-        .count()
-    } catch { case _: Throwable => }
     // Optional comma-separated key filter for targeted perf iteration
     // (builder-side only; the driver never sets it).
-    val keyFilter = sys.env.get("SPARK_GRAFT_KEYS").map(_.split(",").toSet)
+    val keys = SparkEntry.select(sys.env.get("SPARK_GRAFT_KEYS")).sortBy(_._1)
+    val spark = graft.util.Session()
+    warmUp(spark)
     // Contention immunity (adjudicated across seven rounds of driver-vs-local
     // forensics, see DECISIONS.md): a shared driver host can land a multi-
     // second OS/IO spike on ANY key — r10 saw a 0.3 s projection report
@@ -74,9 +48,7 @@ object Bench {
             2
           }
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => keyFilter.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = keys.map { case (name, fn) =>
       def once(): Double = {
         // r19 (VERDICT r18 #3): drop the session-scoped RESULT memos
         // before every timed run, so a key consuming a shared memoized
@@ -153,5 +125,25 @@ object Bench {
       .map(r => (r._1, r._2)))))
     Console.out.flush()
     if (nFailed > 0) sys.exit(1)
+  }
+
+  /** Untimed warm-up actions, so the timed runs measure operator cost,
+    * not SparkSession/codegen/JIT bring-up (which otherwise lands on
+    * whichever key runs first): the entry query exercises scan, join and
+    * aggregate codegen; the second action the HOF, explode, window and
+    * hash families the entry query never touches. */
+  def warmUp(spark: SparkSession): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try {
+      spark.range(1000).toDF("id")
+        .select(col("id"),
+          explode(split(md5(col("id").cast("string")), "")).as("ch"))
+        .withColumn("rn",
+          row_number().over(Window.partitionBy(col("ch")).orderBy(col("id"))))
+        .where(expr("aggregate(sequence(1, 4), 0L, (a, b) -> a + b) = 10"))
+        .count()
+    } catch { case _: Throwable => }
   }
 }

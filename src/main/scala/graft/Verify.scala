@@ -1,28 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated key filter for targeted re-checks
-    val (sfDir, outDir, keyFilter) = args match {
-      case Array(a, b)    => (a, b, Option.empty[Set[String]])
-      case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"${graft.util.Scratch.root}/warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val keys = SparkEntry.select(args.lift(2))
+    val spark = util.Session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => keyFilter.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    keys.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         // hard gate: an oracled key with an array/map/struct/decimal output

@@ -10,21 +10,22 @@ import org.apache.spark.sql.functions.col
   * schema, so callers never touch graft.ops directly.
   *
   * Also part of the public surface:
-  *  - SQL functions: [[registerFunctions]] installs `vector_dot` and
-  *    `vector_cosine` (codegen'd Catalyst expressions);
-  *  - optimizer rules: `spark.sql.extensions=graft.plans.GraftExtensions`
-  *    installs FoldIdempotent and the opt-in LshPrefilter
-  *    (`spark.graft.lsh.prefilter=true`);
+  *  - [[registerFunctions]] installs what [[graft.plans.GraftExtensions]]
+  *    declares in the session: the SQL functions (`vector_dot`,
+  *    `vector_cosine` and the sorted-set merge scans, codegen'd Catalyst
+  *    expressions), FoldIdempotent, the opt-in LshPrefilter
+  *    (`spark.graft.lsh.prefilter=true`) and ApproxDistinctRewrite
+  *    (`spark.graft.approx.distinct=true`), and the TopKPerKey strategy.
+  *    `spark.sql.extensions=graft.plans.GraftExtensions` injects the rules
+  *    and the strategy at session build;
   *  - [[graft.util.Skew.saltedJoin]] for hot-key joins.
   */
 object Graft {
 
-  /** Install graft's SQL functions (`vector_dot`, `vector_cosine`) in the
-    * session. Idempotent. */
-  def registerFunctions(spark: SparkSession): Unit = {
-    graft.functions.VectorDot.register(spark)
-    graft.functions.VectorCosine.register(spark)
-  }
+  /** Install graft's SQL functions, rules and strategy in the session
+    * ([[graft.plans.GraftExtensions.install]]). Idempotent. */
+  def registerFunctions(spark: SparkSession): Unit =
+    graft.plans.GraftExtensions.install(spark)
 
   /** Connected components by alternating large-star/small-star contraction
     * (O(log²n) rounds, diameter-independent). Input: an undirected edge
@@ -152,17 +153,13 @@ object Graft {
     * planner supplies (or elides, for bucketed/sorted input) the exchange
     * and sort; no rank column is materialized. `order` is (column, desc?)
     * pairs; include a unique tie-break column for deterministic output.
-    * Registers the planner strategy on the session idempotently (the
-    * `spark.sql.extensions=graft.plans.GraftExtensions` config path
-    * registers it at session build instead). */
+    * Installs the planner strategy with [[registerFunctions]]. */
   def topKPerKey(df: DataFrame, keyCols: Seq[String],
       order: Seq[(String, Boolean)], k: Int): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     val spark = df.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
+    registerFunctions(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String) = analyzed.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"no column $n in ${analyzed.output.map(_.name)}"))
@@ -178,9 +175,11 @@ object Graft {
     * per candidate). Output: (doc_a, doc_b, i, u) with i/u the exact
     * intersection/union sizes. For corpora too large even for this, use
     * [[minhashDedupPairs]] first and verify survivors. */
-  def jaccardPairsIndexed(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  def jaccardPairsIndexed(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    registerFunctions(docs.sparkSession)
     graft.ops.Text.jaccardIndexedOf(
       docs.select(col(idCol).as("doc_id"), col(textCol).as("text")))
+  }
 
   /** C4-style span-level exact dedup: the corpus is cut into
     * non-overlapping 10-word segments; every repeat of a segment seen

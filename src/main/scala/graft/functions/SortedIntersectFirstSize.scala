@@ -85,12 +85,3 @@ case class SortedIntersectFirstSize(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
-
-object SortedIntersectFirstSize {
-  /** Register `sorted_intersect_first_size` in the session FunctionRegistry.
-    * Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_first_size",
-      exprs => SortedIntersectFirstSize(exprs(0), exprs(1)), "scala_udf")
-}

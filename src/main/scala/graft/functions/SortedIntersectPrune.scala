@@ -104,13 +104,3 @@ case class SortedIntersectPrune(first: Expression, second: Expression,
     copy(first = newFirst, second = newSecond, third = newThird,
       fourth = newFourth)
 }
-
-object SortedIntersectPrune {
-  /** Register `sorted_intersect_prune` in the session FunctionRegistry
-    * (same idiom as [[VectorDot.register]]). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_prune",
-      exprs => SortedIntersectPrune(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "scala_udf")
-}

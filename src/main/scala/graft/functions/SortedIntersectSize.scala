@@ -89,11 +89,4 @@ object SortedIntersectSize {
     }
     n
   }
-
-  /** Register `sorted_intersect_size` in the session FunctionRegistry
-    * (same idiom as [[VectorDot.register]]). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "scala_udf")
 }

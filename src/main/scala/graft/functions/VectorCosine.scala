@@ -77,11 +77,3 @@ case class VectorCosine(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
-
-object VectorCosine {
-  /** Register `vector_cosine` in the session FunctionRegistry (idempotent,
-    * same path as [[VectorDot.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_cosine", exprs => VectorCosine(exprs(0), exprs(1)), "scala_udf")
-}

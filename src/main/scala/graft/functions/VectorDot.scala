@@ -89,13 +89,3 @@ case class VectorDot(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
-
-object VectorDot {
-  /** Register `vector_dot` in the session's FunctionRegistry so it is
-    * callable from SQL and via expr("vector_dot(a,b)") — the idiomatic
-    * Spark 4 path for exposing a raw Catalyst Expression (the Column
-    * constructor no longer accepts Expressions directly). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot", exprs => VectorDot(exprs(0), exprs(1)), "scala_udf")
-}

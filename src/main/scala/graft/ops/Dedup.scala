@@ -128,7 +128,6 @@ object Dedup {
   val bandSweepCap = 64
 
   def dedupBandSweep(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.SortedIntersectPrune.register(spark)
     val sigs = fixtureSigs(spark, sf)
     // exact verify rides Text's memoized packed-int term index (same
     // bigram universe; df=1 terms can't be shared, so the df>=2 id space
@@ -236,7 +235,6 @@ object Dedup {
       // counts ALL distinct terms — the dedup_band_sweep argument), one
       // codegen'd merge scan per candidate instead of a fresh
       // bigram-array pass
-      graft.functions.SortedIntersectSize.register(sets.sparkSession)
       lshCandidates(sets)
         .join(sets.select(col("doc_id").as("doc_a"), col("sids").as("sids_a"),
           col("n").as("n_a")), "doc_a")
@@ -445,7 +443,6 @@ object Dedup {
     * fused primitive loop per pair instead of three allocating HOF
     * evaluations. */
   def dedupEmbeddingCosine(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorDot.register(spark)
     cosinePairsOf(embeddings(spark, sf).select(
         col("vec_id").as("id"), col("embedding").as("vec")), 0.45)
       .select(col("id_a").as("vec_a"), col("id_b").as("vec_b"))

@@ -514,9 +514,6 @@ object Scale {
     * silently approximate every later distinct count in the session. */
   def aggDistinctRewriteRule(spark: SparkSession, sf: String): DataFrame = {
     import graft.plans.ApproxDistinctRewrite
-    if (!spark.experimental.extraOptimizations.contains(ApproxDistinctRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
     def q = events(spark, sf)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("users"))

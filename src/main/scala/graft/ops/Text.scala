@@ -152,7 +152,6 @@ object Text {
     * intersection) while `n` counts ALL distinct terms, so this is the
     * same i/u the full-dictionary encoding produced. */
   private[graft] def jaccardPairsFresh(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.SortedIntersectPrune.register(spark)
     val sets = packedSets(spark, sf)
     // The packed-set frame is tiny in bytes, so AQE coalesces the post-agg
     // shuffle to ONE partition — and the O(pairs) scan below would run on a
@@ -409,7 +408,6 @@ object Text {
     * the filters below drop anyway (pair set is provably identical; the
     * sentinel −1 fails `sid = first`, `i > 0` and `2i ≥ u` at once). */
   private def jaccardPairsOf(sets: DataFrame): DataFrame = {
-    graft.functions.SortedIntersectPrune.register(sets.sparkSession)
     // t = 0.5 ⇒ required overlap α = ⌈n/2⌉; prefix = first m − α + 1 ids.
     val pref = sets
       .withColumn("p", greatest(lit(0), col("m") - expr("(n + 1) div 2") + 1))

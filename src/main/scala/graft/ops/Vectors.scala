@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
-import graft.functions.VectorDot
 
 /** SURVEY.md §2.K + ANN extension — vector similarity over the 64-dim float
   * `embeddings` table.
@@ -119,8 +118,6 @@ object Vectors {
     * [[vecAnnLsh]] (the augmented coordinate is ≥ 0, so its sign never
     * perturbs the signature). */
   def vecMipsTopk(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorDot.register(spark)
-    graft.functions.VectorCosine.register(spark)
     val e = embeddings(spark, sf)
       .withColumn("norm2", expr("vector_dot(embedding, embedding)"))
     val m2 = e.agg(max(col("norm2")).as("m2"))
@@ -209,7 +206,6 @@ object Vectors {
     * neighbors per probe fully oracled (DuckDB recomputes the per-cell
     * means and routes identically). */
   def scanAnnPrune(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val seeds = loadSeeds(spark, sf)
     val base = graft.util.Scratch.dir("annprune", sf) + "/t"
     val dir = graft.util.Scratch.once(base) {
@@ -274,7 +270,6 @@ object Vectors {
     * routed read plans <= annRgNprobe ranged splits (vs 1 whole-file
     * control), keeps sub-file rows, and DECODES sub-file records. */
   def scanAnnRowgroup(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val seeds = loadSeeds(spark, sf)
     val base = graft.util.Scratch.dir("annrg", sf) + "/t"
     val dir = graft.util.Scratch.once(base) {
@@ -385,7 +380,6 @@ object Vectors {
   }
 
   def scanAnnDv(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val dir = annDvFixture(spark, sf)
     val v1m = graft.sources.GraftManifest.readVersion(dir, Some(1)).get
     val head = graft.sources.GraftManifest.readVersion(dir, None).get
@@ -465,7 +459,6 @@ object Vectors {
     * as 'delete' (old state: all physical rows) plus 'insert' when it
     * survives the DV (cand_id % 7 <> 3). */
   def scanCdfRanged(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val dir = annDvFixture(spark, sf)
     val head = graft.sources.GraftManifest.readVersion(dir, None).get
     val m = head.metas.head
@@ -523,7 +516,6 @@ object Vectors {
     * (groups = 100-row buckets of the slice's cand_id order), nearest
     * group PER SLICE, top-3 among kept groups excluding deleted ids. */
   def scanAnnStream(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val root = Scale.gsqlRoot(spark)
     val tag = sf.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"annstream_$tag"
@@ -652,7 +644,6 @@ object Vectors {
     * as `vec_ann_ivf`: storage layout must not change a neighbor. Index
     * build is once per (run, sf) — the amortized build a real index pays. */
   def vecAnnIvfPartitioned(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val seeds = loadSeeds(spark, sf)
     // Scratch.once serializes concurrent build attempts per (JVM, dir)
     // (ADVICE r5: a bare _SUCCESS check let two callers race, with
@@ -715,7 +706,6 @@ object Vectors {
   /** The IVF search core with a tunable cell fan-out ([[vecAnnIvf]] ships
     * nprobe=4; [[vecIvfNprobeSweep]] measures the recall curve over it). */
   private def ivfTopk(spark: SparkSession, sf: String, nprobe: Int): DataFrame = {
-    VectorDot.register(spark)
     val e = embeddings(spark, sf)
     val seeds: Array[(Long, Array[Float])] = e
       .where(col("vec_id").isin(seedIds: _*))
@@ -776,7 +766,6 @@ object Vectors {
     * partition order cannot perturb the result, and the new centroid is
     * the exact rational sum_e6 / (n·1e6), emitted as numerator + count. */
   def vecKmeansIter(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val e = embeddings(spark, sf)
     val seeds: Array[(Long, Array[Float])] = e
       .where(col("vec_id").isin(seedIds: _*))
@@ -809,7 +798,6 @@ object Vectors {
     // prn kept) scores every pair once, each config filters prn ≤ cfg, and
     // ranks come from one window per (probe, cfg) — identical ordering and
     // tie-breaks to the per-config plans, ~4× less plan and join work.
-    VectorDot.register(spark)
     val cfgs = Seq(1, 2, 4, 8)
     val e = embeddings(spark, sf)
     val seeds: Array[(Long, Array[Float])] = e
@@ -880,7 +868,6 @@ object Vectors {
     //  - the IVF answer = the same ranking restricted to candidates whose
     //    cell sits in the probe's nprobe=4 ring — exactly ivfTopk(4)'s
     //    inner join on cell, as a membership filter.
-    VectorDot.register(spark)
     val e = embeddings(spark, sf)
     val seeds: Array[(Long, Array[Float])] = e
       .where(col("vec_id").isin(seedIds: _*))
@@ -939,7 +926,6 @@ object Vectors {
     * VectorDot — the |v_sub|² term is constant inside the argmin and drops.
     * One projection pass + stack; no join, no shuffle except the final sort. */
   def vecPqCodes(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val e = embeddings(spark, sf)
     val book: Array[(Int, Array[Float])] = e
       .where(col("vec_id").isin(seedIds.take(4): _*))
@@ -986,7 +972,6 @@ object Vectors {
     * verify scale factors, so the all-pairs formulation stays the exact
     * oracle and hash-matches. Ranks/ids only in the output (D3). */
   def vecTopkGlobal(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorDot.register(spark)
     // spread the banding + candidate join off the 1-task single-file scan
     // (r18, same rationale as cosinePairsOf; r19 caps width by input
     // size — VERDICT r18 #2)
@@ -1080,7 +1065,6 @@ object Vectors {
     * constant |p|² inside a probe's partition); fixture score gaps dwarf
     * double/float noise (tie-margin test in ScaleFixSpec). */
   def vecAnnIvfPq(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val e = embeddings(spark, sf)
     val book: Array[(Int, Array[Float])] = e
       .where(col("vec_id").isin(seedIds.take(4): _*))
@@ -1156,7 +1140,6 @@ object Vectors {
     * reranked by full 64-dim cosine, top-5 emitted. The modern
     * trained-prefix counterpart to PQ compression; same two-stage shape. */
   def vecMatryoshkaPrefix(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val e = embeddings(spark, sf)
     val p = e.where(col("vec_id").isin(probeIds: _*))
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
@@ -1230,15 +1213,10 @@ object Vectors {
     * and restores the session's flag after, so every later cosine theta
     * join of the session stays exact. The rule fires at optimization
     * time: `body` must plan or materialize its frame inside the scope. */
-  private def withPrefilter[T](spark: SparkSession)(body: => T): T = {
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LshPrefilter))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LshPrefilter
+  private def withPrefilter[T](spark: SparkSession)(body: => T): T =
     graft.util.Confs.withConfs(spark, graft.plans.LshPrefilter.ConfKey -> "true")(body)
-  }
 
   private def thresholdPairsFresh(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorCosine.register(spark)
     // spread the probe side off the 1-task single-file scan (r18): each
     // rewritten band join otherwise evaluates its residual cosine over
     // every band-matching pair inside one serial task. r19: width capped
@@ -1258,7 +1236,6 @@ object Vectors {
     * expression (SURVEY §2.M / §4.3) — proves the Expression + codegen
     * surface; ranks must equal the HOF formulation's. */
   def exprCustomCatalyst(spark: SparkSession, sf: String): DataFrame = {
-    VectorDot.register(spark)
     val e = embeddings(spark, sf)
     val p = e.where(col("vec_id").isin(probeIds: _*))
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))

@@ -22,8 +22,9 @@ import org.apache.spark.sql.internal.SQLConf
   * Scope guards: only single-argument `Count(x)` with isDistinct and no
   * FILTER clause is touched (composite distinct counts and filtered aggs
   * keep exact semantics); the rewrite clears isDistinct, so it is
-  * fixpoint-safe. Injected via `spark.experimental.extraOptimizations`
-  * (the end-of-optimizer user batch) — callers must set the flag, run the
+  * fixpoint-safe. Injection paths: as [[FoldIdempotent]]'s — declared
+  * once in [[GraftExtensions]], carried by every installed session in
+  * the end-of-optimizer user batch — so callers must set the flag, run the
   * query to materialization, and restore the flag, because a leaked
   * `true` would silently approximate every later distinct count in the
   * session ([[graft.ops.Scale.aggDistinctRewriteRule]] shows the

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Abs, Lower, Upper}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -11,9 +10,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * composing generic cleansing stages routinely stack the same normalizer
   * twice, and each redundant call is per-row work inside codegen.
   *
-  * Injection paths (both supported):
-  *  - config: `spark.sql.extensions=graft.plans.GraftExtensions`
-  *  - runtime: `spark.experimental.extraOptimizations ++= Seq(FoldIdempotent)`
+  * Injection paths: every session [[GraftExtensions.install]] runs on
+  * (each in-repo session, and each `SparkEntry.queries` key's) carries
+  * it in the end-of-optimizer user batch; a user's
+  * `spark.sql.extensions=graft.plans.GraftExtensions` injects it at
+  * session build.
   */
 object FoldIdempotent extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -25,15 +26,4 @@ object FoldIdempotent extends Rule[LogicalPlan] {
       // the outer flag would change overflow behavior (round-16b review)
       case Abs(inner @ Abs(_, f1), f2) if f1 == f2 => inner
     }
-}
-
-/** SparkSessionExtensions entry point (SURVEY §4.2): registers the optimizer
-  * rules at session build time. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => FoldIdempotent)
-    e.injectOptimizerRule(_ => LshPrefilter)
-    e.injectOptimizerRule(_ => ApproxDistinctRewrite)
-    e.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-  }
 }

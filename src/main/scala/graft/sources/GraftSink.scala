@@ -4411,11 +4411,10 @@ object GraftSinkScan {
     * facts left SomeRows. */
   private def leaf(meta: GraftFileMeta, i: Int, dt: DataType, c: String,
       f: Filter, may: Boolean): Verdict = {
-    // a column the file never wrote (it evolved in later) is all-NULL
-    val unwritten = i >= meta.ncols
-    // the IS NULL answer: the width, else the known null count
+    // the IS NULL answer: the width (a column the file never wrote, as it
+    // evolved in later, is all-NULL), else the known null count
     val isNull = meta.nulls.map(_.getOrElse(i, 0L)) match {
-      case _ if unwritten => AllRows
+      case _ if i >= meta.ncols => AllRows
       case Some(n) if n == meta.rows && n > 0 => AllRows
       case Some(0L) => NoRow
       case _ => SomeRows
@@ -4423,10 +4422,11 @@ object GraftSinkScan {
     f match {
       case _: IsNull => isNull
       case _: IsNotNull => isNull match { case AllRows => NoRow; case NoRow => AllRows; case v => v }
-      // every other leaf rejects NULL: an unwritten column matches no row,
-      // and min/max cover only non-null values, so all rows match only
-      // where the null count is known zero
-      case _ if unwritten => NoRow
+      // every other leaf rejects NULL: a column NULL on every row (one
+      // unwritten, or counted so by `#nulls`) matches no row, and min/max
+      // cover only non-null values, so all rows match only where the null
+      // count is known zero
+      case _ if isNull == AllRows => NoRow
       case _ =>
         val points: Seq[Any] = f match {
           case EqualTo(_, v) => Seq(v)

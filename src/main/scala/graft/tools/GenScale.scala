@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1.0 spot-parity fixture generator (round 18, VERDICT r17 next #1):
@@ -37,19 +37,11 @@ object GenScale {
     val out = if (args.length > 0) args(0) else "testdata_sf1"
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // single-FILE outputs in INT64 micros: the DuckDB side of the
-      // parity gate reads a literal `<t>.parquet` path, and the stream
-      // schema probe expects INT64 TIMESTAMP (never INT96)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"${graft.util.Scratch.root}/warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Session()
+    // single-FILE outputs in INT64 micros: the DuckDB side of the parity
+    // gate reads a literal `<t>.parquet` path, and the stream schema probe
+    // expects INT64 TIMESTAMP (never INT96)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(t: String, df: DataFrame): Unit = {

@@ -3,38 +3,30 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
-/** Per-key bench profiler for optimization rounds: runs each key under the
-  * same session shape as graft.Bench (master/shuffle width from the same
-  * env vars) and reports, per run, wall seconds plus the job/stage/task
-  * counts and summed task time a SparkListener observed — the "is this key
-  * overhead-bound or compute-bound" split that a bare timing hides.
+/** Per-key bench profiler for optimization rounds: runs each key in
+  * graft.Bench's session ([[graft.util.Session]], width from
+  * `SPARK_GRAFT_CPUS`) after Bench's warm-up and reports, per run, wall
+  * seconds plus the job/stage/task counts and summed task time a
+  * SparkListener observed — the "is this key overhead-bound or
+  * compute-bound" split that a bare timing hides.
   *
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.KeyProf <sfDir> <key>[,key...] [reps]"
   */
 object KeyProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val keys = args(1).split(",")
+    val keys = graft.SparkEntry.select(Some(args(1)))
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"${graft.util.Scratch.root}/warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Session()
     // Optional conf overrides for A/B experiments:
     //   SPARK_GRAFT_PROF_CONF="k1=v1;k2=v2"
     sys.env.get("SPARK_GRAFT_PROF_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
     })
-    // Same warmup as Bench so run 1 is not codegen bring-up.
-    try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    // Bench's warm-up, so run 1 is not codegen bring-up.
+    graft.Bench.warmUp(spark)
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -61,8 +53,7 @@ object KeyProf {
     })
     val verbose = sys.env.get("SPARK_GRAFT_PROF_STAGES").contains("1")
 
-    keys.foreach { k =>
-      val fn = graft.SparkEntry.queries(k)
+    keys.foreach { case (k, fn) =>
       (1 to reps).foreach { r =>
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L); stageAgg.clear()
         // same memo discipline as Bench (VERDICT r18 #3): every run pays

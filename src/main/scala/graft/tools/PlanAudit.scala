@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the formatted physical plan of the given SparkEntry keys —
   * the round-checklist audit surface ("is this the plan you'd want at
   * 100×": pushdown reached the scan, dims broadcast, codegen fused).
@@ -11,21 +9,14 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val keys = args(1).split(",")
-    // same env-driven session shape as Bench/KeyProf (default stays the
-    // historical local[4]) so width-sensitive plan evidence (r19 dataWidth
-    // caps vs the session shuffle width) is visible at the bench's width
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"${graft.util.Scratch.root}/warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    keys.foreach { k =>
+    val keys = graft.SparkEntry.select(Some(args(1)))
+    // the env-driven width of Bench and KeyProf, so width-sensitive plan
+    // evidence (r19 dataWidth caps vs the session shuffle width) is
+    // visible at the bench's width
+    val spark = graft.util.Session()
+    keys.foreach { case (k, fn) =>
       println(s"========== $k ==========")
-      println(graft.SparkEntry.queries(k)(spark, sfDir).queryExecution
+      println(fn(spark, sfDir).queryExecution
         .explainString(org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()

@@ -233,8 +233,10 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("registerFunctions makes vector_dot and vector_cosine callable from SQL") {
-    Graft.registerFunctions(spark)
-    val r = spark.sql(
+    val bare = spark.newSession()
+    assert(!bare.catalog.functionExists("vector_dot"))
+    Graft.registerFunctions(bare)
+    val r = bare.sql(
       """SELECT vector_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
         |                  array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d,
         |       vector_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),

@@ -64,7 +64,6 @@ class DeterminismSpec extends AnyFunSuite {
 
   test("SortedIntersectSize equals size(array_intersect) on sorted sets") {
     import org.apache.spark.sql.functions._
-    graft.functions.SortedIntersectSize.register(spark)
     val df = spark.range(500).selectExpr(
       "sort_array(array_distinct(transform(sequence(0, int(id % 17 + 3)), x -> int(pmod(x * (id + 7), 50))))) AS a",
       "sort_array(array_distinct(transform(sequence(0, int(id % 13 + 2)), x -> int(pmod(x * (id + 3), 50))))) AS b")

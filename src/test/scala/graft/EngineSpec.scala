@@ -12,24 +12,16 @@ class EngineSpec extends AnyFunSuite {
   // ----------------------------------------------- custom optimizer rule
 
   test("FoldIdempotent rule rewrites upper(upper(x)) -> upper(x)") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.FoldIdempotent
-    try {
-      val df = graft.util.Tables.customer(spark, sf001)
-        .select(upper(upper(col("c_name"))).as("u"),
-          abs(abs(col("c_acctbal"))).as("a"))
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(!optimized.contains("upper(upper"), optimized)
-      assert(!optimized.contains("abs(abs"), optimized)
-      // and semantics are unchanged
-      val expected = graft.util.Tables.customer(spark, sf001)
-        .select(upper(col("c_name")).as("u"), abs(col("c_acctbal")).as("a"))
-      assert(df.collect().toSeq == expected.collect().toSeq)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.plans.FoldIdempotent)
-    }
+    val df = graft.util.Tables.customer(spark, sf001)
+      .select(upper(upper(col("c_name"))).as("u"),
+        abs(abs(col("c_acctbal"))).as("a"))
+    val optimized = df.queryExecution.optimizedPlan.toString
+    assert(!optimized.contains("upper(upper"), optimized)
+    assert(!optimized.contains("abs(abs"), optimized)
+    // and semantics are unchanged
+    val expected = graft.util.Tables.customer(spark, sf001)
+      .select(upper(col("c_name")).as("u"), abs(col("c_acctbal")).as("a"))
+    assert(df.collect().toSeq == expected.collect().toSeq)
   }
 
   // ----------------------------------------------------- CSV/JSON sources

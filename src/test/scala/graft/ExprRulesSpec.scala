@@ -12,8 +12,6 @@ class ExprRulesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("vector_dot/vector_cosine: a NULL element poisons like the HOF twin") {
-    graft.functions.VectorDot.register(spark)
-    graft.functions.VectorCosine.register(spark)
     val df = Seq(
       (1L, Seq[java.lang.Float](1.0f, null, 3.0f), Seq[java.lang.Float](1.0f, 2.0f, 3.0f)),
       (2L, Seq[java.lang.Float](1.0f, 2.0f), Seq[java.lang.Float](1.0f, 2.0f))
@@ -30,7 +28,6 @@ class ExprRulesSpec extends AnyFunSuite {
   }
 
   test("sorted_intersect_size: a NULL element returns NULL, never a silent 0-count") {
-    graft.functions.SortedIntersectSize.register(spark)
     val df = Seq(
       (1L, Seq[Integer](null, 5), Seq[Integer](0, 5)),
       (2L, Seq[Integer](1, 5), Seq[Integer](0, 5))
@@ -42,8 +39,6 @@ class ExprRulesSpec extends AnyFunSuite {
   }
 
   test("sorted_intersect_prune: sentinel/packing parity with the full scan") {
-    graft.functions.SortedIntersectPrune.register(spark)
-    graft.functions.SortedIntersectFirstSize.register(spark)
     // randomized sorted-set pairs: for every (sid, alpha) the pruned scan
     // must agree with the full scan WHENEVER the full scan's row survives
     // the caller's filters (first = sid AND size >= alpha), and must
@@ -91,7 +86,6 @@ class ExprRulesSpec extends AnyFunSuite {
   }
 
   test("LSH prefilter survives short embeddings under ANSI instead of crashing") {
-    graft.functions.VectorCosine.register(spark)
     val dim = 8 // far below the 64-dim band permutation
     def vecs(n: Int, off: Int) = (0 until n).map { i =>
       (i.toLong + off, (0 until dim).map(d =>
@@ -103,8 +97,6 @@ class ExprRulesSpec extends AnyFunSuite {
       .select("lid", "rid").collect().map(x => (x.getLong(0), x.getLong(1))).sorted
     val exact = pairs()
     assert(exact.nonEmpty, "fixture needs qualifying pairs")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.LshPrefilter
     spark.conf.set(graft.plans.LshPrefilter.ConfKey, "true")
     try {
       val banded = pairs() // would throw INVALID_ARRAY_INDEX pre-fix

@@ -86,6 +86,7 @@ class MinhashChainSpec extends AnyFunSuite {
 
   test("with shingles warm, sigsAndSets plus verifiedCands start at most 2 Spark jobs at sf0.01") {
     val s = spark.newSession()
+    graft.plans.GraftExtensions.install(s)
     Text.shingles(s, sf01)
     val n = jobsOf {
       Text.sigsAndSets(s, sf01)
@@ -96,6 +97,7 @@ class MinhashChainSpec extends AnyFunSuite {
 
   test("driver-verified candidates are clustered and sized without a Spark job") {
     val s = spark.newSession()
+    graft.plans.GraftExtensions.install(s)
     Dedup.verifiedCands(s, sf01)
     var labels: DataFrame = null
     assert(jobsOf { labels = Pipeline.ccWithSizes(Pipeline.lshCcPairs(s, sf01), "doc_id") } == 0)

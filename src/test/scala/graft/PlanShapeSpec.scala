@@ -73,9 +73,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("ApproxDistinctRewrite swaps count(distinct) for HLL++ only under the flag") {
     import graft.plans.ApproxDistinctRewrite
-    if (!spark.experimental.extraOptimizations.contains(ApproxDistinctRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
     def q = graft.util.Tables.events(spark, sf001)
       .groupBy(col("event_type"))
       .agg(org.apache.spark.sql.functions.countDistinct(col("user_id")).as("u"))

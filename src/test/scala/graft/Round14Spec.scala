@@ -601,7 +601,6 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("cosinePairs fails fast on short vectors instead of degenerating to all-pairs") {
-    graft.functions.VectorDot.register(spark)
     val short = spark.range(0, 10).toDF("id")
       .select(col("id"), array((0 until 8).map(i => lit(0.5f)): _*).as("vec"))
     val e = intercept[Exception] {

@@ -107,7 +107,6 @@ class ScaleFixSpec extends AnyFunSuite {
     // the SPEC-LAYER exact all-pairs control (VERDICT r12 next #3: the
     // O(n²) plan lives here, sf-capped, not in any registered key): both
     // banded formulations must have EXACT recall against it
-    graft.functions.VectorCosine.register(spark)
     val e = graft.util.Tables.embeddings(spark, sf001)
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
@@ -142,7 +141,6 @@ class ScaleFixSpec extends AnyFunSuite {
     // (139/144 at the current fixture): the banded set must be a SUBSET
     // of the exact qualifying pairs (verify step admits no false
     // positive) with recall above the LSH design floor.
-    graft.functions.VectorCosine.register(spark)
     val sf01 = "/root/testdata/sf0.1"
     val e = graft.util.Tables.embeddings(spark, sf01)
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
@@ -168,7 +166,6 @@ class ScaleFixSpec extends AnyFunSuite {
     // [-1,1] perturbs by at most ~6e-8, and observed fixture gaps are
     // orders above that, so cross-engine rank flips cannot occur.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorCosine.register(spark)
     val e = graft.util.Tables.embeddings(spark, sf001)
     val p = e.where(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))

@@ -5,30 +5,19 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for all suites (mirrors Verify's config —
-  * SURVEY §2.0 rule D6). */
+/** One shared local SparkSession for all suites, from the recipe every
+  * main uses (SURVEY §2.0 rule D6), at a fixed width of 4. */
 object TestSpark {
   /** The one temp root of this test JVM, under `java.io.tmpdir`: every
-    * spec directory and the warehouse live in it, and a shutdown hook
-    * removes it, so a run leaves no `graft_*` entry behind. */
+    * spec directory lives in it, and a shutdown hook removes it, so a run
+    * leaves no `graft_*` entry behind. */
   lazy val root: java.nio.file.Path = {
     val r = java.nio.file.Files.createTempDirectory("graft_specs")
     sys.addShutdownHook(graft.sources.GraftFs.deleteTree(r.toFile))
     r
   }
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        tmp("graft_wh"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.util.Session(4)
   val sf001 = "/root/testdata/sf0.001"
   val sf01  = "/root/testdata/sf0.01"
 
@@ -64,6 +53,7 @@ object TestSpark {
     * labels and every key over them run distributed there too. */
   def distributedChain(sfs: String*): SparkSession = {
     val s = spark.newSession()
+    graft.plans.GraftExtensions.install(s)
     sfs.foreach(sf => graft.util.Memos.cached(graft.ops.Text.jacSetsMemo, s, sf)(
       graft.ops.Text.sigsAndSetsOf(graft.ops.Text.shingles(s, sf), localRows = 0)))
     s

@@ -98,7 +98,7 @@ class VerdictSpec extends AnyFunSuite {
     "stats" -> "NSNNSANANNNNNNASSNSSNNNSSSSNNSSSSSSSNNNNNNSSSANASSNSSSSSSANNSNN",
     "stats-nonulls" -> "NSNNSSNSNNNNNSSSSSSSNNNSSSSNNSSSSSSSNNNNNNSSSSNSSSSSSSSSSANNSNN",
     "point" -> "ANNNNNAANANNNNANANSNANNNNNNNNSSSSSAANNNNNNSSSNANNNSSSSSNAANNSNA",
-    "all-null" -> "SSSSSSSSSSNSNANNANSSNNNSSSSNNSSSSSSSSNNNNNSSSSNSSSSSNSSNSANNSSS",
+    "all-null" -> "NNNNNNNNNNNNNANNANSSNNNSSSSNNSSSSSSSSNNNNNSSSNNNNSSSNSSNSANNSNN",
     "width" -> "NSNNSANANNNNNNAANANSNNNSSSSNNSSSSSNNNNNNNNSSSANASSNSSSSSSANNSNN",
     "partition" -> "NNNNNNAANNNSNNANANSNNANNNNNNNSSSSSSSSNNNNNSSSNNNNSSSSNSSSANNSNN",
     "bucket" -> "SSNNSSSSSSNSNNANANSSSSSSSSSSSSSSSSSSSNNNNNSSSSSSSSSSSSSSSANNSNS",
@@ -126,6 +126,24 @@ class VerdictSpec extends AnyFunSuite {
     } yield s"$name / ${filters(i)}: got ${g.lift(i).getOrElse('-')} want ${w.lift(i).getOrElse('-')}"
     assert(diffs.isEmpty, diffs.mkString("\n", "\n", "\n") +
       got.map { case (n, g) => s"""    "$n" -> "$g",""" }.mkString("\n"))
+  }
+
+  test("a point-set probe skips at planning a file whose column is NULL on every row") {
+    val dir = tmp("graft_verdict_nulls")
+    def append(k: String) = spark.range(0, 10).selectExpr(s"$k AS k", "id AS v")
+      .coalesce(1).write.format("graft-sink").option("path", dir).mode("append").save()
+    append("CAST(NULL AS BIGINT)")
+    append("id")
+    val metas = GraftManifest.readVersion(dir, None).get.metas
+    assert(metas.exists(_.nulls.exists(_.get(0).contains(10L))),
+      s"fixture needs a file whose #nulls counts k NULL on all 10 rows: ${metas.map(_.nulls)}")
+    val t = spark.read.format("graft-sink").option("path", dir).load()
+    assert(t.rdd.getNumPartitions == 2)
+    // an IN list, unlike `k = 7`, gets no inferred IS NOT NULL beside it,
+    // so only the #nulls count can drop the all-NULL file
+    val probe = t.where(col("k").isin(7L, 8L))
+    assert(probe.rdd.getNumPartitions == 1, "the all-NULL file must not be planned")
+    assert(probe.collect().map(_.getLong(1)).toSeq.sorted == Seq(7L, 8L))
   }
 
   test("a sidecar bloom is fetched only by a may-match point probe the cheap facts leave open") {

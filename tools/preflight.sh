@@ -21,13 +21,28 @@
 #                               # fresh temp dir, compare it with
 #                               # tools/parity.py, remove the dir
 #
-# Exits non-zero on any compile error, test failure, leaked temp entry,
-# or oracle key that fails its compare or has no output.
+# Every mode first checks the session structure: src/ builds a
+# SparkSession only in util/Session.scala, and src/main installs
+# optimizer rules, strategies and SQL functions only in
+# plans/GraftExtensions.scala.
+#
+# Exits non-zero on a structure breach, any compile error, test failure,
+# leaked temp entry, or oracle key that fails its compare or has no output.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 export COURSIER_MODE=offline
 export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+
+echo "[preflight] session structure"
+structure="$(grep -rn 'SparkSession\.builder' src | grep -v '^src/main/scala/graft/util/Session\.scala:' || true
+  grep -rnE 'extra(Optimizations|Strategies) *(\+\+|:\+)?=([^=>]|$)|createOrReplaceTempFunction' src/main |
+    grep -v '^src/main/scala/graft/plans/GraftExtensions\.scala:' || true)"
+if [[ -n "$structure" ]]; then
+  echo "[preflight] FAIL: a session built or installed outside its one place:" >&2
+  echo "$structure" >&2
+  exit 1
+fi
 
 echo "[preflight] sbt Test/compile"
 timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true Test/compile
